@@ -236,14 +236,14 @@ object VectorExpressions {
     idMask - (best & idMask)
   }
 
-  /** Batch pqEncode's per-subspace packed argmin folded over a collected
+  /** The PQ encode's per-subspace packed argmin folded over a collected
     * codebook-struct array (idx-sorted: subspace m occupies positions
-    * [m·S, (m+1)·S)), packing the 8-bit codes into one long — identical
-    * pk arithmetic, one compiled loop per corpus row. `cbl` rows are
-    * struct(idx, m, c_sub, cn2). */
+    * [m·S, (m+1)·S)), packing the 8-bit codes into one long — the pk
+    * arithmetic of the row-stream encode it replaced, one compiled loop
+    * per corpus row. `cbl` rows are struct(idx, m, c_sub, cn2). */
   def pqPackCp(emb: ArrayData, cbl: ArrayData, subspaces: Int): Long = {
     val total = cbl.numElements()
-    // The batch path guards d % subspaces == 0 in pqIndexFrames; this fold
+    // The batch path guards d % subspaces == 0 in pqIvfIndex; this fold
     // re-derives both splits by integer division, so a codebook built with
     // a different subspace count (or a non-divisible embedding dim) would
     // silently mis-slice and encode garbage — require exact divisibility
@@ -446,7 +446,7 @@ object VectorExpressions {
     while (m < subspaces) {
       // shiftright is an arithmetic shift and % keeps the dividend's sign,
       // exactly like the SQL form; codes are < 256 on every real codebook
-      // (pqCodebook requires S ≤ 255), so the index stays in range.
+      // (pqIvfIndex requires S ≤ 255), so the index stays in range.
       val code = ((cp >> (8 * m)) % 256L).toInt
       acc += arr.getDouble(m * s + code)
       m += 1
@@ -482,6 +482,20 @@ object VectorExpressions {
         c => s"graft.functions.VectorExpressions.md5Long60($c)")
     override protected def withNewChildInternal(
         newChild: Expression): Md5Hash60 = copy(child = newChild)
+  }
+
+  /** A Scala sequence as an array literal in catalyst's compact
+    * UnsafeArrayData form. A typedLit array holds boxed elements; the
+    * route and encode folds read every float of a collected centroid or
+    * codebook array once per corpus row, so they get the same flat layout
+    * a broadcast row would give them. */
+  def arrayLiteral[T: scala.reflect.runtime.universe.TypeTag](
+      values: Seq[T]): Column = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{Literal, UnsafeProjection}
+    val boxed = Literal.create(values)
+    val row = UnsafeProjection.create(Seq(boxed)).apply(InternalRow.empty)
+    bridge.column(Literal(row.getArray(0).copy(), boxed.dataType))
   }
 
   /** Column wrappers. */

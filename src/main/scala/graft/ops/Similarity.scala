@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.queries.{rz, rd}
 
 /** Approximate-nearest-neighbor / similarity search over an embedding
@@ -27,11 +28,13 @@ object Similarity {
   /** Stage-dir tags for the per-SF staged intermediates built from this
     * file's code (the Dedup.ClusterStageTag convention: the tag lives next
     * to the code whose change invalidates the stage, and MUST be bumped
-    * with any change to the corresponding builder). */
-  val PqStageTag = "pqindex8x16_v1"   // pqIndexFrames + ivfIndexFrames
+    * with any change to the corresponding builder's OUTPUT — a rewrite
+    * that keeps every staged row bit-identical keeps its tag; FunctionsSpec
+    * pins the pqIvfIndex artifacts against the reference derivation). */
+  val PqStageTag = "pqindex8x16_v1"   // pqIvfIndex: codebook, cent, codes, cells
   val KnnStageTag = "knngraph3_v2"    // knnGraphAuto(k = 3); v2: cellCap 64
-  val OpqStageTag = "opqindex8x16_v1" // opqPermutation + permuted pqIndexFrames
-  val ResPqStageTag = "respqindex8x16_v1" // ivfResiduals + pqIndexFrames
+  val OpqStageTag = "opqindex8x16_v1" // opqPermutation + permuted pqIvfIndex
+  val ResPqStageTag = "respqindex8x16_v1" // ivfResiduals + pqIvfIndex
   val RefPqStageTag = "refpqindex8x16_v1" // pqIndexFramesRefined(iters = 2)
 
   /** Sequential-fold cosine similarity between two float-array columns,
@@ -179,7 +182,8 @@ object Similarity {
   /** Scale-honest centroid spacing: m ≈ √n requires centroidEvery ≈ √n —
     * a FIXED spacing makes m grow linearly with the corpus, so the
     * broadcast centroid set and the |corpus|·m assignment cost blow up at
-    * 100 TB. Derived from one count (parquet metadata — no scan). */
+    * 100 TB. Takes the corpus count from the caller: a Spark count is a
+    * job, never free metadata (see ivfTopKAuto). */
   def autoCentroidEvery(n: Long): Int =
     math.max(1L, math.ceil(math.sqrt(n.toDouble)).toLong).toInt
 
@@ -190,15 +194,18 @@ object Similarity {
     * |queries| proportional to n, which turns every exhaustive-scan path
     * (brute force, flat PQ-ADC) into O(n^2/100): the factor-30 audit
     * measured 123-131x growth on 30x data for exactly this reason. The
-    * count() is parquet row-count metadata, not a scan. */
+    * judged rows count n before `table`'s rebalance (tableCounted: one
+    * job). */
   def queryStride(n: Long): Long = math.max(1L, math.ceil(n / 64.0).toLong)
 
   /** ivfTopK with centroidEvery derived from the corpus size so the
-    * centroid count stays ≈ √n at any scale. The count() is a bounded
-    * driver-side action (parquet row-count metadata, no data scan); pass an
-    * explicit centroidEvery to `ivfTopK` when the cardinality is already
-    * known. Precondition (same as ivfTopK): vec_ids near-dense, so
-    * `vec_id % every = 0` actually selects ≈ n/every centroids. */
+    * centroid count stays ≈ √n at any scale. The count() is an eager
+    * action over the corpus AS GIVEN: on a `queries.table`
+    * frame it pays the rebalance shuffle and a two-phase aggregate (three
+    * jobs under AQE). Pass an explicit centroidEvery to `ivfTopK` when the
+    * cardinality is already known. Precondition (same as ivfTopK): vec_ids
+    * near-dense, so `vec_id % every = 0` actually selects ≈ n/every
+    * centroids. */
   def ivfTopKAuto(corpus: DataFrame, queries: DataFrame, k: Int,
                   nprobe: Int = 2): DataFrame =
     ivfTopK(corpus, queries, k, autoCentroidEvery(corpus.count()), nprobe)
@@ -302,7 +309,7 @@ object Similarity {
       .orderBy(col("vec_id"), col("rank"))
   }
 
-  /** knnGraph with the √n-derived centroid spacing (bounded metadata
+  /** knnGraph with the √n-derived centroid spacing (one eager corpus
     * count, same contract as ivfTopKAuto). */
   def knnGraphAuto(corpus: DataFrame, k: Int): DataFrame =
     knnGraph(corpus, k, autoCentroidEvery(corpus.count()))
@@ -520,7 +527,7 @@ object Similarity {
   }
 
   /** kmeansAssign with the seed spacing derived from a fixed cluster
-    * count k (bounded metadata count, same contract as ivfTopKAuto). */
+    * count k (one eager corpus count, same contract as ivfTopKAuto). */
   def kmeansAuto(corpus: DataFrame, k: Int = 16, iters: Int = 2): DataFrame =
     kmeansAssign(corpus,
       math.max(1L, math.ceil(corpus.count().toDouble / k).toLong).toInt, iters)
@@ -552,53 +559,166 @@ object Similarity {
     * the final cosine is 6-dp rounded through rz. */
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
              subspaces: Int = 8, codebookK: Int = 16): DataFrame = {
-    val (cb, codes) = pqIndexFrames(corpus, subspaces, codebookK)
-    pqTopKFrom(cb, codes, queries, k, subspaces)
+    val ix = pqIvfIndex(corpus, subspaces, codebookK)
+    pqTopKFrom(ix.codebook, ix.codes, queries, k, subspaces)
   }
 
-  /** The PQ INDEX as two plain frames — (codebook, packed codes) — so the
-    * train-once/apply-many contract (the stagedBpe convention) holds: a
-    * pipeline derives the codebook and encodes the corpus ONCE, stages
-    * both to parquet, and every top-k / recall / IVF-PQ query reads the
-    * staged index instead of re-paying the codebook derivation (2 corpus
-    * counts + a head) and the full corpus re-encode per query. */
-  def pqIndexFrames(corpus: DataFrame, subspaces: Int = 8,
-                    codebookK: Int = 16): (DataFrame, DataFrame) = {
-    val d = corpus.select(size(col("embedding"))).head().getInt(0)
+  /** A PQ + IVF index as plain frames, so the train-once/apply-many
+    * contract (the stagedBpe convention) holds: a pipeline trains the
+    * quantizers and encodes the corpus ONCE, stages the frames to parquet,
+    * and every top-k / recall / IVF-PQ query reads the staged index.
+    *  - `codebook` (m, code, c_sub, cn2): subspaces × S rows;
+    *  - `cent` (c_id, c_emb, c_nrm): the ≈ √n IVF centroids;
+    *  - `encoded` (vec_id, c_id, cp): the IVF route and the packed PQ
+    *    code of every corpus vector, computed together in one map-only
+    *    pass.
+    * `codes` is the PQ half alone: the route column prunes out of its
+    * plan, so PQ-only consumers never pay it. */
+  final case class PqIvfIndex(codebook: DataFrame, cent: DataFrame,
+                              encoded: DataFrame) {
+    def codes: DataFrame = encoded.select(col("vec_id"), col("cp"))
+    def cells: DataFrame = encoded.select(col("vec_id"), col("c_id"))
+  }
+
+  /** Train the PQ codebook and the IVF centroids from ONE read of the
+    * corpus. The projected corpus (vec_id, embedding) is materialized once
+    * — a lazy local checkpoint, stored by the first job that reads it —
+    * and everything reads those blocks:
+    *  1. one map-only job reads n and d (per-partition counts summed
+    *     by the caller — no aggregate exchange);
+    *  2. one bounded collect reads the strided seed rows
+    *     (vec_id % ⌈n/codebookK⌉ = 0) and the centroid rows
+    *     (vec_id % ⌈√n⌉ = 0): ≤ codebookK + ⌈√n⌉ vectors;
+    *  3. codebook and centroid table are local frames (LocalRelation)
+    *     over those rows, through the same slice/dotf expressions as
+    *     every PQ and IVF fold in this file (codes densely indexed in
+    *     vec_id order — the IVF seeding convention); no job;
+    *  4. the route (ivf_route_id) and the encode (pq_packed_cp) fold over
+    *     both quantizers as compact literals: `encoded` is one map-only
+    *     pass with no join, broadcast or exchange.
+    * A corpus that arrives through `queries.table` pays its rebalance
+    * shuffle once, in the checkpoint. Checkpoint `encoded` too to write
+    * both of its halves from one pass (stagedPq). */
+  def pqIvfIndex(corpus: DataFrame, subspaces: Int = 8,
+                 codebookK: Int = 16): PqIvfIndex = {
+    import graft.functions.VectorExpressions.{arrayLiteral, ivfRouteId,
+      pqPackedCp}
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    val projected = corpus.select(col("vec_id"), col("embedding"))
+      .localCheckpoint(eager = false)
+    val (n, d) = projected.select(size(col("embedding"))).as[Int]
+      .mapPartitions { it =>
+        var c = 0L
+        var dim = 0
+        it.foreach { x => c += 1; dim = math.max(dim, x) }
+        Iterator((c, dim))
+      }
+      .collect()
+      .foldLeft((0L, 0)) { case ((c, dim), (pc, pd)) =>
+        (c + pc, math.max(dim, pd)) }
     require(d % subspaces == 0, s"dim $d not divisible into $subspaces subspaces")
     val subDim = d / subspaces
-    val (cb, s) = pqCodebook(corpus, subspaces, subDim, codebookK)
-    (cb, pqEncode(corpus, cb, s, subspaces))
+    val every = math.max(1L, math.ceil(n.toDouble / codebookK).toLong)
+    val centroidEvery = autoCentroidEvery(n)
+    val picked = projected
+      .select(col("vec_id"), col("embedding"),
+        (col("vec_id") % every === 0).as("seed"),
+        (col("vec_id") % centroidEvery === 0).as("centroid"))
+      .filter(col("seed") || col("centroid"))
+      .collect().sortBy(_.getLong(0))
+    val seeds = picked.filter(_.getBoolean(2))
+    val s = seeds.length
+    require(s > 0 && s <= 255, s"codebook size $s exceeds the 8-bit packing")
+    def local(rows: Seq[Row], schema: StructType): DataFrame = {
+      import scala.jdk.CollectionConverters._
+      spark.createDataFrame(rows.asJava, schema)
+    }
+    val codebook = local(
+        for ((r, code) <- seeds.toSeq.zipWithIndex; m <- 0 until subspaces)
+          yield Row(r.get(1), code.toLong, m.toLong),
+        new StructType()
+          .add("c_emb", projected.schema("embedding").dataType)
+          .add("code", "long", nullable = false)
+          .add("m", "long", nullable = false))
+      .select(col("m"), col("code"),
+        expr(s"slice(c_emb, CAST(m * $subDim + 1 AS INT), $subDim)").as("c_sub"))
+      .withColumn("cn2", dotf(col("c_sub"), col("c_sub")))
+    val cent = local(
+        picked.filter(_.getBoolean(3)).map(r => Row(r.get(0), r.get(1))).toSeq,
+        projected.schema)
+      .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
+        sqrt(dotf(col("embedding"), col("embedding"))).as("c_nrm"))
+    val cents = cent.collect().map(r =>
+      CentEntry(r.getLong(0), r.getSeq[Float](1), r.getDouble(2))).toSeq
+    // No centroids (e.g. a filtered slice where no vec_id % spacing == 0):
+    // the route fails loudly when it runs, never silently; the PQ half
+    // prunes the route column and is unaffected.
+    val route =
+      if (cents.isEmpty) raise_error(lit(
+        s"pqIvfIndex: no centroids at spacing $centroidEvery " +
+          "(no vec_id % spacing == 0 in the corpus)")).cast("long")
+      else ivfRouteId(col("embedding"), arrayLiteral(cents))
+    PqIvfIndex(codebook, cent, projected.select(col("vec_id"),
+      route.as("c_id"),
+      pqPackedCp(col("embedding"), codebookMeta(codebook).cbl, subspaces)
+        .as("cp")))
   }
 
   /** ADC top-k over a prebuilt (possibly parquet-read) PQ index. Codebook
-    * size and sub-dimension are re-derived from the codebook itself — two
-    * bounded driver jobs over ≤ subspaces·256 rows, never the corpus. */
+    * size, sub-dimension and the reconstructed-norm table come off the
+    * codebook itself (codebookMeta — one bounded collect, never the
+    * corpus). */
   def pqTopKFrom(codebook: DataFrame, codes: DataFrame, queries: DataFrame,
                  k: Int, subspaces: Int = 8): DataFrame = {
-    val (cb, s, subDim, _) = codebookMeta(codebook)
+    val meta = codebookMeta(codebook)
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("sim").desc, col("vec_id"))
-    codes.crossJoin(pqRn2(cb, s)).crossJoin(pqLut(queries, cb, s, subDim))
+    codes.crossJoin(pqLut(queries, meta.cb, meta.s, meta.subDim))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
-        rz(pqFold("lut", s, subspaces) / col("q_nrm")
-          / sqrt(pqFold("rn2", s, subspaces)), 6).as("sim"))
+        rz(pqFold(col("lut"), meta.s, subspaces) / col("q_nrm")
+          / sqrt(pqFold(meta.rn2, meta.s, subspaces)), 6).as("sim"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .orderBy(col("q_id"), col("rank"))
   }
 
-  /** (broadcast codebook, code count, sub-dimension, subspace count) from
-    * a codebook frame — the bounded metadata a staged-index consumer
-    * re-derives (one driver job over ≤ subspaces·256 rows). */
-  private def codebookMeta(codebook: DataFrame): (DataFrame, Long, Int, Int) = {
-    val row = codebook
-      .agg(max(col("code")).as("mx"), max(size(col("c_sub"))).as("sd"),
-        max(col("m")).as("mm"))
-      .head()
-    (broadcast(codebook), row.getLong(0) + 1, row.getInt(1),
-      row.getLong(2).toInt + 1)
+  /** One IVF centroid, as the route fold reads it. */
+  private final case class CentEntry(c_id: Long, c_emb: Seq[Float],
+                                     c_nrm: Double)
+
+  /** One codebook row in the positional layout every PQ fold reads:
+    * idx = m·S + code. */
+  private final case class CbEntry(idx: Long, m: Long, c_sub: Seq[Float],
+                                   cn2: Double)
+
+  /** What every consumer of a codebook frame needs, from ONE
+    * shuffle-free collect of its subspaces × S rows:
+    *  - `cb`: the codebook, broadcast (the per-query LUT builds join it);
+    *  - `s`, `subDim`, `subspaces`: code count, sub-dimension, subspace
+    *    count;
+    *  - `rn2`: the reconstructed sub-norm² table, cn2 by idx, as a
+    *    literal (the ADC denominator fold);
+    *  - `cbl`: the codebook entries by idx as a literal (the encode fold).
+    */
+  private final case class CodebookMeta(cb: DataFrame, s: Long, subDim: Int,
+                                        subspaces: Int, rn2: Column,
+                                        cbl: Column)
+
+  private def codebookMeta(codebook: DataFrame): CodebookMeta = {
+    import graft.functions.VectorExpressions.arrayLiteral
+    val rows = codebook.select(col("m"), col("code"), col("c_sub"), col("cn2"))
+      .collect()
+    require(rows.nonEmpty, "codebookMeta: empty codebook")
+    val s = rows.map(_.getLong(1)).max + 1
+    val subspaces = rows.map(_.getLong(0)).max.toInt + 1
+    require(rows.length == subspaces * s,
+      s"codebookMeta: ${rows.length} rows are not $subspaces subspaces x $s codes")
+    val entries = rows.map(r => CbEntry(r.getLong(0) * s + r.getLong(1),
+      r.getLong(0), r.getSeq[Float](2), r.getDouble(3))).sortBy(_.idx).toSeq
+    CodebookMeta(broadcast(codebook), s, entries.map(_.c_sub.length).max,
+      subspaces, arrayLiteral(entries.map(_.cn2)), arrayLiteral(entries))
   }
 
   /** IVF-PQ (Jégou et al. 2011 §IV): the IVF cell route with PQ codes as
@@ -611,19 +731,9 @@ object Similarity {
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                 nprobe: Int = 2, subspaces: Int = 8,
                 codebookK: Int = 16): DataFrame = {
-    val (cb, codes) = pqIndexFrames(corpus, subspaces, codebookK)
-    val (cells, cent) = ivfIndexFrames(corpus)
-    ivfPqTopKFrom(cb, codes, cells, cent, queries, k, nprobe, subspaces)
-  }
-
-  /** The IVF half of the staged index: (vec_id → cell assignment, centroid
-    * table) as plain frames, derived once and staged alongside the PQ
-    * codebook/codes. The assignment drops the embedding column — the
-    * standing index never carries floats per corpus vector. */
-  def ivfIndexFrames(corpus: DataFrame): (DataFrame, DataFrame) = {
-    val centroidEvery = autoCentroidEvery(corpus.count())
-    (ivfAssign(corpus, centroidEvery).select(col("vec_id"), col("c_id")),
-      centroids(corpus, centroidEvery))
+    val ix = pqIvfIndex(corpus, subspaces, codebookK)
+    ivfPqTopKFrom(ix.codebook, ix.codes, ix.cells, ix.cent, queries, k,
+      nprobe, subspaces)
   }
 
   /** Scored ADC candidates with the probed cell's rank retained —
@@ -638,7 +748,7 @@ object Similarity {
                          cells: DataFrame, centTable: DataFrame,
                          queries: DataFrame, maxProbe: Int,
                          subspaces: Int = 8): DataFrame = {
-    val (cb, s, subDim, _) = codebookMeta(codebook)
+    val meta = codebookMeta(codebook)
     // The 100 TB point: the standing index carries cell id + packed code,
     // never the embedding — only (vec_id, c_id) meets the 2-long codes
     // table.
@@ -655,11 +765,10 @@ object Similarity {
       .select(col("q_id"), col("c_id"), col("c_rank"))
     queryProbes.join(index, Seq("c_id"))
       .filter(col("vec_id") =!= col("q_id"))
-      .crossJoin(pqRn2(cb, s))
-      .join(pqLut(queries, cb, s, subDim), Seq("q_id"))
+      .join(pqLut(queries, meta.cb, meta.s, meta.subDim), Seq("q_id"))
       .select(col("q_id"), col("vec_id"), col("c_rank"),
-        rz(pqFold("lut", s, subspaces) / col("q_nrm")
-          / sqrt(pqFold("rn2", s, subspaces)), 6).as("sim"))
+        rz(pqFold(col("lut"), meta.s, subspaces) / col("q_nrm")
+          / sqrt(pqFold(meta.rn2, meta.s, subspaces)), 6).as("sim"))
   }
 
   /** IVF-PQ probe over a prebuilt index: (codebook, codes, cell
@@ -686,7 +795,7 @@ object Similarity {
     * exact IEEE float−float (both operands are stored floats; the DuckDB
     * twin is the identical REAL op), map-only after one broadcast centroid
     * join. Returns (vec_id, embedding=residual) — a drop-in corpus for
-    * pqIndexFrames, so train/encode reuse the standard PQ path verbatim. */
+    * pqIvfIndex, so train/encode reuse the standard PQ path verbatim. */
   def ivfResiduals(corpus: DataFrame, cells: DataFrame,
                    cent: DataFrame): DataFrame =
     corpus.join(cells, Seq("vec_id"))
@@ -711,7 +820,7 @@ object Similarity {
                        cells: DataFrame, centTable: DataFrame,
                        queries: DataFrame, k: Int, nprobe: Int = 2,
                        subspaces: Int = 8): DataFrame = {
-    val (cb, s, subDim, _) = codebookMeta(rescb)
+    val CodebookMeta(cb, s, subDim, _, _, _) = codebookMeta(rescb)
     val index = cells.join(rescodes, Seq("vec_id"))
     val cent = broadcast(centTable)
     val wp = Window.partitionBy(col("q_id"))
@@ -751,8 +860,8 @@ object Similarity {
       .join(cxlTable, Seq("c_id"))
       .join(pqLut(queries, cb, s, subDim), Seq("q_id"))
       .select(col("q_id"), col("vec_id"),
-        rz((col("qc") + pqFold("lut", s, subspaces)) / col("q_nrm")
-          / sqrt(col("cn2c") + pqFold("cxl", s, subspaces)), 6).as("sim"))
+        rz((col("qc") + pqFold(col("lut"), s, subspaces)) / col("q_nrm")
+          / sqrt(col("cn2c") + pqFold(col("cxl"), s, subspaces)), 6).as("sim"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .orderBy(col("q_id"), col("rank"))
@@ -857,7 +966,7 @@ object Similarity {
     * one-row broadcasts into the stream, the route is the in-row argmax
     * (round-6 cosine, c_id tie-break — the ivfAssign packed-argmax order),
     * and the per-subspace encode is the in-row packed argmin over the
-    * codebook slice (identical pk arithmetic to [[pqEncode]], so the
+    * codebook slice (identical pk arithmetic to [[pqEncodeFrom]], so the
     * emitted code equals the batch encode bit for bit). ZERO stateful
     * operators — no watermark, no state store, nothing to evict: state
     * boundedness is trivial (StreamingSpec pins the all-zero state
@@ -871,33 +980,29 @@ object Similarity {
     * code + 8 of cell id per vector, appended partition-aligned by c_id. */
   def ivfPqStreamEncode(stream: DataFrame, codebook: DataFrame,
                         centTable: DataFrame, subspaces: Int = 8): DataFrame = {
-    val (cb, s, _, _) = codebookMeta(codebook)
-    // Staged-index validation BEFORE the stream starts (two bounded counts
-    // over ≤ subspaces·256 and ≈√n rows): a codebook trained with a
-    // different subspace count would make pqPackCp mis-slice every arriving
-    // vector, and an empty centroid table would route everything to a bogus
-    // cell — both row-level folds also hard-require this, but failing at
-    // query construction beats failing mid-micro-batch.
-    require(codebook.count() == subspaces * s,
-      s"ivfPqStreamEncode: codebook is not $subspaces subspaces x $s codes")
+    val meta = codebookMeta(codebook)
+    // Staged-index validation BEFORE the stream starts (the codebook
+    // collect plus one bounded count over ≈√n rows): a codebook trained
+    // with a different subspace count would make pqPackCp mis-slice every
+    // arriving vector, and an empty centroid table would route everything
+    // to a bogus cell — both row-level folds also hard-require this, but
+    // failing at query construction beats failing mid-micro-batch.
+    require(meta.subspaces == subspaces,
+      s"ivfPqStreamEncode: codebook is not $subspaces subspaces x ${meta.s} codes")
     require(centTable.limit(1).count() == 1,
       "ivfPqStreamEncode: empty centroid table")
     val centArr = broadcast(centTable
       .select(struct(col("c_id"), col("c_emb"), col("c_nrm")).as("c"))
       .agg(array_sort(collect_list(col("c"))).as("cents")))
-    val cbArr = broadcast(cb
-      .select(struct((col("m") * s + col("code")).as("idx"), col("m"),
-        col("c_sub"), col("cn2")).as("e"))
-      .agg(array_sort(collect_list(col("e"))).as("cbl")))
     // Route + encode are NATIVE codegen'd expressions (one compiled loop
     // per corpus row over the collected centroid/codebook arrays — see
     // VectorExpressions.ivfRoutePk/pqPackCp): this is the whole-corpus
     // hot path, and the higher-order-function form ran every element
     // through an interpreted boxed lambda (measured ~7× the batch encode
-    // at f30). The arithmetic is the batch ivfAssign packed argmax and
-    // pqEncode packed argmin verbatim, so the appended index is
-    // bit-identical to the batch build (FunctionsSpec pins the fold;
-    // the shared oracle pins the query end-to-end).
+    // at f30). The folds are the batch pqIvfIndex route and encode
+    // verbatim, so the appended index is bit-identical to the batch build
+    // (FunctionsSpec pins the folds; the shared oracle pins the query
+    // end-to-end).
     import graft.functions.VectorExpressions.{ivfRouteId, pqPackedCp}
     // Per-batch repartition BEFORE the encode: a file-source micro-batch
     // arrives with one read split per maxPartitionBytes — a 32 MB shard is
@@ -909,10 +1014,10 @@ object Similarity {
     stream
       .select(col("vec_id"), col("embedding"))
       .repartition(parts)
-      .crossJoin(centArr).crossJoin(cbArr)
+      .crossJoin(centArr)
       .select(col("vec_id"),
         ivfRouteId(col("embedding"), col("cents")).as("c_id"),
-        pqPackedCp(col("embedding"), col("cbl"), subspaces).as("cp"))
+        pqPackedCp(col("embedding"), meta.cbl, subspaces).as("cp"))
   }
 
   /** Candidate-shortlist sort order shared by the two streaming rollups:
@@ -947,7 +1052,7 @@ object Similarity {
                                 subspaces: Int,
                                 carry: Seq[String]): DataFrame = {
     val carryCols = carry.map(col)
-    val (cb, s, subDim, _) = codebookMeta(codebook)
+    val CodebookMeta(cb, s, subDim, _, rn2, _) = codebookMeta(codebook)
     // one-row broadcast metadata: centroid array (c_id-sorted) and the
     // codebook as an idx-sorted struct array (idx = m·S + code, the pqLut
     // positional layout)
@@ -978,37 +1083,15 @@ object Similarity {
     val index = cells.join(codes, Seq("vec_id"))
     probes.join(index, Seq("c_id"))
       .filter(col("vec_id") =!= col("q_id"))
-      .crossJoin(pqRn2(cb, s))
       .select(col("q_id") +: col("vec_id") +:
-        rz(pqFold("lut", s, subspaces) / col("q_nrm")
-          / sqrt(pqFold("rn2", s, subspaces)), 6).as("sim") +: carryCols: _*)
+        rz(pqFold(col("lut"), s, subspaces) / col("q_nrm")
+          / sqrt(pqFold(rn2, s, subspaces)), 6).as("sim") +: carryCols: _*)
   }
 
-  /** Derived PQ codebook (m, code, c_sub, cn2) — subspaces × S broadcast
-    * rows; seeds are every ⌈n/codebookK⌉-th vector (the IVF seeding
-    * convention), codes densely indexed in vec_id order. */
-  private def pqCodebook(corpus: DataFrame, subspaces: Int, subDim: Int,
-                         codebookK: Int): (DataFrame, Long) = {
-    val every = math.max(1L, math.ceil(corpus.count().toDouble / codebookK).toLong)
-    val wSeed = Window.orderBy(col("c_vid"))
-    val seeds = corpus.filter(col("vec_id") % every === 0)
-      .select(col("vec_id").as("c_vid"), col("embedding").as("c_emb"))
-      .withColumn("code", row_number().over(wSeed).cast("long") - 1)
-    val s = seeds.count() // bounded: ≈ codebookK rows
-    require(s > 0 && s <= 255, s"codebook size $s exceeds the 8-bit packing")
-    val cb = broadcast(seeds
-      .select(col("code"), col("c_emb"),
-        explode(sequence(lit(0L), lit(subspaces - 1L))).as("m"))
-      .select(col("m"), col("code"),
-        expr(s"slice(c_emb, CAST(m * $subDim + 1 AS INT), $subDim)").as("c_sub"))
-      .withColumn("cn2", dotf(col("c_sub"), col("c_sub"))))
-    (cb, s)
-  }
-
-  /** pqIndexFrames with `iters` deterministic Lloyd rounds over the
-    * sub-codebooks before encoding — PQ as Jégou et al. actually train it
-    * (k-means sub-quantizers), restated in the engine's reproducible
-    * arithmetic. The strided seed codebook quantizes with whatever
+  /** The PQ half of [[pqIvfIndex]] with `iters` deterministic Lloyd
+    * rounds over the sub-codebooks before encoding — PQ as Jégou et al.
+    * actually train it (k-means sub-quantizers), restated in the engine's
+    * reproducible arithmetic. The strided seed codebook quantizes with whatever
     * geometry the seeds happen to have; each refinement round reassigns
     * every sub-vector to its nearest codeword (the same packed-min argmin
     * as encoding) and moves each codeword to the decimal-exact mean of its
@@ -1025,12 +1108,11 @@ object Similarity {
   def pqIndexFramesRefined(corpus: DataFrame, subspaces: Int = 8,
                            codebookK: Int = 16, iters: Int = 2)
       : (DataFrame, DataFrame) = {
-    val d = corpus.select(size(col("embedding"))).head().getInt(0)
-    require(d % subspaces == 0, s"dim $d not divisible into $subspaces subspaces")
-    val subDim = d / subspaces
-    val (cb0, s) = pqCodebook(corpus, subspaces, subDim, codebookK)
-    val cb = pqRefineCodebook(corpus, cb0, s, subspaces, subDim, iters)
-    (cb, pqEncode(corpus, cb, s, subspaces))
+    val ix = pqIvfIndex(corpus, subspaces, codebookK)
+    val meta = codebookMeta(ix.codebook)
+    val cb = pqRefineCodebook(corpus, ix.codebook, meta.s, subspaces,
+      meta.subDim, iters)
+    (cb, pqEncodeFrom(corpus, cb))
   }
 
   /** The Lloyd rounds behind pqIndexFramesRefined. The codebook is
@@ -1038,7 +1120,7 @@ object Similarity {
     * does not drag `iters` nested corpus passes through its broadcast.
     *
     * r17: the per-round reassignment is the same NATIVE packed-argmin
-    * fold as [[pqEncode]] (identical pk arithmetic — the per-(m) code is
+    * fold as [[pqEncodeFrom]] (identical pk arithmetic — the per-(m) code is
     * the cp byte), so each round's corpus pass is one codegen'd loop +
     * the posexplode for the mean, instead of a |corpus|·(subspaces·S)
     * crossJoin row stream grouped BY THE EMBEDDING ARRAY (the old argmin
@@ -1084,61 +1166,24 @@ object Similarity {
     cur
   }
 
-  /** PQ encoding: per (vector, subspace) argmin over the codebook, packed
-    * min (see pqTopK's determinism contract), codes packed 8 bits per
-    * subspace into ONE long per vector.
-    *
-    * r17: the argmin is the NATIVE packed fold
-    * (VectorExpressions.pqPackCp — identical pk arithmetic to the prior
-    * crossJoin + two-groupBy form, FunctionsSpec pins bit equality on the
-    * real corpus; the streaming ingest has encoded through this fold
-    * since r14) over a one-row broadcast codebook array: ONE codegen'd
-    * loop per corpus row, zero shuffle. The prior shape materialized
-    * |corpus|·(subspaces·S) rows through two partial aggregates — at
-    * S = 16 that is a 128× row blow-up feeding an exchange, paid on every
-    * index build and every drift/retrain re-encode. Flops unchanged; the
-    * row machinery is gone. [[pqEncodeExploded]] keeps the row form as
-    * the pin-test reference. */
-  private def pqEncode(corpus: DataFrame, cb: DataFrame, s: Long,
-                       subspaces: Int): DataFrame = {
-    import graft.functions.VectorExpressions.pqPackedCp
-    val cbArr = broadcast(cb
-      .select(struct((col("m") * s + col("code")).as("idx"), col("m"),
-        col("c_sub"), col("cn2")).as("e"))
-      .agg(array_sort(collect_list(col("e"))).as("cbl")))
-    corpus.select(col("vec_id"), col("embedding"))
-      .crossJoin(cbArr)
-      .select(col("vec_id"),
-        pqPackedCp(col("embedding"), col("cbl"), subspaces).as("cp"))
-  }
-
-  /** The pre-r17 row-stream encode — crossJoin against the broadcast
-    * codebook rows, per-(vector, subspace) packed min, two map-side
-    * partial aggregates. Kept ONLY as the independent reference the
-    * FunctionsSpec pin test compares the native fold against (the
-    * arithmetic both forms must agree on is THE determinism contract of
-    * every PQ artifact). Never on a query path. */
-  private[graft] def pqEncodeExploded(corpus: DataFrame, cb: DataFrame,
-                                      subDim: Int): DataFrame = {
-    val bias = 1000000000000L
-    val vSub = expr(s"slice(embedding, CAST(m * $subDim + 1 AS INT), $subDim)")
-    val pk = (round((col("cn2") - lit(2.0) * dotf(vSub, col("c_sub"))) * 1e6, 0)
-      .cast("long") + bias) * 256L + col("code")
-    corpus.select(col("vec_id"), col("embedding"))
-      .crossJoin(cb)
-      .groupBy(col("vec_id"), col("m")).agg(min(pk).as("pk"))
-      .groupBy(col("vec_id"))
-      .agg(sum(expr("(pk % 256) * shiftleft(1L, CAST(8 * m AS INT))")).as("cp"))
-  }
-
-  /** Encode a corpus under a FROZEN (possibly parquet-read) codebook —
-    * the apply-half of the train-once contract, public so audits can
+  /** PQ encoding under a FROZEN (possibly parquet-read) codebook — the
+    * apply-half of the train-once contract, public so audits can
     * re-encode a SHIFTED corpus under the deployed quantizers (the drift
-    * audit) without re-deriving anything. Sub-dimension and code count
-    * come off the codebook itself (bounded metadata job). */
+    * audit) without re-deriving anything: per (vector, subspace) argmin
+    * over the codebook, packed min (see pqTopK's determinism contract),
+    * codes packed 8 bits per subspace into ONE long per vector.
+    *
+    * The argmin is the NATIVE packed fold (VectorExpressions.pqPackCp)
+    * over the codebook entries as one literal array: ONE codegen'd loop
+    * per corpus row, map-only. FunctionsSpec pins it bit for bit against
+    * the row-stream form (crossJoin + two partial aggregates, a 128× row
+    * blow-up at S = 16) it replaced. Sub-dimension and code count come
+    * off the codebook itself (codebookMeta). */
   def pqEncodeFrom(corpus: DataFrame, codebook: DataFrame): DataFrame = {
-    val (cb, s, _, subspaces) = codebookMeta(codebook)
-    pqEncode(corpus, cb, s, subspaces)
+    import graft.functions.VectorExpressions.pqPackedCp
+    val meta = codebookMeta(codebook)
+    corpus.select(col("vec_id"),
+      pqPackedCp(col("embedding"), meta.cbl, meta.subspaces).as("cp"))
   }
 
   /** Compact a streamed index append-log into `partitions` c_id-aligned,
@@ -1202,13 +1247,6 @@ object Similarity {
       .select(col("q_id"), col("q_nrm"),
         transform(col("p"), x => x.getField("dv")).as("lut")))
 
-  /** Reconstructed sub-norm² table, shared by every query — one row. */
-  private def pqRn2(cb: DataFrame, s: Long): DataFrame =
-    broadcast(cb
-      .select((col("m") * s + col("code")).as("idx"), col("cn2"))
-      .agg(array_sort(collect_list(struct(col("idx"), col("cn2")))).as("p"))
-      .select(transform(col("p"), x => x.getField("cn2")).as("rn2")))
-
   /** ADC fold: sum the subspaces LUT terms in ascending-m order (plain
     * sequential double adds — the dotf posture; DuckDB twin is the same
     * list_transform(range)/list_reduce chain).
@@ -1221,19 +1259,10 @@ object Similarity {
     * the hottest per-row expression in the vector family. The `subspaces`
     * param stays for call-site clarity; the fold derives it from the
     * array itself (every LUT/rn2/cxl table is exactly subspaces·S wide). */
-  private def pqFold(arr: String, s: Long, subspaces: Int) = {
+  private def pqFold(arr: Column, s: Long, subspaces: Int) = {
     require(subspaces > 0, "pqFold: non-positive subspace count")
-    graft.functions.VectorExpressions.pqFoldSum(col(arr), col("cp"), s.toInt)
+    graft.functions.VectorExpressions.pqFoldSum(arr, col("cp"), s.toInt)
   }
-
-  /** The pre-r17 higher-order fold — kept ONLY as the independent
-    * reference FunctionsSpec pins the native fold against. Never on a
-    * query path. */
-  private[graft] def pqFoldHof(arr: String, s: Long, subspaces: Int) =
-    expr(s"""aggregate(
-      transform(sequence(0, ${subspaces - 1}),
-        m -> element_at($arr, CAST(m * $s + (shiftright(cp, CAST(8 * m AS INT)) % 256) + 1 AS INT))),
-      CAST(0 AS DOUBLE), (a, x) -> a + x)""")
 
   /** Per-dimension-pair covariance of the embedding corpus — the XᵀX
     * pass every PCA / whitening / decorrelation step starts from, shaped

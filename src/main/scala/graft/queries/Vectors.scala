@@ -12,34 +12,41 @@ import graft.ops.{Multimodal, Similarity}
   */
 object Vectors extends QueryPack {
 
-  /** Bounded judged-query workload: ~64 deterministic query vectors at
-    * every corpus size (Similarity.queryStride). Keeping the workload
+  /** The embeddings corpus (as `table` reads it) and its bounded
+    * judged-query workload: ~64 deterministic query vectors at every
+    * corpus size (Similarity.queryStride). Keeping the workload
     * corpus-proportional made every exhaustive-scan query O(n^2) in the
-    * factor-30 audit; a real query stream is independent of index size. */
-  private def boundedQueries(e: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    e.filter(col("vec_id") % graft.ops.Similarity.queryStride(e.count()) === 0)
+    * factor-30 audit; a real query stream is independent of index size.
+    * The stride's corpus count is one job on the read before the
+    * rebalance (tableCounted). */
+  private def corpusAndQueries(s: org.apache.spark.sql.SparkSession,
+                               dir: String)
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    val (e, n) = tableCounted(s, dir, "embeddings")
+    (e, e.filter(col("vec_id") % Similarity.queryStride(n) === 0))
+  }
 
 
   val queries: Map[String, QFn] = Map(
     // Exact brute-force top-k: bounded query set (~64 strided vec_ids)
     // broadcast against the full corpus.
     "sim_brute_topk" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      Similarity.bruteForceTopK(e, boundedQueries(e), k = 5)
+      val (e, q) = corpusAndQueries(s, dir)
+      Similarity.bruteForceTopK(e, q, k = 5)
     }),
 
     // Approximate top-k via deterministic axis-sign LSH buckets.
     "sim_lsh_topk" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      Similarity.signLshTopK(e, boundedQueries(e), k = 5,
+      val (e, q) = corpusAndQueries(s, dir)
+      Similarity.signLshTopK(e, q, k = 5,
         signBits = 8)
     }),
 
     // Maximum-inner-product retrieval through the MIPS→NN reduction —
     // ranking by raw dot product over the sign-bucket candidate walk.
     "sim_mips_topk" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      Similarity.mipsTopK(e, boundedQueries(e), k = 5,
+      val (e, q) = corpusAndQueries(s, dir)
+      Similarity.mipsTopK(e, q, k = 5,
         signBits = 8)
     }),
 
@@ -48,8 +55,8 @@ object Vectors extends QueryPack {
     // centroid spacing is DERIVED (⌈√n⌉, so m ≈ √n at any corpus size);
     // the oracle mirrors the derivation with a count subquery.
     "sim_ivf_topk" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      Similarity.ivfTopKAuto(e, boundedQueries(e), k = 5,
+      val (e, q) = corpusAndQueries(s, dir)
+      Similarity.ivfTopKAuto(e, q, k = 5,
         nprobe = 2)
     }),
 
@@ -59,26 +66,26 @@ object Vectors extends QueryPack {
     // Codebook + codes come from the per-SF staged index (train once,
     // query many — the shape a real vector store has anyway).
     "sim_pq_topk" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
+      val (_, q) = corpusAndQueries(s, dir)
       val st = stagedPq(s, dir)
       Similarity.pqTopKFrom(
         s.read.parquet(s"$st/codebook.parquet"),
         s.read.parquet(s"$st/codes.parquet"),
-        boundedQueries(e), k = 5)
+        q, k = 5)
     }),
 
     // IVF-PQ: nprobe cells per query, candidates scored from 8-byte
     // packed codes — the staged index carries (vec_id, c_id, code), never
     // the embedding (the 100 TB memory-bound answer).
     "sim_ivfpq_topk" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
+      val (_, q) = corpusAndQueries(s, dir)
       val st = stagedPq(s, dir)
       Similarity.ivfPqTopKFrom(
         s.read.parquet(s"$st/codebook.parquet"),
         s.read.parquet(s"$st/codes.parquet"),
         s.read.parquet(s"$st/cells.parquet"),
         s.read.parquet(s"$st/cent.parquet"),
-        boundedQueries(e), k = 5, nprobe = 2)
+        q, k = 5, nprobe = 2)
     }),
 
     // The same two-stage serving over the SUBLINEAR stage 1: IVF-PQ
@@ -87,8 +94,7 @@ object Vectors extends QueryPack {
     // 100 TB query path: index memory 16 bytes/vector, per-query work
     // nprobe·cell + 50 exact fetches.
     "sim_ivfpq_rerank" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      val q = boundedQueries(e)
+      val (e, q) = corpusAndQueries(s, dir)
       val st = stagedPq(s, dir)
       val shortlist = Similarity.ivfPqTopKFrom(
           s.read.parquet(s"$st/codebook.parquet"),
@@ -106,8 +112,7 @@ object Vectors extends QueryPack {
     // shortlist broadcasts into the corpus scan (keyed fetch, corpus
     // never shuffles); the re-rank window runs over <= 64·50 rows.
     "sim_pq_rerank" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      val q = boundedQueries(e)
+      val (e, q) = corpusAndQueries(s, dir)
       val st = stagedPq(s, dir)
       val shortlist = Similarity.pqTopKFrom(
           s.read.parquet(s"$st/codebook.parquet"),
@@ -120,8 +125,7 @@ object Vectors extends QueryPack {
     // ranking — the sim_lsh_recall audit harness pointed at PQ. Rides the
     // same staged index as sim_pq_topk instead of re-training it.
     "sim_pq_recall" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      val q = boundedQueries(e)
+      val (e, q) = corpusAndQueries(s, dir)
       val st = stagedPq(s, dir)
       val brute = Similarity.bruteForceTopK(e, q, k = 5)
         .select(col("q_id"), col("vec_id"))
@@ -146,8 +150,7 @@ object Vectors extends QueryPack {
     // exact ranking — measured side by side with sim_pq_recall so the
     // rotation's effect on the SAME index budget is a number, not a hope.
     "sim_opq_recall" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      val q = boundedQueries(e)
+      val (e, q) = corpusAndQueries(s, dir)
       val st = stagedOpq(s, dir)
       val perm = s.read.parquet(s"$st/perm.parquet").orderBy(col("pos"))
         .select(col("dim")).collect().map(_.getLong(0).toInt).toSeq
@@ -193,8 +196,7 @@ object Vectors extends QueryPack {
     // index at scale. Composes the two paths above; both sides ship
     // (q_id, vec_id) sets and the recall is one bounded join + rollup.
     "sim_lsh_recall" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      val q = boundedQueries(e)
+      val (e, q) = corpusAndQueries(s, dir)
       val brute = Similarity.bruteForceTopK(e, q, k = 5)
         .select(col("q_id"), col("vec_id"))
       val approx = Similarity.signLshTopK(e, q, k = 5, signBits = 8)
@@ -215,8 +217,7 @@ object Vectors extends QueryPack {
     // IVF). At scale nprobe is THE knob traded against recall; this row
     // is the measured side of that trade, same harness as sim_lsh_recall.
     "sim_ivf_recall" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      val q = boundedQueries(e)
+      val (e, q) = corpusAndQueries(s, dir)
       val brute = Similarity.bruteForceTopK(e, q, k = 5)
         .select(col("q_id"), col("vec_id"))
       val approx = Similarity.ivfTopKAuto(e, q, k = 5, nprobe = 2)
@@ -255,8 +256,7 @@ object Vectors extends QueryPack {
     // sim_ivf_recall's number. Predicate label % 5 = 2 (~20% slice) —
     // selective enough that the shortlist posture visibly loses hits.
     "sim_filtered_topk" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      val q = boundedQueries(e)
+      val (e, q) = corpusAndQueries(s, dir)
       val pred = col("label") % 5 === 2
       val labels = e.select(col("vec_id"), col("label"))
       val brute = Similarity.bruteForceTopK(e.filter(pred), q, k = 5)
@@ -297,8 +297,7 @@ object Vectors extends QueryPack {
     // the residual refinement's effect is a number next to the raw-code
     // baseline (sim_ivfpq_topk via sim_pq_recall's harness).
     "sim_ivfpq_res_recall" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      val q = boundedQueries(e)
+      val (e, q) = corpusAndQueries(s, dir)
       val pq = stagedPq(s, dir)
       val st = stagedResPq(s, dir)
       val brute = Similarity.bruteForceTopK(e, q, k = 5)
@@ -328,8 +327,7 @@ object Vectors extends QueryPack {
     // sf0.01): the quantizer-quality lever the residual audit shows this
     // corpus does NOT get from IVFADC residuals.
     "sim_pq_ref_recall" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      val q = boundedQueries(e)
+      val (e, q) = corpusAndQueries(s, dir)
       val st = stagedRefPq(s, dir)
       val brute = Similarity.bruteForceTopK(e, q, k = 5)
         .select(col("q_id"), col("vec_id"))
@@ -362,8 +360,7 @@ object Vectors extends QueryPack {
     // further recall must come from nprobe/cell coverage, not codes.
     // Cells/centroids are shared with stage:pq — only codebook/codes swap.
     "sim_ivfpq_ref_recall" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      val q = boundedQueries(e)
+      val (e, q) = corpusAndQueries(s, dir)
       val pq = stagedPq(s, dir)
       val ref = stagedRefPq(s, dir)
       val brute = Similarity.bruteForceTopK(e, q, k = 5)
@@ -397,8 +394,7 @@ object Vectors extends QueryPack {
     // size; the brute ranking is the same bounded-query harness every
     // recall audit rides.
     "sim_ivf_nprobe_audit" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      val q = boundedQueries(e)
+      val (e, q) = corpusAndQueries(s, dir)
       val pq = stagedPq(s, dir)
       val cells = s.read.parquet(s"$pq/cells.parquet")
       val cent = s.read.parquet(s"$pq/cent.parquet")
@@ -433,8 +429,7 @@ object Vectors extends QueryPack {
     // (same oracle SQL, the dd_bloom_confirmed proven-equal convention).
     "sim_stream_ann" -> ((s, dir) => {
       import graft.streaming.StreamOps
-      val e = table(s, dir, "embeddings")
-      val q = boundedQueries(e)
+      val (e, q) = corpusAndQueries(s, dir)
       val pq = stagedPq(s, dir)
       val stride = Similarity.queryStride(e.count())
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
@@ -474,8 +469,7 @@ object Vectors extends QueryPack {
     // oracle SQL, the dd_bloom_confirmed proven-equal convention).
     "sim_stream_ann_evict" -> ((s, dir) => {
       import graft.streaming.StreamOps
-      val e = table(s, dir, "embeddings")
-      val q = boundedQueries(e)
+      val (e, q) = corpusAndQueries(s, dir)
       val pq = stagedPq(s, dir)
       val stride = Similarity.queryStride(e.count())
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
@@ -742,8 +736,7 @@ object Vectors extends QueryPack {
     // ceiling, at 9% of the corpus scanned; a recall-bound deployment
     // must raise shortlistK alongside nprobe, not nprobe alone.
     "sim_ivfpq_frontier" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      val q = boundedQueries(e)
+      val (e, q) = corpusAndQueries(s, dir)
       val pq = stagedPq(s, dir)
       val ref = stagedRefPq(s, dir)
       val cb = s.read.parquet(s"$ref/refcodebook.parquet")
@@ -832,8 +825,7 @@ object Vectors extends QueryPack {
     // on the deployable index: nprobe=2/K=50 for the 9%-scan tier,
     // nprobe=8/K=200 to serve the full routing ceiling.
     "sim_ivfpq_k_frontier" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      val q = boundedQueries(e)
+      val (e, q) = corpusAndQueries(s, dir)
       val pq = stagedPq(s, dir)
       val ref = stagedRefPq(s, dir)
       val cb = s.read.parquet(s"$ref/refcodebook.parquet")
@@ -1222,26 +1214,40 @@ object Vectors extends QueryPack {
   }
 
   /** PQ/IVF index stage — the train-once/apply-many contract applied to
-    * the vector index (the stagedBpe convention): the codebook derivation
-    * (2 corpus counts + a head), the full-corpus encode, and the IVF cell
-    * assignment run ONCE per SF; sim_pq_topk, sim_pq_recall,
-    * sim_opq_recall and sim_ivfpq_topk all read the staged artifacts. The
-    * standing index is exactly what ships at 100 TB: codebook (≤ 8·16
-    * rows), 8-byte codes + 8-byte cell id per vector — no embeddings. */
+    * the vector index (the stagedBpe convention): the quantizer training
+    * and the full-corpus route + encode run ONCE per SF; sim_pq_topk,
+    * sim_pq_recall, sim_ivfpq_topk and every other PQ-family row read the
+    * staged artifacts. The standing index is exactly what ships at
+    * 100 TB: codebook (≤ 8·16 rows), 8-byte codes + 8-byte cell id per
+    * vector — no embeddings. Cost (Similarity.pqIvfIndex): one corpus
+    * read and rebalance, two bounded collect jobs over it (n and d; the
+    * seed and centroid rows), one route + encode pass whose blocks both
+    * halves are written from, and one single-file write per bounded
+    * artifact — 8 Spark jobs at any SF, the schema read included
+    * (PlanSpec pins the count). */
   private[queries] def stagedPq(s: org.apache.spark.sql.SparkSession,
                                 dir: String): String = {
     val staged = tmpStage(dir, Similarity.PqStageTag)
     ensureStaged(staged, "cent.parquet/_SUCCESS") {
-      val e = table(s, dir, "embeddings")
-      val (cb, codes) = Similarity.pqIndexFrames(e)
-      val (cells, cent) = Similarity.ivfIndexFrames(e)
-      cb.write.mode("overwrite").parquet(s"$staged/codebook.parquet")
-      codes.write.mode("overwrite").parquet(s"$staged/codes.parquet")
-      cells.write.mode("overwrite").parquet(s"$staged/cells.parquet")
-      cent.write.mode("overwrite").parquet(s"$staged/cent.parquet")
+      val ix = Similarity.pqIvfIndex(table(s, dir, "embeddings"))
+      writeOneFile(ix.codebook, s"$staged/codebook.parquet")
+      // the route + encode pass runs once; both halves read its blocks
+      val enc = ix.encoded.localCheckpoint(eager = false)
+      enc.select(col("vec_id"), col("cp"))
+        .write.mode("overwrite").parquet(s"$staged/codes.parquet")
+      enc.select(col("vec_id"), col("c_id"))
+        .write.mode("overwrite").parquet(s"$staged/cells.parquet")
+      // cent last: its _SUCCESS is the stage's completion marker
+      writeOneFile(ix.cent, s"$staged/cent.parquet")
     }
     staged
   }
+
+  /** A bounded, locally built frame as ONE parquet file (a local frame
+    * otherwise splits into defaultParallelism files). */
+  private def writeOneFile(df: org.apache.spark.sql.DataFrame,
+                           path: String): Unit =
+    df.coalesce(1).write.mode("overwrite").parquet(path)
 
   /** IVFADC residual index stage (Jégou et al. 2011 §IV): residuals
     * x − centroid(cell(x)) over the STAGED IVF assignment (no second
@@ -1256,9 +1262,9 @@ object Vectors extends QueryPack {
       val res = Similarity.ivfResiduals(table(s, dir, "embeddings"),
         s.read.parquet(s"$pq/cells.parquet"),
         s.read.parquet(s"$pq/cent.parquet"))
-      val (cb, codes) = Similarity.pqIndexFrames(res)
-      cb.write.mode("overwrite").parquet(s"$staged/rescodebook.parquet")
-      codes.write.mode("overwrite").parquet(s"$staged/rescodes.parquet")
+      val ix = Similarity.pqIvfIndex(res)
+      writeOneFile(ix.codebook, s"$staged/rescodebook.parquet")
+      ix.codes.write.mode("overwrite").parquet(s"$staged/rescodes.parquet")
     }
     staged
   }
@@ -1272,7 +1278,7 @@ object Vectors extends QueryPack {
     ensureStaged(staged, "refcodes.parquet/_SUCCESS") {
       val (cb, codes) = Similarity.pqIndexFramesRefined(
         table(s, dir, "embeddings"))
-      cb.write.mode("overwrite").parquet(s"$staged/refcodebook.parquet")
+      writeOneFile(cb, s"$staged/refcodebook.parquet")
       codes.write.mode("overwrite").parquet(s"$staged/refcodes.parquet")
     }
     staged
@@ -1293,10 +1299,10 @@ object Vectors extends QueryPack {
         .map { case (dim, pos) => (pos.toLong, dim.toLong) }
         .toDF("pos", "dim")
         .coalesce(1).write.mode("overwrite").parquet(s"$staged/perm.parquet")
-      val (cb, codes) = Similarity.pqIndexFrames(
+      val ix = Similarity.pqIvfIndex(
         Similarity.permuteVectors(table(s, dir, "embeddings"), perm))
-      cb.write.mode("overwrite").parquet(s"$staged/codebook.parquet")
-      codes.write.mode("overwrite").parquet(s"$staged/codes.parquet")
+      writeOneFile(ix.codebook, s"$staged/codebook.parquet")
+      ix.codes.write.mode("overwrite").parquet(s"$staged/codes.parquet")
     }
     staged
   }

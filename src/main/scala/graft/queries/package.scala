@@ -15,17 +15,34 @@ package object queries {
     * as long and floor-convert with integer DIV, matching DuckDB's ns->µs
     * truncation) vs plain TIMESTAMP(MICROS). Dispatch on the landed type so
     * either generation normalizes to timestamp_ntz. */
-  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val raw =
-      if (name == "events") {
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val df = spark.read.parquet(s"$dir/$name.parquet")
-        val tsNorm = df.schema("ts").dataType match {
-          case LongType => expr("cast(timestamp_micros(ts DIV 1000) as timestamp_ntz)")
-          case _        => col("ts").cast(TimestampNTZType)
-        }
-        df.withColumn("ts", tsNorm)
-      } else spark.read.parquet(s"$dir/$name.parquet")
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    rebalance(spark, name, read(spark, dir, name))
+
+  /** `table` and its row count. The count runs on the read BEFORE the
+    * rebalance — one map-only job over a column-less scan, the
+    * per-partition counts summed by the caller — where counting the
+    * rebalanced frame pays a round-robin shuffle, a partial aggregate, a
+    * single-partition exchange and the final aggregate (three jobs under
+    * AQE) for the same number. */
+  def tableCounted(spark: SparkSession, dir: String,
+                   name: String): (DataFrame, Long) = {
+    val raw = read(spark, dir, name)
+    (rebalance(spark, name, raw), raw.select().rdd.count())
+  }
+
+  private def read(spark: SparkSession, dir: String, name: String): DataFrame =
+    if (name == "events") {
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      val df = spark.read.parquet(s"$dir/$name.parquet")
+      val tsNorm = df.schema("ts").dataType match {
+        case LongType => expr("cast(timestamp_micros(ts DIV 1000) as timestamp_ntz)")
+        case _        => col("ts").cast(TimestampNTZType)
+      }
+      df.withColumn("ts", tsNorm)
+    } else spark.read.parquet(s"$dir/$name.parquet")
+
+  private def rebalance(spark: SparkSession, name: String,
+                        raw: DataFrame): DataFrame = {
     // The driver writes each table as ONE file with ONE row group, and a
     // row group is parquet's split unit — so every scan arrives as a
     // single partition. For documents/embeddings that means the per-row CPU

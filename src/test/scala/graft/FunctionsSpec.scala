@@ -173,51 +173,64 @@ class FunctionsSpec extends SparkSpec {
     "batch index bit for bit on the real corpus") {
     import graft.ops.Similarity
     import graft.functions.VectorExpressions
-    val e = graft.queries.table(spark, "/root/testdata/sf0.001", "embeddings")
-    val (cb, codes) = Similarity.pqIndexFrames(e)
-    val (cells, cent) = Similarity.ivfIndexFrames(e)
-    val s = cb.agg(max($"code")).head().getLong(0) + 1
-    val centArr = cent.select(struct($"c_id", $"c_emb", $"c_nrm").as("c"))
-      .agg(array_sort(collect_list($"c")).as("cents"))
-    val cbArr = cb.select(struct(($"m" * s + $"code").as("idx"), $"m",
-        $"c_sub", $"cn2").as("e"))
-      .agg(array_sort(collect_list($"e")).as("cbl"))
-    val got = e.crossJoin(centArr).crossJoin(cbArr)
-      .select($"vec_id",
-        VectorExpressions.ivfRouteId($"embedding", $"cents").as("c_id"),
-        VectorExpressions.pqPackedCp($"embedding", $"cbl", 8).as("cp"))
-      .orderBy($"vec_id").collect().map(_.toSeq).toSeq
-    // r17: the batch index itself now encodes through the native fold, so
-    // the cp reference comes from the preserved row-stream form
-    // (pqEncodeExploded) — the pin stays native-vs-independent-arithmetic
-    val subDim = e.select(size($"embedding")).head().getInt(0) / 8
-    val explodedCodes = Similarity.pqEncodeExploded(e, broadcast(cb), subDim)
-    val want = cells.join(explodedCodes, Seq("vec_id"))
-      .select($"vec_id", $"c_id", $"cp")
-      .orderBy($"vec_id").collect().map(_.toSeq).toSeq
-    assert(got.nonEmpty && got == want,
-      s"native fold diverged from the batch index: ${got.take(3)} vs ${want.take(3)}")
-    assert(got == codes.join(cells, Seq("vec_id"))
-        .select($"vec_id", $"c_id", $"cp")
-        .orderBy($"vec_id").collect().map(_.toSeq).toSeq,
-      "pqIndexFrames codes diverged from the native fold")
+    // exact bits: a double or float compares by its IEEE pattern, so
+    // -0.0 vs 0.0 or a last-ulp drift fails
+    def bits(v: Any): Any = v match {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case f: Float => java.lang.Float.floatToRawIntBits(f)
+      case xs: scala.collection.Seq[_] => xs.map(bits)
+      case other => other
+    }
+    def sorted(df: org.apache.spark.sql.DataFrame, key: String*): Seq[Seq[Any]] =
+      df.orderBy(key.map(col): _*).collect().map(_.toSeq.map(bits)).toSeq
+    for (sf <- Seq("sf0.001", "sf0.01")) {
+      val e = graft.queries.table(spark, sfDir(sf), "embeddings")
+      // the pre-pqIvfIndex derivation (PqReference): window-strided
+      // seeds, filtered centroids, ivfAssign cells, row-stream codes
+      val (cb, codes, cells, cent) = PqReference.index(e)
+      val s = cb.agg(max($"code")).head().getLong(0) + 1
+      val centArr = cent.select(struct($"c_id", $"c_emb", $"c_nrm").as("c"))
+        .agg(array_sort(collect_list($"c")).as("cents"))
+      val cbArr = cb.select(struct(($"m" * s + $"code").as("idx"), $"m",
+          $"c_sub", $"cn2").as("e"))
+        .agg(array_sort(collect_list($"e")).as("cbl"))
+      val got = e.crossJoin(centArr).crossJoin(cbArr)
+        .select($"vec_id",
+          VectorExpressions.ivfRouteId($"embedding", $"cents").as("c_id"),
+          VectorExpressions.pqPackedCp($"embedding", $"cbl", 8).as("cp"))
+        .orderBy($"vec_id").collect().map(_.toSeq).toSeq
+      // cp reference: the row-stream form, independent arithmetic
+      val want = sorted(cells.join(codes, Seq("vec_id"))
+        .select($"vec_id", $"c_id", $"cp"), "vec_id")
+      assert(got.nonEmpty && got == want,
+        s"$sf: native fold diverged from the reference index: " +
+          s"${got.take(3)} vs ${want.take(3)}")
+      // the builder's artifacts equal the reference bit for bit
+      val ix = Similarity.pqIvfIndex(e)
+      assert(sorted(ix.codebook, "m", "code") == sorted(cb, "m", "code"),
+        s"$sf: pqIvfIndex codebook (m, code, c_sub, cn2) diverged")
+      assert(sorted(ix.cent, "c_id") == sorted(cent, "c_id"),
+        s"$sf: pqIvfIndex centroids (c_id, c_emb, c_nrm) diverged")
+      assert(sorted(ix.encoded, "vec_id") == want,
+        s"$sf: pqIvfIndex codes + cells diverged from the reference")
+    }
   }
 
   test("pqFoldSum: the native ADC fold equals the higher-order " +
     "aggregate/transform chain value for value on the real index") {
     import graft.ops.Similarity
-    val e = graft.queries.table(spark, "/root/testdata/sf0.001", "embeddings")
-    val (cb, codes) = Similarity.pqIndexFrames(e)
-    val s = cb.agg(max($"code")).head().getLong(0) + 1
-    // the reconstructed-norm table every ADC scan folds over (pqRn2 shape)
-    val rn2 = cb.select(($"m" * s + $"code").as("idx"), $"cn2")
+    val e = graft.queries.table(spark, sfDir("sf0.001"), "embeddings")
+    val ix = Similarity.pqIvfIndex(e)
+    val s = ix.codebook.agg(max($"code")).head().getLong(0) + 1
+    // the reconstructed-norm table every ADC scan folds over
+    val rn2 = ix.codebook.select(($"m" * s + $"code").as("idx"), $"cn2")
       .agg(array_sort(collect_list(struct($"idx", $"cn2"))).as("p"))
       .select(transform($"p", x => x.getField("cn2")).as("rn2"))
-    val both = codes.crossJoin(rn2)
+    val both = ix.codes.crossJoin(rn2)
       .select($"vec_id",
         graft.functions.VectorExpressions.pqFoldSum($"rn2", $"cp", s.toInt)
           .as("native"),
-        Similarity.pqFoldHof("rn2", s, 8).as("hof"))
+        PqReference.foldHof("rn2", s, 8).as("hof"))
       .collect()
     assert(both.nonEmpty && both.forall(r => r.getDouble(1) == r.getDouble(2)),
       s"native ADC fold diverged from the higher-order chain: " +

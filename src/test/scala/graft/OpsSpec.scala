@@ -2017,7 +2017,8 @@ class OpsSpec extends SparkSpec {
     "raise quantization distortion vs the strided seed codebook") {
     import org.apache.spark.sql.DataFrame
     val e = graft.queries.table(spark, "/root/testdata/sf0.001", "embeddings")
-    val (cb0, codes0) = graft.ops.Similarity.pqIndexFrames(e)
+    val seed = graft.ops.Similarity.pqIvfIndex(e)
+    val (cb0, codes0) = (seed.codebook, seed.codes)
     val (cb2, codes2) = graft.ops.Similarity.pqIndexFramesRefined(e, iters = 2)
     // the ADC LUT is positional: refinement must preserve the (m, code)
     // key set exactly (empty codewords keep their previous position)
@@ -2125,7 +2126,7 @@ class OpsSpec extends SparkSpec {
     "cells land on member-seeded sub-cells, and the index still serves") {
     val dir = "/root/testdata/sf0.001"
     val e = graft.queries.table(spark, dir, "embeddings")
-    val (cells, _) = Similarity.ivfIndexFrames(e)
+    val cells = Similarity.pqIvfIndex(e).cells
     val idx = cells.select($"vec_id", $"c_id")
     val cap = Similarity.autoCentroidEvery(e.count()).toLong
     val out = Similarity.resplitCells(idx, e, cap)

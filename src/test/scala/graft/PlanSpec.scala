@@ -118,28 +118,80 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"))
   }
 
-  test("pq encoding is the native in-row fold over a broadcast codebook " +
-    "array; no cartesian, no raw-vector shuffle, no aggregation") {
-    // the encode pass now lives in the STAGE build (pqIndexFrames), so the
-    // pin points at the builder's plan — the shape that runs at 100 TB.
-    // r17: the per-(vector, subspace) argmin folds INSIDE the row
-    // (pq_packed_cp over the collected codebook) — the corpus side must
-    // stay map-only: no Exchange, no aggregate over a |corpus|·S stream.
+  test("pq+ivf index: route and encode are one native in-row pass; no Exchange") {
+    // The encode pass lives in the STAGE build (Similarity.pqIvfIndex), so
+    // the pin points at the builder's plan — the shape that runs at
+    // 100 TB. Both quantizers reach the pass as literals: the
+    // per-(vector, subspace) argmin and the per-vector route fold INSIDE
+    // the row (pq_packed_cp, ivf_route_id) with no join, no broadcast and
+    // no aggregate over a |corpus|·S stream. The pass reads the
+    // checkpointed projection, so even `table`'s rebalance shuffle is
+    // behind it: the plan has no Exchange at all.
     val e = graft.queries.table(spark, dir, "embeddings")
-    val p = graft.ops.Similarity.pqIndexFrames(e)._2.queryExecution
-      .explainString(org.apache.spark.sql.execution.ExplainMode
-        .fromString("formatted"))
-    assert(p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"))
+    val p = graft.ops.Similarity.pqIvfIndex(e).encoded.queryExecution
+      .explainString(ExplainMode.fromString("formatted"))
     assert(p.contains("pq_packed_cp"),
       "PQ encode lost the native packed-argmin fold")
-    assert(!p.contains("hashpartitioning"),
-      "PQ encode re-grew a corpus-row exchange — the in-row fold makes " +
-        "the encode map-only after the one-row codebook broadcast")
+    assert(!p.contains("CartesianProduct") && !p.contains("hashpartitioning"),
+      p)
+    assert(!p.contains("Exchange"),
+      "the route + encode pass re-grew an exchange — it must stay " +
+        "map-only:\n" + p)
+    // the route runs in the SAME projection as the encode: one pass
+    val projects = p.split("\n\n").filter(_.contains("Project"))
+    assert(projects.exists(b => b.contains("pq_packed_cp") &&
+        b.contains("ivf_route_id")),
+      "IVF route and PQ encode are not one projection:\n" + p)
+  }
+
+  test("pq+ivf index build runs the same few Spark jobs at every SF") {
+    // The whole stage:pq build — n and d, the seed + centroid collect, the
+    // one route + encode pass and the four artifact writes — is a fixed
+    // number of jobs: none of them grows with the corpus.
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    def buildJobs(sf: String): Int = {
+      // a private copy of the corpus gets its own stage dir, so the build
+      // is always cold and never races another suite's stage:pq
+      val copy = Files.createTempDirectory("graft_pqjobs")
+      Files.copy(Paths.get(sfDir(sf), "embeddings.parquet"),
+        copy.resolve("embeddings.parquet"))
+      val group = s"pq-build-jobs-$sf"
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit =
+          if (Option(j.properties).exists(
+              _.getProperty("spark.jobGroup.id") == group))
+            jobs.incrementAndGet()
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup(group, "stage:pq job count")
+        try graft.queries.Stages.all.toMap.apply("stage:pq")(spark,
+          copy.toString)
+        finally sc.clearJobGroup()
+        org.apache.spark.graft.TestBus.drain(sc)
+      } finally {
+        sc.removeSparkListener(listener)
+        for (p <- Seq(copy, Paths.get(graft.queries.tmpStage(
+            copy.toString, graft.ops.Similarity.PqStageTag)).getParent)
+             if Files.exists(p))
+          scala.util.Using.resource(Files.walk(p))(
+            _.sorted(java.util.Comparator.reverseOrder())
+              .forEach(f => Files.delete(f)))
+      }
+      jobs.get()
+    }
+    val (small, large) = (buildJobs("sf0.001"), buildJobs("sf0.01"))
+    assert(small == large && small <= 8,
+      s"stage:pq ran $small jobs at sf0.001 and $large at sf0.01")
   }
 
   test("pq ADC query scan rides broadcast LUTs over staged codes; no cartesian") {
-    // the QUERY side of the staged split: codes scan × broadcast one-row
-    // LUT/rn2 products, ranked by the bounded per-query window
+    // the QUERY side of the staged split: codes scan × the broadcast
+    // per-query LUT product (the rn2 table folds from a literal), ranked
+    // by the bounded per-query window
     val p = plan("sim_pq_topk")
     assert(p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"))
   }

@@ -18,4 +18,6 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def rows(df: DataFrame): Seq[Row] = df.collect().toSeq
+  /** A scale factor's testdata directory, e.g. sfDir("sf0.01"). */
+  def sfDir(sf: String): String = s"${sys.props("user.home")}/testdata/$sf"
 }

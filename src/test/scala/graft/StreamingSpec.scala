@@ -180,9 +180,9 @@ class StreamingSpec extends SparkSpec {
     val stream = StreamOps.readEventStream(spark, staged,
         spark.read.parquet(staged))
       .filter($"vec_id" % stride === 0)
-    val (cb, codes) = Similarity.pqIndexFrames(e)
-    val (cells, cent) = Similarity.ivfIndexFrames(e)
-    val sl = Similarity.ivfPqStreamShortlist(stream, cb, codes, cells, cent)
+    val ix = Similarity.pqIvfIndex(e)
+    val sl = Similarity.ivfPqStreamShortlist(stream, ix.codebook, ix.codes,
+      ix.cells, ix.cent)
     val (drained, state) = StreamOps.drainToTableTracked(sl,
       "ann_state_pin", "complete", shufflePartitions = Some(2))
     assert(state.nonEmpty, "no progress captured")
@@ -217,9 +217,9 @@ class StreamingSpec extends SparkSpec {
         spark.read.parquet(s"$staged/b0.parquet"))
       .withWatermark("ingest_ts", "45 minutes")
       .filter($"vec_id" % stride === 0)
-    val (cb, codes) = Similarity.pqIndexFrames(e)
-    val (cells, cent) = Similarity.ivfIndexFrames(e)
-    val sl = Similarity.ivfPqStreamShortlistEpoch(stream, cb, codes, cells, cent)
+    val ix = Similarity.pqIvfIndex(e)
+    val sl = Similarity.ivfPqStreamShortlistEpoch(stream, ix.codebook,
+      ix.codes, ix.cells, ix.cent)
     val (_, state) = StreamOps.drainToTableTracked(sl,
       "ann_evict_state_pin", "append", shufflePartitions = Some(2))
     assert(state.nonEmpty, "no progress captured")
@@ -242,11 +242,8 @@ class StreamingSpec extends SparkSpec {
       .collect().map(_.toSeq).toSeq
     import graft.ops.Similarity
     val e = graft.queries.table(spark, dir, "embeddings")
-    val (cb, codes) = Similarity.pqIndexFrames(e)
-    val (cells, cent) = Similarity.ivfIndexFrames(e)
-    val batch = cells.join(codes, Seq("vec_id"))
-      .select($"vec_id", $"c_id", $"cp")
-      .orderBy($"vec_id").collect().map(_.toSeq).toSeq
+    val ix = Similarity.pqIvfIndex(e)
+    val batch = ix.encoded.orderBy($"vec_id").collect().map(_.toSeq).toSeq
     assert(streamed.nonEmpty, "index ingest drained nothing at sf0.001")
     assert(streamed == batch,
       s"stream/batch index divergence:\n stream=${streamed.take(5)}…" +
@@ -259,7 +256,7 @@ class StreamingSpec extends SparkSpec {
     e.coalesce(4).write.mode("overwrite").parquet(staged)
     val stream = StreamOps.readEventStream(spark, staged,
       spark.read.parquet(staged))
-    val enc = Similarity.ivfPqStreamEncode(stream, cb, cent)
+    val enc = Similarity.ivfPqStreamEncode(stream, ix.codebook, ix.cent)
     val (drained, state) = StreamOps.drainToTableTracked(enc,
       "index_ingest_state_pin", "append", shufflePartitions = Some(2))
     assert(state.nonEmpty, "no progress captured")
@@ -345,10 +342,7 @@ class StreamingSpec extends SparkSpec {
       spark, dir).collect().map(_.toSeq).toSeq
     import graft.ops.Similarity
     val e = graft.queries.table(spark, dir, "embeddings")
-    val (cb, codes) = Similarity.pqIndexFrames(e)
-    val (cells, _) = Similarity.ivfIndexFrames(e)
-    val batch = cells.join(codes, Seq("vec_id"))
-      .select($"vec_id", $"c_id", $"cp")
+    val batch = Similarity.pqIvfIndex(e).encoded
       .orderBy($"vec_id").collect().map(_.toSeq).toSeq
     assert(compacted.nonEmpty, "compacted index empty at sf0.001")
     assert(compacted == batch, "compaction changed index CONTENT")
