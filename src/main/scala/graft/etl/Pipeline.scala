@@ -2,6 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.mutable
+import graft.queries.{parquetRows, readParquet}
 
 /** Stage-level orchestration with the reference's degrade-don't-abort
   * contract (main.py:29-95 read_sources/stage, :417-431 main; pipeline.py:
@@ -15,9 +16,11 @@ import scala.collection.mutable
   * Observability is the reference's audit-log contract (core/logger.py +
   * the per-stage row-count lines of logs/etl.log:1161-1186): one
   * timestamped line per stage boundary with the row count that crossed it.
-  * Counts cost one Spark action per boundary — the same count the
-  * reference's `len(df)` paid; disable with `counted = false` when a
-  * 100 TB run can't afford audit actions on intermediate frames.
+  * An extract count costs one Spark action per source — the same count
+  * the reference's `len(df)` paid; the staged and built counts are summed
+  * from the written files' footers on the driver (queries.parquetRows).
+  * Disable them with `counted = false` when a 100 TB run can't afford
+  * audit actions on intermediate frames.
   */
 object Pipeline {
 
@@ -71,9 +74,9 @@ object Pipeline {
 
   /** Staging stage (main.py:82-95): land every extracted table as
     * `stg_<name>` (full replace, K1); a failing write skips that table
-    * only. The audited count reads the parquet just written (metadata-cheap)
-    * — never the source lineage again. Returns table name -> path for the
-    * build stages. */
+    * only. The audited count sums the footers of the parquet just written
+    * (no Spark job) — never the source lineage again. Returns table name
+    * -> path for the build stages. */
   def stageAll(audit: Audit, dfs: Map[String, DataFrame],
                stagingDir: String, counted: Boolean = true): Map[String, String] =
     dfs.flatMap { case (key, df) =>
@@ -83,7 +86,7 @@ object Pipeline {
         Staging.overwrite(df, path)
         if (counted)
           audit.info(s"Staging -> $tbl: " +
-            s"${df.sparkSession.read.parquet(path).count()} rows")
+            s"${parquetRows(df.sparkSession, path)} rows")
         else audit.info(s"Staging -> $tbl written")
         Some(tbl -> path)
       } catch {
@@ -105,12 +108,12 @@ object Pipeline {
                  counted: Boolean = true)
                 (body: Map[String, DataFrame] => DataFrame): Option[(String, String)] =
     try {
-      val in = tables.map { case (t, p) => t -> spark.read.parquet(p) }
+      val in = tables.map { case (t, p) => t -> readParquet(spark, p) }
       val out = body(in)
       val path = s"$stagingDir/$name"
       Staging.overwrite(out, path)
       if (counted)
-        audit.info(s"$name: ${spark.read.parquet(path).count()} rows")
+        audit.info(s"$name: ${parquetRows(spark, path)} rows")
       else audit.info(s"$name written")
       Some(name -> path)
     } catch {

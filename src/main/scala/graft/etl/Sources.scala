@@ -38,16 +38,17 @@ object Sources {
     */
   def csv(spark: SparkSession, path: String, naFilter: Boolean = false,
           options: Map[String, String] = Map.empty): DataFrame = {
-    def read(infer: Boolean) = standardizeColumns(
-      spark.read
-        .option("header", "true")
-        .option("inferSchema", infer.toString)
-        .option("encoding", "UTF-8")
-        .options(options)
-        .csv(path))
-    if (naFilter) read(infer = true)
+    def reader(infer: Boolean) = spark.read
+      .option("header", "true")
+      .option("inferSchema", infer.toString)
+      .option("encoding", "UTF-8")
+      .options(options)
+    if (naFilter) standardizeColumns(reader(infer = true).csv(path))
     else {
-      val raw = read(infer = false)
+      // the header read: one job, whose all-string schema the returned
+      // frame's read reuses instead of re-reading the header
+      val header = reader(infer = false).csv(path)
+      val raw = standardizeColumns(header)
       val strs = raw.select(raw.columns.map(c =>
         coalesce(col(c), lit("")).as(c)).toSeq: _*)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -58,7 +59,8 @@ object Sources {
         val hasEmpty: String => Boolean = c =>
           emptyFlags.exists(r => r.getAs[Int](c) == 1)
         val inferred = inferTypes(spark, strs, options)
-        val fresh = read(infer = false)
+        val fresh = standardizeColumns(
+          reader(infer = false).schema(header.schema).csv(path))
         fresh.select(fresh.columns.map { c =>
           inferred.get(c) match {
             case Some(t) if t != StringType && !hasEmpty(c) =>

@@ -1,6 +1,7 @@
 package graft.etl
 
 import org.apache.spark.sql.DataFrame
+import graft.queries.readParquet
 
 /** Sink operators (SURVEY.md §2.2 K1–K4) over parquet paths (the harness's
   * staging layer) and JDBC (the reference's DW).
@@ -64,7 +65,7 @@ object Staging {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(hconf)
     if (!fs.exists(p)) { overwrite(updates, path); return }
-    val existing = spark.read.parquet(path)
+    val existing = readParquet(spark, path)
     val updKeys = updates
       .select(key.map(org.apache.spark.sql.functions.col): _*).distinct()
     val merged = updates.unionByName(existing.join(updKeys, key, "left_anti"))

@@ -674,7 +674,7 @@ object Similarity {
     val meta = codebookMeta(codebook)
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("sim").desc, col("vec_id"))
-    codes.crossJoin(pqLut(queries, meta.cb, meta.s, meta.subDim))
+    codes.crossJoin(pqLut(queries, meta))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
         rz(pqFold(col("lut"), meta.s, subspaces) / col("q_nrm")
@@ -695,18 +695,18 @@ object Similarity {
 
   /** What every consumer of a codebook frame needs, from ONE
     * shuffle-free collect of its subspaces × S rows:
-    *  - `cb`: the codebook, broadcast (the per-query LUT builds join it);
     *  - `s`, `subDim`, `subspaces`: code count, sub-dimension, subspace
     *    count;
     *  - `rn2`: the reconstructed sub-norm² table, cn2 by idx, as a
     *    literal (the ADC denominator fold);
-    *  - `cbl`: the codebook entries by idx as a literal (the encode fold).
+    *  - `cbl`: the codebook entries by idx as a literal (the encode fold,
+    *    and the in-row LUT and cxl builds — subDots).
     */
-  private final case class CodebookMeta(cb: DataFrame, s: Long, subDim: Int,
-                                        subspaces: Int, rn2: Column,
-                                        cbl: Column)
+  private[graft] final case class CodebookMeta(s: Long, subDim: Int,
+                                               subspaces: Int, rn2: Column,
+                                               cbl: Column)
 
-  private def codebookMeta(codebook: DataFrame): CodebookMeta = {
+  private[graft] def codebookMeta(codebook: DataFrame): CodebookMeta = {
     import graft.functions.VectorExpressions.arrayLiteral
     val rows = codebook.select(col("m"), col("code"), col("c_sub"), col("cn2"))
       .collect()
@@ -717,9 +717,20 @@ object Similarity {
       s"codebookMeta: ${rows.length} rows are not $subspaces subspaces x $s codes")
     val entries = rows.map(r => CbEntry(r.getLong(0) * s + r.getLong(1),
       r.getLong(0), r.getSeq[Float](2), r.getDouble(3))).sortBy(_.idx).toSeq
-    CodebookMeta(broadcast(codebook), s, entries.map(_.c_sub.length).max,
-      subspaces, arrayLiteral(entries.map(_.cn2)), arrayLiteral(entries))
+    CodebookMeta(s, entries.map(_.c_sub.length).max, subspaces,
+      arrayLiteral(entries.map(_.cn2)), arrayLiteral(entries))
   }
+
+  /** `f(dot, entry)` for every codebook entry in idx order, in-row over
+    * the codebook literal, where dot = dotf(the entry's m-th sub-slice of
+    * `v`, c_sub): the per-(vector, codeword) term every ADC table is made
+    * of. The per-query LUT is the dots themselves; the per-cell cxl table
+    * is 2·dot + cn2. */
+  private def subDots(v: Column, meta: CodebookMeta)
+                     (f: (Column, Column) => Column): Column =
+    transform(meta.cbl, e => f(dotf(
+      slice(v, (e.getField("m") * meta.subDim + 1).cast("int"),
+        lit(meta.subDim)), e.getField("c_sub")), e))
 
   /** IVF-PQ (Jégou et al. 2011 §IV): the IVF cell route with PQ codes as
     * the per-cell payload — the answer to the memory bound of carrying
@@ -765,7 +776,7 @@ object Similarity {
       .select(col("q_id"), col("c_id"), col("c_rank"))
     queryProbes.join(index, Seq("c_id"))
       .filter(col("vec_id") =!= col("q_id"))
-      .join(pqLut(queries, meta.cb, meta.s, meta.subDim), Seq("q_id"))
+      .join(pqLut(queries, meta), Seq("q_id"))
       .select(col("q_id"), col("vec_id"), col("c_rank"),
         rz(pqFold(col("lut"), meta.s, subspaces) / col("q_nrm")
           / sqrt(pqFold(meta.rn2, meta.s, subspaces)), 6).as("sim"))
@@ -820,7 +831,7 @@ object Similarity {
                        cells: DataFrame, centTable: DataFrame,
                        queries: DataFrame, k: Int, nprobe: Int = 2,
                        subspaces: Int = 8): DataFrame = {
-    val CodebookMeta(cb, s, subDim, _, _, _) = codebookMeta(rescb)
+    val meta = codebookMeta(rescb)
     val index = cells.join(rescodes, Seq("vec_id"))
     val cent = broadcast(centTable)
     val wp = Window.partitionBy(col("q_id"))
@@ -839,29 +850,17 @@ object Similarity {
       .join(cent.select(col("c_id"), col("c_emb")), Seq("c_id"))
       .select(col("q_id"), col("c_id"),
         dotf(col("q_emb"), col("c_emb")).as("qc")))
-    // per-cell reconstructed-norm table: ‖x̂‖² = cn2c + Σₘ cxl[m·S+codeₘ]
-    val cxlTable = broadcast(cent
-      .select(col("c_id"), col("c_emb"),
-        dotf(col("c_emb"), col("c_emb")).as("cn2c"))
-      .crossJoin(cb)
-      .select(col("c_id"), col("cn2c"), (col("m") * s + col("code")).as("idx"),
-        (lit(2.0) * dotf(
-          expr(s"slice(c_emb, CAST(m * $subDim + 1 AS INT), $subDim)"),
-          col("c_sub")) + col("cn2")).as("cx"))
-      .groupBy(col("c_id"), col("cn2c"))
-      .agg(array_sort(collect_list(struct(col("idx"), col("cx")))).as("p"))
-      .select(col("c_id"), col("cn2c"),
-        transform(col("p"), x => x.getField("cx")).as("cxl")))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("sim").desc, col("vec_id"))
     queryProbes.join(index, Seq("c_id"))
       .filter(col("vec_id") =!= col("q_id"))
       .join(qcTable, Seq("q_id", "c_id"))
-      .join(cxlTable, Seq("c_id"))
-      .join(pqLut(queries, cb, s, subDim), Seq("q_id"))
+      .join(cxlTable(centTable, meta), Seq("c_id"))
+      .join(pqLut(queries, meta), Seq("q_id"))
       .select(col("q_id"), col("vec_id"),
-        rz((col("qc") + pqFold(col("lut"), s, subspaces)) / col("q_nrm")
-          / sqrt(col("cn2c") + pqFold(col("cxl"), s, subspaces)), 6).as("sim"))
+        rz((col("qc") + pqFold(col("lut"), meta.s, subspaces)) / col("q_nrm")
+          / sqrt(col("cn2c") + pqFold(col("cxl"), meta.s, subspaces)), 6)
+          .as("sim"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .orderBy(col("q_id"), col("rank"))
@@ -1052,26 +1051,19 @@ object Similarity {
                                 subspaces: Int,
                                 carry: Seq[String]): DataFrame = {
     val carryCols = carry.map(col)
-    val CodebookMeta(cb, s, subDim, _, rn2, _) = codebookMeta(codebook)
-    // one-row broadcast metadata: centroid array (c_id-sorted) and the
-    // codebook as an idx-sorted struct array (idx = m·S + code, the pqLut
-    // positional layout)
+    val meta = codebookMeta(codebook)
+    // one-row broadcast metadata: the centroid array (c_id-sorted); the
+    // LUT is built in-row from the codebook literal (subDots)
     val centArr = broadcast(centTable
       .select(struct(col("c_id"), col("c_emb"), col("c_nrm")).as("c"))
       .agg(array_sort(collect_list(col("c"))).as("cents")))
-    val cbArr = broadcast(cb
-      .select(struct((col("m") * s + col("code")).as("idx"), col("m"),
-        col("c_sub")).as("e"))
-      .agg(array_sort(collect_list(col("e"))).as("cbl")))
     val probes = stream
       .select(col("vec_id").as("q_id") +: col("embedding").as("q_emb") +:
         sqrt(dotf(col("embedding"), col("embedding"))).as("q_nrm") +:
         carryCols: _*)
-      .crossJoin(centArr).crossJoin(cbArr)
+      .crossJoin(centArr)
       .select(col("q_id") +: col("q_nrm") +:
-        transform(col("cbl"), e => dotf(
-          slice(col("q_emb"), (e.getField("m") * subDim + 1).cast("int"),
-            lit(subDim)), e.getField("c_sub"))).as("lut") +:
+        subDots(col("q_emb"), meta)((d, _) => d).as("lut") +:
         explode(slice(array_sort(
           transform(col("cents"), c => struct(
             (round(dotf(col("q_emb"), c.getField("c_emb")) / col("q_nrm")
@@ -1084,8 +1076,9 @@ object Similarity {
     probes.join(index, Seq("c_id"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id") +: col("vec_id") +:
-        rz(pqFold(col("lut"), s, subspaces) / col("q_nrm")
-          / sqrt(pqFold(rn2, s, subspaces)), 6).as("sim") +: carryCols: _*)
+        rz(pqFold(col("lut"), meta.s, subspaces) / col("q_nrm")
+          / sqrt(pqFold(meta.rn2, meta.s, subspaces)), 6).as("sim") +:
+        carryCols: _*)
   }
 
   /** The PQ half of [[pqIvfIndex]] with `iters` deterministic Lloyd
@@ -1231,21 +1224,26 @@ object Similarity {
                      vecCol: String = "embedding"): DataFrame =
     df.withColumn(vecCol, array(perm.map(i => col(vecCol).getItem(i)): _*))
 
-  /** Per-query LUT of exact sub-dot-products, index m·S + code (the
-    * kmeans-update array_sort(collect_list(struct)) determinism). */
-  private def pqLut(queries: DataFrame, cb: DataFrame, s: Long,
-                    subDim: Int): DataFrame =
-    broadcast(queries
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        sqrt(dotf(col("embedding"), col("embedding"))).as("q_nrm"))
-      .crossJoin(cb)
-      .select(col("q_id"), col("q_nrm"), (col("m") * s + col("code")).as("idx"),
-        dotf(expr(s"slice(q_emb, CAST(m * $subDim + 1 AS INT), $subDim)"),
-          col("c_sub")).as("dv"))
-      .groupBy(col("q_id"), col("q_nrm"))
-      .agg(array_sort(collect_list(struct(col("idx"), col("dv")))).as("p"))
-      .select(col("q_id"), col("q_nrm"),
-        transform(col("p"), x => x.getField("dv")).as("lut")))
+  /** Per-query LUT of exact sub-dot-products, index m·S + code, as
+    * (q_id, q_nrm, lut), broadcast: built in-row from the codebook
+    * literal, one map over the queries (FunctionsSpec pins it bit for bit
+    * against the crossJoin + collect_list derivation in PqReference). */
+  private[graft] def pqLut(queries: DataFrame, meta: CodebookMeta): DataFrame =
+    broadcast(queries.select(col("vec_id").as("q_id"),
+      sqrt(dotf(col("embedding"), col("embedding"))).as("q_nrm"),
+      subDots(col("embedding"), meta)((d, _) => d).as("lut")))
+
+  /** Per-cell reconstructed-norm table for the residual ADC, as
+    * (c_id, cn2c, cxl), broadcast: ‖x̂‖² = cn2c + Σₘ cxl[m·S + codeₘ],
+    * with cxl[idx] = 2·⟨cₘ, r̂⟩ + ‖r̂‖² for the centroid's m-th slice cₘ
+    * and the residual codeword r̂ (c_sub, cn2), built in-row from the
+    * codebook literal (pinned like pqLut). */
+  private[graft] def cxlTable(centTable: DataFrame,
+                              meta: CodebookMeta): DataFrame =
+    broadcast(centTable.select(col("c_id"),
+      dotf(col("c_emb"), col("c_emb")).as("cn2c"),
+      subDots(col("c_emb"), meta)((d, e) => lit(2.0) * d + e.getField("cn2"))
+        .as("cxl")))
 
   /** ADC fold: sum the subspaces LUT terms in ascending-m order (plain
     * sequential double adds — the dotf posture; DuckDB twin is the same

@@ -762,7 +762,7 @@ object Analytics extends QueryPack {
     "q2_min_cost" -> ((s, dir) => {
       import s.implicits._
       // bounded metadata job: parquet row-count, no scan
-      val nSupp = table(s, dir, "supplier").count()
+      val nSupp = tableRows(s, dir, "supplier")
       val step = (nSupp + 3) / 4
       val pairs = table(s, dir, "part")
         .filter($"p_size" <= 15 && $"p_type" === "LARGE")

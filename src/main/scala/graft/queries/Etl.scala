@@ -194,7 +194,7 @@ object Etl extends QueryPack {
       require(!result.tables.contains("stg_db_opiniones") &&
         !result.tables.contains("dim_dead") && audit.warnings.size >= 2,
         "dead source/stage did not degrade as contracted")
-      s.read.parquet(result.tables("fact_nation"))
+      readParquet(s, result.tables("fact_nation"))
         .select(col("n_nationkey"), col("n_name"), col("region_name"))
         .orderBy(col("n_nationkey"))
     }),
@@ -245,7 +245,7 @@ object Etl extends QueryPack {
         .withColumn("bal", col("bal") + 100.0)
       Staging.upsert(updates, path, key = Seq("c_custkey"))
       Staging.upsert(updates, path, key = Seq("c_custkey")) // idempotent
-      s.read.parquet(path).orderBy(col("c_custkey"))
+      readParquet(s, path).orderBy(col("c_custkey"))
     }),
 
     // SCD Type-2 dimension history: a balance-change batch closes each
@@ -276,7 +276,7 @@ object Etl extends QueryPack {
       Staging.overwriteSorted(
         table(s, dir, "lineitem").filter(col("l_quantity") >= 30),
         path, sortCols = Seq("l_orderkey"))
-      val back = s.read.parquet(path)
+      val back = readParquet(s, path)
       back.groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"), dsum(col("l_extendedprice")).as("total"))
         .orderBy(col("l_returnflag"))
@@ -342,6 +342,7 @@ object Etl extends QueryPack {
     // legacy rows explicitly so the drift stays visible downstream.
     "etl_schema_evolution" -> ((s, dir) => {
       val path = stagedSchemaEvo(s, dir)
+      // the plain reader: the schema is the merge of every file's footer
       s.read.option("mergeSchema", "true")
         .parquet(s"$path/v1", s"$path/v2")
         .groupBy(col("lang"))
@@ -357,6 +358,8 @@ object Etl extends QueryPack {
     // the layout decision that turns a 100 TB scan into a 4 TB one.
     "etl_partitioned_write" -> ((s, dir) => {
       val path = stagedDocsByLang(s, dir)
+      // the plain reader: the lang column comes from the directory names,
+      // not from a footer (readParquet refuses partitioned layouts)
       s.read.parquet(path).filter(col("lang") === "en")
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"))
@@ -408,7 +411,7 @@ object Etl extends QueryPack {
             count(lit(1)).as("n"))
       partials(li.filter(col("l_orderkey") % 7 =!= 0))
         .write.mode("overwrite").parquet(path)
-      s.read.parquet(path)
+      readParquet(s, path)
         .unionByName(partials(li.filter(col("l_orderkey") % 7 === 0)))
         .groupBy(col("l_returnflag"))
         .agg(round(sum(col("s")), 2).cast(DoubleType).as("sum_qty"),

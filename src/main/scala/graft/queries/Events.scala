@@ -138,7 +138,7 @@ object Events extends QueryPack {
       import graft.streaming.StreamOps
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
       val staged = stagedEventStream4(s, dir)
-      val stream = StreamOps.readEventStream(s, staged, s.read.parquet(staged))
+      val stream = StreamOps.readEventStream(s, staged, readParquet(s, staged))
       val drained = StreamOps.drainToTable(
         StreamOps.tumbling(stream, sizeMin = 15),
         s"ev_stream_tumbling$sf".replace(".", "_"), mode = "complete",
@@ -175,7 +175,7 @@ object Events extends QueryPack {
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
       val (staged, _) = stagedEventBatches(s, dir)
       val stream = StreamOps.readEventStream(s, staged,
-        s.read.parquet(s"$staged/b0.parquet"))
+        readParquet(s, s"$staged/b0.parquet"))
       val drained = StreamOps.drainToTable(
         StreamOps.tumbling(stream, sizeMin = 15, watermark = "10 minutes"),
         s"ev_stream_append$sf".replace(".", "_"), mode = "append",
@@ -203,7 +203,7 @@ object Events extends QueryPack {
       val (staged, maxTs) = stagedEventBatches(s, dir)
       import s.implicits._
       val stream = StreamOps.readEventStream(s, staged,
-        s.read.parquet(s"$staged/b0.parquet"))
+        readParquet(s, s"$staged/b0.parquet"))
       val out = StreamOps.sessionize(stream.as[StreamOps.Event], gapMin = 30,
         timeout = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout())
       // Drain parallelism sized from the input (parquet row-count
@@ -214,7 +214,7 @@ object Events extends QueryPack {
       // batch) doesn't dominate — the f100 audit measured the pinned-8
       // drain at decade exp 1.61 (8-way queueing, not the operator);
       // results are partition-count-invariant (sessions are per-user).
-      val parts = if (s.read.parquet(staged).count() > 2000000L) 32 else 8
+      val parts = if (parquetRows(s, staged) > 2000000L) 32 else 8
       val drained = StreamOps.drainToTable(out.toDF(),
         s"ev_stream_sess$sf".replace(".", "_"), mode = "append",
         shufflePartitions = Some(parts))
@@ -257,9 +257,9 @@ object Events extends QueryPack {
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
       val (staged, maxTs) = stagedEventBatchesOneFlush(s, dir)
       val stream = StreamOps.readEventStream(s, staged,
-        s.read.parquet(s"$staged/b0.parquet"))
+        readParquet(s, s"$staged/b0.parquet"))
       val out = StreamOps.sessionizeEvict(stream, gapMin = 30)
-      val parts = if (s.read.parquet(staged).count() > 2000000L) 32 else 8
+      val parts = if (parquetRows(s, staged) > 2000000L) 32 else 8
       // PARQUET-sink drain: the eviction posture's whole point is bounded
       // state against unbounded output — a memory sink would accumulate
       // every emitted session in driver memory (at the factor-100 corpus,
@@ -453,7 +453,7 @@ object Events extends QueryPack {
       import graft.streaming.StreamOps
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
       val (staged, _) = stagedEventBatches(s, dir)
-      val schemaFrom = s.read.parquet(s"$staged/b0.parquet")
+      val schemaFrom = readParquet(s, s"$staged/b0.parquet")
       // ONE streaming source feeds both join sides: the two filter
       // branches share the file source's listing and offset tracking, so
       // each micro-batch plans and advances one source, not two.
@@ -523,7 +523,7 @@ object Events extends QueryPack {
       import graft.streaming.StreamOps
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
       val staged = stagedEventStream4(s, dir)
-      val stream = StreamOps.readEventStream(s, staged, s.read.parquet(staged))
+      val stream = StreamOps.readEventStream(s, staged, readParquet(s, staged))
       val agg = stream
         .select(floor(col("value") / lit(0.5)).cast("long").as("bin"))
         .filter(col("bin").isNotNull)
@@ -541,7 +541,7 @@ object Events extends QueryPack {
       import graft.streaming.StreamOps
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
       val staged = stagedEventStream4(s, dir)
-      val stream = StreamOps.readEventStream(s, staged, s.read.parquet(staged))
+      val stream = StreamOps.readEventStream(s, staged, readParquet(s, staged))
       val agg = stream
         .select(explode(graft.ops.Sketch.cmsCells(col("event_type"), 4, 64))
           .as("cell"))
@@ -563,7 +563,7 @@ object Events extends QueryPack {
       import graft.streaming.StreamOps
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
       val staged = stagedEventStream4(s, dir)
-      val stream = StreamOps.readEventStream(s, staged, s.read.parquet(staged))
+      val stream = StreamOps.readEventStream(s, staged, readParquet(s, staged))
       val dayUs = 24L * 3600L * 1000000L
       val tsUs = unix_micros(col("ts"))
       val day = ((tsUs - pmod(tsUs, lit(dayUs))) / lit(dayUs)).cast("long")
@@ -684,7 +684,7 @@ object Events extends QueryPack {
       import graft.streaming.StreamOps
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
       val staged = stagedEventStream4(s, dir)
-      val stream = StreamOps.readEventStream(s, staged, s.read.parquet(staged))
+      val stream = StreamOps.readEventStream(s, staged, readParquet(s, staged))
       val (bucket, rho) = graft.ops.Sketch.hllBucketRho(col("user_id"), 64)
       val agg = stream.select(bucket.as("bucket"), rho.as("rho"))
         .groupBy(col("bucket"))
@@ -817,7 +817,7 @@ object Events extends QueryPack {
       import graft.streaming.StreamOps
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
       val staged = stagedEventStream4(s, dir)
-      val stream = StreamOps.readEventStream(s, staged, s.read.parquet(staged))
+      val stream = StreamOps.readEventStream(s, staged, readParquet(s, staged))
       val hourly = stream
         .select(col("event_type"),
           (unix_micros(col("ts")) / lit(3600000000L)).cast("long").as("h"))

@@ -27,7 +27,7 @@ object TextOps extends QueryPack {
       Dedup.duplicateClustersFromCanonical(canon, members)
         .write.mode("overwrite").parquet(staged)
     }
-    s.read.parquet(staged)
+    readParquet(s, staged)
   }
 
   /** Near-dup pair stage in CANONICAL form — (canonical rep pairs,
@@ -52,8 +52,8 @@ object TextOps extends QueryPack {
       // the two writes re-runs both
       members.write.mode("overwrite").parquet(s"$staged/members.parquet")
     }
-    (s.read.parquet(s"$staged/canon.parquet"),
-      s.read.parquet(s"$staged/members.parquet"))
+    (readParquet(s, s"$staged/canon.parquet"),
+      readParquet(s, s"$staged/members.parquet"))
   }
 
   /** Quotient-graph stage shared by the three graph consumers
@@ -75,8 +75,8 @@ object TextOps extends QueryPack {
       // stagedCanonPairs crash-safety convention)
       members.write.mode("overwrite").parquet(s"$staged/members.parquet")
     }
-    (s.read.parquet(s"$staged/qfwd.parquet"),
-      s.read.parquet(s"$staged/members.parquet"))
+    (readParquet(s, s"$staged/qfwd.parquet"),
+      readParquet(s, s"$staged/members.parquet"))
   }
 
   /** The member-level pair table, lazily expanded from [[stagedCanonPairs]]
@@ -120,7 +120,7 @@ object TextOps extends QueryPack {
           target = col("lang") === "en")
         .write.mode("overwrite").parquet(staged)
     }
-    s.read.parquet(staged)
+    readParquet(s, staged)
   }
 
   /** MinHash signature stage shared by dd_minhash_lsh and
@@ -136,7 +136,7 @@ object TextOps extends QueryPack {
       Dedup.minHashSignatures(table(s, dir, "documents"))
         .write.mode("overwrite").parquet(staged)
     }
-    s.read.parquet(staged)
+    readParquet(s, staged)
   }
 
   /** Per-doc duplicated-span arrays (ExactSubstr kernel, minLen=25) —
@@ -150,7 +150,7 @@ object TextOps extends QueryPack {
       Dedup.spanArrays(table(s, dir, "documents"), minLen = 25)
         .write.mode("overwrite").parquet(staged)
     }
-    s.read.parquet(staged)
+    readParquet(s, staged)
   }
 
   /** Distinct (doc_id, gh) 4-gram hash table over the whole documents
@@ -167,7 +167,7 @@ object TextOps extends QueryPack {
       Dedup.gramHashes(table(s, dir, "documents"), n = 4).distinct()
         .write.mode("overwrite").parquet(staged)
     }
-    s.read.parquet(staged)
+    readParquet(s, staged)
   }
 
   /** Bloom bitmap WORD TABLE for the benchmark slice, staged per SF — the
@@ -183,7 +183,7 @@ object TextOps extends QueryPack {
           stagedGramHashes(s, dir).filter(col("doc_id") % 11 === 0))
         .write.mode("overwrite").parquet(staged)
     }
-    Dedup.bitmapFromWords(s.read.parquet(staged))
+    Dedup.bitmapFromWords(readParquet(s, staged))
   }
 
   /** Corpus band buckets staged as a BUCKETED table — the storage layout
@@ -206,7 +206,7 @@ object TextOps extends QueryPack {
     if (!s.catalog.tableExists(tbl)) {
       if (java.nio.file.Files.exists(
           java.nio.file.Paths.get(s"$loc/_SUCCESS"))) {
-        val schema = s.read.parquet(loc).schema.toDDL
+        val schema = readParquet(s, loc).schema.toDDL
         s.sql(s"CREATE TABLE $tbl ($schema) USING PARQUET " +
           "CLUSTERED BY (band, bh) SORTED BY (band, bh) INTO 8 BUCKETS " +
           s"LOCATION '$loc'")
@@ -690,7 +690,7 @@ object TextOps extends QueryPack {
     ensureStaged(staged, "_SUCCESS") {
       manifestFrame(s, dir).write.mode("overwrite").parquet(staged)
     }
-    s.read.parquet(staged)
+    readParquet(s, staged)
   }
 
   val queries: Map[String, QFn] = Map(
@@ -712,7 +712,7 @@ object TextOps extends QueryPack {
       import graft.streaming.StreamOps
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
       val staged = stagedDocStream(s, dir)
-      val stream = StreamOps.readEventStream(s, staged, s.read.parquet(staged))
+      val stream = StreamOps.readEventStream(s, staged, readParquet(s, staged))
       val agg = stream.groupBy(md5(col("text")).as("fp"))
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
       StreamOps.drainToTable(agg,
@@ -741,7 +741,7 @@ object TextOps extends QueryPack {
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
       val staged = stagedDocTimedBatches(s, dir)
       val stream = StreamOps.readEventStream(s, staged,
-        s.read.parquet(s"$staged/b0.parquet"))
+        readParquet(s, s"$staged/b0.parquet"))
       val agg = stream
         .withWatermark("ingest_ts", "45 minutes")
         .groupBy(window(col("ingest_ts"), "60 minutes"),
@@ -896,7 +896,7 @@ object TextOps extends QueryPack {
       val staged = stagedDocStream(s, dir)
       val corpus = stagedCorpusBands(s, dir)
       val stream = StreamOps.readEventStream(s, staged,
-          s.read.parquet(staged))
+          readParquet(s, staged))
         .filter(col("doc_id") % 5 === 0)
       val bands = Dedup.bandBuckets(Dedup.minHashSignaturesMapOnly(stream))
         .select(col("doc_id").as("new_doc"), col("band"), col("bh"))
@@ -1036,7 +1036,7 @@ object TextOps extends QueryPack {
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
       val staged = stagedDocStream(s, dir)
       val bm = stagedBloomBitmap(s, dir)
-      val stream = StreamOps.readEventStream(s, staged, s.read.parquet(staged))
+      val stream = StreamOps.readEventStream(s, staged, readParquet(s, staged))
         .filter(col("doc_id") % 11 =!= 0)
       StreamOps.drainToTable(Dedup.bloomProbeInRow(stream, bm, n = 4),
         s"dd_stream_decon$sf".replace(".", "_"), mode = "append")
@@ -1266,7 +1266,7 @@ object TextOps extends QueryPack {
       import graft.streaming.StreamOps
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
       val staged = stagedCurateStream(s, dir)
-      val schemaFrom = s.read.parquet(s"$staged/b0.parquet")
+      val schemaFrom = readParquet(s, s"$staged/b0.parquet")
       val docs = table(s, dir, "documents")
       val standing = docs.filter(col("doc_id") % 5 =!= 0)
         .select(col("lang"), Dedup.canonBucket.as("bucket"),
@@ -1383,7 +1383,7 @@ object TextOps extends QueryPack {
       // from batch 0 must be superseded by batch 1's re-emitted keys),
       // at half the fixed per-batch cost (state-store commits plus a
       // full read-merge-swap of the upsert target per batch).
-      val stream = StreamOps.readEventStream(s, staged, s.read.parquet(staged),
+      val stream = StreamOps.readEventStream(s, staged, readParquet(s, staged),
         maxFilesPerTrigger = 2)
       val agg = stream.groupBy(md5(col("text")).as("fp"))
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
@@ -1393,7 +1393,7 @@ object TextOps extends QueryPack {
         val cp = new org.apache.hadoop.fs.Path(ckpt)
         cp.getFileSystem(hconf).delete(cp, true)
       }
-      s.read.parquet(target).orderBy(col("keep_id"))
+      readParquet(s, target).orderBy(col("keep_id"))
     }),
     // DSIR importance weights (Xie et al., NeurIPS 2023): every document's
     // hashed unigram+bigram profile scored against the English slice of
@@ -1413,13 +1413,13 @@ object TextOps extends QueryPack {
     // §3): per round, most-frequent adjacent symbol pair over the
     // evolving vocabulary, merged left-to-right non-overlapping.
     "tx_bpe_merges_n" -> ((s, dir) =>
-      s.read.parquet(s"${stagedBpe(s, dir)}/merges.parquet")
+      readParquet(s, s"${stagedBpe(s, dir)}/merges.parquet")
         .orderBy("round")),
     // The tokenizer-APPLY side: per-doc BPE token counts + compression
     // under the 5 trained merges (one vocab join + per-doc rollup).
     "tx_bpe_encode" -> ((s, dir) =>
       TextAnalysis.bpeEncodeWith(table(s, dir, "documents"),
-        s.read.parquet(s"${stagedBpe(s, dir)}/vocab.parquet"))),
+        readParquet(s, s"${stagedBpe(s, dir)}/vocab.parquet"))),
     // Vocabulary typo/variant detection: blocked Jaro-Winkler self-join on
     // the distinct word vocabulary (native codegen'd JW expression,
     // DuckDB-exact semantics incl. the 0.7 boost threshold and integer

@@ -17,8 +17,8 @@ object Vectors extends QueryPack {
     * corpus size (Similarity.queryStride). Keeping the workload
     * corpus-proportional made every exhaustive-scan query O(n^2) in the
     * factor-30 audit; a real query stream is independent of index size.
-    * The stride's corpus count is one job on the read before the
-    * rebalance (tableCounted). */
+    * The stride's corpus count comes from the file footers (tableCounted):
+    * no Spark job. */
   private def corpusAndQueries(s: org.apache.spark.sql.SparkSession,
                                dir: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
@@ -69,8 +69,8 @@ object Vectors extends QueryPack {
       val (_, q) = corpusAndQueries(s, dir)
       val st = stagedPq(s, dir)
       Similarity.pqTopKFrom(
-        s.read.parquet(s"$st/codebook.parquet"),
-        s.read.parquet(s"$st/codes.parquet"),
+        readParquet(s, s"$st/codebook.parquet"),
+        readParquet(s, s"$st/codes.parquet"),
         q, k = 5)
     }),
 
@@ -81,10 +81,10 @@ object Vectors extends QueryPack {
       val (_, q) = corpusAndQueries(s, dir)
       val st = stagedPq(s, dir)
       Similarity.ivfPqTopKFrom(
-        s.read.parquet(s"$st/codebook.parquet"),
-        s.read.parquet(s"$st/codes.parquet"),
-        s.read.parquet(s"$st/cells.parquet"),
-        s.read.parquet(s"$st/cent.parquet"),
+        readParquet(s, s"$st/codebook.parquet"),
+        readParquet(s, s"$st/codes.parquet"),
+        readParquet(s, s"$st/cells.parquet"),
+        readParquet(s, s"$st/cent.parquet"),
         q, k = 5, nprobe = 2)
     }),
 
@@ -97,10 +97,10 @@ object Vectors extends QueryPack {
       val (e, q) = corpusAndQueries(s, dir)
       val st = stagedPq(s, dir)
       val shortlist = Similarity.ivfPqTopKFrom(
-          s.read.parquet(s"$st/codebook.parquet"),
-          s.read.parquet(s"$st/codes.parquet"),
-          s.read.parquet(s"$st/cells.parquet"),
-          s.read.parquet(s"$st/cent.parquet"),
+          readParquet(s, s"$st/codebook.parquet"),
+          readParquet(s, s"$st/codes.parquet"),
+          readParquet(s, s"$st/cells.parquet"),
+          readParquet(s, s"$st/cent.parquet"),
           q, k = 50, nprobe = 2)
         .select(col("q_id"), col("vec_id"))
       Similarity.rerankExact(shortlist, e, q, k = 5)
@@ -115,8 +115,8 @@ object Vectors extends QueryPack {
       val (e, q) = corpusAndQueries(s, dir)
       val st = stagedPq(s, dir)
       val shortlist = Similarity.pqTopKFrom(
-          s.read.parquet(s"$st/codebook.parquet"),
-          s.read.parquet(s"$st/codes.parquet"), q, k = 50)
+          readParquet(s, s"$st/codebook.parquet"),
+          readParquet(s, s"$st/codes.parquet"), q, k = 50)
         .select(col("q_id"), col("vec_id"))
       Similarity.rerankExact(shortlist, e, q, k = 5)
     }),
@@ -130,8 +130,8 @@ object Vectors extends QueryPack {
       val brute = Similarity.bruteForceTopK(e, q, k = 5)
         .select(col("q_id"), col("vec_id"))
       val approx = Similarity.pqTopKFrom(
-          s.read.parquet(s"$st/codebook.parquet"),
-          s.read.parquet(s"$st/codes.parquet"), q, k = 5)
+          readParquet(s, s"$st/codebook.parquet"),
+          readParquet(s, s"$st/codes.parquet"), q, k = 5)
         .select(col("q_id"), col("vec_id"))
       val hits = brute.join(approx, Seq("q_id", "vec_id"))
         .groupBy(col("q_id")).agg(count(lit(1)).as("n_hits"))
@@ -152,13 +152,13 @@ object Vectors extends QueryPack {
     "sim_opq_recall" -> ((s, dir) => {
       val (e, q) = corpusAndQueries(s, dir)
       val st = stagedOpq(s, dir)
-      val perm = s.read.parquet(s"$st/perm.parquet").orderBy(col("pos"))
+      val perm = readParquet(s, s"$st/perm.parquet").orderBy(col("pos"))
         .select(col("dim")).collect().map(_.getLong(0).toInt).toSeq
       val brute = Similarity.bruteForceTopK(e, q, k = 5)
         .select(col("q_id"), col("vec_id"))
       val approx = Similarity.pqTopKFrom(
-          s.read.parquet(s"$st/codebook.parquet"),
-          s.read.parquet(s"$st/codes.parquet"),
+          readParquet(s, s"$st/codebook.parquet"),
+          readParquet(s, s"$st/codes.parquet"),
           Similarity.permuteVectors(q, perm), k = 5)
         .select(col("q_id"), col("vec_id"))
       val hits = brute.join(approx, Seq("q_id", "vec_id"))
@@ -262,7 +262,8 @@ object Vectors extends QueryPack {
       val brute = Similarity.bruteForceTopK(e.filter(pred), q, k = 5)
         .select(col("q_id"), col("vec_id"))
       val cand = Similarity.ivfCandidates(e, q,
-        Similarity.autoCentroidEvery(e.count()), nprobe = 2)
+        Similarity.autoCentroidEvery(tableRows(s, dir, "embeddings")),
+        nprobe = 2)
       val wq = Window.partitionBy(col("q_id"))
         .orderBy(col("sim").desc, col("vec_id"))
       val inProbe = cand.join(labels, "vec_id").filter(pred)
@@ -303,10 +304,10 @@ object Vectors extends QueryPack {
       val brute = Similarity.bruteForceTopK(e, q, k = 5)
         .select(col("q_id"), col("vec_id"))
       val approx = Similarity.ivfPqResTopKFrom(
-          s.read.parquet(s"$st/rescodebook.parquet"),
-          s.read.parquet(s"$st/rescodes.parquet"),
-          s.read.parquet(s"$pq/cells.parquet"),
-          s.read.parquet(s"$pq/cent.parquet"),
+          readParquet(s, s"$st/rescodebook.parquet"),
+          readParquet(s, s"$st/rescodes.parquet"),
+          readParquet(s, s"$pq/cells.parquet"),
+          readParquet(s, s"$pq/cent.parquet"),
           q, k = 5, nprobe = 2)
         .select(col("q_id"), col("vec_id"))
       val hits = brute.join(approx, Seq("q_id", "vec_id"))
@@ -332,8 +333,8 @@ object Vectors extends QueryPack {
       val brute = Similarity.bruteForceTopK(e, q, k = 5)
         .select(col("q_id"), col("vec_id"))
       val approx = Similarity.pqTopKFrom(
-          s.read.parquet(s"$st/refcodebook.parquet"),
-          s.read.parquet(s"$st/refcodes.parquet"), q, k = 5)
+          readParquet(s, s"$st/refcodebook.parquet"),
+          readParquet(s, s"$st/refcodes.parquet"), q, k = 5)
         .select(col("q_id"), col("vec_id"))
       val hits = brute.join(approx, Seq("q_id", "vec_id"))
         .groupBy(col("q_id")).agg(count(lit(1)).as("n_hits"))
@@ -366,10 +367,10 @@ object Vectors extends QueryPack {
       val brute = Similarity.bruteForceTopK(e, q, k = 5)
         .select(col("q_id"), col("vec_id"))
       val shortlist = Similarity.ivfPqTopKFrom(
-          s.read.parquet(s"$ref/refcodebook.parquet"),
-          s.read.parquet(s"$ref/refcodes.parquet"),
-          s.read.parquet(s"$pq/cells.parquet"),
-          s.read.parquet(s"$pq/cent.parquet"),
+          readParquet(s, s"$ref/refcodebook.parquet"),
+          readParquet(s, s"$ref/refcodes.parquet"),
+          readParquet(s, s"$pq/cells.parquet"),
+          readParquet(s, s"$pq/cent.parquet"),
           q, k = 50, nprobe = 2)
         .select(col("q_id"), col("vec_id"))
       val approx = Similarity.rerankExact(shortlist, e, q, k = 5)
@@ -396,8 +397,8 @@ object Vectors extends QueryPack {
     "sim_ivf_nprobe_audit" -> ((s, dir) => {
       val (e, q) = corpusAndQueries(s, dir)
       val pq = stagedPq(s, dir)
-      val cells = s.read.parquet(s"$pq/cells.parquet")
-      val cent = s.read.parquet(s"$pq/cent.parquet")
+      val cells = readParquet(s, s"$pq/cells.parquet")
+      val cent = readParquet(s, s"$pq/cent.parquet")
       val brute = Similarity.bruteForceTopK(e, q, k = 5)
         .select(col("q_id"), col("vec_id"))
       val probes = Similarity.queryCellRanks(cent, q, maxProbe = 8)
@@ -431,17 +432,17 @@ object Vectors extends QueryPack {
       import graft.streaming.StreamOps
       val (e, q) = corpusAndQueries(s, dir)
       val pq = stagedPq(s, dir)
-      val stride = Similarity.queryStride(e.count())
+      val stride = Similarity.queryStride(tableRows(s, dir, "embeddings"))
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
       val staged = stagedEmbStream(s, dir)
       val stream = StreamOps.readEventStream(s, staged,
-          s.read.parquet(staged))
+          readParquet(s, staged))
         .filter(col("vec_id") % stride === 0)
       val sl = Similarity.ivfPqStreamShortlist(stream,
-        s.read.parquet(s"$pq/codebook.parquet"),
-        s.read.parquet(s"$pq/codes.parquet"),
-        s.read.parquet(s"$pq/cells.parquet"),
-        s.read.parquet(s"$pq/cent.parquet"),
+        readParquet(s, s"$pq/codebook.parquet"),
+        readParquet(s, s"$pq/codes.parquet"),
+        readParquet(s, s"$pq/cells.parquet"),
+        readParquet(s, s"$pq/cent.parquet"),
         shortlistK = 50, nprobe = 2)
       val drained = StreamOps.drainToTable(sl,
         s"sim_stream_ann$sf".replace(".", "_"), mode = "complete",
@@ -471,18 +472,18 @@ object Vectors extends QueryPack {
       import graft.streaming.StreamOps
       val (e, q) = corpusAndQueries(s, dir)
       val pq = stagedPq(s, dir)
-      val stride = Similarity.queryStride(e.count())
+      val stride = Similarity.queryStride(tableRows(s, dir, "embeddings"))
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
       val staged = stagedEmbTimedBatches(s, dir)
       val stream = StreamOps.readEventStream(s, staged,
-          s.read.parquet(s"$staged/b0.parquet"))
+          readParquet(s, s"$staged/b0.parquet"))
         .withWatermark("ingest_ts", "45 minutes")
         .filter(col("vec_id") % stride === 0)
       val sl = Similarity.ivfPqStreamShortlistEpoch(stream,
-        s.read.parquet(s"$pq/codebook.parquet"),
-        s.read.parquet(s"$pq/codes.parquet"),
-        s.read.parquet(s"$pq/cells.parquet"),
-        s.read.parquet(s"$pq/cent.parquet"),
+        readParquet(s, s"$pq/codebook.parquet"),
+        readParquet(s, s"$pq/codes.parquet"),
+        readParquet(s, s"$pq/cells.parquet"),
+        readParquet(s, s"$pq/cent.parquet"),
         shortlistK = 50, nprobe = 2)
       val drained = StreamOps.drainToTable(sl,
         s"sim_stream_ann_evict$sf".replace(".", "_"), mode = "append",
@@ -514,10 +515,10 @@ object Vectors extends QueryPack {
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
       val staged = stagedEmbStream(s, dir)
       val stream = StreamOps.readEventStream(s, staged,
-        s.read.parquet(staged))
+        readParquet(s, staged))
       val enc = Similarity.ivfPqStreamEncode(stream,
-        s.read.parquet(s"$pq/codebook.parquet"),
-        s.read.parquet(s"$pq/cent.parquet"))
+        readParquet(s, s"$pq/codebook.parquet"),
+        readParquet(s, s"$pq/cent.parquet"))
       StreamOps.drainToTable(enc,
         s"sim_stream_index_ingest$sf".replace(".", "_"), mode = "append")
         .orderBy(col("vec_id"))
@@ -536,7 +537,7 @@ object Vectors extends QueryPack {
     // per cell at one contiguous range scan instead of |batches| seeks.
     "sim_index_compact" -> ((s, dir) => {
       val st = stagedIvfAppend(s, dir)
-      s.read.parquet(s"$st/compacted")
+      readParquet(s, s"$st/compacted")
         .select(col("vec_id"), col("c_id"), col("cp"))
         .orderBy(col("vec_id"))
     }),
@@ -564,9 +565,10 @@ object Vectors extends QueryPack {
     // above-cap mass is the documented Lloyd trade, not a bug).
     "sim_index_resplit" -> ((s, dir) => {
       val st = stagedIvfAppend(s, dir)
-      val idx = s.read.parquet(s"$st/compacted")
+      val idx = readParquet(s, s"$st/compacted")
       val e = table(s, dir, "embeddings")
-      val cap = Similarity.autoCentroidEvery(e.count()).toLong
+      val cap =
+        Similarity.autoCentroidEvery(tableRows(s, dir, "embeddings")).toLong
       Similarity.resplitCells(idx.select(col("vec_id"), col("c_id")), e, cap)
         .join(idx.select(col("vec_id"), col("cp")), "vec_id")
         .select(col("vec_id"), col("c_id"), col("cp"))
@@ -597,8 +599,8 @@ object Vectors extends QueryPack {
       import graft.functions.VectorExpressions.vecDrift
       val e = table(s, dir, "embeddings")
       val ref = stagedRefPq(s, dir)
-      val cb = s.read.parquet(s"$ref/refcodebook.parquet")
-      val stride = Similarity.queryStride(e.count())
+      val cb = readParquet(s, s"$ref/refcodebook.parquet")
+      val stride = Similarity.queryStride(tableRows(s, dir, "embeddings"))
       def recallOf(corpus: org.apache.spark.sql.DataFrame,
                    codes: org.apache.spark.sql.DataFrame,
                    tag: String): org.apache.spark.sql.DataFrame = {
@@ -623,7 +625,7 @@ object Vectors extends QueryPack {
               .as(s"recall_$tag"))
       }
       val native = recallOf(e,
-        s.read.parquet(s"$ref/refcodes.parquet"), "native")
+        readParquet(s, s"$ref/refcodes.parquet"), "native")
       val drifted = e.select(col("vec_id"),
         vecDrift(col("embedding"), bias = 0.1).as("embedding"))
       val drift = recallOf(drifted,
@@ -658,8 +660,8 @@ object Vectors extends QueryPack {
       import graft.functions.VectorExpressions.vecDrift
       val e = table(s, dir, "embeddings")
       val ref = stagedRefPq(s, dir)
-      val cb = s.read.parquet(s"$ref/refcodebook.parquet")
-      val stride = Similarity.queryStride(e.count())
+      val cb = readParquet(s, s"$ref/refcodebook.parquet")
+      val stride = Similarity.queryStride(tableRows(s, dir, "embeddings"))
       // brute baselines deliberately NOT materialized (r16 measured both
       // ways): the frozen and retrained legs contain IDENTICAL drifted-
       // brute subtrees and each leg consumes its baseline twice (hits
@@ -695,7 +697,7 @@ object Vectors extends QueryPack {
       // training chain's small jobs leave idle; rows are untouched (same
       // leg, same checkpoint semantics as every materialize).
       val nativeGet = graft.ops.Dedup.materializeAsync(recallOf(e, cb,
-        s.read.parquet(s"$ref/refcodes.parquet"), "native"))
+        readParquet(s, s"$ref/refcodes.parquet"), "native"))
       // materialized: the drifted corpus feeds its brute baseline, the
       // frozen re-encode, THREE retrain passes (seed + 2 Lloyd rounds),
       // the retrain encode, and both legs' query sides
@@ -739,10 +741,10 @@ object Vectors extends QueryPack {
       val (e, q) = corpusAndQueries(s, dir)
       val pq = stagedPq(s, dir)
       val ref = stagedRefPq(s, dir)
-      val cb = s.read.parquet(s"$ref/refcodebook.parquet")
-      val codes = s.read.parquet(s"$ref/refcodes.parquet")
-      val cells = s.read.parquet(s"$pq/cells.parquet")
-      val cent = s.read.parquet(s"$pq/cent.parquet")
+      val cb = readParquet(s, s"$ref/refcodebook.parquet")
+      val codes = readParquet(s, s"$ref/refcodes.parquet")
+      val cells = readParquet(s, s"$pq/cells.parquet")
+      val cent = readParquet(s, s"$pq/cent.parquet")
       // materialized: the brute baseline is consumed by all four hit
       // counts (and is the expensive corpus-scan half of the audit).
       // r17 §2.6: it shares nothing with the ADC candidate scan, so it
@@ -828,10 +830,10 @@ object Vectors extends QueryPack {
       val (e, q) = corpusAndQueries(s, dir)
       val pq = stagedPq(s, dir)
       val ref = stagedRefPq(s, dir)
-      val cb = s.read.parquet(s"$ref/refcodebook.parquet")
-      val codes = s.read.parquet(s"$ref/refcodes.parquet")
-      val cells = s.read.parquet(s"$pq/cells.parquet")
-      val cent = s.read.parquet(s"$pq/cent.parquet")
+      val cb = readParquet(s, s"$ref/refcodebook.parquet")
+      val codes = readParquet(s, s"$ref/refcodes.parquet")
+      val cells = readParquet(s, s"$pq/cells.parquet")
+      val cent = readParquet(s, s"$pq/cent.parquet")
       // r17 §2.6: the brute baseline shares nothing with the ADC ranking,
       // so it materializes on its own thread while the ranked/scored200
       // checkpoints run.
@@ -1040,12 +1042,12 @@ object Vectors extends QueryPack {
       import graft.streaming.StreamOps
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
       val staged = stagedPhashIndex(s, dir)
-      val reps = s.read.parquet(s"$staged/reps.parquet")
-      val uw = s.read.parquet(s"$staged/uwords.parquet")
+      val reps = readParquet(s, s"$staged/reps.parquet")
+      val uw = readParquet(s, s"$staged/uwords.parquet")
         .select(col("uid"), col("j"), col("band").as("key"))
       val docStream = TextOps.stagedDocStream(s, dir)
       val stream = StreamOps.readEventStream(s, docStream,
-          s.read.parquet(docStream))
+          readParquet(s, docStream))
         .filter(col("doc_id") % 5 === 0 && length(col("text")) > 0)
         .select(col("doc_id").as("new_doc"),
           graft.functions.StringExpressions.phashWords(col("text"), 64)
@@ -1096,7 +1098,7 @@ object Vectors extends QueryPack {
         .groupBy(bcols: _*)
         .agg(min(col("doc_id")).as("uid"), count(lit(1)).as("cnt"))
         .write.mode("overwrite").parquet(s"$staged/reps.parquet")
-      s.read.parquet(s"$staged/reps.parquet")
+      readParquet(s, s"$staged/reps.parquet")
         .select(col("uid"), posexplode(array(bcols: _*)).as(Seq("j", "band")))
         .write.mode("overwrite").parquet(s"$staged/uwords.parquet")
     }
@@ -1144,7 +1146,8 @@ object Vectors extends QueryPack {
     graft.queries.logStage(staged, freshStage)
     if (freshStage) {
       val raw = table(s, dir, "embeddings")
-      val stride = graft.ops.Similarity.queryStride(raw.count())
+      val stride =
+        graft.ops.Similarity.queryStride(tableRows(s, dir, "embeddings"))
       val e = raw
         .select(col("vec_id"), col("embedding"), col("label"),
           expr("timestamp_micros(1577836800000000 + vec_id * 60000000)")
@@ -1188,11 +1191,12 @@ object Vectors extends QueryPack {
       if (fs.exists(ap)) fs.delete(ap, true)
       val pq = stagedPq(s, dir)
       val src = stagedEmbStream(s, dir)
-      val stream = StreamOps.readEventStream(s, src, s.read.parquet(src))
+      val stream = StreamOps.readEventStream(s, src, readParquet(s, src))
       val enc = Similarity.ivfPqStreamEncode(stream,
-        s.read.parquet(s"$pq/codebook.parquet"),
-        s.read.parquet(s"$pq/cent.parquet"))
+        readParquet(s, s"$pq/codebook.parquet"),
+        readParquet(s, s"$pq/cent.parquet"))
       StreamOps.drainToParquet(enc, s"$staged/appended")
+      // the plain reader: file-sink output is read through _spark_metadata
       Similarity.compactIndex(s.read.parquet(s"$staged/appended"))
         .write.mode("overwrite").parquet(s"$staged/compacted")
     }
@@ -1210,7 +1214,7 @@ object Vectors extends QueryPack {
       Similarity.covarianceMatrix(table(s, dir, "embeddings"))
         .write.mode("overwrite").parquet(staged)
     }
-    s.read.parquet(staged)
+    readParquet(s, staged)
   }
 
   /** PQ/IVF index stage — the train-once/apply-many contract applied to
@@ -1220,10 +1224,10 @@ object Vectors extends QueryPack {
     * staged artifacts. The standing index is exactly what ships at
     * 100 TB: codebook (≤ 8·16 rows), 8-byte codes + 8-byte cell id per
     * vector — no embeddings. Cost (Similarity.pqIvfIndex): one corpus
-    * read and rebalance, two bounded collect jobs over it (n and d; the
-    * seed and centroid rows), one route + encode pass whose blocks both
-    * halves are written from, and one single-file write per bounded
-    * artifact — 8 Spark jobs at any SF, the schema read included
+    * read and rebalance (its schema from the footer, no job), two bounded
+    * collect jobs over it (n and d; the seed and centroid rows), one
+    * route + encode pass whose blocks both halves are written from, and
+    * one single-file write per bounded artifact — 7 Spark jobs at any SF
     * (PlanSpec pins the count). */
   private[queries] def stagedPq(s: org.apache.spark.sql.SparkSession,
                                 dir: String): String = {
@@ -1260,8 +1264,8 @@ object Vectors extends QueryPack {
     ensureStaged(staged, "rescodes.parquet/_SUCCESS") {
       val pq = stagedPq(s, dir)
       val res = Similarity.ivfResiduals(table(s, dir, "embeddings"),
-        s.read.parquet(s"$pq/cells.parquet"),
-        s.read.parquet(s"$pq/cent.parquet"))
+        readParquet(s, s"$pq/cells.parquet"),
+        readParquet(s, s"$pq/cent.parquet"))
       val ix = Similarity.pqIvfIndex(res)
       writeOneFile(ix.codebook, s"$staged/rescodebook.parquet")
       ix.codes.write.mode("overwrite").parquet(s"$staged/rescodes.parquet")
@@ -1320,7 +1324,7 @@ object Vectors extends QueryPack {
       Similarity.knnGraphAuto(table(s, dir, "embeddings"), k = 3)
         .write.mode("overwrite").parquet(staged)
     }
-    s.read.parquet(staged)
+    readParquet(s, staged)
   }
 
   /** DuckDB twin of ops.Similarity.cosine — sequential double fold. */

@@ -1,6 +1,13 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -14,32 +21,95 @@ package object queries {
     * TIMESTAMP(NANOS) (which Spark's µs TimestampType rejects — read nanos
     * as long and floor-convert with integer DIV, matching DuckDB's ns->µs
     * truncation) vs plain TIMESTAMP(MICROS). Dispatch on the landed type so
-    * either generation normalizes to timestamp_ntz. */
+    * either generation normalizes to timestamp_ntz. Opening a table runs no
+    * Spark job (readParquet). */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     rebalance(spark, name, read(spark, dir, name))
 
-  /** `table` and its row count. The count runs on the read BEFORE the
-    * rebalance — one map-only job over a column-less scan, the
-    * per-partition counts summed by the caller — where counting the
-    * rebalanced frame pays a round-robin shuffle, a partial aggregate, a
-    * single-partition exchange and the final aggregate (three jobs under
-    * AQE) for the same number. */
+  /** `table` and its row count (tableRows). */
   def tableCounted(spark: SparkSession, dir: String,
-                   name: String): (DataFrame, Long) = {
-    val raw = read(spark, dir, name)
-    (rebalance(spark, name, raw), raw.select().rdd.count())
-  }
+                   name: String): (DataFrame, Long) =
+    (table(spark, dir, name), tableRows(spark, dir, name))
+
+  /** A table's row count, summed from its file footers' row groups on the
+    * driver: no scan and no Spark job. */
+  def tableRows(spark: SparkSession, dir: String, name: String): Long =
+    parquetRows(spark, s"$dir/$name.parquet")
 
   private def read(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = spark.read.parquet(s"$dir/$name.parquet")
+      val df = readParquet(spark, s"$dir/$name.parquet")
       val tsNorm = df.schema("ts").dataType match {
         case LongType => expr("cast(timestamp_micros(ts DIV 1000) as timestamp_ntz)")
         case _        => col("ts").cast(TimestampNTZType)
       }
       df.withColumn("ts", tsNorm)
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    } else readParquet(spark, s"$dir/$name.parquet")
+
+  /** Open a parquet file or directory with its schema read on the driver.
+    * `spark.read.parquet` without a schema infers it in a Spark job (the
+    * schema merge runs as a job even for one file). This reads the footer
+    * of the file that inference touches — the first data file in path
+    * order after Spark's hidden-file filter — converts it with Spark's own
+    * `readSchemaFromFooter` and a converter built from the session conf
+    * (so `nanosAsLong`, `binaryAsString` and the Spark row metadata are
+    * honoured), and hands that schema to the reader: the same relation,
+    * no job. Layouts whose schema is not one footer's are refused:
+    * partitioned directories, file-sink output (read through
+    * `_spark_metadata`) and schema-merging reads keep
+    * `spark.read.parquet`; ParquetReadSpec's guard lists each such call
+    * site. */
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val (files, conf) = parquetFiles(spark, path)
+    val footer = new Footer(files.head.getPath,
+      readFooter(files.head, conf, ParquetMetadataConverter.SKIP_ROW_GROUPS))
+    val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+    spark.read.schema(ParquetFileFormat.readSchemaFromFooter(footer, converter))
+      .parquet(path)
+  }
+
+  /** Rows in a parquet file or directory, summed from its data files'
+    * row-group counts on the driver: what `readParquet(path).count()`
+    * returns, without the scan. */
+  def parquetRows(spark: SparkSession, path: String): Long = {
+    import scala.jdk.CollectionConverters._
+    val (files, conf) = parquetFiles(spark, path)
+    files.map(f => readFooter(f, conf, ParquetMetadataConverter.NO_FILTER)
+      .getBlocks.asScala.map(_.getRowCount).sum).sum
+  }
+
+  /** The data files under `path` in the order Spark's schema inference
+    * sees them — sorted by path, after the file index's hidden-name
+    * filter — and the session's Hadoop conf to open them with. */
+  private def parquetFiles(spark: SparkSession,
+                           path: String): (Seq[FileStatus], Configuration) = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val root = fs.getFileStatus(p)
+    val files =
+      if (!root.isDirectory) Seq(root)
+      else {
+        require(!fs.exists(new Path(p, "_spark_metadata")),
+          s"readParquet: $path is file-sink output; read it with spark.read.parquet")
+        val kids = fs.listStatus(p).toSeq.filterNot(k =>
+          org.apache.spark.sql.graft.bridge.hiddenFileName(k.getPath.getName))
+        // inference would prefer a summary file (_metadata,
+        // _common_metadata) over the data files; Spark writes none
+        require(kids.forall(k => k.isFile && !k.getPath.getName.startsWith("_")),
+          s"readParquet: $path has subdirectories (a partitioned layout) or " +
+            "summary files; read it with spark.read.parquet")
+        kids.sortBy(_.getPath.toString)
+      }
+    require(files.nonEmpty,
+      s"readParquet: no parquet data file under $path to read a schema from")
+    (files, conf)
+  }
+
+  private def readFooter(file: FileStatus, conf: Configuration,
+                         filter: ParquetMetadataConverter.MetadataFilter) =
+    ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf), filter)
 
   private def rebalance(spark: SparkSession, name: String,
                         raw: DataFrame): DataFrame = {

@@ -418,6 +418,7 @@ object StreamOps {
       spark.conf.set("spark.sql.shuffle.partitions", prev)
       deleteRecursively(ckpt)
     }
+    // the plain reader: file-sink output is read through _spark_metadata
     spark.read.parquet(path)
   }
 

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.queries.readParquet
 
 /** Stage-level profiling probes for the scale suspects: times named
   * sub-stages of a query at SPARK_GRAFT_SF_DIR (noop write, same
@@ -71,7 +72,7 @@ object Profile {
         isolate()
         time("span_kernel(raw scan)")(
           Dedup.spanArrays(
-            spark.read.parquet(s"$sfDir/documents.parquet"), 25))
+            readParquet(spark, s"$sfDir/documents.parquet"), 25))
         isolate()
         val out = graft.queries.tmpStage(sfDir, "profile_spans")
         val t0 = System.nanoTime()
@@ -255,7 +256,7 @@ object Profile {
           graft.SparkEntry.queries("dd_stream_upsert")(spark, sfDir))
         isolate()
         val stagedPath = graft.queries.tmpStage(sfDir, "docstream")
-        val st = spark.read.parquet(stagedPath)
+        val st = readParquet(spark, stagedPath)
         val stream = graft.streaming.StreamOps.readEventStream(
           spark, stagedPath, st, maxFilesPerTrigger = 2)
         val agg = stream.groupBy(md5(col("text")).as("fp"))

@@ -32,4 +32,10 @@ object bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.registerFunction(
         org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
+
+  /** True for a file or directory name Spark's file index skips when it
+    * lists a directory (`_`/`.` prefixes, in-flight copies; summary files
+    * are kept). The filter is `private[spark]`. */
+  def hiddenFileName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
 }

@@ -169,20 +169,22 @@ class FunctionsSpec extends SparkSpec {
     assert(F.normalizeName("a\tb") == "a_b")
   }
 
+  // exact bits: a double or float compares by its IEEE pattern, so
+  // -0.0 vs 0.0 or a last-ulp drift fails
+  private def bits(v: Any): Any = v match {
+    case d: Double => java.lang.Double.doubleToRawLongBits(d)
+    case f: Float => java.lang.Float.floatToRawIntBits(f)
+    case xs: scala.collection.Seq[_] => xs.map(bits)
+    case other => other
+  }
+  private def sorted(df: org.apache.spark.sql.DataFrame,
+                     key: String*): Seq[Seq[Any]] =
+    df.orderBy(key.map(col): _*).collect().map(_.toSeq.map(bits)).toSeq
+
   test("ivfRouteId / pqPackedCp: the native route+encode folds equal the " +
     "batch index bit for bit on the real corpus") {
     import graft.ops.Similarity
     import graft.functions.VectorExpressions
-    // exact bits: a double or float compares by its IEEE pattern, so
-    // -0.0 vs 0.0 or a last-ulp drift fails
-    def bits(v: Any): Any = v match {
-      case d: Double => java.lang.Double.doubleToRawLongBits(d)
-      case f: Float => java.lang.Float.floatToRawIntBits(f)
-      case xs: scala.collection.Seq[_] => xs.map(bits)
-      case other => other
-    }
-    def sorted(df: org.apache.spark.sql.DataFrame, key: String*): Seq[Seq[Any]] =
-      df.orderBy(key.map(col): _*).collect().map(_.toSeq.map(bits)).toSeq
     for (sf <- Seq("sf0.001", "sf0.01")) {
       val e = graft.queries.table(spark, sfDir(sf), "embeddings")
       // the pre-pqIvfIndex derivation (PqReference): window-strided
@@ -213,6 +215,31 @@ class FunctionsSpec extends SparkSpec {
         s"$sf: pqIvfIndex centroids (c_id, c_emb, c_nrm) diverged")
       assert(sorted(ix.encoded, "vec_id") == want,
         s"$sf: pqIvfIndex codes + cells diverged from the reference")
+    }
+  }
+
+  test("pqLut / cxlTable: the in-row ADC tables equal the crossJoin + " +
+    "collect_list derivation bit for bit") {
+    import graft.ops.Similarity
+    for (sf <- Seq("sf0.001", "sf0.01")) {
+      val e = graft.queries.table(spark, sfDir(sf), "embeddings")
+      val q = e.filter($"vec_id" % 7 === 0)
+      // the flat index and the residual one: cxl is read against the
+      // residual codebook in ivfPqResTopKFrom
+      val ix = Similarity.pqIvfIndex(e)
+      val res = Similarity.pqIvfIndex(Similarity.ivfResiduals(e,
+        ix.encoded.select($"vec_id", $"c_id"), ix.cent))
+      for (cb <- Seq(ix.codebook, res.codebook)) {
+        val meta = Similarity.codebookMeta(cb)
+        val lut = sorted(Similarity.pqLut(q, meta), "q_id")
+        assert(lut.nonEmpty &&
+          lut == sorted(PqReference.lut(q, cb, meta.s, meta.subDim), "q_id"),
+          s"$sf: in-row LUT diverged from the crossJoin derivation")
+        val cxl = sorted(Similarity.cxlTable(ix.cent, meta), "c_id")
+        assert(cxl.nonEmpty && cxl == sorted(
+          PqReference.cxl(ix.cent, cb, meta.s, meta.subDim), "c_id"),
+          s"$sf: in-row cxl diverged from the crossJoin derivation")
+      }
     }
   }
 

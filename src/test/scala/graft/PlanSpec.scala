@@ -147,45 +147,35 @@ class PlanSpec extends SparkSpec {
   test("pq+ivf index build runs the same few Spark jobs at every SF") {
     // The whole stage:pq build — n and d, the seed + centroid collect, the
     // one route + encode pass and the four artifact writes — is a fixed
-    // number of jobs: none of them grows with the corpus.
-    import java.nio.file.{Files, Paths}
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    def buildJobs(sf: String): Int = {
-      // a private copy of the corpus gets its own stage dir, so the build
-      // is always cold and never races another suite's stage:pq
-      val copy = Files.createTempDirectory("graft_pqjobs")
-      Files.copy(Paths.get(sfDir(sf), "embeddings.parquet"),
-        copy.resolve("embeddings.parquet"))
-      val group = s"pq-build-jobs-$sf"
-      val jobs = new java.util.concurrent.atomic.AtomicInteger()
-      val listener = new SparkListener {
-        override def onJobStart(j: SparkListenerJobStart): Unit =
-          if (Option(j.properties).exists(
-              _.getProperty("spark.jobGroup.id") == group))
-            jobs.incrementAndGet()
-      }
-      sc.addSparkListener(listener)
-      try {
-        sc.setJobGroup(group, "stage:pq job count")
-        try graft.queries.Stages.all.toMap.apply("stage:pq")(spark,
-          copy.toString)
-        finally sc.clearJobGroup()
-        org.apache.spark.graft.TestBus.drain(sc)
-      } finally {
-        sc.removeSparkListener(listener)
-        for (p <- Seq(copy, Paths.get(graft.queries.tmpStage(
-            copy.toString, graft.ops.Similarity.PqStageTag)).getParent)
-             if Files.exists(p))
-          scala.util.Using.resource(Files.walk(p))(
-            _.sorted(java.util.Comparator.reverseOrder())
-              .forEach(f => Files.delete(f)))
-      }
-      jobs.get()
+    // number of jobs: none of them grows with the corpus, and opening the
+    // corpus runs none (its schema comes from the footer).
+    def buildJobs(sf: String): Int = withTableCopy(sf, "embeddings") { d =>
+      sparkJobs(graft.queries.Stages.all.toMap.apply("stage:pq")(spark, d))
     }
     val (small, large) = (buildJobs("sf0.001"), buildJobs("sf0.01"))
-    assert(small == large && small <= 8,
+    assert(small == large && small <= 7,
       s"stage:pq ran $small jobs at sf0.001 and $large at sf0.01")
+  }
+
+  test("sim_pq_topk over a built stage: the staged reads, the corpus count " +
+    "and the LUT build run no job of their own") {
+    // Opening the staged codebook and codes reads their footers, the query
+    // stride's corpus count sums footer row groups, and the per-query LUT
+    // is built in-row from the collected codebook. What is left is the
+    // codebook collect, the query broadcast (behind the corpus rebalance)
+    // and the ADC scan with its window, sort and result write: 7 jobs.
+    def rowJobs(sf: String): Int = withTableCopy(sf, "embeddings") { d =>
+      graft.queries.Stages.all.toMap.apply("stage:pq")(spark, d)
+      val out = java.nio.file.Files.createTempDirectory("graft_pqtopk")
+      try sparkJobs(SparkEntry.queries("sim_pq_topk")(spark, d)
+        .write.mode("overwrite").parquet(out.resolve("r").toString))
+      finally scala.util.Using.resource(java.nio.file.Files.walk(out))(
+        _.sorted(java.util.Comparator.reverseOrder())
+          .forEach(f => java.nio.file.Files.delete(f)))
+    }
+    val (small, large) = (rowJobs("sf0.001"), rowJobs("sf0.01"))
+    assert(small == large && small <= 7,
+      s"sim_pq_topk ran $small jobs at sf0.001 and $large at sf0.01")
   }
 
   test("pq ADC query scan rides broadcast LUTs over staged codes; no cartesian") {

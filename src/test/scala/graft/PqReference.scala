@@ -18,7 +18,10 @@ import graft.ops.Similarity
   *  - codes: the row-stream encode — crossJoin against the codebook rows,
   *    per-(vector, subspace) packed min, two partial aggregates — the
   *    arithmetic the native pq_packed_cp fold must agree with;
-  *  - foldHof: the higher-order ADC fold the native pq_fold_sum replaced.
+  *  - foldHof: the higher-order ADC fold the native pq_fold_sum replaced;
+  *  - lut / cxl: the per-query LUT and per-cell reconstructed-norm tables
+  *    as a crossJoin against the codebook rows, a collect_list and an
+  *    array_sort by idx — what Similarity.pqLut / cxlTable build in-row.
   */
 object PqReference {
 
@@ -72,4 +75,34 @@ object PqReference {
       transform(sequence(0, ${subspaces - 1}),
         m -> element_at($arr, CAST(m * $s + (shiftright(cp, CAST(8 * m AS INT)) % 256) + 1 AS INT))),
       CAST(0 AS DOUBLE), (a, x) -> a + x)""")
+
+  /** (q_id, q_nrm, lut): lut[m·S + code] = dotf(q's m-th slice, c_sub). */
+  def lut(queries: DataFrame, cb: DataFrame, s: Long, subDim: Int): DataFrame =
+    queries
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
+        sqrt(dotf(col("embedding"), col("embedding"))).as("q_nrm"))
+      .crossJoin(cb)
+      .select(col("q_id"), col("q_nrm"), (col("m") * s + col("code")).as("idx"),
+        dotf(expr(s"slice(q_emb, CAST(m * $subDim + 1 AS INT), $subDim)"),
+          col("c_sub")).as("dv"))
+      .groupBy(col("q_id"), col("q_nrm"))
+      .agg(array_sort(collect_list(struct(col("idx"), col("dv")))).as("p"))
+      .select(col("q_id"), col("q_nrm"),
+        transform(col("p"), x => x.getField("dv")).as("lut"))
+
+  /** (c_id, cn2c, cxl): cxl[m·S + code] = 2·dotf(c's m-th slice, c_sub)
+    * + cn2. */
+  def cxl(cent: DataFrame, cb: DataFrame, s: Long, subDim: Int): DataFrame =
+    cent
+      .select(col("c_id"), col("c_emb"),
+        dotf(col("c_emb"), col("c_emb")).as("cn2c"))
+      .crossJoin(cb)
+      .select(col("c_id"), col("cn2c"), (col("m") * s + col("code")).as("idx"),
+        (lit(2.0) * dotf(
+          expr(s"slice(c_emb, CAST(m * $subDim + 1 AS INT), $subDim)"),
+          col("c_sub")) + col("cn2")).as("cx"))
+      .groupBy(col("c_id"), col("cn2c"))
+      .agg(array_sort(collect_list(struct(col("idx"), col("cx")))).as("p"))
+      .select(col("c_id"), col("cn2c"),
+        transform(col("p"), x => x.getField("cx")).as("cxl"))
 }
