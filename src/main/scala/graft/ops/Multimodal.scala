@@ -275,9 +275,9 @@ object Multimodal {
     val nWords = bits / 16
     // r17: the hash folds WITHIN the row through the native codegen'd
     // twin (StringExpressions.phashWords — FunctionsSpec pins word-for-
-    // word equality against the explode + two-groupBys build, preserved
-    // below as phashTableExploded): one compiled loop per document, zero
-    // shuffle, where the row form materialized one row PER CHARACTER
+    // word equality against the explode + two-groupBys build, kept in
+    // src/test as PhashReference.table): one compiled loop per document,
+    // zero shuffle, where the row form materialized one row PER CHARACTER
     // through two aggregations and a join. The streaming ingest gate
     // (mm_stream_phash) has hashed through this fold since r16; batch
     // and stream now share one arithmetic path.
@@ -285,39 +285,6 @@ object Multimodal {
     docs.select(col("doc_id"), phashWords(col("text"), bits).as("__w"))
       .select(col("doc_id") +:
         (0 until nWords).map(j => element_at(col("__w"), j + 1).as(s"b$j")): _*)
-  }
-
-  /** The pre-r17 per-character explode + two-groupBys + pivot build —
-    * kept ONLY as the independent reference FunctionsSpec pins the native
-    * fold against. Never on a query path. */
-  private[graft] def phashTableExploded(docs: DataFrame, bits: Int): DataFrame = {
-    require(bits % 16 == 0, s"hash width $bits not a multiple of the 16-bit word")
-    val nWords = bits / 16
-    val cs = docs
-      .select(col("doc_id"), length(col("text")).as("L"),
-        posexplode(split(col("text"), "")).as(Seq("p0", "ch")))
-      .select(col("doc_id"), col("L"),
-        expr(s"(p0 * $bits) DIV L").as("k"), ascii(col("ch")).as("c"))
-      .groupBy(col("doc_id"), col("k"))
-      .agg(sum(col("c")).as("s"), count(lit(1)).as("n"))
-    val tot = cs.groupBy(col("doc_id"))
-      .agg(sum(col("s")).as("total"), sum(col("n")).as("lt"))
-    val words = cs.join(tot, "doc_id")
-      .select(col("doc_id"), expr("k DIV 16").as("j"),
-        when(col("s") * col("lt") > col("total") * col("n"), 1L)
-          .otherwise(0L).as("bit"),
-        col("k"))
-      .groupBy(col("doc_id"), col("j"))
-      .agg(sum(expr("bit * shiftleft(1L, CAST(k % 16 AS INT))")).as("band"))
-    // coalesce densifies: a doc shorter than nWords characters maps no
-    // block into some subindex word, so the pivot would yield NULL b_j —
-    // and every downstream join (canonicalize groupBy is fine, but the
-    // null-unsafe membership equi-join and the MIH probe join are not)
-    // would silently drop the doc, even from exact-dup pairs. An empty
-    // word is semantically all-zero bits (no block mean exceeded).
-    val bandCols = (0 until nWords).map(j =>
-      coalesce(max(when(col("j") === j, col("band"))), lit(0L)).as(s"b$j"))
-    words.groupBy(col("doc_id")).agg(bandCols.head, bandCols.tail: _*)
   }
 
   def phashDedup(docs: DataFrame, maxHamming: Int = 12,

@@ -139,11 +139,12 @@ object Events extends QueryPack {
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
       val staged = stagedEventStream4(s, dir)
       val stream = StreamOps.readEventStream(s, staged, readParquet(s, staged))
-      val drained = StreamOps.drainToTable(
+      val drained = StreamOps.drain(Seq((
         StreamOps.tumbling(stream, sizeMin = 15),
-        s"ev_stream_tumbling$sf".replace(".", "_"), mode = "complete",
+        s"ev_stream_tumbling$sf".replace(".", "_"),
+        StreamOps.Memory("complete"))),
         // |event_type| keys per window — 8 state stores are plenty
-        shufflePartitions = Some(8))
+        shufflePartitions = Some(8)).head
       drained
         .withColumn("win_start", col("win_start").cast("timestamp_ntz"))
         .orderBy(col("win_start"), col("event_type"))
@@ -161,7 +162,7 @@ object Events extends QueryPack {
     // closed window is emitted before its state is dropped, no real event
     // is ever late, and the flush batch pushes the final watermark past
     // the last real window (an append drain without it silently withholds
-    // the tail — the drainToTable docstring's warning, handled rather
+    // the tail — the StreamOps.Memory docstring's warning, handled rather
     // than avoided). The flush rows' own window is never passed by the
     // watermark, so they are structurally absent from the output; the
     // event_type filter is defensive documentation. Result must be
@@ -176,10 +177,10 @@ object Events extends QueryPack {
       val (staged, _) = stagedEventBatches(s, dir)
       val stream = StreamOps.readEventStream(s, staged,
         readParquet(s, s"$staged/b0.parquet"))
-      val drained = StreamOps.drainToTable(
+      val drained = StreamOps.drain(Seq((
         StreamOps.tumbling(stream, sizeMin = 15, watermark = "10 minutes"),
-        s"ev_stream_append$sf".replace(".", "_"), mode = "append",
-        shufflePartitions = Some(8))
+        s"ev_stream_append$sf".replace(".", "_"), StreamOps.Memory("append"))),
+        shufflePartitions = Some(8)).head
       drained
         .filter(col("event_type") =!= "__flush")
         .withColumn("win_start", col("win_start").cast("timestamp_ntz"))
@@ -215,9 +216,9 @@ object Events extends QueryPack {
       // drain at decade exp 1.61 (8-way queueing, not the operator);
       // results are partition-count-invariant (sessions are per-user).
       val parts = if (parquetRows(s, staged) > 2000000L) 32 else 8
-      val drained = StreamOps.drainToTable(out.toDF(),
-        s"ev_stream_sess$sf".replace(".", "_"), mode = "append",
-        shufflePartitions = Some(parts))
+      val drained = StreamOps.drain(Seq((out.toDF(),
+        s"ev_stream_sess$sf".replace(".", "_"), StreamOps.Memory("append"))),
+        shufflePartitions = Some(parts)).head
       drained
         // defensive: a flush-only session can never be emitted (it stays
         // open at drain end), but make the exclusion explicit
@@ -266,10 +267,10 @@ object Events extends QueryPack {
       // ~9.5M rows: the sink, not the operator, dominated the first cut's
       // wall time). Same state tracking; target rebuilt per call (the
       // drain is the measured operator).
-      val drained = StreamOps.drainToParquetTracked(out,
-        tmpStage(dir, "evsessw_out"),
+      val drained = StreamOps.drain(Seq((out,
         s"ev_stream_sessw$sf".replace(".", "_"),
-        shufflePartitions = Some(parts))
+        StreamOps.Files(tmpStage(dir, "evsessw_out")))),
+        shufflePartitions = Some(parts)).head
       val w = Window.partitionBy(col("user_id")).orderBy(col("first_ts"))
       drained
         .filter(col("user_id") >= 0 && col("first_ts") <= lit(maxTs))
@@ -479,9 +480,9 @@ object Events extends QueryPack {
       // stores per partition, committed per micro-batch - halving the
       // partition count halves that fixed maintenance with key
       // cardinality far below either setting.
-      val drained = StreamOps.drainToTable(joined,
-        s"ev_stream_attr$sf".replace(".", "_"), mode = "append",
-        shufflePartitions = Some(4))
+      val drained = StreamOps.drain(Seq((joined,
+        s"ev_stream_attr$sf".replace(".", "_"), StreamOps.Memory("append"))),
+        shufflePartitions = Some(4)).head
       drained.orderBy(col("purchase_id"), col("view_id"))
     }),
 
@@ -529,8 +530,8 @@ object Events extends QueryPack {
         .filter(col("bin").isNotNull)
         .groupBy(col("bin"))
         .agg(count(lit(1)).as("cnt"))
-      StreamOps.drainToTable(agg, s"ev_stream_hist$sf".replace(".", "_"),
-        mode = "complete", shufflePartitions = Some(8))
+      StreamOps.drain(Seq((agg, s"ev_stream_hist$sf".replace(".", "_"),
+        StreamOps.Memory("complete"))), shufflePartitions = Some(8)).head
         .orderBy(col("bin"))
     }),
 
@@ -548,8 +549,8 @@ object Events extends QueryPack {
         .select(col("cell.row").as("row"), col("cell.bucket").as("bucket"))
         .groupBy(col("row"), col("bucket"))
         .agg(count(lit(1)).as("cnt"))
-      StreamOps.drainToTable(agg, s"ev_stream_cms$sf".replace(".", "_"),
-        mode = "complete", shufflePartitions = Some(8))
+      StreamOps.drain(Seq((agg, s"ev_stream_cms$sf".replace(".", "_"),
+        StreamOps.Memory("complete"))), shufflePartitions = Some(8)).head
         .orderBy(col("row"), col("bucket"))
     }),
 
@@ -576,8 +577,8 @@ object Events extends QueryPack {
       // attribute ids (and costs nothing)
       EventWindows.anomalyFromDaily(
         graft.ops.Dedup.materialize(
-          StreamOps.drainToTable(agg, s"ev_stream_anom$sf".replace(".", "_"),
-            mode = "complete", shufflePartitions = Some(8))),
+          StreamOps.drain(Seq((agg, s"ev_stream_anom$sf".replace(".", "_"),
+            StreamOps.Memory("complete"))), shufflePartitions = Some(8)).head),
         zCut = 2.0)
     }),
 
@@ -689,8 +690,8 @@ object Events extends QueryPack {
       val agg = stream.select(bucket.as("bucket"), rho.as("rho"))
         .groupBy(col("bucket"))
         .agg(max(col("rho")).as("max_rho"), count(lit(1)).as("n_items"))
-      StreamOps.drainToTable(agg, s"ev_stream_hll$sf".replace(".", "_"),
-        mode = "complete", shufflePartitions = Some(8))
+      StreamOps.drain(Seq((agg, s"ev_stream_hll$sf".replace(".", "_"),
+        StreamOps.Memory("complete"))), shufflePartitions = Some(8)).head
         .orderBy(col("bucket"))
     }),
 
@@ -823,9 +824,9 @@ object Events extends QueryPack {
           (unix_micros(col("ts")) / lit(3600000000L)).cast("long").as("h"))
         .groupBy(col("event_type"), col("h"))
         .agg(count(lit(1)).as("cnt"))
-      val drained = StreamOps.drainToTable(hourly,
-        s"ev_stream_cpd$sf".replace(".", "_"), mode = "complete",
-        shufflePartitions = Some(8))
+      val drained = StreamOps.drain(Seq((hourly,
+        s"ev_stream_cpd$sf".replace(".", "_"), StreamOps.Memory("complete"))),
+        shufflePartitions = Some(8)).head
       cusumArgmax(drained)
     })
   )

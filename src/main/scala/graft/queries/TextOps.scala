@@ -715,9 +715,9 @@ object TextOps extends QueryPack {
       val stream = StreamOps.readEventStream(s, staged, readParquet(s, staged))
       val agg = stream.groupBy(md5(col("text")).as("fp"))
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
-      StreamOps.drainToTable(agg,
-        s"dd_stream_dedup$sf".replace(".", "_"), mode = "complete",
-        shufflePartitions = Some(8))
+      StreamOps.drain(Seq((agg,
+        s"dd_stream_dedup$sf".replace(".", "_"), StreamOps.Memory("complete"))),
+        shufflePartitions = Some(8)).head
         .orderBy(col("keep_id"))
     }),
     // The 100 TB posture dd_stream_dedup's own comment names, judged: the
@@ -749,9 +749,9 @@ object TextOps extends QueryPack {
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
         .select(col("window.start").as("win_start"), col("fp"),
           col("keep_id"), col("n_copies"))
-      StreamOps.drainToTable(agg,
-        s"dd_stream_evict$sf".replace(".", "_"), mode = "append",
-        shufflePartitions = Some(8))
+      StreamOps.drain(Seq((agg,
+        s"dd_stream_evict$sf".replace(".", "_"), StreamOps.Memory("append"))),
+        shufflePartitions = Some(8)).head
         .filter(col("keep_id") >= 0)
         .withColumn("win_start", col("win_start").cast("timestamp_ntz"))
         .orderBy(col("keep_id"))
@@ -904,9 +904,9 @@ object TextOps extends QueryPack {
         .select(col("new_doc"), col("doc_id").as("dup_of"))
       val agg = matches.groupBy(col("new_doc"))
         .agg(collect_set(col("dup_of")).as("ms"))
-      StreamOps.drainToTable(agg,
-        s"dd_stream_neardup$sf".replace(".", "_"), mode = "complete",
-        shufflePartitions = Some(8))
+      StreamOps.drain(Seq((agg,
+        s"dd_stream_neardup$sf".replace(".", "_"), StreamOps.Memory("complete"))),
+        shufflePartitions = Some(8)).head
         .select(col("new_doc"), size(col("ms")).cast("long").as("n_matches"),
           array_min(col("ms")).as("first_match"))
         .orderBy(col("new_doc"))
@@ -1038,8 +1038,9 @@ object TextOps extends QueryPack {
       val bm = stagedBloomBitmap(s, dir)
       val stream = StreamOps.readEventStream(s, staged, readParquet(s, staged))
         .filter(col("doc_id") % 11 =!= 0)
-      StreamOps.drainToTable(Dedup.bloomProbeInRow(stream, bm, n = 4),
-        s"dd_stream_decon$sf".replace(".", "_"), mode = "append")
+      StreamOps.drain(Seq((Dedup.bloomProbeInRow(stream, bm, n = 4),
+        s"dd_stream_decon$sf".replace(".", "_"), StreamOps.Memory("append"))))
+        .head
         .withColumn("contaminated", col("n_hits") > 0L)
         .orderBy(col("doc_id"))
     }),
@@ -1312,9 +1313,9 @@ object TextOps extends QueryPack {
       // store sizing; the gate leg is stateless map-only (projection +
       // broadcast join, zero exchanges), so the shared value cannot
       // change its rows.
-      val Seq(gateRaw, dedupRaw) = StreamOps.drainToTablesConcurrent(Seq(
-        (gated, s"tp5_gate$sf".replace(".", "_"), "append"),
-        (dedup, s"tp5_dedup$sf".replace(".", "_"), "append")),
+      val Seq(gateRaw, dedupRaw) = StreamOps.drain(Seq(
+        (gated, s"tp5_gate$sf".replace(".", "_"), StreamOps.Memory("append")),
+        (dedup, s"tp5_dedup$sf".replace(".", "_"), StreamOps.Memory("append"))),
         shufflePartitions = Some(8))
       val gateRows = gateRaw.filter(col("doc_id") >= 0)
       val dedupRows = dedupRaw
@@ -1359,25 +1360,8 @@ object TextOps extends QueryPack {
     "dd_stream_upsert" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       import graft.streaming.StreamOps
+      val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
       val staged = stagedDocStream(s, dir)
-      val target = tmpStage(dir, "ddupsert")
-      // The checkpoint dies with the drain (deleted in the finally), so
-      // its durability buys nothing here — tmpfs skips the per-batch
-      // offset/commit fsync chatter a disk-backed dir pays. A production
-      // caller passes drainUpsert a durable path; that contract is the
-      // API's, not this harness invocation's.
-      val shm = java.nio.file.Paths.get("/dev/shm")
-      val ckpt =
-        if (java.nio.file.Files.isWritable(shm))
-          s"/dev/shm/graft_ddupsert_ckpt_${System.nanoTime()}"
-        else tmpStage(dir, s"ddupsert_ckpt_${System.nanoTime()}")
-      // Rebuild from batch 0 every call: an upsert target left by older
-      // code could leak stale keys (upsert only ever replaces keys the
-      // stream re-emits), and the stream's checkpoint must die with it.
-      val hconf = s.sparkContext.hadoopConfiguration
-      val tp = new org.apache.hadoop.fs.Path(target)
-      val tfs = tp.getFileSystem(hconf)
-      if (tfs.exists(tp)) tfs.delete(tp, true)
       // 2 files per trigger over the 4 staged files = 2 micro-batches:
       // still a genuine multi-batch convergence test (update-mode rows
       // from batch 0 must be superseded by batch 1's re-emitted keys),
@@ -1387,13 +1371,14 @@ object TextOps extends QueryPack {
         maxFilesPerTrigger = 2)
       val agg = stream.groupBy(md5(col("text")).as("fp"))
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
-      try StreamOps.drainUpsert(agg, target, ckpt, Seq("fp"),
-        shufflePartitions = Some(4))
-      finally {
-        val cp = new org.apache.hadoop.fs.Path(ckpt)
-        cp.getFileSystem(hconf).delete(cp, true)
-      }
-      readParquet(s, target).orderBy(col("keep_id"))
+      // The drain owns the checkpoint, so it rebuilds the target from
+      // batch 0 every call: an upsert target left by older code could
+      // leak stale keys (upsert only replaces keys the stream re-emits).
+      // A production caller passes a durable Upsert checkpoint instead.
+      StreamOps.drain(Seq((agg, s"dd_stream_upsert$sf".replace(".", "_"),
+        StreamOps.Upsert(tmpStage(dir, "ddupsert"), Seq("fp")))),
+        shufflePartitions = Some(4)).head
+        .orderBy(col("keep_id"))
     }),
     // DSIR importance weights (Xie et al., NeurIPS 2023): every document's
     // hashed unigram+bigram profile scored against the English slice of

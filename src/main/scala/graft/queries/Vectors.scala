@@ -444,9 +444,9 @@ object Vectors extends QueryPack {
         readParquet(s, s"$pq/cells.parquet"),
         readParquet(s, s"$pq/cent.parquet"),
         shortlistK = 50, nprobe = 2)
-      val drained = StreamOps.drainToTable(sl,
-        s"sim_stream_ann$sf".replace(".", "_"), mode = "complete",
-        shufflePartitions = Some(8))
+      val drained = StreamOps.drain(Seq((sl,
+        s"sim_stream_ann$sf".replace(".", "_"), StreamOps.Memory("complete"))),
+        shufflePartitions = Some(8)).head
       val shortRows = drained
         .select(col("q_id"), explode(col("shortlist")).as("sle"))
         .select(col("q_id"), col("sle.vec_id").as("vec_id"))
@@ -485,9 +485,10 @@ object Vectors extends QueryPack {
         readParquet(s, s"$pq/cells.parquet"),
         readParquet(s, s"$pq/cent.parquet"),
         shortlistK = 50, nprobe = 2)
-      val drained = StreamOps.drainToTable(sl,
-        s"sim_stream_ann_evict$sf".replace(".", "_"), mode = "append",
-        shufflePartitions = Some(8))
+      val drained = StreamOps.drain(Seq((sl,
+        s"sim_stream_ann_evict$sf".replace(".", "_"),
+        StreamOps.Memory("append"))),
+        shufflePartitions = Some(8)).head
       // q_id >= 0 drops the flush sentinel defensively (its window is
       // structurally never emitted — the dd_stream_dedup_evict keep_id
       // convention)
@@ -519,8 +520,9 @@ object Vectors extends QueryPack {
       val enc = Similarity.ivfPqStreamEncode(stream,
         readParquet(s, s"$pq/codebook.parquet"),
         readParquet(s, s"$pq/cent.parquet"))
-      StreamOps.drainToTable(enc,
-        s"sim_stream_index_ingest$sf".replace(".", "_"), mode = "append")
+      StreamOps.drain(Seq((enc,
+        s"sim_stream_index_ingest$sf".replace(".", "_"),
+        StreamOps.Memory("append")))).head
         .orderBy(col("vec_id"))
     }),
 
@@ -1068,8 +1070,9 @@ object Vectors extends QueryPack {
             "bit_count(aw[2] ^ b2) + bit_count(aw[3] ^ b3) AS BIGINT)"))
         .filter(col("hamming") <= 12)
         .select(col("new_doc"), col("uid"), col("cnt"))
-      StreamOps.drainToTable(verified,
-          s"mm_stream_phash$sf".replace(".", "_"), mode = "append")
+      StreamOps.drain(Seq((verified,
+          s"mm_stream_phash$sf".replace(".", "_"), StreamOps.Memory("append"))))
+        .head
         .distinct()
         .groupBy(col("new_doc"))
         .agg(sum(col("cnt")).as("n_matches"),
@@ -1184,20 +1187,17 @@ object Vectors extends QueryPack {
     val staged = tmpStage(dir, "ivfappend_v1")
     ensureStaged(staged, "compacted/_SUCCESS") {
       import graft.streaming.StreamOps
-      // a partially-built append log (failed prior build) must never be
-      // appended onto by a fresh checkpoint — rebuild from empty
-      val ap = new org.apache.hadoop.fs.Path(s"$staged/appended")
-      val fs = ap.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(ap)) fs.delete(ap, true)
       val pq = stagedPq(s, dir)
       val src = stagedEmbStream(s, dir)
       val stream = StreamOps.readEventStream(s, src, readParquet(s, src))
       val enc = Similarity.ivfPqStreamEncode(stream,
         readParquet(s, s"$pq/codebook.parquet"),
         readParquet(s, s"$pq/cent.parquet"))
-      StreamOps.drainToParquet(enc, s"$staged/appended")
-      // the plain reader: file-sink output is read through _spark_metadata
-      Similarity.compactIndex(s.read.parquet(s"$staged/appended"))
+      // the drain rebuilds the append log: a partially-built one (a
+      // failed prior build) is never appended onto by a fresh checkpoint
+      val appended = StreamOps.drain(Seq((enc, "sim_ivf_append",
+        StreamOps.Files(s"$staged/appended")))).head
+      Similarity.compactIndex(appended)
         .write.mode("overwrite").parquet(s"$staged/compacted")
     }
     staged

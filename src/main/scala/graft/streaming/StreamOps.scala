@@ -1,10 +1,16 @@
 package graft.streaming
 
+import java.nio.file.{Path, Paths, Files => JFiles}
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent,
+  QueryStartedEvent, QueryTerminatedEvent}
 
 /** Structured-Streaming surface (SURVEY.md §2.7). The reference is batch-only
   * (python pipeline.py, README.md:131-144); this lifts the same event-window
@@ -32,8 +38,8 @@ object StreamOps {
   private[graft] def drainSinkLog(): Seq[String] =
     sinkLog.synchronized { val r = sinkLog.toList; sinkLog.clear(); r }
 
-  /** Per-drain state-store row sequences (drain name → per-batch totals),
-    * recorded by every drainToTable call — the observability hook the
+  /** Per-drain state-store row sequences (leg name → per-batch totals),
+    * recorded for every leg of every [[drain]] — the observability hook the
     * scale audits read (graft.tools.StateProbe) to evidence state
     * boundedness at f30/f100 without changing any query's code path. */
   private val stateLog = new scala.collection.mutable.LinkedHashMap[String, Seq[Long]]()
@@ -178,84 +184,128 @@ object StreamOps {
       .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
       .parquet(dir)
 
-  /** Drain a streaming DataFrame into an in-memory table and return the
-    * result (test/dev harness; production would writeStream to a sink).
-    * Use "complete" mode for aggregates — "append" withholds every window
-    * the final watermark has not passed, silently truncating the drain.
-    *
-    * `shufflePartitions`: every stateful operator keeps ONE state store per
-    * shuffle partition, checkpointed per micro-batch — so a bounded drain
-    * with small per-batch volumes pays (partitions × batches × stores) in
-    * store maintenance regardless of data size. Stateful drains pass a
-    * small value here; a real cluster sizes it to key cardinality instead.
-    * The session conf is restored after the drain (streaming queries pin
-    * their partition count at start, batch queries read it live). */
-  def drainToTable(df: DataFrame, name: String, mode: String,
-                   shufflePartitions: Option[Int] = None): DataFrame = {
-    val (out, state) = drainToTableTracked(df, name, mode, shufflePartitions)
-    stateLog.synchronized { stateLog(name) = state }
-    out
-  }
+  /** Where one drain leg's rows go. */
+  sealed trait Sink
+  /** Memory-sink table named after the leg; the drain returns
+    * `spark.table(name)`. Aggregates drain in "complete" mode unless they
+    * are watermarked: "append" withholds every window the final watermark
+    * has not passed, silently truncating the drain. */
+  final case class Memory(mode: String) extends Sink
+  /** Parquet file sink in append mode, the drain for unbounded-output
+    * postures and for standing-store ingest: a memory sink holds every
+    * emitted row in driver memory, itself an unbounded-state harness
+    * exactly where the operator under test claims bounded state (the f100
+    * eviction sessionizer measured ~2× faster through the file sink), and
+    * each micro-batch appending its own files is the small-file accretion
+    * that makes compaction (Similarity.compactIndex) a real operator. The
+    * drain returns the read-back through the sink's `_spark_metadata` log. */
+  final case class Files(path: String) extends Sink
+  /** Update-mode aggregate merged per micro-batch into the parquet table at
+    * `path` by a keyed upsert (Staging.upsert): complete mode rewrites the
+    * whole result every batch, update emits only the keys the batch
+    * touched. Each emitted row carries its key's CURRENT value, so merging
+    * batches in order leaves the table equal to the batch aggregation over
+    * the same input, however the input was micro-batched. A `checkpoint`
+    * the caller keeps is the exactly-once recovery contract: a later drain
+    * over the same checkpoint and target resumes after the last committed
+    * batch. The drain returns the target. */
+  final case class Upsert(path: String, key: Seq[String],
+                          checkpoint: Option[String] = None) extends Sink
 
-  /** Drain several INDEPENDENT streaming legs CONCURRENTLY into memory
-    * tables (r16, guide §2.6: actions are sequential only because the
-    * driver awaits them sequentially — a composed posture with two drains
-    * over the same bounded source was paying the micro-batch engine's
-    * fixed costs twice end-to-end; starting both and awaiting both
-    * overlaps them, and each leg's result rows and per-batch state
-    * sequence are untouched, because batch order is per-query).
+  /** Drain bounded streams (Trigger.AvailableNow) into their sinks. The
+    * legs, each `(df, name, sink)`, start together and are awaited
+    * together: a driver that awaited them one after another would pay the
+    * micro-batch engine's fixed costs once per leg end to end, while batch
+    * order, and with it each leg's rows and state sequence, is per query.
+    * Returns one frame per leg, in leg order.
     *
-    * One shared `shufflePartitions` value is held for the WHOLE drain
-    * (set before the first start, restored after the last termination):
-    * a per-leg value would race the legs' micro-batch threads, which read
-    * the session conf when they pin their state partitioning. Legs whose
-    * plans are stateless/map-only are partition-count-independent; pick
-    * the value the stateful leg needs. Per-leg state sequences land in
-    * the same state log drainToTable feeds. */
-  def drainToTablesConcurrent(legs: Seq[(DataFrame, String, String)],
-                              shufflePartitions: Option[Int] = None)
-      : Seq[DataFrame] = {
+    * Tracked: `stateLog(name)` gets each committed micro-batch's TOTAL
+    * state-store row count (sum over stateful operators, commit order),
+    * the evidence for watermark-eviction claims (a watermarked append
+    * aggregate keeps it bounded by the horizon while its output grows;
+    * complete mode tracks the full key space). One StreamingQueryListener
+    * buffers progress for every leg keyed by (runId, batchId) and filters
+    * by runId only after termination: the listener bus is async, so batch
+    * 0 can be delivered before start() returns the handle. Not
+    * `recentProgress`: its ring buffer (numRecentProgressUpdates, default
+    * 100) drops the EARLIEST batches of a long drain, exactly the rows an
+    * eviction claim needs.
+    *
+    * `shufflePartitions`: every stateful operator keeps one state store
+    * per shuffle partition, checkpointed per micro-batch, so a drain with
+    * small batches pays (partitions × batches × stores) in store upkeep
+    * whatever its data size; stateful drains pass a small value (a real
+    * cluster sizes it to key cardinality). One value is held for the whole
+    * drain, set before the first start and restored after the last leg
+    * stops: a per-leg value would race the legs' micro-batch threads,
+    * which read the session conf when they pin their state partitioning.
+    * Stateless legs are partition-count-independent; pick the value the
+    * stateful leg needs.
+    *
+    * Checkpoints: a bounded drain owns its checkpoint, on tmpfs when the
+    * host has one (its durability buys nothing, its per-batch
+    * offset/commit/state fsyncs cost ~0.4 s per drain on a disk-backed
+    * tmpdir), deleted afterwards; a path sink's target is rebuilt first,
+    * since a fresh checkpoint must never append onto an old target. Only
+    * an Upsert `checkpoint` the caller passes is kept, with its target.
+    * Every started leg is stopped before the conf is restored or any
+    * checkpoint deleted, also when a leg fails to start or fails. */
+  def drain(legs: Seq[(DataFrame, String, Sink)],
+            shufflePartitions: Option[Int] = None): Seq[DataFrame] = {
     val spark = legs.head._1.sparkSession
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    shufflePartitions.foreach(n =>
-      spark.conf.set("spark.sql.shuffle.partitions", n.toString))
     val perBatch =
       new java.util.concurrent.ConcurrentHashMap[(java.util.UUID, Long), Long]()
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
         perBatch.put((e.progress.runId, e.progress.batchId),
           e.progress.stateOperators.map(_.numRowsTotal).sum)
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
     }
+    val owned = scala.collection.mutable.ArrayBuffer[Path]()
+    def ownedCheckpoint(): String = {
+      val shm = Paths.get("/dev/shm")
+      owned += (
+        if (JFiles.isDirectory(shm) && JFiles.isWritable(shm))
+          JFiles.createTempDirectory(shm, "graft_ckpt_")
+        else JFiles.createTempDirectory("graft_ckpt_"))
+      owned.last.toString
+    }
+    val started = scala.collection.mutable.ArrayBuffer[StreamingQuery]()
     spark.streams.addListener(listener)
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    var ckpts: List[java.nio.file.Path] = Nil
     try {
-      val started = legs.map { case (df, name, mode) =>
-        var w = df.writeStream
-          .format("memory")
-          .queryName(name)
-          .outputMode(mode)
-          .trigger(Trigger.AvailableNow())
-        if (java.nio.file.Files.isDirectory(shm) &&
-            java.nio.file.Files.isWritable(shm)) {
-          val p = java.nio.file.Files.createTempDirectory(shm, "graft_ckpt_")
-          ckpts ::= p
-          w = w.option("checkpointLocation", p.toString)
+      shufflePartitions.foreach(n =>
+        spark.conf.set("spark.sql.shuffle.partitions", n.toString))
+      for ((df, name, sink) <- legs) {
+        val ckpt = sink match {
+          case Upsert(_, _, Some(kept)) => kept
+          case Upsert(path, _, None) => rebuild(spark, path); ownedCheckpoint()
+          case Files(path) => rebuild(spark, path); ownedCheckpoint()
+          case Memory(_) => ownedCheckpoint()
         }
-        val q = w.start()
-        logSink(name)
-        (q, name)
+        val w = df.writeStream.queryName(name)
+          .option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow())
+        started += (sink match {
+          case Memory(mode) =>
+            val q = w.format("memory").outputMode(mode).start()
+            logSink(name)
+            q
+          case Files(path) =>
+            w.format("parquet").option("path", path).outputMode("append").start()
+          case Upsert(path, key, _) =>
+            // an explicit Scala function value: the lambda overload is
+            // ambiguous against the Java VoidFunction2 one under 2.13
+            val merge: (Dataset[Row], Long) => Unit =
+              (batch, _) => graft.etl.Staging.upsert(batch.toDF(), path, key)
+            w.outputMode("update").foreachBatch(merge).start()
+        })
       }
-      started.foreach(_._1.awaitTermination())
-      // listener events arrive on the async bus thread — wait (bounded)
-      // until each query's terminal batch progress has been delivered
+      started.foreach(_.awaitTermination())
       import scala.jdk.CollectionConverters._
-      for ((q, name) <- started) {
+      for ((q, (_, name, _)) <- started.zip(legs)) {
+        // bounded wait until the terminal batch's progress is delivered
         val lastBatch = Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
         val deadline = System.nanoTime + 10L * 1000 * 1000 * 1000
         while (lastBatch >= 0 && !perBatch.containsKey((q.runId, lastBatch)) &&
@@ -266,226 +316,31 @@ object StreamOps {
         stateLog.synchronized { stateLog(name) = seq }
       }
     } finally {
+      started.foreach(q =>
+        try if (q.isActive) q.stop() catch { case NonFatal(_) => () })
       spark.streams.removeListener(listener)
       spark.conf.set("spark.sql.shuffle.partitions", prev)
-      ckpts.foreach(deleteRecursively)
+      owned.foreach(deleteRecursively)
     }
-    legs.map { case (_, name, _) => spark.table(name) }
+    legs.map {
+      case (_, name, Memory(_)) => spark.table(name)
+      // the plain reader: file-sink output is read through _spark_metadata
+      case (_, _, Files(path)) => spark.read.parquet(path)
+      case (_, _, Upsert(path, _, _)) => graft.queries.readParquet(spark, path)
+    }
   }
 
-  /** drainToTable, additionally returning each committed micro-batch's
-    * TOTAL state-store row count (sum over stateful operators, in commit
-    * order) — the direct evidence for watermark-eviction claims: a
-    * watermarked append-mode aggregate over time-ordered batches must show
-    * this sequence staying bounded by the watermark horizon while the
-    * emitted result keeps growing; complete-mode state instead tracks the
-    * full key space. StreamingSpec pins both postures on it.
-    *
-    * Progress is collected through a StreamingQueryListener scoped to this
-    * query's run id — NOT `q.recentProgress`, whose ring buffer is capped
-    * by spark.sql.streaming.numRecentProgressUpdates (default 100) and
-    * silently drops the EARLIEST batches of a longer drain, exactly the
-    * rows an eviction-boundedness claim needs. Listener delivery is async;
-    * the post-termination wait below syncs on the terminal batch id. */
-  def drainToTableTracked(df: DataFrame, name: String, mode: String,
-                          shufflePartitions: Option[Int] = None)
-      : (DataFrame, Seq[Long]) = {
-    val spark = df.sparkSession
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    shufflePartitions.foreach(n =>
-      spark.conf.set("spark.sql.shuffle.partitions", n.toString))
-    // A bounded drain into a MEMORY sink is ephemeral by contract — the
-    // checkpoint's crash-recovery durability buys nothing, but its
-    // per-micro-batch offset/commit/state fsync chatter is real (~0.4 s
-    // per drain measured on the default disk-backed tmpdir). Put it on
-    // tmpfs when the host has one; a production writeStream passes a
-    // durable checkpointLocation instead (see drainUpsert).
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val ckpt =
-      if (java.nio.file.Files.isDirectory(shm) &&
-          java.nio.file.Files.isWritable(shm))
-        Some(java.nio.file.Files.createTempDirectory(shm, "graft_ckpt_"))
-      else None
-    var stateRows: Seq[Long] = Nil
-    try {
-      stateRows = runTracked(spark) { () =>
-        var w = df.writeStream
-          .format("memory")
-          .queryName(name)
-          .outputMode(mode)
-          .trigger(Trigger.AvailableNow())
-        ckpt.foreach(p => w = w.option("checkpointLocation", p.toString))
-        val q = w.start()
-        logSink(name)
-        q
-      }
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      ckpt.foreach(root => deleteRecursively(root))
-    }
-    (df.sparkSession.table(name), stateRows)
+  private def rebuild(spark: SparkSession, path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
   }
 
-  private def deleteRecursively(root: java.nio.file.Path): Unit = {
+  private def deleteRecursively(root: Path): Unit = {
     import scala.util.Using
-    try Using.resource(java.nio.file.Files.walk(root)) { s =>
+    try Using.resource(JFiles.walk(root)) { s =>
       import scala.jdk.CollectionConverters._
       s.iterator().asScala.toSeq.reverse
-        .foreach(p => try java.nio.file.Files.delete(p)
-                      catch { case _: Throwable => () })
+        .foreach(p => try JFiles.delete(p) catch { case _: Throwable => () })
     } catch { case _: Throwable => () }
-  }
-
-  /** Start a streaming query via `start`, await termination, and return
-    * the per-committed-micro-batch TOTAL state-store row counts (commit
-    * order) — the listener machinery shared by every tracked drain.
-    * Progress is buffered UNCONDITIONALLY, keyed by (runId, batchId), and
-    * filtered to this query's runId only after termination: the listener
-    * bus is async, so batch 0's progress can be delivered before start()
-    * has even returned the query handle — a delivery-time filter against
-    * a late-assigned runId would drop exactly the earliest batch's state
-    * row, the one an eviction-boundedness claim needs. (`recentProgress`
-    * is no substitute: its ring buffer caps at
-    * spark.sql.streaming.numRecentProgressUpdates and silently drops the
-    * EARLIEST batches of a long drain.) */
-  private def runTracked(spark: SparkSession)
-                        (start: () => StreamingQuery): Seq[Long] = {
-    val perBatch =
-      new java.util.concurrent.ConcurrentHashMap[(java.util.UUID, Long), Long]()
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
-        perBatch.put((e.progress.runId, e.progress.batchId),
-          e.progress.stateOperators.map(_.numRowsTotal).sum)
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    }
-    spark.streams.addListener(listener)
-    try {
-      val q = start()
-      q.awaitTermination()
-      // listener events arrive on the async bus thread — wait (bounded)
-      // until the terminal batch's progress has been delivered
-      val lastBatch = Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
-      val deadline = System.nanoTime + 10L * 1000 * 1000 * 1000
-      while (lastBatch >= 0 && !perBatch.containsKey((q.runId, lastBatch)) &&
-             System.nanoTime < deadline) Thread.sleep(10)
-      import scala.jdk.CollectionConverters._
-      perBatch.asScala.toSeq
-        .collect { case ((rid, batch), n) if rid == q.runId => (batch, n) }
-        .sortBy(_._1).map(_._2)
-    } finally spark.streams.removeListener(listener)
-  }
-
-  /** Drain a stream through the PARQUET FILE SINK in append mode with the
-    * same state tracking as drainToTable — the drain for UNBOUNDED-output
-    * postures: a memory sink holds every emitted row in driver memory,
-    * which is itself an unbounded-state harness exactly where the
-    * operator under test claims bounded state (the f100 eviction
-    * sessionizer measured ~2× faster through the file sink). The target
-    * and checkpoint are rebuilt per call — the drain IS the measured
-    * operator. Returns the read-back result. */
-  def drainToParquetTracked(df: DataFrame, path: String, name: String,
-                            shufflePartitions: Option[Int] = None): DataFrame = {
-    val spark = df.sparkSession
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    shufflePartitions.foreach(n =>
-      spark.conf.set("spark.sql.shuffle.partitions", n.toString))
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val tp = new org.apache.hadoop.fs.Path(path)
-    val tfs = tp.getFileSystem(hconf)
-    if (tfs.exists(tp)) tfs.delete(tp, true)
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val ckpt =
-      if (java.nio.file.Files.isDirectory(shm) &&
-          java.nio.file.Files.isWritable(shm))
-        java.nio.file.Files.createTempDirectory(shm, "graft_ckpt_")
-      else java.nio.file.Files.createTempDirectory("graft_ckpt_")
-    try {
-      val state = runTracked(spark) { () =>
-        df.writeStream
-          .format("parquet")
-          .option("path", path)
-          .option("checkpointLocation", ckpt.toString)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-      }
-      stateLog.synchronized { stateLog(name) = state }
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      deleteRecursively(ckpt)
-    }
-    // the plain reader: file-sink output is read through _spark_metadata
-    spark.read.parquet(path)
-  }
-
-  /** Drain a stream through the PARQUET FILE SINK in append mode — the
-    * standing-store ingest shape (each micro-batch appends its own files;
-    * exactly-once via the sink's _spark_metadata log). This is what a
-    * production index ingest actually writes, and it accretes the small
-    * files that make compaction (Similarity.compactIndex) a real
-    * maintenance operator rather than a hypothetical. Checkpoint lives on
-    * tmpfs when available (the drainToTable rationale); a production
-    * caller passes a durable path. */
-  def drainToParquet(df: DataFrame, path: String,
-                     checkpoint: Option[String] = None): Unit = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val ckpt = checkpoint.getOrElse {
-      if (java.nio.file.Files.isDirectory(shm) &&
-          java.nio.file.Files.isWritable(shm))
-        java.nio.file.Files.createTempDirectory(shm, "graft_ckpt_").toString
-      else java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
-    }
-    try {
-      val q: StreamingQuery = df.writeStream
-        .format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      // a self-created checkpoint dies with the drain (the
-      // drainToParquetTracked contract); a caller-passed one is the
-      // caller's to keep — that's the durable-ingest path
-      if (checkpoint.isEmpty)
-        deleteRecursively(java.nio.file.Paths.get(ckpt))
-    }
-  }
-
-  /** Drain a streaming aggregate in UPDATE mode through a per-micro-batch
-    * keyed upsert into a parquet table — the shape an unbounded ingest
-    * actually runs (complete mode rewrites the whole result every batch;
-    * update emits only the keys the batch touched, and the downstream merge
-    * keeps the store current). Each emitted row carries the aggregate's
-    * CURRENT value for its key, so upserting batches in order leaves the
-    * final table equal to the batch aggregation over the same input —
-    * regardless of how the input was micro-batched.
-    *
-    * foreachBatch is bound via an explicit Scala function value: the
-    * lambda-form overload is ambiguous against the Java VoidFunction2
-    * variant under Scala 2.13. */
-  def drainUpsert(df: DataFrame, path: String, checkpoint: String,
-                  key: Seq[String],
-                  shufflePartitions: Option[Int] = None): Unit = {
-    val spark = df.sparkSession
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    shufflePartitions.foreach(n =>
-      spark.conf.set("spark.sql.shuffle.partitions", n.toString))
-    val merge: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => graft.etl.Staging.upsert(batch.toDF(), path, key)
-    try {
-      val q: StreamingQuery = df.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(merge)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 }

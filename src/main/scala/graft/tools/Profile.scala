@@ -262,8 +262,9 @@ object Profile {
         val agg = stream.groupBy(md5(col("text")).as("fp"))
           .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
         time("memory_drain_2batch")(
-          graft.streaming.StreamOps.drainToTable(agg, "profile_upsert_mem",
-            mode = "complete", shufflePartitions = Some(4)))
+          graft.streaming.StreamOps.drain(Seq((agg, "profile_upsert_mem",
+            graft.streaming.StreamOps.Memory("complete"))),
+            shufflePartitions = Some(4)).head)
         isolate()
         val target = graft.queries.tmpStage(sfDir, "profile_upsert_tgt")
         val batchAgg = st.groupBy(md5(col("text")).as("fp"))

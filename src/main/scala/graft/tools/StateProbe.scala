@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Scale-audit probe for streaming STATE boundedness: runs the named
   * streaming queries at a given SF dir and prints each drain's per-batch
-  * state-store row counts (recorded by StreamOps.drainToTable's listener —
+  * state-store row counts (recorded by StreamOps.drain's listener —
   * exact per-batch totals, not the capped recentProgress ring buffer).
   *
   * The claim this evidences at f30/f100: an append-mode watermarked drain's

@@ -308,7 +308,7 @@ class FunctionsSpec extends SparkSpec {
       .orderBy($"doc_id").collect().map(_.toSeq).toSeq
     // r17: the batch table itself now hashes through the native fold, so
     // the reference is the preserved explode + groupBy build
-    val want = Multimodal.phashTableExploded(docs, bits = 64)
+    val want = PhashReference.table(docs, bits = 64)
       .orderBy($"doc_id").collect().map(_.toSeq).toSeq
     assert(got.nonEmpty && got == want,
       s"in-row phash diverged from the batch build: ${got.take(2)} vs ${want.take(2)}")
@@ -319,7 +319,7 @@ class FunctionsSpec extends SparkSpec {
     // hashes through the same fold at 16 subindex words
     val got256 = Multimodal.phashTable(docs, bits = 256)
       .orderBy($"doc_id").collect().map(_.toSeq).toSeq
-    val want256 = Multimodal.phashTableExploded(docs, bits = 256)
+    val want256 = PhashReference.table(docs, bits = 256)
       .orderBy($"doc_id").collect().map(_.toSeq).toSeq
     assert(got256.nonEmpty && got256 == want256,
       s"256-bit in-row phash diverged: ${got256.take(1)} vs ${want256.take(1)}")

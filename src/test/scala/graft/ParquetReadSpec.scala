@@ -90,10 +90,7 @@ class ParquetReadSpec extends SparkSpec {
         "docs_by_lang is hive-partitioned: lang comes from directory names",
       ("Etl.scala", "s.read.option(\"mergeSchema\", \"true\")") ->
         "schema evolution: the schema is the merge of every file's footer",
-      ("StreamOps.scala", "spark.read.parquet(path)") ->
-        "file-sink output is read through _spark_metadata",
-      ("Vectors.scala",
-        "Similarity.compactIndex(s.read.parquet(s\"$staged/appended\"))") ->
+      ("StreamOps.scala", "case (_, _, Files(path)) => spark.read.parquet(path)") ->
         "file-sink output is read through _spark_metadata")
     // a reader chain: .read, any options, then .parquet( — across lines
     val reader = """\.read((\s*\.\s*(option|options|format)\([^)]*\))*)\s*\.\s*parquet\(""".r

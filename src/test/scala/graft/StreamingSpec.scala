@@ -16,6 +16,23 @@ class StreamingSpec extends SparkSpec {
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
+  /** One memory-sink leg drained, with the per-batch state rows the drain
+    * recorded for it. */
+  private def drainTracked(df: org.apache.spark.sql.DataFrame, name: String,
+                           mode: String, shufflePartitions: Int)
+      : (org.apache.spark.sql.DataFrame, Seq[Long]) = {
+    val out = StreamOps.drain(Seq((df, name, StreamOps.Memory(mode))),
+      Some(shufflePartitions)).head
+    (out, StreamOps.stateLogSnapshot(name))
+  }
+
+  /** The graft_ckpt_* directories under both roots a drain may use. */
+  private def checkpointDirs(): Set[String] =
+    Seq("/dev/shm", sys.props("java.io.tmpdir")).flatMap { root =>
+      Option(new java.io.File(root).listFiles()).toSeq.flatten
+        .filter(_.getName.startsWith("graft_ckpt_")).map(_.getPath)
+    }.toSet
+
   private val eventData = Seq(
     StreamOps.Event(1L, ts("2024-01-01 10:00:00"), 100L, "click", 1.0),
     StreamOps.Event(2L, ts("2024-01-01 10:10:00"), 100L, "view", 2.5),
@@ -56,11 +73,98 @@ class StreamingSpec extends SparkSpec {
       .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
     val agg = in.groupBy(md5($"text").as("fp"))
       .agg(min($"doc_id").as("keep_id"), count(lit(1)).as("n_copies"))
-    StreamOps.drainUpsert(agg, s"$base/out", s"$base/ckpt", Seq("fp"),
+    StreamOps.drain(Seq((agg, "upsert_converge",
+      StreamOps.Upsert(s"$base/out", Seq("fp"), Some(s"$base/ckpt")))),
       shufflePartitions = Some(2))
     val got = rows(spark.read.parquet(s"$base/out").orderBy($"keep_id"))
       .map(r => (r.getAs[Long]("keep_id"), r.getAs[Long]("n_copies")))
     assert(got == Seq((2L, 2L), (6L, 1L)))
+  }
+
+  test("drain tracks Files and Upsert legs: each records its per-batch " +
+    "state rows, drained concurrently in one call") {
+    val base = java.nio.file.Files.createTempDirectory("drain_tracked").toString
+    Seq((5L, "dup"), (6L, "solo")).toDF("doc_id", "text")
+      .coalesce(1).write.mode("overwrite").parquet(s"$base/in")
+    Seq((2L, "dup")).toDF("doc_id", "text")
+      .coalesce(1).write.mode("append").parquet(s"$base/in")
+    def in = spark.readStream
+      .schema(spark.read.parquet(s"$base/in").schema)
+      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
+    val agg = in.groupBy(md5($"text").as("fp"))
+      .agg(min($"doc_id").as("keep_id"), count(lit(1)).as("n_copies"))
+    StreamOps.clearStateLog()
+    val Seq(files, upserted) = StreamOps.drain(Seq(
+      (in, "tracked_files", StreamOps.Files(s"$base/files")),
+      (agg, "tracked_upsert", StreamOps.Upsert(s"$base/up", Seq("fp")))),
+      shufflePartitions = Some(2))
+    val state = StreamOps.stateLogSnapshot
+    // one entry per committed micro-batch (two input files, one per
+    // trigger); the stateless file leg commits zero state rows, the
+    // aggregate's state is never empty
+    assert(state.get("tracked_files")
+      .exists(s => s.nonEmpty && s.forall(_ == 0L)),
+      s"file-sink leg untracked: $state")
+    assert(state.get("tracked_upsert")
+      .exists(s => s.nonEmpty && s.forall(_ > 0L)),
+      s"upsert leg untracked: $state")
+    assert(files.count() == 3L)
+    assert(rows(upserted.orderBy($"keep_id"))
+      .map(r => (r.getAs[Long]("keep_id"), r.getAs[Long]("n_copies"))) ==
+      Seq((2L, 2L), (6L, 1L)))
+  }
+
+  test("a leg that fails to start stops every started leg before the " +
+    "drain restores the conf and deletes its checkpoints") {
+    implicit val sqlCtx = spark.sqlContext
+    val blocking = MemoryStream[Int]
+    blocking.addData(1)
+    // bounded: a stop() that lands before the batch's job is submitted
+    // waits for that batch to finish
+    val block = udf { (x: Int) =>
+      StreamingSpecLatch.release.await(10, java.util.concurrent.TimeUnit.SECONDS)
+      x
+    }
+    val leg1 = blocking.toDF().select(block($"value").as("value"))
+    val failing = MemoryStream[Int]
+    failing.addData(1)
+    // a streaming aggregate without a watermark cannot run in the file
+    // sink's append mode: start() throws
+    val leg2 = failing.toDF().groupBy($"value").count()
+    val out = java.nio.file.Files.createTempDirectory("drain_leak").toString
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    val ckptsBefore = checkpointDirs()
+    try {
+      intercept[org.apache.spark.sql.AnalysisException] {
+        StreamOps.drain(Seq(
+          (leg1, "leak_leg_blocked", StreamOps.Memory("append")),
+          (leg2, "leak_leg_failing", StreamOps.Files(s"$out/files"))),
+          shufflePartitions = Some(3))
+      }
+      assert(spark.streams.active.isEmpty,
+        s"started legs left running: ${spark.streams.active.map(_.name).toSeq}")
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == prev)
+      assert((checkpointDirs() -- ckptsBefore).isEmpty,
+        s"drain left checkpoints behind: ${checkpointDirs() -- ckptsBefore}")
+    } finally {
+      StreamingSpecLatch.release.countDown()
+      spark.streams.active.foreach(_.stop())
+    }
+  }
+
+  test("src/main drains streams only through StreamOps.drain") {
+    val main = java.nio.file.Paths.get("src/main/scala")
+    val files = scala.util.Using.resource(java.nio.file.Files.walk(main)) { w =>
+      import scala.jdk.CollectionConverters._
+      w.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    }
+    assert(files.exists(_.getFileName.toString == "StreamOps.scala"))
+    val stray = for {
+      f <- files if f.getFileName.toString != "StreamOps.scala"
+      src = java.nio.file.Files.readString(f)
+      word <- Seq(".writeStream", "graft_ckpt", "/dev/shm") if src.contains(word)
+    } yield s"${f.getFileName}: $word"
+    assert(stray.isEmpty, s"stream drains outside StreamOps.drain: $stray")
   }
 
   test("streaming sessionize closes a session when the gap passes in-stream") {
@@ -127,13 +231,13 @@ class StreamingSpec extends SparkSpec {
     def agg(mode: String, name: String) = {
       val stream = StreamOps.readEventStream(spark, staged,
         spark.read.parquet(s"$staged/b0.parquet"))
-      StreamOps.drainToTableTracked(
+      drainTracked(
         stream.withWatermark("ingest_ts", "30 minutes")
           .groupBy(window($"ingest_ts", "60 minutes"), md5($"text").as("fp"))
           .agg(min($"doc_id").as("keep_id"), count(lit(1)).as("n_copies"))
           .select($"window.start".as("win_start"), $"fp",
             $"keep_id", $"n_copies"),
-        name, mode, shufflePartitions = Some(2))
+        name, mode, shufflePartitions = 2)
     }
     val (appendDf, appendState) = agg("append", "evict_append")
     val appendRows = rows(appendDf.filter($"keep_id" >= 0)
@@ -183,8 +287,8 @@ class StreamingSpec extends SparkSpec {
     val ix = Similarity.pqIvfIndex(e)
     val sl = Similarity.ivfPqStreamShortlist(stream, ix.codebook, ix.codes,
       ix.cells, ix.cent)
-    val (drained, state) = StreamOps.drainToTableTracked(sl,
-      "ann_state_pin", "complete", shufflePartitions = Some(2))
+    val (drained, state) = drainTracked(sl,
+      "ann_state_pin", "complete", shufflePartitions = 2)
     assert(state.nonEmpty, "no progress captured")
     assert(state.max <= nQ,
       s"ANN ingest state exceeded the arrived-query count ($nQ): $state")
@@ -220,8 +324,8 @@ class StreamingSpec extends SparkSpec {
     val ix = Similarity.pqIvfIndex(e)
     val sl = Similarity.ivfPqStreamShortlistEpoch(stream, ix.codebook,
       ix.codes, ix.cells, ix.cent)
-    val (_, state) = StreamOps.drainToTableTracked(sl,
-      "ann_evict_state_pin", "append", shufflePartitions = Some(2))
+    val (_, state) = drainTracked(sl,
+      "ann_evict_state_pin", "append", shufflePartitions = 2)
     assert(state.nonEmpty, "no progress captured")
     assert(state.max < nQ,
       s"evict state held all $nQ arrived queries — eviction not working: $state")
@@ -257,8 +361,8 @@ class StreamingSpec extends SparkSpec {
     val stream = StreamOps.readEventStream(spark, staged,
       spark.read.parquet(staged))
     val enc = Similarity.ivfPqStreamEncode(stream, ix.codebook, ix.cent)
-    val (drained, state) = StreamOps.drainToTableTracked(enc,
-      "index_ingest_state_pin", "append", shufflePartitions = Some(2))
+    val (drained, state) = drainTracked(enc,
+      "index_ingest_state_pin", "append", shufflePartitions = 2)
     assert(state.nonEmpty, "no progress captured")
     assert(state.forall(_ == 0L),
       s"map-only ingest committed state rows: $state")
@@ -447,4 +551,10 @@ class StreamingSpec extends SparkSpec {
     val streamed = spark.table("file_out").agg(sum($"n")).first().getLong(0)
     assert(streamed == batchDf.count())
   }
+}
+
+/** Released by the leaked-leg test's finally; a module, so the blocking
+  * UDF reaches it without capturing it in its closure. */
+object StreamingSpecLatch {
+  val release = new java.util.concurrent.CountDownLatch(1)
 }
