@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark main: runs every SparkEntry query at the SF dir given by
   * SPARK_GRAFT_SF_DIR and prints one JSON line. Results go through a
@@ -35,36 +35,9 @@ object Bench {
   private def regressed(t: Double, anchor: Double): Boolean =
     t > anchor * 1.25 && t - anchor > 0.5
 
-  /** Streaming residue cleared between timed rows. A finished drain leaves
-    * three things behind that bleed into whatever is measured next:
-    * (1) a possibly-still-active query if a drain threw mid-flight;
-    * (2) its memory-sink temp view, holding the full drained result on the
-    *     driver heap until dropped;
-    * (3) loaded state-store providers, whose version maps sit in executor
-    *     memory until the maintenance thread's 60 s interval notices the
-    *     query is gone — longer than a whole stretch of timed rows.
-    * Measured at r10: the four streaming-family rows ran 1.5–2.1x their
-    * anchors in fleet order but at-anchor isolated — exactly this residue.
-    * Order matters: stop queries first (dropping a live query's sink view
-    * races its next batch), unload state stores last. */
-  private def clearStreamResidue(spark: SparkSession): Unit = {
-    spark.streams.active.foreach(q =>
-      try q.stop() catch { case _: Throwable => () })
-    graft.streaming.StreamOps.drainSinkLog().foreach(n =>
-      try spark.catalog.dropTempView(n) catch { case _: Throwable => () })
-    try org.apache.spark.sql.graft.bridge.stopStateStores()
-    catch { case _: Throwable => () }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HarnessSession.build()
     // never let a judged run consume intermediates staged by older code;
     // within THIS process stages are still computed once and reused
     queries.wipeStages()
@@ -106,14 +79,9 @@ object Bench {
          if name.contains("stream") && (only.isEmpty || only(name)))
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    // the warm-up pass drained every stream query — clear its streaming
-    // residue (memory-sink tables, state-store providers) before the first
-    // timed row, same as between rows (see clearStreamResidue)
-    clearStreamResidue(spark)
-    // drop the warm-up pass's broadcast/shuffle residue before the first
-    // timed query (see the GC note in timeOne)
-    System.gc()
+    // the warm-up pass drained every stream query: clear its residue
+    // before the first timed row, same as between rows
+    HarnessSession.clearResidue(spark)
 
     var failed = Set.empty[String]
     def timeOne(name: String, run: () => Unit): Double = {
@@ -124,22 +92,10 @@ object Bench {
         System.out.println(s"[bench] $name failed: ${e.getMessage}")
       }
       val t = (System.nanoTime() - t0) / 1e9
-      // localCheckpoints (connected-components loops) stay persisted after
-      // their query finishes; dropped eagerly so block-manager pressure
-      // from one query never bleeds into the next one's measurement.
-      // BLOCKING: async removal races the next query's timed window — the
-      // r4 ev_hll_sketch "regression" (0.8 s -> 2.0 s, code untouched) sat
-      // right after the checkpoint-heavy dedup queries in bench order
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      clearStreamResidue(spark)
-      // Broadcast variables and shuffle state are torn down by the
-      // ContextCleaner only when the DRIVER garbage-collects their
-      // references — a bench loop holds none, but the JVM may not GC for
-      // many queries, and the accumulated executor-side residue compounds:
-      // measured at r5, dd_incremental_lsh cost 2.9 s run alone but 17.4 s
-      // run after three broadcast-heavy decontamination queries. Forcing a
-      // GC here bounds every query's measurement to its own plan's cost.
-      System.gc()
+      // residue (checkpoint blocks, stream sinks and state stores,
+      // broadcast/shuffle state) must never bleed into the next query's
+      // measurement
+      HarnessSession.clearResidue(spark)
       t
     }
     val baseline = loadBaseline()

@@ -17,10 +17,9 @@ import graft.queries.{parquetRows, readParquet}
   * the per-stage row-count lines of logs/etl.log:1161-1186): one
   * timestamped line per stage boundary with the row count that crossed it.
   * An extract count costs one Spark action per source — the same count
-  * the reference's `len(df)` paid; the staged and built counts are summed
-  * from the written files' footers on the driver (queries.parquetRows).
-  * Disable them with `counted = false` when a 100 TB run can't afford
-  * audit actions on intermediate frames.
+  * the reference's `len(df)` paid, and what empty-source detection needs;
+  * the staged and built counts are summed from the written files' footers
+  * on the driver (queries.parquetRows), no Spark job.
   */
 object Pipeline {
 
@@ -51,18 +50,14 @@ object Pipeline {
   /** Extract stage (main.py:29-76): each source is a thunk so that
     * CONSTRUCTION failures (bad path, dead DB, refused connection) are
     * caught too. A throwing or empty source logs a WARNING and contributes
-    * nothing; survivors log their row count. With `counted = false` no
-    * audit action runs — and empty-source detection (which needs a count)
-    * is skipped with it: empties then flow through and land as empty
-    * staging tables. */
+    * nothing; survivors log their row count. */
   def readSources(audit: Audit,
-                  sources: Seq[(String, () => DataFrame)],
-                  counted: Boolean = true): Map[String, DataFrame] =
+                  sources: Seq[(String, () => DataFrame)]): Map[String, DataFrame] =
     sources.flatMap { case (key, mk) =>
       try {
         audit.info(s"Reading source $key ...")
         val df = mk()
-        val n = if (counted) df.count() else -1L
+        val n = df.count()
         if (n == 0) { audit.warn(s"$key: empty result, skipped."); None }
         else { audit.info(s"Source $key: $n rows"); Some(key -> df) }
       } catch {
@@ -78,16 +73,13 @@ object Pipeline {
     * (no Spark job) — never the source lineage again. Returns table name
     * -> path for the build stages. */
   def stageAll(audit: Audit, dfs: Map[String, DataFrame],
-               stagingDir: String, counted: Boolean = true): Map[String, String] =
+               stagingDir: String): Map[String, String] =
     dfs.flatMap { case (key, df) =>
       val tbl = "stg_" + key.stripSuffix("_csv")
       val path = s"$stagingDir/$tbl"
       try {
         Staging.overwrite(df, path)
-        if (counted)
-          audit.info(s"Staging -> $tbl: " +
-            s"${parquetRows(df.sparkSession, path)} rows")
-        else audit.info(s"Staging -> $tbl written")
+        audit.info(s"Staging -> $tbl: ${parquetRows(df.sparkSession, path)} rows")
         Some(tbl -> path)
       } catch {
         case e: Exception =>
@@ -104,17 +96,14 @@ object Pipeline {
     * exactly like the reference's fact build logging
     * "FACT: could not process stg_api_opiniones" and moving on). */
   def buildStage(audit: Audit, spark: SparkSession, stagingDir: String,
-                 tables: Map[String, String], name: String,
-                 counted: Boolean = true)
+                 tables: Map[String, String], name: String)
                 (body: Map[String, DataFrame] => DataFrame): Option[(String, String)] =
     try {
       val in = tables.map { case (t, p) => t -> readParquet(spark, p) }
       val out = body(in)
       val path = s"$stagingDir/$name"
       Staging.overwrite(out, path)
-      if (counted)
-        audit.info(s"$name: ${parquetRows(spark, path)} rows")
-      else audit.info(s"$name written")
+      audit.info(s"$name: ${parquetRows(spark, path)} rows")
       Some(name -> path)
     } catch {
       case e: Exception =>
@@ -166,13 +155,12 @@ object Pipeline {
   def run(spark: SparkSession, stagingDir: String,
           sources: Seq[(String, () => DataFrame)],
           builds: Seq[(String, Map[String, DataFrame] => DataFrame)],
-          audit: Audit = new Audit(),
-          counted: Boolean = true): Result = {
+          audit: Audit = new Audit()): Result = {
     audit.info("=== ETL run start ===")
-    val dfs = readSources(audit, sources, counted)
-    var tables = stageAll(audit, dfs, stagingDir, counted)
+    val dfs = readSources(audit, sources)
+    var tables = stageAll(audit, dfs, stagingDir)
     builds.foreach { case (name, body) =>
-      buildStage(audit, spark, stagingDir, tables, name, counted)(body)
+      buildStage(audit, spark, stagingDir, tables, name)(body)
         .foreach { kv => tables += kv }
     }
     audit.info("=== ETL run done ===")

@@ -939,7 +939,7 @@ object Similarity {
     * PRECONDITION: `stream` must already carry a WATERMARKED `ingest_ts`
     * column — apply withWatermark at the source, BEFORE any filter that
     * drops the flush sentinel, so the sentinel still advances event time
-    * (the stagedDocTimedBatches convention). Returns
+    * (the StreamStage.Timed flush convention). Returns
     * (win_start, q_id, shortlist); drain append-mode. */
   def ivfPqStreamShortlistEpoch(stream: DataFrame, codebook: DataFrame,
                                 codes: DataFrame, cells: DataFrame,

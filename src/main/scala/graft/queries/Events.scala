@@ -8,108 +8,6 @@ import graft.ops.EventWindows
   */
 object Events extends QueryPack {
 
-  /** Time-ordered micro-batch staging shared by the stateful streaming
-    * queries: three single parquet files (first time-half, second half,
-    * per-user flush sentinels past every gap/window) with strictly
-    * increasing modification times, so the file source replays them in
-    * order and state genuinely carries across micro-batches. Returns
-    * (stagedDir, maxRealTs). The flush events carry event_type "__flush" /
-    * event_id -1 so every consumer can exclude them. */
-  private[queries] def stagedEventBatches(
-      s: org.apache.spark.sql.SparkSession,
-      dir: String): (String, java.sql.Timestamp) = {
-    import org.apache.spark.sql.functions._
-    import java.nio.file.{Files, Paths}
-    val staged = tmpStage(dir, "evsess")
-    val ev = table(s, dir, "events")
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value"))
-    val maxTs = ev.agg(max(col("ts"))).first().getTimestamp(0)
-    val freshStage = !Files.exists(Paths.get(s"$staged/_STAGED"))
-    graft.queries.logStage(staged, freshStage)
-    if (freshStage) {
-      val minTs = ev.agg(min(col("ts"))).first().getTimestamp(0)
-      val cut = new java.sql.Timestamp((minTs.getTime + maxTs.getTime) / 2)
-      def writeOne(df: org.apache.spark.sql.DataFrame, name: String,
-                   mtimeSec: Long): Unit =
-        writeMicroBatchFile(df, staged, name, mtimeSec)
-      val flush = ev.select(col("user_id")).distinct()
-        .select(lit(-1L).as("event_id"),
-          lit(new java.sql.Timestamp(maxTs.getTime + 3600L * 1000L)).as("ts"),
-          col("user_id"), lit("__flush").as("event_type"),
-          lit(0.0).as("value"))
-      val base = System.currentTimeMillis() / 1000L
-      writeOne(ev.filter(col("ts") <= lit(cut)), "b0", base)
-      writeOne(ev.filter(col("ts") > lit(cut)), "b1", base + 2)
-      writeOne(flush, "b2", base + 4)
-      Files.createFile(Paths.get(s"$staged/_STAGED"))
-    }
-    (staged, maxTs)
-  }
-
-  /** Micro-batch staging for the WATERMARKED sessionizer: the same two
-    * time-halves as stagedEventBatches, but the flush batch is ONE global
-    * sentinel row (user_id −1), not one per user. A watermarked
-    * session_window aggregate needs only the event-time watermark advanced
-    * past every real session's end — per-user closes are the
-    * flatMapGroupsWithState NoTimeout posture's requirement — and a
-    * per-user flush would leave |users| open sentinel sessions in the
-    * final state, destroying exactly the boundedness evidence the
-    * eviction posture exists to produce (one sentinel ⇒ final state ≤ 1
-    * beyond the horizon stragglers). */
-  private[queries] def stagedEventBatchesOneFlush(
-      s: org.apache.spark.sql.SparkSession,
-      dir: String): (String, java.sql.Timestamp) = {
-    import org.apache.spark.sql.functions._
-    import java.nio.file.{Files, Paths}
-    val staged = tmpStage(dir, "evsessw")
-    val ev = table(s, dir, "events")
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value"))
-    val maxTs = ev.agg(max(col("ts"))).first().getTimestamp(0)
-    val freshStage = !Files.exists(Paths.get(s"$staged/_STAGED"))
-    graft.queries.logStage(staged, freshStage)
-    if (freshStage) {
-      val minTs = ev.agg(min(col("ts"))).first().getTimestamp(0)
-      val cut = new java.sql.Timestamp((minTs.getTime + maxTs.getTime) / 2)
-      val flush = s.range(1)
-        .select(lit(-1L).as("event_id"),
-          lit(new java.sql.Timestamp(maxTs.getTime + 3600L * 1000L)).as("ts"),
-          lit(-1L).as("user_id"), lit("__flush").as("event_type"),
-          lit(0.0).as("value"))
-      val base = System.currentTimeMillis() / 1000L
-      writeMicroBatchFile(ev.filter(col("ts") <= lit(cut)), staged, "b0", base)
-      writeMicroBatchFile(ev.filter(col("ts") > lit(cut)), staged, "b1", base + 2)
-      writeMicroBatchFile(flush, staged, "b2", base + 4)
-      Files.createFile(Paths.get(s"$staged/_STAGED"))
-    }
-    (staged, maxTs)
-  }
-
-  /** Events staged as a FIXED 4-file parquet directory — the micro-batch
-    * source shared by every complete-mode event-stream drain (the
-    * docstream convention applied to events). The file count is pinned:
-    * with maxFilesPerTrigger=1 each file is a micro-batch, and a
-    * complete-mode drain pays a full result rewrite + state-store commit
-    * per batch. Writing the scan's NATIVE layout instead (the pre-round-11
-    * shape) made the batch count an accident of the upstream file count —
-    * 1 batch at the driver's single-file sf0.1 (no cross-batch merging
-    * exercised at all) and ~32 at the 30× corpus (the f30 audit measured
-    * 12–19 s rows that were ~80% fixed per-batch machinery). 4 batches
-    * prove cross-batch convergence identically at every scale. */
-  private def stagedEventStream4(s: org.apache.spark.sql.SparkSession,
-                                 dir: String): String = {
-    import org.apache.spark.sql.functions.col
-    val staged = tmpStage(dir, "evstream4")
-    ensureStaged(staged, "_SUCCESS") {
-      table(s, dir, "events").withColumn("ts", col("ts").cast("timestamp"))
-        .coalesce(4).write.mode("overwrite").parquet(staged)
-    }
-    staged
-  }
-
   val queries: Map[String, QFn] = Map(
     "ev_tumbling_window" -> ((s, dir) =>
       EventWindows.tumbling(table(s, dir, "events"), sizeMin = 15)),
@@ -137,8 +35,7 @@ object Events extends QueryPack {
       import org.apache.spark.sql.functions._
       import graft.streaming.StreamOps
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val staged = stagedEventStream4(s, dir)
-      val stream = StreamOps.readEventStream(s, staged, readParquet(s, staged))
+      val stream = StreamOps.readEventStream(s, StreamStage.eventStream(s, dir))
       val drained = StreamOps.drain(Seq((
         StreamOps.tumbling(stream, sizeMin = 15),
         s"ev_stream_tumbling$sf".replace(".", "_"),
@@ -174,9 +71,7 @@ object Events extends QueryPack {
       import org.apache.spark.sql.functions._
       import graft.streaming.StreamOps
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val (staged, _) = stagedEventBatches(s, dir)
-      val stream = StreamOps.readEventStream(s, staged,
-        readParquet(s, s"$staged/b0.parquet"))
+      val stream = StreamOps.readEventStream(s, StreamStage.eventBatches(s, dir))
       val drained = StreamOps.drain(Seq((
         StreamOps.tumbling(stream, sizeMin = 15, watermark = "10 minutes"),
         s"ev_stream_append$sf".replace(".", "_"), StreamOps.Memory("append"))),
@@ -196,15 +91,15 @@ object Events extends QueryPack {
     // so the file source replays them in order and session state genuinely
     // carries ACROSS micro-batches; the flush batch closes every open
     // session (append mode emits only closed sessions), and the flush
-    // sessions themselves stay open and are never emitted.
+    // sessions themselves stay open at drain end, so they are never
+    // emitted and need no filter.
     "ev_stream_sessionize" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       import graft.streaming.StreamOps
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val (staged, maxTs) = stagedEventBatches(s, dir)
+      val staged = StreamStage.eventBatches(s, dir)
       import s.implicits._
-      val stream = StreamOps.readEventStream(s, staged,
-        readParquet(s, s"$staged/b0.parquet"))
+      val stream = StreamOps.readEventStream(s, staged)
       val out = StreamOps.sessionize(stream.as[StreamOps.Event], gapMin = 30,
         timeout = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout())
       // Drain parallelism sized from the input (parquet row-count
@@ -220,9 +115,6 @@ object Events extends QueryPack {
         s"ev_stream_sess$sf".replace(".", "_"), StreamOps.Memory("append"))),
         shufflePartitions = Some(parts)).head
       drained
-        // defensive: a flush-only session can never be emitted (it stays
-        // open at drain end), but make the exclusion explicit
-        .filter(col("first_ts") <= lit(maxTs))
         .select(col("user_id"), col("session_id"), col("n_events"),
           col("first_ts").cast("timestamp_ntz").as("first_ts"),
           col("last_ts").cast("timestamp_ntz").as("last_ts"),
@@ -256,9 +148,8 @@ object Events extends QueryPack {
       import org.apache.spark.sql.expressions.Window
       import graft.streaming.StreamOps
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val (staged, maxTs) = stagedEventBatchesOneFlush(s, dir)
-      val stream = StreamOps.readEventStream(s, staged,
-        readParquet(s, s"$staged/b0.parquet"))
+      val staged = StreamStage.eventBatchesOneFlush(s, dir)
+      val stream = StreamOps.readEventStream(s, staged)
       val out = StreamOps.sessionizeEvict(stream, gapMin = 30)
       val parts = if (parquetRows(s, staged) > 2000000L) 32 else 8
       // PARQUET-sink drain: the eviction posture's whole point is bounded
@@ -273,7 +164,7 @@ object Events extends QueryPack {
         shufflePartitions = Some(parts)).head
       val w = Window.partitionBy(col("user_id")).orderBy(col("first_ts"))
       drained
-        .filter(col("user_id") >= 0 && col("first_ts") <= lit(maxTs))
+        .filter(col("user_id") >= 0)
         .withColumn("session_id", row_number().over(w).cast("long"))
         .select(col("user_id"), col("session_id"), col("n_events"),
           col("first_ts").cast("timestamp_ntz").as("first_ts"),
@@ -453,15 +344,14 @@ object Events extends QueryPack {
       import org.apache.spark.sql.functions._
       import graft.streaming.StreamOps
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val (staged, _) = stagedEventBatches(s, dir)
-      val schemaFrom = readParquet(s, s"$staged/b0.parquet")
+      val staged = StreamStage.eventBatches(s, dir)
       // ONE streaming source feeds both join sides: the two filter
       // branches share the file source's listing and offset tracking, so
       // each micro-batch plans and advances one source, not two.
       // b2 is the sessionize flush batch - every one of its rows is
       // filtered out below, but the file would still cost a micro-batch
       // of planning; read the two real-data batches only.
-      val ev = StreamOps.readEventStream(s, s"$staged/b[01].parquet", schemaFrom)
+      val ev = StreamOps.readEventStream(s, StreamStage.dataBatches(staged))
       val purchases = ev
         .filter(col("event_type") === "purchase")
         .select(col("event_id").as("purchase_id"),
@@ -523,8 +413,7 @@ object Events extends QueryPack {
       import org.apache.spark.sql.functions._
       import graft.streaming.StreamOps
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val staged = stagedEventStream4(s, dir)
-      val stream = StreamOps.readEventStream(s, staged, readParquet(s, staged))
+      val stream = StreamOps.readEventStream(s, StreamStage.eventStream(s, dir))
       val agg = stream
         .select(floor(col("value") / lit(0.5)).cast("long").as("bin"))
         .filter(col("bin").isNotNull)
@@ -541,8 +430,7 @@ object Events extends QueryPack {
       import org.apache.spark.sql.functions._
       import graft.streaming.StreamOps
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val staged = stagedEventStream4(s, dir)
-      val stream = StreamOps.readEventStream(s, staged, readParquet(s, staged))
+      val stream = StreamOps.readEventStream(s, StreamStage.eventStream(s, dir))
       val agg = stream
         .select(explode(graft.ops.Sketch.cmsCells(col("event_type"), 4, 64))
           .as("cell"))
@@ -563,8 +451,7 @@ object Events extends QueryPack {
       import org.apache.spark.sql.functions._
       import graft.streaming.StreamOps
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val staged = stagedEventStream4(s, dir)
-      val stream = StreamOps.readEventStream(s, staged, readParquet(s, staged))
+      val stream = StreamOps.readEventStream(s, StreamStage.eventStream(s, dir))
       val dayUs = 24L * 3600L * 1000000L
       val tsUs = unix_micros(col("ts"))
       val day = ((tsUs - pmod(tsUs, lit(dayUs))) / lit(dayUs)).cast("long")
@@ -684,8 +571,7 @@ object Events extends QueryPack {
       import org.apache.spark.sql.functions._
       import graft.streaming.StreamOps
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val staged = stagedEventStream4(s, dir)
-      val stream = StreamOps.readEventStream(s, staged, readParquet(s, staged))
+      val stream = StreamOps.readEventStream(s, StreamStage.eventStream(s, dir))
       val (bucket, rho) = graft.ops.Sketch.hllBucketRho(col("user_id"), 64)
       val agg = stream.select(bucket.as("bucket"), rho.as("rho"))
         .groupBy(col("bucket"))
@@ -817,8 +703,7 @@ object Events extends QueryPack {
       import org.apache.spark.sql.functions._
       import graft.streaming.StreamOps
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val staged = stagedEventStream4(s, dir)
-      val stream = StreamOps.readEventStream(s, staged, readParquet(s, staged))
+      val stream = StreamOps.readEventStream(s, StreamStage.eventStream(s, dir))
       val hourly = stream
         .select(col("event_type"),
           (unix_micros(col("ts")) / lit(3600000000L)).cast("long").as("h"))

@@ -223,102 +223,6 @@ object TextOps extends QueryPack {
     s.table(tbl)
   }
 
-  /** Documents staged as a 4-file parquet directory — the micro-batch
-    * source shared by the streaming dedup queries (4 files = 4 batches; 32
-    * would pay 8x the per-batch state-store maintenance for no coverage). */
-  private[queries] def stagedDocStream(s: org.apache.spark.sql.SparkSession,
-                              dir: String): String = {
-    import org.apache.spark.sql.functions.col
-    val staged = tmpStage(dir, "docstream")
-    ensureStaged(staged, "_SUCCESS") {
-      table(s, dir, "documents").select(col("doc_id"), col("text"))
-        .coalesce(4)
-        .write.mode("overwrite").parquet(staged)
-    }
-    staged
-  }
-
-  /** Documents as THREE time-ordered single-file micro-batches for the
-    * watermark-eviction dedup drain: each doc gets a deterministic synthetic
-    * ingest timestamp (2020-01-01 UTC + doc_id minutes — the harness tables
-    * carry no ingest time; one doc per minute gives the corpus an hours-long
-    * arrival span so 60-minute epochs genuinely open and close), split at
-    * the median doc into b0/b1 with strictly increasing file mtimes (the
-    * file source replays them in order), plus a flush sentinel 2 h past the
-    * last real arrival so the final watermark passes every real window.
-    * Returns the staging dir. */
-  private[queries] def stagedDocTimedBatches(
-      s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    import org.apache.spark.sql.functions._
-    import java.nio.file.{Files, Paths}
-    val staged = tmpStage(dir, "docevict")
-    val freshStage = !Files.exists(Paths.get(s"$staged/_STAGED"))
-    graft.queries.logStage(staged, freshStage)
-    if (freshStage) {
-      // 2020-01-01T00:00:00Z = 1577836800 s, divisible by 3600 — epoch
-      // windows align to whole hours of the synthetic clock
-      val d = table(s, dir, "documents")
-        .select(col("doc_id"), col("text"),
-          expr("timestamp_micros(1577836800000000 + doc_id * 60000000)")
-            .as("ingest_ts"))
-      val Array(minId, maxId) = d
-        .agg(min(col("doc_id")), max(col("doc_id"))).first() match {
-          case r => Array(r.getLong(0), r.getLong(1))
-        }
-      val mid = (minId + maxId) / 2
-      val flushUs = 1577836800000000L + maxId * 60000000L + 7200000000L
-      val flush = s.range(1).select(lit(-1L).as("doc_id"),
-        lit("__flush__").as("text"),
-        expr(s"timestamp_micros(${flushUs}L)").as("ingest_ts"))
-      val base = System.currentTimeMillis() / 1000L
-      writeMicroBatchFile(d.filter(col("doc_id") <= mid), staged, "b0", base)
-      writeMicroBatchFile(d.filter(col("doc_id") > mid), staged, "b1", base + 2)
-      writeMicroBatchFile(flush, staged, "b2", base + 4)
-      Files.createFile(Paths.get(s"$staged/_STAGED"))
-    }
-    staged
-  }
-
-  /** Arriving-document stream for the curation-ingest gate
-    * (tp5_stream_curate): the doc_id % 5 == 0 slice (the
-    * dd_incremental_lsh batch rule) arriving on the synthetic ingest
-    * clock — one doc per minute from 2020-01-01 UTC, two time-ordered
-    * single-file micro-batches split at the id midpoint, plus a flush
-    * sentinel 2 h past the last real arrival (the stagedDocTimedBatches
-    * convention). `lang` rides along: the canonical exact-dup key needs
-    * it. The sentinel's doc_id is −5 ≡ 0 (mod 5), so a pushed-down
-    * arrival filter could never drop it below the watermark node. */
-  private[queries] def stagedCurateStream(
-      s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    import org.apache.spark.sql.functions._
-    import java.nio.file.{Files, Paths}
-    val staged = tmpStage(dir, "curatestream")
-    val freshStage = !Files.exists(Paths.get(s"$staged/_STAGED"))
-    graft.queries.logStage(staged, freshStage)
-    if (freshStage) {
-      val d = table(s, dir, "documents")
-        .filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id"), col("text"), col("lang"),
-          expr("timestamp_micros(1577836800000000 + doc_id * 60000000)")
-            .as("ingest_ts"))
-      val Array(minId, maxId) = d
-        .agg(min(col("doc_id")), max(col("doc_id"))).first() match {
-          case r => Array(r.getLong(0), r.getLong(1))
-        }
-      val mid = (minId + maxId) / 2
-      val flushUs = 1577836800000000L + maxId * 60000000L + 7200000000L
-      val flush = s.range(1).select(lit(-5L).as("doc_id"),
-        lit("__flush__").as("text"), lit(null).cast("string").as("lang"),
-        expr(s"timestamp_micros(${flushUs}L)").as("ingest_ts"))
-      val base = System.currentTimeMillis() / 1000L
-      writeMicroBatchFile(d.filter(col("doc_id") <= mid), staged, "b0", base)
-      writeMicroBatchFile(d.filter(col("doc_id") > mid), staged, "b1", base + 2)
-      writeMicroBatchFile(flush, staged, "b2", base + 4)
-      Files.createFile(Paths.get(s"$staged/_STAGED"))
-    }
-    staged
-  }
-
   /** DuckDB twin of Dedup.seededHash. */
   private def mh(seed: Int, v: String): String =
     s"CAST(('0x' || substr(md5($seed || ':' || $v), 1, 15)) AS BIGINT)"
@@ -711,8 +615,7 @@ object TextOps extends QueryPack {
       import org.apache.spark.sql.functions._
       import graft.streaming.StreamOps
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val staged = stagedDocStream(s, dir)
-      val stream = StreamOps.readEventStream(s, staged, readParquet(s, staged))
+      val stream = StreamOps.readEventStream(s, StreamStage.docStream(s, dir))
       val agg = stream.groupBy(md5(col("text")).as("fp"))
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
       StreamOps.drain(Seq((agg,
@@ -726,7 +629,7 @@ object TextOps extends QueryPack {
     // no longer receive arrivals — state is bounded by the dedup horizon
     // (watermark + epoch width), never the corpus, which is the only way a
     // fingerprint ingest gate survives unbounded input. Epochs come from a
-    // deterministic synthetic ingest clock (stagedDocTimedBatches: one doc
+    // deterministic synthetic ingest clock (StreamStage.docBatches: one doc
     // per minute, time-ordered micro-batches, flush sentinel) so the full
     // drain equals a plain batch GROUP BY (epoch, fp) — duplicates in
     // DIFFERENT epochs are deliberately counted per epoch: that is the
@@ -739,9 +642,7 @@ object TextOps extends QueryPack {
       import org.apache.spark.sql.functions._
       import graft.streaming.StreamOps
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val staged = stagedDocTimedBatches(s, dir)
-      val stream = StreamOps.readEventStream(s, staged,
-        readParquet(s, s"$staged/b0.parquet"))
+      val stream = StreamOps.readEventStream(s, StreamStage.docBatches(s, dir))
       val agg = stream
         .withWatermark("ingest_ts", "45 minutes")
         .groupBy(window(col("ingest_ts"), "60 minutes"),
@@ -893,10 +794,9 @@ object TextOps extends QueryPack {
       import org.apache.spark.sql.functions._
       import graft.streaming.StreamOps
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val staged = stagedDocStream(s, dir)
+      val staged = StreamStage.docStream(s, dir)
       val corpus = stagedCorpusBands(s, dir)
-      val stream = StreamOps.readEventStream(s, staged,
-          readParquet(s, staged))
+      val stream = StreamOps.readEventStream(s, staged)
         .filter(col("doc_id") % 5 === 0)
       val bands = Dedup.bandBuckets(Dedup.minHashSignaturesMapOnly(stream))
         .select(col("doc_id").as("new_doc"), col("band"), col("bh"))
@@ -1034,9 +934,9 @@ object TextOps extends QueryPack {
       import org.apache.spark.sql.functions._
       import graft.streaming.StreamOps
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val staged = stagedDocStream(s, dir)
+      val staged = StreamStage.docStream(s, dir)
       val bm = stagedBloomBitmap(s, dir)
-      val stream = StreamOps.readEventStream(s, staged, readParquet(s, staged))
+      val stream = StreamOps.readEventStream(s, staged)
         .filter(col("doc_id") % 11 =!= 0)
       StreamOps.drain(Seq((Dedup.bloomProbeInRow(stream, bm, n = 4),
         s"dd_stream_decon$sf".replace(".", "_"), StreamOps.Memory("append"))))
@@ -1266,8 +1166,7 @@ object TextOps extends QueryPack {
       import org.apache.spark.sql.functions._
       import graft.streaming.StreamOps
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val staged = stagedCurateStream(s, dir)
-      val schemaFrom = readParquet(s, s"$staged/b0.parquet")
+      val staged = StreamStage.curateBatches(s, dir)
       val docs = table(s, dir, "documents")
       val standing = docs.filter(col("doc_id") % 5 =!= 0)
         .select(col("lang"), Dedup.canonBucket.as("bucket"),
@@ -1282,7 +1181,7 @@ object TextOps extends QueryPack {
         .bloomGramProbePacked(toksNorm, typedlit(bm.toSeq), 4, 1 << 16,
           seed = 23)
       // gate leg: stateless map-side signals + broadcast membership join
-      val stream = StreamOps.readEventStream(s, staged, schemaFrom)
+      val stream = StreamOps.readEventStream(s, staged)
       val gated = graft.ops.Sampling.hashSplit(
           graft.ops.TextAnalysis.curationSignals(stream,
             carry = Seq("lang", "text")), idCol = "doc_id")
@@ -1296,7 +1195,7 @@ object TextOps extends QueryPack {
           coalesce(col("ex_standing"), lit(false)).as("ex_standing"),
           col("bloom_hits"), col("keep").as("gopher_keep"), col("subset"))
       // dedup leg: the eviction-posture horizon gate on the canonical key
-      val dedup = StreamOps.readEventStream(s, staged, schemaFrom)
+      val dedup = StreamOps.readEventStream(s, staged)
         .withWatermark("ingest_ts", "45 minutes")
         .withColumn("bucket", Dedup.canonBucket)
         .withColumn("fp", Dedup.canonFpOf(Dedup.canonToks))
@@ -1361,14 +1260,13 @@ object TextOps extends QueryPack {
       import org.apache.spark.sql.functions._
       import graft.streaming.StreamOps
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val staged = stagedDocStream(s, dir)
+      val staged = StreamStage.docStream(s, dir)
       // 2 files per trigger over the 4 staged files = 2 micro-batches:
       // still a genuine multi-batch convergence test (update-mode rows
       // from batch 0 must be superseded by batch 1's re-emitted keys),
       // at half the fixed per-batch cost (state-store commits plus a
       // full read-merge-swap of the upsert target per batch).
-      val stream = StreamOps.readEventStream(s, staged, readParquet(s, staged),
-        maxFilesPerTrigger = 2)
+      val stream = StreamOps.readEventStream(s, staged, maxFilesPerTrigger = 2)
       val agg = stream.groupBy(md5(col("text")).as("fp"))
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
       // The drain owns the checkpoint, so it rebuilds the target from

@@ -434,9 +434,7 @@ object Vectors extends QueryPack {
       val pq = stagedPq(s, dir)
       val stride = Similarity.queryStride(tableRows(s, dir, "embeddings"))
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val staged = stagedEmbStream(s, dir)
-      val stream = StreamOps.readEventStream(s, staged,
-          readParquet(s, staged))
+      val stream = StreamOps.readEventStream(s, StreamStage.embStream(s, dir))
         .filter(col("vec_id") % stride === 0)
       val sl = Similarity.ivfPqStreamShortlist(stream,
         readParquet(s, s"$pq/codebook.parquet"),
@@ -474,9 +472,7 @@ object Vectors extends QueryPack {
       val pq = stagedPq(s, dir)
       val stride = Similarity.queryStride(tableRows(s, dir, "embeddings"))
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val staged = stagedEmbTimedBatches(s, dir)
-      val stream = StreamOps.readEventStream(s, staged,
-          readParquet(s, s"$staged/b0.parquet"))
+      val stream = StreamOps.readEventStream(s, StreamStage.embBatches(s, dir))
         .withWatermark("ingest_ts", "45 minutes")
         .filter(col("vec_id") % stride === 0)
       val sl = Similarity.ivfPqStreamShortlistEpoch(stream,
@@ -514,9 +510,7 @@ object Vectors extends QueryPack {
       import graft.streaming.StreamOps
       val pq = stagedPq(s, dir)
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val staged = stagedEmbStream(s, dir)
-      val stream = StreamOps.readEventStream(s, staged,
-        readParquet(s, staged))
+      val stream = StreamOps.readEventStream(s, StreamStage.embStream(s, dir))
       val enc = Similarity.ivfPqStreamEncode(stream,
         readParquet(s, s"$pq/codebook.parquet"),
         readParquet(s, s"$pq/cent.parquet"))
@@ -1047,9 +1041,7 @@ object Vectors extends QueryPack {
       val reps = readParquet(s, s"$staged/reps.parquet")
       val uw = readParquet(s, s"$staged/uwords.parquet")
         .select(col("uid"), col("j"), col("band").as("key"))
-      val docStream = TextOps.stagedDocStream(s, dir)
-      val stream = StreamOps.readEventStream(s, docStream,
-          readParquet(s, docStream))
+      val stream = StreamOps.readEventStream(s, StreamStage.docStream(s, dir))
         .filter(col("doc_id") % 5 === 0 && length(col("text")) > 0)
         .select(col("doc_id").as("new_doc"),
           graft.functions.StringExpressions.phashWords(col("text"), 64)
@@ -1108,72 +1100,6 @@ object Vectors extends QueryPack {
     staged
   }
 
-  /** Embeddings staged as a 4-file parquet directory — the micro-batch
-    * source for the streaming ANN ingest (the stagedDocStream convention:
-    * 4 files = 4 batches; more files pay per-batch state-store maintenance
-    * for no coverage). */
-  private[queries] def stagedEmbStream(s: org.apache.spark.sql.SparkSession,
-                                       dir: String): String = {
-    val staged = tmpStage(dir, "embstream")
-    ensureStaged(staged, "_SUCCESS") {
-      table(s, dir, "embeddings")
-        .coalesce(4)
-        .write.mode("overwrite").parquet(staged)
-    }
-    staged
-  }
-
-  /** Embeddings staged as TIME-ORDERED micro-batch files with a synthetic
-    * ingest clock (the stagedDocTimedBatches convention: one vector per
-    * minute from the 2020-01-01 epoch, two data batches split at the id
-    * midpoint, then a flush sentinel whose timestamp pushes the watermark
-    * past every real epoch) — the arrival shape the watermarked ANN
-    * serving stream (sim_stream_ann_evict) assumes.
-    *
-    * The sentinel carries vec_id = −queryStride and the first corpus
-    * vector's (real) embedding: the consumer's stride filter is pushed
-    * BELOW the EventTimeWatermark node by PushDownPredicates (it does not
-    * reference the event-time column), so a sentinel that failed the
-    * filter would never reach the watermark exec and the final epochs
-    * would stay unemitted — measured as the last 75 minutes of queries
-    * missing from the drain. −stride ≡ 0 (mod stride) survives any
-    * pushed-down stride filter; the sentinel's own window is structurally
-    * never emitted (the watermark stops 45 min short of the maximum event
-    * time, which is the sentinel itself), and consumers defensively drop
-    * q_id < 0. */
-  private[graft] def stagedEmbTimedBatches(
-      s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    import java.nio.file.{Files, Paths}
-    val staged = tmpStage(dir, "embevict")
-    val freshStage = !Files.exists(Paths.get(s"$staged/_STAGED"))
-    graft.queries.logStage(staged, freshStage)
-    if (freshStage) {
-      val raw = table(s, dir, "embeddings")
-      val stride =
-        graft.ops.Similarity.queryStride(tableRows(s, dir, "embeddings"))
-      val e = raw
-        .select(col("vec_id"), col("embedding"), col("label"),
-          expr("timestamp_micros(1577836800000000 + vec_id * 60000000)")
-            .as("ingest_ts"))
-      val Array(minId, maxId) = e
-        .agg(min(col("vec_id")), max(col("vec_id"))).first() match {
-          case r => Array(r.getLong(0), r.getLong(1))
-        }
-      val mid = (minId + maxId) / 2
-      val flushUs = 1577836800000000L + maxId * 60000000L + 7200000000L
-      val flush = raw.filter(col("vec_id") === minId)
-        .select(lit(-stride).as("vec_id"), col("embedding"),
-          lit(null).cast("int").as("label"),
-          expr(s"timestamp_micros(${flushUs}L)").as("ingest_ts"))
-      val base = System.currentTimeMillis() / 1000L
-      writeMicroBatchFile(e.filter(col("vec_id") <= mid), staged, "b0", base)
-      writeMicroBatchFile(e.filter(col("vec_id") > mid), staged, "b1", base + 2)
-      writeMicroBatchFile(flush, staged, "b2", base + 4)
-      Files.createFile(Paths.get(s"$staged/_STAGED"))
-    }
-    staged
-  }
-
   /** Streamed-index append log + its compaction, staged once per SF: the
     * SAME frozen-quantizer ingest as sim_stream_index_ingest, drained
     * through the parquet FILE SINK (one append of up to |shuffle
@@ -1188,8 +1114,7 @@ object Vectors extends QueryPack {
     ensureStaged(staged, "compacted/_SUCCESS") {
       import graft.streaming.StreamOps
       val pq = stagedPq(s, dir)
-      val src = stagedEmbStream(s, dir)
-      val stream = StreamOps.readEventStream(s, src, readParquet(s, src))
+      val stream = StreamOps.readEventStream(s, StreamStage.embStream(s, dir))
       val enc = Similarity.ivfPqStreamEncode(stream,
         readParquet(s, s"$pq/codebook.parquet"),
         readParquet(s, s"$pq/cent.parquet"))

@@ -47,7 +47,8 @@ package object queries {
       df.withColumn("ts", tsNorm)
     } else readParquet(spark, s"$dir/$name.parquet")
 
-  /** Open a parquet file or directory with its schema read on the driver.
+  /** Open a parquet file, directory or glob of files with its schema read
+    * on the driver.
     * `spark.read.parquet` without a schema infers it in a Spark job (the
     * schema merge runs as a job even for one file). This reads the footer
     * of the file that inference touches — the first data file in path
@@ -79,21 +80,21 @@ package object queries {
       .getBlocks.asScala.map(_.getRowCount).sum).sum
   }
 
-  /** The data files under `path` in the order Spark's schema inference
-    * sees them — sorted by path, after the file index's hidden-name
-    * filter — and the session's Hadoop conf to open them with. */
+  /** The data files under `path` (a file, a directory, or a glob of
+    * files, as `spark.read.parquet` takes it) in the order Spark's schema
+    * inference sees them — sorted by path, after the file index's
+    * hidden-name filter — and the session's Hadoop conf to open them with. */
   private def parquetFiles(spark: SparkSession,
                            path: String): (Seq[FileStatus], Configuration) = {
     val conf = spark.sessionState.newHadoopConf()
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
-    val root = fs.getFileStatus(p)
-    val files =
-      if (!root.isDirectory) Seq(root)
-      else {
-        require(!fs.exists(new Path(p, "_spark_metadata")),
+    val matched = Option(fs.globStatus(p)).toSeq.flatten
+    val files = matched match {
+      case Seq(root) if root.isDirectory =>
+        require(!fs.exists(new Path(root.getPath, "_spark_metadata")),
           s"readParquet: $path is file-sink output; read it with spark.read.parquet")
-        val kids = fs.listStatus(p).toSeq.filterNot(k =>
+        val kids = fs.listStatus(root.getPath).toSeq.filterNot(k =>
           org.apache.spark.sql.graft.bridge.hiddenFileName(k.getPath.getName))
         // inference would prefer a summary file (_metadata,
         // _common_metadata) over the data files; Spark writes none
@@ -101,7 +102,11 @@ package object queries {
           s"readParquet: $path has subdirectories (a partitioned layout) or " +
             "summary files; read it with spark.read.parquet")
         kids.sortBy(_.getPath.toString)
-      }
+      case _ =>
+        require(matched.forall(_.isFile),
+          s"readParquet: $path matches directories; read it with spark.read.parquet")
+        matched.sortBy(_.getPath.toString)
+    }
     require(files.nonEmpty,
       s"readParquet: no parquet data file under $path to read a schema from")
     (files, conf)
@@ -162,32 +167,6 @@ package object queries {
       java.nio.file.Paths.get(s"$stageDir/$marker"))
     if (fresh) build
     logStage(stageDir, fresh)
-  }
-
-  /** Write `df` as ONE parquet file `<staged>/<name>.parquet` with an
-    * explicit modification time — the time-ordered micro-batch staging
-    * convention: Spark's file stream source orders files by (mtime, path),
-    * so strictly increasing mtimes make it replay the files as in-order
-    * micro-batches, the arrival shape a watermarked ingest assumes. Shared
-    * by the sessionize and eviction stream stagings. */
-  private[graft] def writeMicroBatchFile(df: DataFrame, staged: String,
-                                         name: String, mtimeSec: Long): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import scala.util.Using
-    val tmp = s"$staged/_tmp_$name"
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    // Files.list/walk return OPEN directory streams — close them, or
-    // each staging leaks descriptors for the life of the JVM
-    val part = Using.resource(Files.list(Paths.get(tmp)))(
-      _.filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .findFirst().get())
-    val dest = Paths.get(s"$staged/$name.parquet")
-    Files.move(part, dest, StandardCopyOption.REPLACE_EXISTING)
-    Files.setLastModifiedTime(dest,
-      java.nio.file.attribute.FileTime.fromMillis(mtimeSec * 1000L))
-    Using.resource(Files.walk(Paths.get(tmp)))(
-      _.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.deleteIfExists(p)))
   }
 
   /** Delete ONE staged dir so its builder re-pays the build (the bench

@@ -27,11 +27,11 @@ object StreamOps {
 
   /** Memory-sink tables created by drains since this log was last drained.
     * A memory sink holds the COMPLETE drained result in driver memory and
-    * survives query termination until its temp view is dropped — harmless
-    * in Verify (one process, bounded results) but real residue in a timed
-    * bench fleet, where a dozen drained tables sit on the heap while later
-    * queries are measured. graft.Bench drains this log and drops the views
-    * between timed rows. */
+    * survives query termination until its temp view is dropped — residue
+    * that piles up over a run of queries, a dozen drained tables on the
+    * heap while later queries run. graft.HarnessSession.clearResidue (called by
+    * Bench and Verify between queries) drains this log and drops the
+    * views. */
   private val sinkLog = new scala.collection.mutable.ArrayBuffer[String]()
   private def logSink(name: String): Unit =
     sinkLog.synchronized { sinkLog += name }
@@ -174,15 +174,19 @@ object StreamOps {
               col("last_ts"), col("dur_us"))
   }
 
-  /** readStream twin of queries.table for a parquet directory of events —
-    * the file-source entry point a production deployment would start from. */
-  def readEventStream(spark: SparkSession, dir: String,
-                      schemaFrom: DataFrame,
+  /** readStream twin of queries.readParquet: the parquet files at `path`
+    * (a directory such as a graft.queries.StreamStage stage, or a glob of
+    * files) as a file-source stream, `maxFilesPerTrigger` files per
+    * micro-batch — the entry point a production deployment would start
+    * from. The schema is the first data file's footer, read on the driver
+    * through readParquet (which skips `_`-prefixed markers), so opening
+    * the stream runs no Spark job. */
+  def readEventStream(spark: SparkSession, path: String,
                       maxFilesPerTrigger: Int = 1): DataFrame =
     spark.readStream
-      .schema(schemaFrom.schema)
+      .schema(graft.queries.readParquet(spark, path).schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(dir)
+      .parquet(path)
 
   /** Where one drain leg's rows go. */
   sealed trait Sink
@@ -249,7 +253,9 @@ object StreamOps {
     * since a fresh checkpoint must never append onto an old target. Only
     * an Upsert `checkpoint` the caller passes is kept, with its target.
     * Every started leg is stopped before the conf is restored or any
-    * checkpoint deleted, also when a leg fails to start or fails. */
+    * checkpoint deleted, also when a leg fails to start or fails: a leg
+    * still inside a micro-batch is cancelled (see [[stopLeg]]), not
+    * waited out. */
   def drain(legs: Seq[(DataFrame, String, Sink)],
             shufflePartitions: Option[Int] = None): Seq[DataFrame] = {
     val spark = legs.head._1.sparkSession
@@ -316,8 +322,13 @@ object StreamOps {
         stateLog.synchronized { stateLog(name) = seq }
       }
     } finally {
-      started.foreach(q =>
-        try if (q.isActive) q.stop() catch { case NonFatal(_) => () })
+      val prevStop = spark.conf.getOption(StopTimeout)
+      spark.conf.set(StopTimeout, StopStepMs.toString)
+      started.foreach(stopLeg(spark, _))
+      prevStop match {
+        case Some(v) => spark.conf.set(StopTimeout, v)
+        case None => spark.conf.unset(StopTimeout)
+      }
       spark.streams.removeListener(listener)
       spark.conf.set("spark.sql.shuffle.partitions", prev)
       owned.foreach(deleteRecursively)
@@ -327,6 +338,27 @@ object StreamOps {
       // the plain reader: file-sink output is read through _spark_metadata
       case (_, _, Files(path)) => spark.read.parquet(path)
       case (_, _, Upsert(path, _, _)) => graft.queries.readParquet(spark, path)
+    }
+  }
+
+  private val StopTimeout = "spark.sql.streaming.stopTimeout"
+  private val StopStepMs = 500L
+
+  /** Stop one leg and wait until its stream thread has finished. `stop()`
+    * cancels the leg's job group (its runId) once, interrupts the thread
+    * and joins it: a batch job submitted after that cancel runs to its
+    * end, and with the default stop timeout (0, no limit) the join waits
+    * it out, the whole micro-batch. Under the drain's timeout the join
+    * gives up after [[StopStepMs]], and the job group is cancelled again
+    * every step until the query leaves the session's active set, the
+    * thread's last act. (`awaitTermination` cannot tell: once `stop()`
+    * has marked the query terminated it reports true while the thread
+    * still runs.) */
+  private def stopLeg(spark: SparkSession, q: StreamingQuery): Unit = {
+    try q.stop() catch { case NonFatal(_) => () }
+    while (spark.streams.get(q.id) != null) {
+      spark.sparkContext.cancelJobGroup(q.runId.toString)
+      try q.awaitTermination(StopStepMs) catch { case NonFatal(_) => () }
     }
   }
 

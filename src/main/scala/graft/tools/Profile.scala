@@ -14,30 +14,20 @@ import graft.queries.readParquet
 object Profile {
   private var session: SparkSession = _
   /** Same measurement isolation as graft.Bench.timeOne: construction is
-    * timed (eager materialize barriers count), and residue (persisted
-    * checkpoint blocks, broadcast/shuffle state) is dropped with a blocking
-    * unpersist + forced GC after each probe so no probe pays a
-    * predecessor's cleanup. */
+    * timed (eager materialize barriers count), and isolate() drops the
+    * residue (HarnessSession.clearResidue) after each probe so no probe
+    * pays a predecessor's cleanup. */
   private def time(name: String)(df: => DataFrame): Unit = {
     val t0 = System.nanoTime()
     df.write.format("noop").mode("overwrite").save()
     val s = (System.nanoTime() - t0) / 1e9
     println(f"[profile] $name%-32s ${s}%8.2f s")
   }
-  private def isolate(): Unit = {
-    session.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    System.gc()
-  }
+  private def isolate(): Unit = graft.HarnessSession.clearResidue(session)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.HarnessSession.build()
     graft.queries.wipeStages()
     import graft.ops.{Dedup, TextAnalysis}
     import graft.queries.table
@@ -255,10 +245,10 @@ object Profile {
         time("dd_stream_upsert(warm)")(
           graft.SparkEntry.queries("dd_stream_upsert")(spark, sfDir))
         isolate()
-        val stagedPath = graft.queries.tmpStage(sfDir, "docstream")
+        val stagedPath = graft.queries.StreamStage.docStream(spark, sfDir)
         val st = readParquet(spark, stagedPath)
         val stream = graft.streaming.StreamOps.readEventStream(
-          spark, stagedPath, st, maxFilesPerTrigger = 2)
+          spark, stagedPath, maxFilesPerTrigger = 2)
         val agg = stream.groupBy(md5(col("text")).as("fp"))
           .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
         time("memory_drain_2batch")(

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-audit probe for streaming STATE boundedness: runs the named
   * streaming queries at a given SF dir and prints each drain's per-batch
   * state-store row counts (recorded by StreamOps.drain's listener —
@@ -22,12 +20,7 @@ object StateProbe {
     require(args.length >= 2, "usage: StateProbe <sfDir> <query> [query...]")
     val sfDir = args(0)
     val names = args.drop(1).toSeq
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.HarnessSession.build()
     graft.queries.wipeStages()
     val perQuery = names.map { n =>
       graft.streaming.StreamOps.clearStateLog()

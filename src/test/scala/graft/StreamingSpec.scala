@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -119,10 +120,10 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val blocking = MemoryStream[Int]
     blocking.addData(1)
-    // bounded: a stop() that lands before the batch's job is submitted
-    // waits for that batch to finish
+    // the blocked batch would hold for 30 s: the drain must cancel it,
+    // not wait it out, wherever its stop lands relative to the batch job
     val block = udf { (x: Int) =>
-      StreamingSpecLatch.release.await(10, java.util.concurrent.TimeUnit.SECONDS)
+      StreamingSpecLatch.release.await(30, java.util.concurrent.TimeUnit.SECONDS)
       x
     }
     val leg1 = blocking.toDF().select(block($"value").as("value"))
@@ -135,12 +136,16 @@ class StreamingSpec extends SparkSpec {
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     val ckptsBefore = checkpointDirs()
     try {
+      val t0 = System.nanoTime()
       intercept[org.apache.spark.sql.AnalysisException] {
         StreamOps.drain(Seq(
           (leg1, "leak_leg_blocked", StreamOps.Memory("append")),
           (leg2, "leak_leg_failing", StreamOps.Files(s"$out/files"))),
           shufflePartitions = Some(3))
       }
+      val waited = (System.nanoTime() - t0) / 1e9
+      assert(waited < 5.0,
+        f"the failing drain waited $waited%.1f s for its blocked leg")
       assert(spark.streams.active.isEmpty,
         s"started legs left running: ${spark.streams.active.map(_.name).toSeq}")
       assert(spark.conf.get("spark.sql.shuffle.partitions") == prev)
@@ -153,18 +158,80 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("src/main drains streams only through StreamOps.drain") {
+    // and stages them only through StreamStage
     val main = java.nio.file.Paths.get("src/main/scala")
     val files = scala.util.Using.resource(java.nio.file.Files.walk(main)) { w =>
       import scala.jdk.CollectionConverters._
       w.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
     }
-    assert(files.exists(_.getFileName.toString == "StreamOps.scala"))
+    val owners = Map(
+      "StreamOps.scala" -> Seq(".writeStream", "graft_ckpt", "/dev/shm"),
+      "StreamStage.scala" ->
+        Seq("writeMicroBatchFile", "_STAGED", "b0.parquet", "b[01]"))
+    assert(owners.keySet.forall(o => files.exists(_.getFileName.toString == o)))
     val stray = for {
-      f <- files if f.getFileName.toString != "StreamOps.scala"
+      f <- files
       src = java.nio.file.Files.readString(f)
-      word <- Seq(".writeStream", "graft_ckpt", "/dev/shm") if src.contains(word)
+      (owner, words) <- owners if f.getFileName.toString != owner
+      word <- words if src.contains(word)
     } yield s"${f.getFileName}: $word"
-    assert(stray.isEmpty, s"stream drains outside StreamOps.drain: $stray")
+    assert(stray.isEmpty,
+      s"stream drains or stagings outside their module: $stray")
+  }
+
+  test("every StreamStage stage keeps its layout and reopens without a " +
+    "Spark job") {
+    import graft.queries.StreamStage
+    import java.nio.file.{Files, Paths}
+    def dataFiles(staged: String): Seq[String] =
+      Option(new java.io.File(staged).listFiles()).toSeq.flatten
+        .map(_.getName).filter(_.endsWith(".parquet")).sorted
+    def multiset(df: org.apache.spark.sql.DataFrame): Map[Row, Int] =
+      df.collect().toSeq.groupBy(identity).map { case (r, rs) => r -> rs.size }
+    // the one table each stage reads
+    val source = Map("docstream" -> "documents", "docevict" -> "documents",
+      "curatestream" -> "documents", "evstream4" -> "events",
+      "evsess" -> "events", "evsessw" -> "events",
+      "embstream" -> "embeddings", "embevict" -> "embeddings")
+    assert(source.keySet == StreamStage.all.map(_.name).toSet)
+    for (sf <- Seq("sf0.001", "sf0.01"); stage <- StreamStage.all) {
+      withTableCopy(sf, source(stage.name)) { dir =>
+        val staged = stage(spark, dir)
+        val what = s"$sf ${stage.name}"
+        stage match {
+          case c: StreamStage.Coalesced =>
+            val want = math.min(StreamStage.CoalescedFiles,
+              c.rows(spark, dir).rdd.getNumPartitions)
+            assert(dataFiles(staged).size == want,
+              s"$what: ${dataFiles(staged)} (want $want files)")
+            assert(multiset(spark.read.parquet(staged)) ==
+              multiset(c.rows(spark, dir)), s"$what: rows differ")
+          case t: StreamStage.Timed =>
+            assert(dataFiles(staged) ==
+              Seq("b0.parquet", "b1.parquet", "b2.parquet"), what)
+            val mtimes = Seq("b0", "b1", "b2").map(b =>
+              Files.getLastModifiedTime(Paths.get(s"$staged/$b.parquet"))
+                .toMillis)
+            assert(mtimes == mtimes.sorted && mtimes.distinct.size == 3,
+              s"$what: mtimes not strictly increasing: $mtimes")
+            val (rows, flush) = t.declare(spark, dir)
+            val range = rows.agg(min(col(t.key)), max(col(t.key))).first()
+            val cut = lit(StreamStage.cut(range))
+            def batch(b: String) = spark.read.parquet(s"$staged/$b.parquet")
+            assert(multiset(batch("b0").unionByName(batch("b1"))) ==
+              multiset(rows), s"$what: b0 ∪ b1 is not the source rows")
+            assert(batch("b0").filter(col(t.key) > cut).isEmpty &&
+              batch("b1").filter(col(t.key) <= cut).isEmpty,
+              s"$what: b0/b1 straddle the cut")
+            assert(!batch("b0").isEmpty && !batch("b1").isEmpty,
+              s"$what: an empty data batch")
+            assert(multiset(batch("b2")) == multiset(flush(range)),
+              s"$what: b2 is not the flush rows")
+        }
+        assert(sparkJobs { stage(spark, dir); () } == 0,
+          s"$what: reopening a built stage ran Spark jobs")
+      }
+    }
   }
 
   test("streaming sessionize closes a session when the gap passes in-stream") {
@@ -222,15 +289,14 @@ class StreamingSpec extends SparkSpec {
       }.toDF("doc_id", "text", "ingest_ts")
     val base = System.currentTimeMillis() / 1000L
     for (k <- 0 until 5)
-      graft.queries.writeMicroBatchFile(epochBatch(k), staged, s"b$k",
-        base + 2 * k)
-    graft.queries.writeMicroBatchFile(
+      graft.queries.StreamStage.writeMicroBatchFile(epochBatch(k), staged,
+        s"b$k", base + 2 * k)
+    graft.queries.StreamStage.writeMicroBatchFile(
       Seq((-1L, "__flush__", new Timestamp(100000L * 60L * 1000L)))
         .toDF("doc_id", "text", "ingest_ts"),
       staged, "b5", base + 10)
     def agg(mode: String, name: String) = {
-      val stream = StreamOps.readEventStream(spark, staged,
-        spark.read.parquet(s"$staged/b0.parquet"))
+      val stream = StreamOps.readEventStream(spark, staged)
       drainTracked(
         stream.withWatermark("ingest_ts", "30 minutes")
           .groupBy(window($"ingest_ts", "60 minutes"), md5($"text").as("fp"))
@@ -281,8 +347,7 @@ class StreamingSpec extends SparkSpec {
     assert(n >= nQ * 5, s"corpus ($n) must dwarf the query side ($nQ)")
     val staged = java.nio.file.Files.createTempDirectory("graft_ann").toString
     e.coalesce(4).write.mode("overwrite").parquet(staged)
-    val stream = StreamOps.readEventStream(spark, staged,
-        spark.read.parquet(staged))
+    val stream = StreamOps.readEventStream(spark, staged)
       .filter($"vec_id" % stride === 0)
     val ix = Similarity.pqIvfIndex(e)
     val sl = Similarity.ivfPqStreamShortlist(stream, ix.codebook, ix.codes,
@@ -316,9 +381,8 @@ class StreamingSpec extends SparkSpec {
     val e = graft.queries.table(spark, dir, "embeddings")
     val stride = Similarity.queryStride(e.count())
     val nQ = e.filter($"vec_id" % stride === 0).count()
-    val staged = graft.queries.Vectors.stagedEmbTimedBatches(spark, dir)
-    val stream = StreamOps.readEventStream(spark, staged,
-        spark.read.parquet(s"$staged/b0.parquet"))
+    val staged = graft.queries.StreamStage.embBatches(spark, dir)
+    val stream = StreamOps.readEventStream(spark, staged)
       .withWatermark("ingest_ts", "45 minutes")
       .filter($"vec_id" % stride === 0)
     val ix = Similarity.pqIvfIndex(e)
@@ -358,8 +422,7 @@ class StreamingSpec extends SparkSpec {
     // arrive forever and the only growth is the appended index itself.
     val staged = java.nio.file.Files.createTempDirectory("graft_ing").toString
     e.coalesce(4).write.mode("overwrite").parquet(staged)
-    val stream = StreamOps.readEventStream(spark, staged,
-      spark.read.parquet(staged))
+    val stream = StreamOps.readEventStream(spark, staged)
     val enc = Similarity.ivfPqStreamEncode(stream, ix.codebook, ix.cent)
     val (drained, state) = drainTracked(enc,
       "index_ingest_state_pin", "append", shufflePartitions = 2)
@@ -542,8 +605,7 @@ class StreamingSpec extends SparkSpec {
     // ns-typed original without the legacy conf set at scan build time).
     val staged = java.nio.file.Files.createTempDirectory("graft_evt").toString
     batchDf.write.mode("overwrite").parquet(staged)
-    val stream = StreamOps.readEventStream(spark, staged,
-      spark.read.parquet(staged))
+    val stream = StreamOps.readEventStream(spark, staged)
     val agg = StreamOps.tumbling(stream, sizeMin = 60)
     val q = agg.writeStream.format("memory").queryName("file_out")
       .outputMode("complete").trigger(Trigger.AvailableNow()).start()
