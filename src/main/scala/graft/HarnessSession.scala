@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one local session the harness mains run on (Bench, Verify,
-  * tools.Explain, tools.Profile, tools.StateProbe) and the cleanup they
-  * run between queries. */
+  * tools.Explain, tools.StateProbe) and the cleanup they run between
+  * queries. */
 object HarnessSession {
 
   /** `local[SPARK_GRAFT_CPUS]` (default 4) with as many shuffle

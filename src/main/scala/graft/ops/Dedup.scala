@@ -493,16 +493,12 @@ object Dedup {
     * side is the SMALL side of the split (bands × |eval| bucket rows must
     * fit the driver/executor broadcast budget — fine for the designed
     * ~1–2% eval slice at any corpus size, since the table is rows × bands
-    * of (long, int, long)). A caller auditing an unusually large eval
-    * slice passes `broadcastEval = false` to let the planner pick the
-    * join strategy instead of forcing a broadcast that could OOM — the
-    * same opt-out contract incrementalLsh documents for its batch side. */
+    * of (long, int, long)). */
   def splitLeakage(evalSig: DataFrame, trainSig: DataFrame,
                    numHashes: Int = 16, bands: Int = 4,
-                   minEst: Double = 0.5, broadcastEval: Boolean = true): DataFrame = {
-    val ebRaw = bandBuckets(evalSig, numHashes, bands)
-      .select(col("doc_id").as("eval_doc"), col("band"), col("bh"))
-    val eb = if (broadcastEval) broadcast(ebRaw) else ebRaw
+                   minEst: Double = 0.5): DataFrame = {
+    val eb = broadcast(bandBuckets(evalSig, numHashes, bands)
+      .select(col("doc_id").as("eval_doc"), col("band"), col("bh")))
     val cand = eb.join(bandBuckets(trainSig, numHashes, bands), Seq("band", "bh"))
       .select(col("eval_doc"), col("doc_id").as("train_doc"))
       .distinct()
@@ -1214,70 +1210,36 @@ object Dedup {
     * produce a pair and are cut in the same pass. |G| counts KEPT grams
     * (post-cut), keeping the ratio self-consistent with the pair counts.
     *
+    * Canonicalize-then-expand (the r13 signature-level posture applied to
+    * the gram fan-out): `members` is (doc_id, rep, r) where same rep ⟹
+    * IDENTICAL gram set — the caller derives it from a map-side text
+    * fingerprint (text-identical ⟹ token-sequence-identical ⟹
+    * gram-set-identical; note token-SET canonical groups are NOT sound
+    * here, word order moves grams), so canonicalization costs no pass over
+    * the gram table at all. Only class representatives enter the hash
+    * self-join — a replica flood contributes ONE gram profile instead of
+    * multiplying every hot gram's fan-out by its copy count — and pairs
+    * expand back through membership (output-bounded work only). Pair
+    * semantics are those of the direct self-join over every document
+    * (pinned in OpsSpec against that reference): df counts documents
+    * BEFORE the collapse; every member shares the rep's kept set, so
+    * sizes / shared / containment are class properties, and intra-class
+    * pairs provably carry (ng, 1.0) with no scoring at all. A corpus
+    * without duplicates passes singleton classes (rep = doc_id, r = 1).
+    *
     * Shape at scale: one df partial-agg per distinct gram, one hash
-    * equi-join of the df-bounded gram table with itself, one (a,b)
-    * partial-agg count, two bounded joins back to per-doc sizes. Every
-    * shuffle is hash-keyed; nothing is quadratic in documents. */
-  def gramContainment(grams: DataFrame, maxDf: Long = 64,
-                      threshold: Double = 0.6,
-                      chunks: Int = 4,
-                      members: Option[DataFrame] = None): DataFrame = {
+    * equi-join of the df-bounded representative gram table with itself,
+    * one (a,b) partial-agg count, two bounded joins back to per-rep sizes,
+    * then the membership expansion. Every shuffle is hash-keyed; nothing
+    * is quadratic in documents. */
+  def gramContainment(grams: DataFrame, members: DataFrame,
+                      maxDf: Long = 64, threshold: Double = 0.6,
+                      chunks: Int = 4): DataFrame = {
     // df ALWAYS counts documents over the full gram table — the
-    // boilerplate cut is a corpus property, independent of any collapse
+    // boilerplate cut is a corpus property, independent of the collapse
     val dfTab = grams.groupBy(col("gh")).agg(count(lit(1)).as("df"))
       .filter(col("df") >= 2 && col("df") <= maxDf)
-    members match {
-      case None => containmentDirect(grams, dfTab, threshold)
-      case Some(mem0) =>
-        containmentCanonical(grams, dfTab, mem0, threshold, chunks)
-    }
-  }
-
-  /** The direct (uncollapsed) containment tail — pairs straight off the
-    * kept-gram self-join. Sound at any scale on a replica-FREE corpus (the
-    * join fans out at most maxDf² per distinct gram — linear with a ≤ maxDf
-    * constant); a replica flood multiplies every hot gram's fan-out by its
-    * copy count, which is what the canonical tail removes. */
-  private def containmentDirect(grams: DataFrame, dfTab: DataFrame,
-                                threshold: Double): DataFrame = {
-    // kept feeds three branches (sizes + both sides of the self-join);
-    // without a barrier Catalyst recomputes the df aggregation and join
-    // per branch — same multi-pass shape bigramLogProb fixed.
-    val kept = materialize(grams.join(dfTab.select(col("gh")), "gh"))
-    val sizes = kept.groupBy(col("doc_id")).agg(count(lit(1)).as("ng"))
-    val shared = kept.as("x").join(kept.as("y"),
-        col("x.gh") === col("y.gh") && col("x.doc_id") < col("y.doc_id"))
-      .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("n_shared"))
-    val containment = round(col("n_shared").cast("double") /
-      least(col("ng_a"), col("ng_b")).cast("double"), 6)
-    shared
-      .join(sizes.select(col("doc_id").as("doc_a"), col("ng").as("ng_a")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("ng").as("ng_b")), "doc_b")
-      .filter(containment >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("n_shared"),
-        containment.as("containment"))
-      .orderBy(col("doc_a"), col("doc_b"))
-  }
-
-  /** Canonicalize-then-expand containment tail (the r13 signature-level
-    * posture applied to the gram fan-out): `members` is (doc_id, rep, r)
-    * where same rep ⟹ IDENTICAL gram set — the caller derives it from a
-    * map-side text fingerprint (text-identical ⟹ token-sequence-identical
-    * ⟹ gram-set-identical; note token-SET canonical groups are NOT sound
-    * here, word order moves grams), so canonicalization costs no pass
-    * over the gram table at all. Only class representatives enter the
-    * hash self-join — a replica flood contributes ONE gram profile
-    * instead of multiplying every hot gram's fan-out by its copy count —
-    * and pairs expand back through membership (output-bounded work only).
-    * Pair semantics are UNCHANGED: df counted documents BEFORE the
-    * collapse; every member shares the rep's kept set, so sizes / shared
-    * / containment are class properties, and intra-class pairs provably
-    * carry (ng, 1.0) with no scoring at all. */
-  private def containmentCanonical(grams: DataFrame, dfTab: DataFrame,
-                                   mem0: DataFrame, threshold: Double,
-                                   chunks: Int): DataFrame = {
-    val mem = materialize(mem0.select(col("doc_id"), col("rep"), col("r")))
+    val mem = materialize(members.select(col("doc_id"), col("rep"), col("r")))
     // ONLY representatives enter the kept table here — the collapse
     // happens BEFORE the df join and the checkpoint, so the barrier
     // materializes the class profiles, never the replica flood (grams is

@@ -3,30 +3,31 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Iterative graph computation over edge DataFrames — the capability class
-  * beyond the connected-components contraction in [[Dedup.duplicateClusters]]:
-  * fixed-point scoring (PageRank here) expressed as a bounded number of
-  * join + partial-aggregate rounds, never a driver-side loop over collected
-  * data.
+/** Graph census over a duplicate-pair graph in its canonical twin-class
+  * form — the capability class beyond the connected-components
+  * contraction in [[Dedup.duplicateClusters]]: fixed-point PageRank, the
+  * degree histogram and the per-node triangle census, each a bounded
+  * number of join + partial-aggregate rounds over the QUOTIENT graph
+  * (one node per exact-duplicate class), never a driver-side loop over
+  * collected data and never the member-level edge list, whose size grows
+  * r² per r-clone class.
   *
-  * Cross-engine determinism: scores are carried as INTEGER micro-mass
-  * (units of 1e-12 of total rank mass) and every per-iteration operation is
-  * integer arithmetic — floor division for the per-edge share, an exact
-  * integer sum, integer damping (×85 ÷ 100). There is no floating-point
-  * rounding anywhere, so there is no `round(double)` half-boundary for two
-  * engines to disagree on (double rounding at 10 dp over quantized inputs
-  * DOES land on .5 boundaries in practice — 13 of 3 600 nodes at sf0.1
-  * before this formulation). All operands stay positive, where Spark's
-  * `DIV` and DuckDB's `//` agree exactly; total mass 1e12 bounds every
-  * intermediate far below 2^63.
+  * Cross-engine determinism: PageRank scores are carried as INTEGER
+  * micro-mass (units of 1e-12 of total rank mass) and every per-iteration
+  * operation is integer arithmetic — floor division for the per-edge
+  * share, an exact integer sum, integer damping (×85 ÷ 100). There is no
+  * floating-point rounding anywhere, so there is no `round(double)`
+  * half-boundary for two engines to disagree on (double rounding at 10 dp
+  * over quantized inputs DOES land on .5 boundaries in practice — 13 of
+  * 3 600 nodes at sf0.1 before this formulation). All operands stay
+  * positive, where Spark's `DIV` and DuckDB's `//` agree exactly; total
+  * mass 1e12 bounds every intermediate far below 2^63.
   *
-  * INPUT PRECONDITION (all entry points): the pair list is SIMPLE — each
-  * unordered edge appears exactly once, in one orientation, no self
-  * loops. Duplicate or both-orientation rows inflate degrees in
-  * [[triangles]]/[[pageRank]] but are distinct-ed away in the quotient
-  * edge builds, so the two censuses would silently diverge on a
-  * non-simple list. Every in-repo producer (ngramJaccard's verified pair
-  * table, kNN edge lists) satisfies this by construction.
+  * INPUT PRECONDITION (all entry points): the quotient pair list is
+  * SIMPLE — each unordered class pair appears exactly once, in one
+  * orientation, no self loops — and each class's members are pairwise
+  * adjacent in the expanded graph and share one external neighbourhood
+  * (met by exact-dup token-set classes, the in-repo producer).
   */
 object Graph {
 
@@ -34,8 +35,8 @@ object Graph {
   val MassScale = 1000000000000L
 
   /** Fingerprints the staged quotient-graph layout (qfwd + participating
-    * membership as derived by [[trianglesFromTwinClasses]]/
-    * [[pageRankFromTwinClasses]] from the canonical pair factorization) —
+    * membership as derived by [[quotientFrames]] from the canonical pair
+    * factorization) —
     * the graft.queries convention: the tag lives next to the code it
     * fingerprints. Bump the `grquotient_vN` prefix with any change to
     * [[participating]] or the quotient edge derivation; the UPSTREAM
@@ -45,96 +46,18 @@ object Graph {
     * Verify/Bench's startup wipe. */
   val QuotientStageTag = s"grquotient_v1_${Dedup.PairStageTag}"
 
-  /** Fixed-point PageRank after a FIXED number of iterations over an
-    * undirected edge list `(src, dst)` (each undirected pair listed once;
-    * symmetrization happens here). On a duplicate-pair graph this ranks
-    * the hub documents of boilerplate neighborhoods — the natural cluster
-    * representatives. `pagerank` is the micro-mass rendered in [0, 1]
-    * (an exact double: micro < 2^53).
-    *
-    * Scale shape: each iteration is one edge ⋈ score equi-join plus one
-    * partial-aggregated rollup to |nodes| rows — cost 2·|E| join rows per
-    * iteration, no global structure, no driver loop state beyond the plan
-    * itself. The node count rides a one-row broadcast. A
-    * convergence-driven variant would wrap the same round in the
-    * duplicateClusters checkpoint discipline; fixed iterations keep the
-    * result oracle-expressible (unrolled CTEs).
-    */
-  def pageRank(pairs: DataFrame, srcCol: String = "doc_a",
-               dstCol: String = "doc_b", iters: Int = 3,
-               dampingPct: Int = 85): DataFrame = {
-    val fwd = pairs.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val edges = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val n = deg.agg(count(lit(1)).as("n_nodes"))
-    // teleport micro-mass per node per iteration (floor; leaked remainder
-    // is a deterministic part of the algorithm's definition)
-    val base = expr(s"($MassScale * ${100 - dampingPct} DIV 100) DIV n_nodes")
-    val init = deg.crossJoin(broadcast(n))
-      .select(col("src").as("id"), col("outdeg"), col("n_nodes"),
-        expr(s"$MassScale DIV n_nodes").as("m"))
-    val after = (1 to iters).foldLeft(init) { (cur, _) =>
-      val contrib = edges.join(cur, edges("src") === cur("id"))
-        .select(col("dst"), expr("m DIV outdeg").as("c"))
-      val summed = contrib.groupBy(col("dst")).agg(sum(col("c")).as("s"))
-      // every node has degree >= 1 here (it came from an edge), so the
-      // inner join back to the degree frame loses nobody
-      cur.join(summed, cur("id") === summed("dst"))
-        .select(col("id"), col("outdeg"), col("n_nodes"),
-          (base + expr(s"(s * $dampingPct) DIV 100")).as("m"))
-    }
-    after.select(col("id").as("doc_id"), col("outdeg").as("degree"),
-        col("m").as("pr_micro"),
-        (col("m").cast("double") / MassScale.toDouble).as("pagerank"))
-      .orderBy(col("pr_micro").desc, col("doc_id"))
-  }
-
-  /** Per-node triangle count + local clustering coefficient over an
-    * undirected edge list `(src, dst)` (each pair once) — the cohesion
-    * audit next to PageRank: a near-dup neighborhood that is also a
-    * near-CLIQUE (clustering ~1) is one boilerplate template, while a
-    * hub with low clustering stitches unrelated documents and deserves
-    * manual review before dedup collapses them.
-    *
-    * Algorithm: degree-ordered wedge join (Schank–Wagner / "compact
-    * forward"; the standard distributed formulation, cf. Cohen 2009
-    * "Graph twiddling in a MapReduce world"). Every edge is oriented from
-    * its lower-(degree, id) endpoint to the higher one, wedges are
-    * enumerated ONLY at the lowest-ordered corner, and the closing edge is
-    * probed in the same oriented table — each triangle is found exactly
-    * once, and the wedge count is bounded by O(E^1.5) REGARDLESS of skew
-    * (a degree-d hub generates no wedges beyond its oriented out-degree
-    * ≤ √E, where the naive per-node join would pay d²; at 100 TB the
-    * boilerplate hubs are exactly where d² explodes).
-    *
-    * Shape at scale: two self-equi-joins of the oriented edge table (both
-    * on its natural src key plus one probe on (src, dst)) and one rollup
-    * of triangle corners — no global structure, no iteration. lcc is
-    * reported in integer ppm: 2·tri·10⁶ DIV deg·(deg−1) (floor division
-    * agrees exactly across engines; zero for degree-1 nodes). */
-  def triangles(pairs: DataFrame, srcCol: String = "doc_a",
-                dstCol: String = "doc_b"): DataFrame = {
-    val fwd = pairs.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val edges = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("degree"))
-      .select(col("src").as("node"), col("degree"))
-    val corners = triangleTriples(fwd, deg)
-      .select(explode(array(col("a"), col("b"), col("c")))
-      .as("node")).groupBy(col("node")).agg(count(lit(1)).as("n_tri"))
-    deg.join(corners, Seq("node"), "left")
-      .select(col("node").as("doc_id"), col("degree"),
-        coalesce(col("n_tri"), lit(0L)).as("n_triangles"),
-        when(col("degree") > 1,
-          expr("(coalesce(n_tri, 0) * 2000000) DIV (degree * (degree - 1))"))
-          .otherwise(lit(0L)).as("lcc_ppm"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** The Schank–Wagner triple enumeration behind [[triangles]] (see its
-    * scaladoc): every triangle of the undirected pair list `fwd` appears
-    * EXACTLY once as an (a, b, c) row. `deg` is the symmetrized degree
-    * table — passed in so callers share one computation. */
-  private def triangleTriples(fwd: DataFrame, deg: DataFrame): DataFrame = {
+  /** Schank–Wagner triple enumeration ("compact forward"; the standard
+    * distributed formulation, cf. Cohen 2009 "Graph twiddling in a
+    * MapReduce world"): every edge is oriented from its lower-(degree, id)
+    * endpoint to the higher one, wedges are enumerated ONLY at the
+    * lowest-ordered corner, and the closing edge is probed in the same
+    * oriented table — every triangle of the undirected pair list `fwd`
+    * appears EXACTLY once as an (a, b, c) row, and the wedge count is
+    * bounded by O(E^1.5) regardless of skew (a degree-d hub generates no
+    * wedges beyond its oriented out-degree ≤ √E, where the naive per-node
+    * join would pay d²). `deg` is the symmetrized degree table — passed in
+    * so callers share one computation. */
+  private[graft] def triangleTriples(fwd: DataFrame, deg: DataFrame): DataFrame = {
     // orient by (degree, id): lower endpoint -> higher endpoint
     val dd = fwd
       .join(deg.select(col("node").as("sn"), col("degree").as("dsrc")),
@@ -164,98 +87,6 @@ object Graph {
       .select(col("a"), col("b"), col("c"))
   }
 
-  /** [[triangles]] with TRUE-TWIN COLLAPSE — bit-identical output, built
-    * for the graph a dedup pair table actually is at crawl scale. Exact
-    * duplicates (and boilerplate families) produce TWIN nodes: identical
-    * texts have identical similarity to every third document, so each
-    * duplicate group is a clique whose members share one external
-    * neighborhood. On such a graph the direct wedge census pays r² per
-    * r-clone group in every term — the factor-100 audit measured the pair
-    * graph's edges growing at output exponent 1.94 once exact-dup
-    * quadruples appeared, and the direct census exhausted 76 GB of shuffle
-    * spill. This is the canonicalize-then-expand genus applied to graphs:
-    *
-    *  1. CANONICALIZE — true-twin classes by exact CLOSED-neighborhood
-    *     key (sorted neighbor array + self, an exact array groupBy — no
-    *     lossy hashing): u, v land in one class iff they are adjacent and
-    *     share all other neighbors. Any graph is safe input: nodes that
-    *     merely look similar keep distinct keys and stay singletons, so
-    *     on a twin-free graph the quotient IS the graph.
-    *  2. CENSUS on the quotient (same Schank–Wagner triple enumeration),
-    *     weighted by class sizes.
-    *  3. EXPAND per member, in closed form. For v in class g (size r,
-    *     neighbor classes N(g) with sizes r_h):
-    *       degree(v)  = (r−1) + Σ r_h
-    *       tri(v)     = C(r−1,2)                  (both others are clones)
-    *                  + (r−1)·Σ r_h               (one clone, one neighbor)
-    *                  + Σ C(r_h,2)                (two in one neighbor class
-    *                                               — a class is a clique)
-    *                  + Σ_{g∈{a,b,c}} r_h·r_k     (two in distinct classes:
-    *                                               the weighted quotient
-    *                                               triangles through g)
-    *     Every term is exact integer arithmetic; equality with the direct
-    *     census is pinned in OpsSpec on twin-rich graphs.
-    *
-    * Scale shape: one extra groupBy over the adjacency (O(E) rows) buys a
-    * census on a quotient whose edge count shrinks r̄²-fold on duplicate-
-    * dense corpora — the wedge join's E^1.5 drops by r̄³. The twin key is
-    * the node's own adjacency list: no text, no external dedup needed. */
-  def trianglesQuotient(pairs: DataFrame, srcCol: String = "doc_a",
-                        dstCol: String = "doc_b",
-                        degreeCap: Int = 4096): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val fwd = pairs.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val edges = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-    // Hub hardening: a degree-d node's closed-neighborhood key is a
-    // (d+1)-element array row — a 10⁶-degree boilerplate hub would pin a
-    // 10⁶-element array in one aggregation buffer. Nodes above degreeCap
-    // skip the key build and stay singleton classes (always valid — the
-    // expansion formulas hold for ANY partition into clique-classes with
-    // uniform external adjacency, maximal or not; output is unchanged,
-    // only the amount of collapse). Keyspaces can't collide: every
-    // from-an-edge node has degree ≥ 1, so real keys have ≥ 2 elements.
-    val degT = edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("dg"))
-    val lowKeys = edges
-      .join(degT.filter(col("dg") <= degreeCap)
-        .select(col("node").as("src")), "src")
-      .groupBy(col("src").as("node"))
-      .agg(collect_list(col("dst")).as("nl"))
-      .select(col("node"),
-        array_sort(concat(col("nl"), array(col("node")))).as("nb"))
-      .select(col("node"),
-        min(col("node")).over(Window.partitionBy(col("nb"))).as("uid"),
-        count(lit(1)).over(Window.partitionBy(col("nb"))).as("r"))
-    val hubKeys = degT.filter(col("dg") > degreeCap)
-      .select(col("node"), col("node").as("uid"), lit(1L).as("r"))
-    // exact closed-neighborhood classes; materialized — members feeds the
-    // quotient-edge join (twice), the group table, and the final expand
-    val members = Dedup.materialize(lowKeys.unionByName(hubKeys))
-    val qfwd = Dedup.materialize(fwd
-      .join(members.select(col("node").as("src"), col("uid").as("ua")), "src")
-      .join(members.select(col("node").as("dst"), col("uid").as("ub")), "dst")
-      .filter(col("ua") =!= col("ub"))
-      .select(least(col("ua"), col("ub")).as("src"),
-        greatest(col("ua"), col("ub")).as("dst"))
-      .distinct())
-    twinCensusTail(qfwd, members)
-  }
-
-  /** [[triangles]] computed directly from a PRE-FACTORED twin-class
-    * representation — the form a canonicalized dedup pipeline already has
-    * in hand (graft.ops.Dedup.ngramJaccardCanonical): `qpairs` is the
-    * member-level graph's quotient pair list (doc_a, doc_b between
-    * distinct class representatives, each unordered class pair once) and
-    * `membership` is (doc_id, rep, r). Precondition (met by exact-dup
-    * token-set classes): each class's members are pairwise adjacent in
-    * the expanded graph and share one external neighborhood. Bit-identical
-    * to running [[triangles]] on the expanded member pair list, without
-    * ever building it. */
-  def trianglesFromTwinClasses(qpairs: DataFrame,
-                               membership: DataFrame): DataFrame = {
-    val (qfwd, members) = quotientFrames(qpairs, membership)
-    trianglesFromQuotient(qfwd, members)
-  }
-
   /** The (quotient edge list, participating membership) pair the three
     * twin-class consumers share — derived once from the canonical pair
     * factorization, then typically STAGED to parquet
@@ -271,30 +102,18 @@ object Graph {
     (qfwd, Dedup.materialize(participating(qfwd, membership)))
   }
 
-  /** [[triangles]] over a pre-derived (and typically pre-staged) quotient
-    * — see [[quotientFrames]] for the input contract. Both inputs must be
-    * materialization-backed (parquet/checkpoint): each is consumed by
-    * several joins. */
-  def trianglesFromQuotient(qfwd: DataFrame, members: DataFrame): DataFrame =
-    twinCensusTail(qfwd, members)
-
-  /** [[pageRank]] over the same pre-factored twin-class form as
-    * [[trianglesFromTwinClasses]] — bit-identical integer micro-mass per
-    * member, iterating over QUOTIENT edges only. Twins provably carry
-    * identical mass at every iteration (same init, same degree, same
-    * neighbor multiset), so one quotient row per class suffices: the
-    * member-level inbound sum Σ m_u DIV outdeg(u) factors into
-    * (r_g − 1)·c_g + Σ_{h∈N(g)} r_h·c_h with c = m DIV outdeg — every
-    * operation still integer, so no new rounding surface. */
-  def pageRankFromTwinClasses(qpairs: DataFrame, membership: DataFrame,
-                              iters: Int = 3,
-                              dampingPct: Int = 85): DataFrame = {
-    val (qfwd, members) = quotientFrames(qpairs, membership)
-    pageRankFromQuotient(qfwd, members, iters, dampingPct)
-  }
-
-  /** [[pageRank]] over a pre-derived quotient (the [[quotientFrames]]
-    * contract; both inputs materialization-backed). */
+  /** Fixed-point PageRank of the expanded member graph after a FIXED
+    * number of iterations, iterating over QUOTIENT edges only (the
+    * [[quotientFrames]] contract; both inputs materialization-backed).
+    * `pagerank` is the micro-mass rendered in [0, 1] (an exact double:
+    * micro < 2^53); on a duplicate-pair graph it ranks the hub documents
+    * of boilerplate neighbourhoods. Twins provably carry identical mass at
+    * every iteration (same init, same degree, same neighbour multiset), so
+    * one quotient row per class suffices: the member-level inbound sum
+    * Σ m_u DIV outdeg(u) factors into (r_g − 1)·c_g + Σ_{h∈N(g)} r_h·c_h
+    * with c = m DIV outdeg — every operation still integer, so no new
+    * rounding surface. Fixed iterations keep the result
+    * oracle-expressible (unrolled CTEs). */
   def pageRankFromQuotient(qfwd: DataFrame, members: DataFrame,
                            iters: Int = 3,
                            dampingPct: Int = 85): DataFrame = {
@@ -334,20 +153,12 @@ object Graph {
       .orderBy(col("pr_micro").desc, col("doc_id"))
   }
 
-  /** Degree histogram of the expanded member graph, in closed form from
-    * the twin-class factorization: every member of class g has degree
-    * (r_g − 1) + Σ_{h∈N(g)} r_h, so each class contributes r nodes at one
-    * degree — no member-level edge list, output bounded by |distinct
-    * degrees|. Matches the member-level groupBy census bit-for-bit. */
-  def degreeHistFromTwinClasses(qpairs: DataFrame,
-                                membership: DataFrame): DataFrame = {
-    val qfwd = qpairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    degreeHistFromQuotient(qfwd, participating(qfwd, membership))
-  }
-
-  /** Degree histogram over a pre-derived quotient (the [[quotientFrames]]
-    * contract; closed-form — no materialization requirement, each input
-    * is consumed once). */
+  /** Degree histogram of the expanded member graph over a pre-derived
+    * quotient (the [[quotientFrames]] contract; no materialization
+    * requirement, each input is consumed once). Closed form: every member
+    * of class g has degree (r_g − 1) + Σ_{h∈N(g)} r_h, so each class
+    * contributes r nodes at one degree — output bounded by |distinct
+    * degrees|. */
   def degreeHistFromQuotient(qfwd: DataFrame, members: DataFrame): DataFrame = {
     val groups = members.select(col("uid"), col("r")).distinct()
     val qedges = qfwd.union(qfwd.select(col("dst").as("src"), col("src").as("dst")))
@@ -383,11 +194,44 @@ object Graph {
         (col("r") - 1 + coalesce(col("s_nbr"), lit(0L))).as("outdeg"))
   }
 
-  /** Steps 2–3 of the twin-collapse census (see [[trianglesQuotient]]):
-    * weighted Schank–Wagner on the quotient `qfwd`, closed-form expansion
-    * per member row of `members` (node, uid, r). Both inputs must be
-    * materialization-backed — each is consumed by several joins. */
-  private def twinCensusTail(qfwd: DataFrame, members: DataFrame): DataFrame = {
+  /** Per-node triangle count + local clustering coefficient of the
+    * expanded member graph over a pre-derived (and typically pre-staged)
+    * quotient — the cohesion audit next to PageRank: a near-dup
+    * neighbourhood that is also a near-CLIQUE (clustering ~1) is one
+    * boilerplate template, while a hub with low clustering stitches
+    * unrelated documents. Both inputs must be materialization-backed
+    * (parquet/checkpoint): each is consumed by several joins.
+    *
+    * Exact duplicates produce TWIN nodes: each class is a clique whose
+    * members share one external neighbourhood, so a member-level wedge
+    * census pays r² per r-clone class in every term (the factor-100 audit
+    * measured the pair graph's edges growing at output exponent 1.94 once
+    * exact-dup quadruples appeared, and the member-level census exhausted
+    * 76 GB of shuffle spill). Instead:
+    *
+    *  1. CENSUS on the quotient `qfwd` ([[triangleTriples]]), weighted by
+    *     class sizes.
+    *  2. EXPAND per member row of `members` (node, uid, r), in closed form.
+    *     For v in class g (size r, neighbour classes N(g) with sizes r_h):
+    *       degree(v)  = (r−1) + Σ r_h
+    *       tri(v)     = C(r−1,2)                  (both others are clones)
+    *                  + (r−1)·Σ r_h               (one clone, one neighbour)
+    *                  + Σ C(r_h,2)                (two in one neighbour class
+    *                                               — a class is a clique)
+    *                  + Σ_{g∈{a,b,c}} r_h·r_k     (two in distinct classes:
+    *                                               the weighted quotient
+    *                                               triangles through g)
+    *     Every term is exact integer arithmetic. The formulas hold for ANY
+    *     partition into clique-classes with uniform external adjacency,
+    *     maximal or not (the all-singleton partition is the graph);
+    *     equality with the member-level census is pinned in OpsSpec on
+    *     twin-rich, twin-free and non-maximal partitions.
+    *
+    * lcc is reported in integer ppm: 2·tri·10⁶ DIV deg·(deg−1) (floor
+    * division agrees exactly across engines; zero for degree-1 nodes).
+    * The quotient's edge count shrinks r̄²-fold on duplicate-dense
+    * corpora, so the wedge join's E^1.5 drops by r̄³. */
+  def trianglesFromQuotient(qfwd: DataFrame, members: DataFrame): DataFrame = {
     val groups = members.select(col("uid"), col("r")).distinct()
     val qedges = qfwd.union(qfwd.select(col("dst").as("src"), col("src").as("dst")))
     val qdeg = qedges.groupBy(col("src")).agg(count(lit(1)).as("degree"))

@@ -347,26 +347,6 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
   }
 
-  /** Bigram language-model score — unigramLogProb's sharper sibling: the
-    * average −ln P(wᵢ | wᵢ₋₁) with P = c(wᵢ₋₁wᵢ)/c(wᵢ₋₁·), both counts from
-    * the corpus's own bigram table. Word-salad text that fools a unigram
-    * model (common words, impossible order) scores high here. Documents
-    * shorter than 2 tokens carry no bigram and are excluded.
-    *
-    * Same determinism contract as unigramLogProb: per-bigram −ln p cast to
-    * DECIMAL(30,10) before the order-independent sum, so partial
-    * aggregation cannot change the value and a 1-ulp ln divergence
-    * quantizes away.
-    *
-    * Shape at scale: one explode into (doc, w₁, w₂); bigram counts and
-    * their per-prefix rollup are partial-aggregated (shuffles bounded by
-    * the bigram vocabulary, not corpus tokens). The per-prefix totals are
-    * folded into the bigram table FIRST (a vocab-sized ⋈ vocab-sized join
-    * — the w₁-keyed stream there is bounded by the vocabulary, so a hot
-    * prefix like "the" skews a vocab row set, not the corpus), and the
-    * pair stream then meets ONE score table keyed on the full bigram —
-    * well-hashed keys, a single big-stream join instead of two, and no
-    * corpus-sized stream ever shuffles on the skewed prefix alone. */
   /** The collapsed per-document gram stream: one row per DISTINCT n-gram
     * per document with its in-doc count, computed INSIDE each row (sort
     * the gram array, read distinct values + run lengths off the sorted
@@ -411,8 +391,31 @@ object TextAnalysis {
         col("gc.c").cast("long").as("c"): _*)
   }
 
-  def bigramLogProb(docs: DataFrame,
-                    broadcastVocabMax: Long = 2000000L): DataFrame = {
+  /** Bigram vocabularies up to this many rows broadcast into the score
+    * join; larger ones take the shuffle join. */
+  private val BroadcastVocabMax = 2000000L
+
+  /** Bigram language-model score — unigramLogProb's sharper sibling: the
+    * average −ln P(wᵢ | wᵢ₋₁) with P = c(wᵢ₋₁wᵢ)/c(wᵢ₋₁·), both counts from
+    * the corpus's own bigram table. Word-salad text that fools a unigram
+    * model (common words, impossible order) scores high here. Documents
+    * shorter than 2 tokens carry no bigram and are excluded.
+    *
+    * Same determinism contract as unigramLogProb: per-bigram −ln p cast to
+    * DECIMAL(30,10) before the order-independent sum, so partial
+    * aggregation cannot change the value and a 1-ulp ln divergence
+    * quantizes away.
+    *
+    * Shape at scale: one explode into (doc, w₁, w₂); bigram counts and
+    * their per-prefix rollup are partial-aggregated (shuffles bounded by
+    * the bigram vocabulary, not corpus tokens). The per-prefix totals are
+    * folded into the bigram table FIRST (a vocab-sized ⋈ vocab-sized join
+    * — the w₁-keyed stream there is bounded by the vocabulary, so a hot
+    * prefix like "the" skews a vocab row set, not the corpus), and the
+    * pair stream then meets ONE score table keyed on the full bigram —
+    * well-hashed keys, a single big-stream join instead of two, and no
+    * corpus-sized stream ever shuffles on the skewed prefix alone. */
+  def bigramLogProb(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     // Tokens are space-free (normalizeText collapses all whitespace), so
     // the "w1 w2" gram splits back unambiguously.
@@ -439,11 +442,8 @@ object TextAnalysis {
     // stream is still doc-contiguous from the scan. Past the bound, fall
     // back to the hash-keyed shuffle join (the designed 100 TB path for a
     // vocabulary that outgrows executor memory).
-    // broadcastVocabMax = 0 means the caller has already decided on the
-    // shuffle path — skip the count() probe entirely so bg is not
-    // materialized twice on a cold run just to confirm a foregone choice.
     val scored =
-      if (broadcastVocabMax > 0 && bg.count() <= broadcastVocabMax)
+      if (bg.count() <= BroadcastVocabMax)
         dpc.join(broadcast(scores), Seq("w1", "w2"))
       else dpc.join(scores, Seq("w1", "w2"))
     // sum(c * nll-as-decimal) == adding the quantized nll c times: exact,

@@ -10,14 +10,17 @@ import org.apache.spark.sql.functions._
   * micro-batch). Two layouts:
   *
   *  - [[Coalesced]]: the rows coalesced to at most 4 files, one
-  *    micro-batch each. The count is capped: each micro-batch pays a
-  *    state commit (and, in complete mode, a full result rewrite), so 32
-  *    files would pay 8× the per-batch machinery for no coverage, and the
-  *    scan's native layout would make the batch count an accident of the
+  *    micro-batch each, replayed in part-index order (their mtimes are
+  *    set base, +2 s, … by part index, as the timed layout does; left at
+  *    write-task completion, the replay order changed from build to
+  *    build). The count is capped: each micro-batch pays a state commit
+  *    (and, in complete mode, a full result rewrite), so 32 files would
+  *    pay 8× the per-batch machinery for no coverage, and the scan's
+  *    native layout would make the batch count an accident of the
   *    upstream file count (~32 at the 30× corpus). Documents and
   *    embeddings scan rebalanced to the core count, so they stage as 4
-  *    files; the events table is one file with one row group, so it scans
-  *    as one partition and stages as one file.
+  *    files; the events table is one file with one row group, so its
+  *    stage splits the rows into the four quarters of their time range.
   *  - [[Timed]]: three single-file batches `b0`, `b1`, `b2` with strictly
   *    increasing modification times. Spark's file stream source orders
   *    files by (mtime, path), so it replays them in order and state
@@ -44,6 +47,12 @@ object StreamStage {
       val staged = tmpStage(dir, name)
       ensureStaged(staged, "_SUCCESS") {
         rows(s, dir).coalesce(CoalescedFiles).write.mode("overwrite").parquet(staged)
+        val parts = new java.io.File(staged).listFiles()
+          .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+        val base = System.currentTimeMillis() / 1000L
+        for ((f, i) <- parts.zipWithIndex)
+          java.nio.file.Files.setLastModifiedTime(f.toPath,
+            java.nio.file.attribute.FileTime.fromMillis((base + 2L * i) * 1000L))
       }
       staged
     }
@@ -118,8 +127,25 @@ object StreamStage {
   val docStream = new Coalesced("docstream")((s, dir) =>
     table(s, dir, "documents").select(col("doc_id"), col("text")))
 
-  /** Events for every complete-mode event-stream drain, µs timestamps. */
-  val eventStream = new Coalesced("evstream4")((s, dir) => events(s, dir))
+  /** Events for every complete-mode event-stream drain, µs timestamps, as
+    * four files holding the four equal quarters of the time range in
+    * order, so each drain merges state across micro-batches. The split
+    * costs one min/max job; a sampled range repartition would move its
+    * bounds from build to build. */
+  val eventStream = new Coalesced("evstream4")((s, dir) => {
+    val ev = events(s, dir)
+    val us = unix_micros(col("ts"))
+    val range = ev.agg(min(us), max(us)).first()
+    val (lo, hi) = (range.getLong(0), range.getLong(1))
+    val quarter = ((us - lit(lo)) * CoalescedFiles / lit(hi - lo + 1)).cast("int")
+    val keyed = ev.withColumn("__part", quarter)
+    val at = keyed.schema.fieldIndex("__part")
+    // partition i holds exactly the rows of quarter i: HashPartitioner
+    // sends an Int key k in [0, n) to partition k
+    val split = keyed.rdd.keyBy(_.getInt(at))
+      .partitionBy(new org.apache.spark.HashPartitioner(CoalescedFiles)).values
+    s.createDataFrame(split, keyed.schema).drop("__part")
+  })
 
   /** Embeddings for the streaming ANN and index ingests. */
   val embStream = new Coalesced("embstream")((s, dir) =>

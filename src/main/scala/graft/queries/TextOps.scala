@@ -882,8 +882,8 @@ object TextOps extends QueryPack {
         .select(col("doc_id"),
           min(col("doc_id")).over(wf).as("rep"),
           count(lit(1)).over(wf).as("r"))
-      Dedup.gramContainment(stagedGramHashes(s, dir), maxDf = 64,
-        threshold = 0.6, members = Some(members))
+      Dedup.gramContainment(stagedGramHashes(s, dir), members, maxDf = 64,
+        threshold = 0.6)
     }),
     // Temperature-scaled (α = 0.5) source mixture weights + integer quotas
     // against a 10k-document budget — the multilingual rebalancing rule.
@@ -1392,8 +1392,8 @@ object TextOps extends QueryPack {
 
     // Triangle census of the near-dup pair graph: per-node triangle count
     // + local clustering in ppm — the TWIN-COLLAPSE census (weighted
-    // quotient wedge join + closed-form expansion; bit-identical to
-    // Graph.triangles, pinned in OpsSpec). Since round 12 it takes the
+    // quotient wedge join + closed-form expansion; bit-identical to the
+    // member-level census, pinned in OpsSpec). Since round 12 it takes the
     // staged canonical factorization directly: the twin classes ARE the
     // exact-dup token-set groups the pair stage already computed, so
     // neither the member-level edge list nor a per-node adjacency key is

@@ -23,16 +23,6 @@ object bridge {
   def stopStateStores(): Unit =
     org.apache.spark.sql.execution.streaming.state.StateStore.stop()
 
-  /** Register a function builder into an EXISTING session's registry (the
-    * spark.sql.extensions config path only applies at session build time). */
-  def registerFunction(
-      spark: org.apache.spark.sql.SparkSession, name: String,
-      info: org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.registerFunction(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
-
   /** True for a file or directory name Spark's file index skips when it
     * lists a directory (`_`/`.` prefixes, in-flight copies; summary files
     * are kept). The filter is `private[spark]`. */

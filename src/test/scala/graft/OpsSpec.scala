@@ -305,15 +305,14 @@ class OpsSpec extends SparkSpec {
     assert(!cands.contains(4L))   // opposite orthant -> different bucket
   }
 
-  test("native expressions register into SQL via GraftExtensions") {
-    graft.GraftExtensions.register(spark)
-    val dot = rows(spark.sql(
-      "SELECT float_vec_dot(array(1.0F, 2.0F), array(3.0F, 4.0F)) AS d"))
-      .head.getDouble(0)
+  test("native expressions compute through the Column API") {
+    import graft.functions.VectorExpressions.{dotf, sortedIntersectCount}
+    val one = spark.range(1)
+    val dot = rows(one.select(dotf(typedLit(Seq(1.0f, 2.0f)),
+      typedLit(Seq(3.0f, 4.0f))))).head.getDouble(0)
     assert(dot == 11.0)
-    val ic = rows(spark.sql(
-      "SELECT sorted_intersect_count(array('a','b','c'), array('b','c','d')) AS c"))
-      .head.getInt(0)
+    val ic = rows(one.select(sortedIntersectCount(typedLit(Seq("a", "b", "c")),
+      typedLit(Seq("b", "c", "d"))))).head.getInt(0)
     assert(ic == 2)
   }
 
@@ -1021,8 +1020,11 @@ class OpsSpec extends SparkSpec {
     val page = quote + " " + (1 to 40).map(i => s"p$i").mkString(" ")
     val other = (1 to 30).map(i => s"z$i").mkString(" ")
     val d = Seq((1L, quote), (2L, page), (3L, other)).toDF("doc_id", "text")
+    def singletons(docs: org.apache.spark.sql.DataFrame) =
+      docs.select($"doc_id", $"doc_id".as("rep"), lit(1L).as("r"))
     val grams = Dedup.gramHashes(d, n = 4).distinct()
-    val got = rows(Dedup.gramContainment(grams, maxDf = 64, threshold = 0.6))
+    val got = rows(Dedup.gramContainment(grams, singletons(d), maxDf = 64,
+      threshold = 0.6))
     assert(got.length == 1)
     val r = got.head
     // every kept gram of the quote is inside the page: containment = 1
@@ -1035,7 +1037,50 @@ class OpsSpec extends SparkSpec {
     val d2 = Seq((1L, s"$boiler a b"), (2L, s"$boiler c d"), (3L, s"$boiler e f"))
       .toDF("doc_id", "text")
     val g2 = Dedup.gramHashes(d2, n = 4).distinct()
-    assert(rows(Dedup.gramContainment(g2, maxDf = 2, threshold = 0.1)).isEmpty)
+    assert(rows(Dedup.gramContainment(g2, singletons(d2), maxDf = 2,
+      threshold = 0.1)).isEmpty)
+  }
+
+  test("gramContainment over duplicate classes equals the direct self-join") {
+    def words(p: String, n: Int) = (1 to n).map(i => s"$p$i").mkString(" ")
+    val quote = words("q", 12)
+    val dup = words("a", 20)
+    val boiler = words("b", 8)
+    val d = Seq[(Long, String)](
+      (1L, quote), (4L, quote),                      // quote class, r = 2
+      (2L, quote + " " + words("p", 40)),            // page holding it
+      (10L, dup), (11L, dup), (12L, dup),            // exact dups, r = 4 ...
+      (13L, dup.toUpperCase.replace(" ", "   ")),    // ... after normalizing
+      // five copies: every gram has df 5 > maxDf, so the class keeps no
+      // gram and pairs with nobody, not even within itself
+      (20L, boiler), (21L, boiler), (22L, boiler), (23L, boiler), (24L, boiler),
+      // a cross pair sharing 3 of min(17, 30) kept grams: below threshold
+      (30L, words("c", 20)), (32L, words("c", 20)),
+      (31L, words("c", 6) + " " + words("d", 30)), (33L, words("d", 30)),
+      (40L, null)                                    // no text, no grams
+    ).toDF("doc_id", "text")
+    // the dd_containment membership: classes of identical normalized text
+    val fp = when($"text".isNull, concat(lit("solo:"), $"doc_id".cast("string")))
+      .otherwise(sha2(graft.etl.functions.normalizeText(lower($"text")), 256))
+    val wf = org.apache.spark.sql.expressions.Window.partitionBy($"fp")
+    val members = d.select($"doc_id", fp.as("fp"))
+      .select($"doc_id", min($"doc_id").over(wf).as("rep"),
+        count(lit(1)).over(wf).as("r"))
+    assert(rows(members.filter($"r" >= 2).groupBy($"rep").count()).length == 4)
+    val grams = Dedup.gramHashes(d, n = 4).distinct()
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      rows(df).map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
+        r.getAs[Long]("n_shared"), r.getAs[Double]("containment")))
+    val got = pairs(Dedup.gramContainment(grams, members, maxDf = 4,
+      threshold = 0.6))
+    assert(got == pairs(ContainmentReference.direct(grams, maxDf = 4,
+      threshold = 0.6)))
+    val ids = got.map(p => (p._1, p._2)).toSet
+    assert(Set((1L, 2L), (1L, 4L), (2L, 4L), (10L, 13L), (30L, 32L), (31L, 33L))
+      .subsetOf(ids), s"missing pairs: $got")
+    assert(!got.exists(p => p._1 >= 20L && p._1 <= 24L), "cut class paired")
+    assert(!ids.contains((30L, 31L)) && !ids.contains((31L, 32L)),
+      "below-threshold pair kept")
   }
 
   test("backwardWithin: fresh match carried, stale match nulled, staleness exact") {
@@ -1456,7 +1501,7 @@ class OpsSpec extends SparkSpec {
 
   test("pageRank: host-recomputed integer fixed point on a path graph") {
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b")
-    val got = rows(graft.ops.Graph.pageRank(pairs))
+    val got = rows(GraphReference.pageRank(pairs))
       .map(r => r.getLong(0) -> (r.getAs[Long]("degree"),
         r.getAs[Long]("pr_micro"), r.getAs[Double]("pagerank"))).toMap
     // replicate the integer arithmetic exactly: micro-mass, floor
@@ -1525,7 +1570,7 @@ class OpsSpec extends SparkSpec {
     "lcc in ppm floors") {
     val pairs = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L))
       .toDF("doc_a", "doc_b")
-    val got = rows(graft.ops.Graph.triangles(pairs))
+    val got = rows(GraphReference.triangles(pairs))
       .map(r => r.getLong(0) -> (r.getAs[Long]("degree"),
         r.getAs[Long]("n_triangles"), r.getAs[Long]("lcc_ppm"))).toMap
     assert(got(1L) == ((2L, 1L, 1000000L)))
@@ -1536,56 +1581,78 @@ class OpsSpec extends SparkSpec {
     // must not double-count or drop wedges)
     val k4 = Seq((10L, 11L), (10L, 12L), (10L, 13L), (11L, 12L),
       (11L, 13L), (12L, 13L)).toDF("doc_a", "doc_b")
-    val g4 = rows(graft.ops.Graph.triangles(k4))
+    val g4 = rows(GraphReference.triangles(k4))
       .map(r => r.getLong(0) -> (r.getAs[Long]("degree"),
         r.getAs[Long]("n_triangles"), r.getAs[Long]("lcc_ppm"))).toMap
     for (v <- Seq(10L, 11L, 12L, 13L))
       assert(g4(v) == ((3L, 3L, 1000000L)), s"node $v")
   }
 
-  test("trianglesQuotient: bit-identical to the direct census on twin-rich " +
-    "and twin-free graphs — every expansion term exercised") {
+  test("trianglesFromQuotient equals the member-level census") {
+    import GraphReference.quotientOf
     def table(df: org.apache.spark.sql.DataFrame) =
       rows(df).map(r => (r.getLong(0), r.getAs[Long]("degree"),
         r.getAs[Long]("n_triangles"), r.getAs[Long]("lcc_ppm")))
+    def df(es: Seq[(Long, Long)]) = es.toDF("doc_a", "doc_b")
+    // the twin-class chain every judged graph row runs, fed by hand
+    def viaQuotient(q: (org.apache.spark.sql.DataFrame,
+                        org.apache.spark.sql.DataFrame)) = {
+      val (qfwd, members) = graft.ops.Graph.quotientFrames(q._1, q._2)
+      table(graft.ops.Graph.trianglesFromQuotient(qfwd, members))
+    }
     // twin-rich: clone triple {1,2,3} (clique, shared externals), clone
     // pair {4,5} (clique) completely joined to the triple, singleton 6 on
     // 4 AND 5 (so 6 is NOT a twin of the triple: different neighborhood),
     // pendant 7 on 6, plus an untouched far triangle {20,21,22}. Exercises
     // C(r-1,2), (r-1)·S, C2 over neighbor classes, weighted quotient
-    // triangles, and the singleton fall-through at once.
+    // triangles, and the singleton fall-through at once. Node 99 is on no
+    // edge: its membership row must be dropped.
     val twinRich = Seq(
       (1L, 2L), (1L, 3L), (2L, 3L),
       (4L, 5L),
       (1L, 4L), (1L, 5L), (2L, 4L), (2L, 5L), (3L, 4L), (3L, 5L),
       (4L, 6L), (5L, 6L),
       (6L, 7L),
-      (20L, 21L), (20L, 22L), (21L, 22L)).toDF("doc_a", "doc_b")
-    assert(table(graft.ops.Graph.trianglesQuotient(twinRich)) ==
-      table(graft.ops.Graph.triangles(twinRich)))
-    // twin-free control: quotient == graph, both paths identical
+      (20L, 21L), (20L, 22L), (21L, 22L))
+    val maximal = Map(2L -> 1L, 3L -> 1L, 5L -> 4L, 21L -> 20L, 22L -> 20L)
+    assert(GraphReference.twinClasses(twinRich).filter { case (v, r) => v != r }
+      == maximal)
+    val direct = table(GraphReference.triangles(df(twinRich)))
+    assert(viaQuotient(quotientOf(spark, twinRich, maximal, extra = Seq(99L)))
+      == direct)
+    // non-maximal partitions: every node a singleton (quotient == graph),
+    // and only the far triangle collapsed — the expansion formulas must
+    // hold for any partition into clique-classes, not just the maximal one
+    assert(viaQuotient(quotientOf(spark, twinRich, Map.empty)) == direct)
+    assert(viaQuotient(quotientOf(spark, twinRich,
+      Map(21L -> 20L, 22L -> 20L))) == direct)
+    // triangle + pendant: only {1, 2} are twins (3 also sees 4); under
+    // the all-singleton partition the quotient is the graph itself
     val twinFree = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L))
-      .toDF("doc_a", "doc_b")
-    assert(table(graft.ops.Graph.trianglesQuotient(twinFree)) ==
-      table(graft.ops.Graph.triangles(twinFree)))
+    assert(GraphReference.twinClasses(twinFree).filter { case (v, r) => v != r }
+      == Map(2L -> 1L))
+    val twinFreeDirect = table(GraphReference.triangles(df(twinFree)))
+    assert(viaQuotient(quotientOf(spark, twinFree, Map.empty)) == twinFreeDirect)
+    assert(viaQuotient(quotientOf(spark, twinFree, Map(2L -> 1L))) ==
+      twinFreeDirect)
     // a clone PAIR with no external neighbors (isolated K2) and an
-    // isolated K3 of mutual twins: the pure clique terms
+    // isolated K3 of mutual twins: the pure clique terms, with no
+    // quotient edge at all
     val cliques = Seq((30L, 31L), (40L, 41L), (40L, 42L), (41L, 42L))
-      .toDF("doc_a", "doc_b")
-    assert(table(graft.ops.Graph.trianglesQuotient(cliques)) ==
-      table(graft.ops.Graph.triangles(cliques)))
-    // the real judged input at sf0.001: the staged near-dup pair graph
-    val staged = graft.queries.TextOps.queries("dd_ngram_jaccard")(
-      spark, "/root/testdata/sf0.001").select($"doc_a", $"doc_b")
-    assert(table(graft.ops.Graph.trianglesQuotient(staged)) ==
-      table(graft.ops.Graph.triangles(staged)))
-    // hub hardening: degreeCap=1 forces EVERY node through the singleton
-    // path (quotient == graph), degreeCap=2 a mixed partition — the
-    // expansion formulas must hold for any partition, not just maximal
-    assert(table(graft.ops.Graph.trianglesQuotient(twinRich, degreeCap = 1)) ==
-      table(graft.ops.Graph.triangles(twinRich)))
-    assert(table(graft.ops.Graph.trianglesQuotient(twinRich, degreeCap = 2)) ==
-      table(graft.ops.Graph.triangles(twinRich)))
+    val cliqueClasses = Map(31L -> 30L, 41L -> 40L, 42L -> 40L)
+    assert(GraphReference.twinClasses(cliques).filter { case (v, r) => v != r }
+      == cliqueClasses)
+    assert(viaQuotient(quotientOf(spark, cliques, cliqueClasses)) ==
+      table(GraphReference.triangles(df(cliques))))
+    // the real judged input at sf0.001: the near-dup pair graph, under
+    // its maximal twin partition and under the all-singleton one
+    val staged = rows(graft.queries.TextOps.queries("dd_ngram_jaccard")(
+      spark, "/root/testdata/sf0.001").select($"doc_a", $"doc_b"))
+      .map(r => (r.getLong(0), r.getLong(1)))
+    val stagedDirect = table(GraphReference.triangles(df(staged)))
+    assert(viaQuotient(quotientOf(spark, staged,
+      GraphReference.twinClasses(staged))) == stagedDirect)
+    assert(viaQuotient(quotientOf(spark, staged, Map.empty)) == stagedDirect)
   }
 
   // ---- canonicalize-then-expand pair factorization (round 12) ----
@@ -1654,8 +1721,9 @@ class OpsSpec extends SparkSpec {
     def pr(df: org.apache.spark.sql.DataFrame) =
       rows(df).map(r => (r.getLong(0), r.getAs[Long]("degree"),
         r.getAs[Long]("pr_micro"), r.getAs[Double]("pagerank")))
-    assert(pr(graft.ops.Graph.pageRankFromTwinClasses(canon, members)) ==
-      pr(graft.ops.Graph.pageRank(expanded)))
+    val (qfwd, qmembers) = graft.ops.Graph.quotientFrames(canon, members)
+    assert(pr(graft.ops.Graph.pageRankFromQuotient(qfwd, qmembers)) ==
+      pr(GraphReference.pageRank(expanded)))
     // degree histogram, closed form vs member census
     val memberHist = {
       val fwd = expanded.select($"doc_a".as("src"), $"doc_b".as("dst"))
@@ -1666,14 +1734,14 @@ class OpsSpec extends SparkSpec {
     }
     def hist(df: org.apache.spark.sql.DataFrame) =
       rows(df).map(r => (r.getLong(0), r.getLong(1)))
-    assert(hist(graft.ops.Graph.degreeHistFromTwinClasses(canon, members)) ==
+    assert(hist(graft.ops.Graph.degreeHistFromQuotient(qfwd, qmembers)) ==
       hist(memberHist))
     // triangle census from the pre-factored classes vs the direct census
     def tri(df: org.apache.spark.sql.DataFrame) =
       rows(df).map(r => (r.getLong(0), r.getAs[Long]("degree"),
         r.getAs[Long]("n_triangles"), r.getAs[Long]("lcc_ppm")))
-    assert(tri(graft.ops.Graph.trianglesFromTwinClasses(canon, members)) ==
-      tri(graft.ops.Graph.triangles(expanded)))
+    assert(tri(graft.ops.Graph.trianglesFromQuotient(qfwd, qmembers)) ==
+      tri(GraphReference.triangles(expanded)))
   }
 
   test("phraseSearch: overlapping matches counted, mixed phrase lengths, " +

@@ -200,10 +200,8 @@ class StreamingSpec extends SparkSpec {
         val what = s"$sf ${stage.name}"
         stage match {
           case c: StreamStage.Coalesced =>
-            val want = math.min(StreamStage.CoalescedFiles,
-              c.rows(spark, dir).rdd.getNumPartitions)
-            assert(dataFiles(staged).size == want,
-              s"$what: ${dataFiles(staged)} (want $want files)")
+            assert(dataFiles(staged).size == StreamStage.CoalescedFiles,
+              s"$what: ${dataFiles(staged)} (want 4 files)")
             assert(multiset(spark.read.parquet(staged)) ==
               multiset(c.rows(spark, dir)), s"$what: rows differ")
           case t: StreamStage.Timed =>
@@ -231,6 +229,41 @@ class StreamingSpec extends SparkSpec {
         assert(sparkJobs { stage(spark, dir); () } == 0,
           s"$what: reopening a built stage ran Spark jobs")
       }
+    }
+  }
+
+  test("coalesced stages replay their parts in part-index order on every " +
+    "build") {
+    import graft.queries.StreamStage
+    import java.nio.file.{Files, Paths}
+    val source = Map("docstream" -> "documents", "evstream4" -> "events",
+      "embstream" -> "embeddings")
+    val coalesced = StreamStage.all.collect { case c: StreamStage.Coalesced => c }
+    assert(coalesced.map(_.name).toSet == source.keySet)
+    // the file stream source's replay order: (mtime, path)
+    def replay(staged: String): Seq[(String, Long)] =
+      new java.io.File(staged).listFiles().toSeq
+        .filter(_.getName.endsWith(".parquet"))
+        .map(f => (f.getName, Files.getLastModifiedTime(f.toPath).toMillis))
+        .sortBy { case (n, m) => (m, n) }
+    def batches(staged: String): Seq[Set[Row]] = replay(staged).map { case (n, _) =>
+      spark.read.parquet(s"$staged/$n").collect().toSet }
+    for (stage <- coalesced) withTableCopy("sf0.01", source(stage.name)) { dir =>
+      val builds = (1 to 2).map { _ =>
+        val staged = stage(spark, dir)
+        val order = replay(staged)
+        val mtimes = order.map(_._2)
+        assert(order.map(_._1) == order.map(_._1).sorted,
+          s"${stage.name}: replay order is not the part-index order: $order")
+        assert(mtimes.zip(mtimes.tail).forall { case (a, b) => a < b },
+          s"${stage.name}: mtimes not strictly increasing: $order")
+        val got = batches(staged)
+        graft.queries.wipeStageDir(spark, staged)
+        assert(!Files.exists(Paths.get(staged)))
+        got
+      }
+      assert(builds(0) == builds(1),
+        s"${stage.name}: two builds replay different batches")
     }
   }
 
