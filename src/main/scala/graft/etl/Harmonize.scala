@@ -22,9 +22,7 @@ object Harmonize {
       coerce: Column => Column = identity,    // applied when a source column is found
       default: Column = lit(null))            // used when none present
 
-  case class Spec(fields: Seq[Field]) {
-    def outCols: Seq[String] = fields.map(_.out)
-  }
+  case class Spec(fields: Seq[Field])
 
   /** Apply a spec: for each field pick the first present candidate (or the
     * output name itself), coerce it, otherwise default — then project to the

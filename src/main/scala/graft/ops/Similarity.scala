@@ -108,6 +108,28 @@ object Similarity {
           .as("sim"))
   }
 
+  /** Per-query recall of an approximate ranking against the exact one,
+    * both given as (q_id, vec_id) rows: for every query of `exact`, how
+    * many of its exact neighbors `approx` returned (`n_hits`, 0 when none)
+    * and that count over the length of its exact list (`recall`, 6 dp).
+    * This is the number an ANN service has to measure per query rather
+    * than assume (Continuously Adaptive Similarity Search, SIGMOD 2020).
+    * A non-empty `tag` names the columns n_hits_<tag> and recall_<tag>,
+    * so several approximations join side by side on q_id. */
+  def recall(exact: DataFrame, approx: DataFrame, tag: String): DataFrame = {
+    val sfx = if (tag.isEmpty) "" else s"_$tag"
+    val truth = exact.select(col("q_id"), col("vec_id"))
+    val hits = truth.join(approx.select(col("q_id"), col("vec_id")),
+        Seq("q_id", "vec_id"))
+      .groupBy(col("q_id")).agg(count(lit(1)).as("n_hits"))
+    truth.groupBy(col("q_id")).agg(count(lit(1)).as("k"))
+      .join(hits, Seq("q_id"), "left")
+      .select(col("q_id"),
+        coalesce(col("n_hits"), lit(0L)).as(s"n_hits$sfx"),
+        round(coalesce(col("n_hits"), lit(0L)).cast("double") / col("k"), 6)
+          .as(s"recall$sfx"))
+  }
+
   /** Maximum-inner-product top-k (MIPS) — retrieval where score = q·x,
     * not cosine (the recommendation / last-layer-logit shape: vector
     * magnitude IS signal). The MIPS→NN reduction (Shrivastava & Li,
@@ -532,52 +554,38 @@ object Similarity {
     kmeansAssign(corpus,
       math.max(1L, math.ceil(corpus.count().toDouble / k).toLong).toInt, iters)
 
-  /** Product-quantization ADC top-k (Jégou et al. 2011): split each d-dim
-    * vector into `subspaces` contiguous sub-vectors, quantize every
-    * sub-vector to its nearest codebook centroid (deterministic IVF-style
-    * seeding: every ⌈n/codebookK⌉-th vector's sub-slices ARE the
-    * codebook), pack the codes into one long per vector, and answer
-    * queries by asymmetric distance computation — per query, one
-    * (subspaces × S)-entry lookup table of exact sub-dot-products, so each
-    * corpus candidate costs `subspaces` array lookups instead of a d-dim
-    * dot. Approximate cosine = ADC dot / (‖q‖ · reconstructed ‖v‖).
-    *
-    * WHY at 100 TB: the exhaustive scan touches 8 BYTES of code per
-    * vector instead of d·4 bytes of floats — PQ's point is making the
-    * candidate scan memory-bound-cheap (a 32× read reduction at d=64),
-    * and the codes table is small enough to cache where the raw
-    * embeddings are not. Composes with the IVF cell route (probe cells,
-    * then ADC within) when even the code scan must be sublinear;
-    * recall is audited by sim_pq_recall against the exact ranking.
-    *
-    * Determinism contract: encoding argmin packs
-    * (round((cn² − 2·dot)·10⁶) + 10¹²)·256 + code into one long (the
-    * vector's own ‖·‖² is constant within the argmin and dropped; the
-    * 10¹² bias keeps the key positive so `% 256` extracts the code
-    * identically in both engines); ADC folds the `subspaces` LUT terms in
-    * ascending-m order (plain sequential double adds, the dotf posture);
-    * the final cosine is 6-dp rounded through rz. */
-  def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-             subspaces: Int = 8, codebookK: Int = 16): DataFrame = {
-    val ix = pqIvfIndex(corpus, subspaces, codebookK)
-    pqTopKFrom(ix.codebook, ix.codes, queries, k, subspaces)
+  /** A product-quantization index (Jégou et al. 2011): each d-dim vector
+    * split into contiguous sub-vectors, each sub-vector quantized to its
+    * nearest codeword, the codes packed into one long per vector.
+    *  - `codebook` (m, code, c_sub, cn2): subspaces × S rows; the
+    *    subspace count, code count and sub-dimension are read off it
+    *    (codebookMeta), never passed alongside it;
+    *  - `codes` (vec_id, cp): the packed code of every corpus vector.
+    * The frames are opened on first use: a staged index read back from
+    * parquet pays the footer read only for the files a query touches. */
+  final class Pq(codebookOf: => DataFrame, codesOf: => DataFrame) {
+    lazy val codebook: DataFrame = codebookOf
+    lazy val codes: DataFrame = codesOf
+  }
+  object Pq {
+    def apply(codebook: => DataFrame, codes: => DataFrame): Pq =
+      new Pq(codebook, codes)
   }
 
-  /** A PQ + IVF index as plain frames, so the train-once/apply-many
-    * contract (the stagedBpe convention) holds: a pipeline trains the
-    * quantizers and encodes the corpus ONCE, stages the frames to parquet,
-    * and every top-k / recall / IVF-PQ query reads the staged index.
-    *  - `codebook` (m, code, c_sub, cn2): subspaces × S rows;
-    *  - `cent` (c_id, c_emb, c_nrm): the ≈ √n IVF centroids;
-    *  - `encoded` (vec_id, c_id, cp): the IVF route and the packed PQ
-    *    code of every corpus vector, computed together in one map-only
-    *    pass.
-    * `codes` is the PQ half alone: the route column prunes out of its
-    * plan, so PQ-only consumers never pay it. */
-  final case class PqIvfIndex(codebook: DataFrame, cent: DataFrame,
-                              encoded: DataFrame) {
-    def codes: DataFrame = encoded.select(col("vec_id"), col("cp"))
-    def cells: DataFrame = encoded.select(col("vec_id"), col("c_id"))
+  /** A PQ index behind an IVF cell route — the index every IVF-PQ probe
+    * reads. Opened lazily like [[Pq]].
+    *  - `pq`: the codebook and codes (raw, residual or refined);
+    *  - `cells` (vec_id, c_id): the IVF cell of every corpus vector;
+    *  - `cent` (c_id, c_emb, c_nrm): the ≈ √n IVF centroids. */
+  final class PqIvf(val pq: Pq, cellsOf: => DataFrame, centOf: => DataFrame) {
+    lazy val cells: DataFrame = cellsOf
+    lazy val cent: DataFrame = centOf
+    def codebook: DataFrame = pq.codebook
+    def codes: DataFrame = pq.codes
+  }
+  object PqIvf {
+    def apply(pq: Pq, cells: => DataFrame, cent: => DataFrame): PqIvf =
+      new PqIvf(pq, cells, cent)
   }
 
   /** Train the PQ codebook and the IVF centroids from ONE read of the
@@ -594,13 +602,25 @@ object Similarity {
     *     every PQ and IVF fold in this file (codes densely indexed in
     *     vec_id order — the IVF seeding convention); no job;
     *  4. the route (ivf_route_id) and the encode (pq_packed_cp) fold over
-    *     both quantizers as compact literals: `encoded` is one map-only
-    *     pass with no join, broadcast or exchange.
+    *     both quantizers as compact literals: one map-only pass with no
+    *     join, broadcast or exchange. `codes` and `cells` are its two
+    *     halves; each prunes the other's column out of its plan, so a
+    *     PQ-only consumer never pays the route.
     * A corpus that arrives through `queries.table` pays its rebalance
-    * shuffle once, in the checkpoint. Checkpoint `encoded` too to write
-    * both of its halves from one pass (stagedPq). */
+    * shuffle once, in the checkpoint. */
   def pqIvfIndex(corpus: DataFrame, subspaces: Int = 8,
-                 codebookK: Int = 16): PqIvfIndex = {
+                 codebookK: Int = 16): PqIvf = {
+    val (codebook, cent, encoded) = pqIvfEncoded(corpus, subspaces, codebookK)
+    PqIvf(Pq(codebook, encoded.select(col("vec_id"), col("cp"))),
+      encoded.select(col("vec_id"), col("c_id")), cent)
+  }
+
+  /** [[pqIvfIndex]] with both halves in one (vec_id, c_id, cp) frame:
+    * (codebook, cent, encoded). Checkpoint `encoded` to write codes and
+    * cells from one pass (stagedPq). */
+  private[graft] def pqIvfEncoded(corpus: DataFrame, subspaces: Int,
+                                  codebookK: Int)
+      : (DataFrame, DataFrame, DataFrame) = {
     import graft.functions.VectorExpressions.{arrayLiteral, ivfRouteId,
       pqPackedCp}
     val spark = corpus.sparkSession
@@ -659,26 +679,38 @@ object Similarity {
         s"pqIvfIndex: no centroids at spacing $centroidEvery " +
           "(no vec_id % spacing == 0 in the corpus)")).cast("long")
       else ivfRouteId(col("embedding"), arrayLiteral(cents))
-    PqIvfIndex(codebook, cent, projected.select(col("vec_id"),
+    (codebook, cent, projected.select(col("vec_id"),
       route.as("c_id"),
       pqPackedCp(col("embedding"), codebookMeta(codebook).cbl, subspaces)
         .as("cp")))
   }
 
-  /** ADC top-k over a prebuilt (possibly parquet-read) PQ index. Codebook
-    * size, sub-dimension and the reconstructed-norm table come off the
-    * codebook itself (codebookMeta — one bounded collect, never the
-    * corpus). */
-  def pqTopKFrom(codebook: DataFrame, codes: DataFrame, queries: DataFrame,
-                 k: Int, subspaces: Int = 8): DataFrame = {
-    val meta = codebookMeta(codebook)
+  /** Product-quantization ADC top-k over a built or staged index: per
+    * query, one (subspaces × S)-entry lookup table of exact
+    * sub-dot-products, so each corpus candidate costs `subspaces` array
+    * lookups instead of a d-dim dot. Approximate cosine = ADC dot /
+    * (‖q‖ · reconstructed ‖v‖). The 8 bytes of code per vector, instead
+    * of d·4 bytes of floats, make the exhaustive scan memory-bound-cheap;
+    * recall is audited by sim_pq_recall against the exact ranking.
+    *
+    * Determinism contract: encoding argmin packs
+    * (round((cn² − 2·dot)·10⁶) + 10¹²)·256 + code into one long (the
+    * vector's own ‖·‖² is constant within the argmin and dropped; the
+    * 10¹² bias keeps the key positive so `% 256` extracts the code
+    * identically in both engines); ADC folds the subspaces' LUT terms in
+    * ascending-m order (plain sequential double adds, the dotf posture);
+    * the final cosine is 6-dp rounded through rz. Geometry and the
+    * reconstructed-norm table come off the codebook (codebookMeta — one
+    * bounded collect, never the corpus). */
+  def pqTopKFrom(index: Pq, queries: DataFrame, k: Int): DataFrame = {
+    val meta = codebookMeta(index.codebook)
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("sim").desc, col("vec_id"))
-    codes.crossJoin(pqLut(queries, meta))
+    index.codes.crossJoin(pqLut(queries, meta))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
-        rz(pqFold(col("lut"), meta.s, subspaces) / col("q_nrm")
-          / sqrt(pqFold(meta.rn2, meta.s, subspaces)), 6).as("sim"))
+        rz(pqFold(col("lut"), meta) / col("q_nrm")
+          / sqrt(pqFold(meta.rn2, meta)), 6).as("sim"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .orderBy(col("q_id"), col("rank"))
@@ -732,21 +764,6 @@ object Similarity {
       slice(v, (e.getField("m") * meta.subDim + 1).cast("int"),
         lit(meta.subDim)), e.getField("c_sub")), e))
 
-  /** IVF-PQ (Jégou et al. 2011 §IV): the IVF cell route with PQ codes as
-    * the per-cell payload — the answer to the memory bound of carrying
-    * full-precision embeddings through the IVF index at 100 TB. The index
-    * table is (vec_id, c_id, cp): 16 bytes of key + 8 bytes of code per
-    * vector, no embedding ride-along; queries probe their nprobe closest
-    * cells and score candidates by the same LUT fold as pqTopK. Probe
-    * cost: |cell| × (subspaces lookups), reading codes only. */
-  def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-                nprobe: Int = 2, subspaces: Int = 8,
-                codebookK: Int = 16): DataFrame = {
-    val ix = pqIvfIndex(corpus, subspaces, codebookK)
-    ivfPqTopKFrom(ix.codebook, ix.codes, ix.cells, ix.cent, queries, k,
-      nprobe, subspaces)
-  }
-
   /** Scored ADC candidates with the probed cell's rank retained —
     * the shared front half of every ivfPqTopKFrom-shaped probe and of the
     * nprobe/shortlist frontier audits (r16 optimization: the audits used
@@ -755,16 +772,14 @@ object Similarity {
     * ivfPqTopKFrom(k, nprobe=np) ≡ this at maxProbe ≥ np, filtered to
     * c_rank ≤ np, ranked by (sim desc, vec_id), cut at k — one ADC scan
     * serves every (np ≤ maxProbe, k) pair). */
-  def ivfPqAdcCandidates(codebook: DataFrame, codes: DataFrame,
-                         cells: DataFrame, centTable: DataFrame,
-                         queries: DataFrame, maxProbe: Int,
-                         subspaces: Int = 8): DataFrame = {
-    val meta = codebookMeta(codebook)
+  def ivfPqAdcCandidates(index: PqIvf, queries: DataFrame,
+                         maxProbe: Int): DataFrame = {
+    val meta = codebookMeta(index.codebook)
     // The 100 TB point: the standing index carries cell id + packed code,
     // never the embedding — only (vec_id, c_id) meets the 2-long codes
     // table.
-    val index = cells.join(codes, Seq("vec_id"))
-    val cent = broadcast(centTable)
+    val cellCodes = index.cells.join(index.codes, Seq("vec_id"))
+    val cent = broadcast(index.cent)
     val wp = Window.partitionBy(col("q_id"))
       .orderBy(col("c_sim").desc, col("c_id"))
     val queryProbes = scoredAgainst(cent)(
@@ -774,23 +789,26 @@ object Similarity {
       .withColumn("c_rank", row_number().over(wp))
       .filter(col("c_rank") <= maxProbe)
       .select(col("q_id"), col("c_id"), col("c_rank"))
-    queryProbes.join(index, Seq("c_id"))
+    queryProbes.join(cellCodes, Seq("c_id"))
       .filter(col("vec_id") =!= col("q_id"))
       .join(pqLut(queries, meta), Seq("q_id"))
       .select(col("q_id"), col("vec_id"), col("c_rank"),
-        rz(pqFold(col("lut"), meta.s, subspaces) / col("q_nrm")
-          / sqrt(pqFold(meta.rn2, meta.s, subspaces)), 6).as("sim"))
+        rz(pqFold(col("lut"), meta) / col("q_nrm")
+          / sqrt(pqFold(meta.rn2, meta)), 6).as("sim"))
   }
 
-  /** IVF-PQ probe over a prebuilt index: (codebook, codes, cell
-    * assignment, centroids), all readable straight off parquet. */
-  def ivfPqTopKFrom(codebook: DataFrame, codes: DataFrame, cells: DataFrame,
-                    centTable: DataFrame, queries: DataFrame, k: Int,
-                    nprobe: Int = 2, subspaces: Int = 8): DataFrame = {
+  /** IVF-PQ (Jégou et al. 2011 §IV): the IVF cell route with PQ codes as
+    * the per-cell payload — the answer to the memory bound of carrying
+    * full-precision embeddings through the IVF index at 100 TB. The index
+    * table is (vec_id, c_id, cp): 16 bytes of key + 8 bytes of code per
+    * vector, no embedding ride-along; queries probe their nprobe closest
+    * cells and score candidates by the same LUT fold as pqTopKFrom. Probe
+    * cost: |cell| × (subspaces lookups), reading codes only. */
+  def ivfPqTopKFrom(index: PqIvf, queries: DataFrame, k: Int,
+                    nprobe: Int = 2): DataFrame = {
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("sim").desc, col("vec_id"))
-    ivfPqAdcCandidates(codebook, codes, cells, centTable, queries,
-        nprobe, subspaces)
+    ivfPqAdcCandidates(index, queries, nprobe)
       .select(col("q_id"), col("vec_id"), col("sim"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
@@ -815,7 +833,9 @@ object Similarity {
         zip_with(col("embedding"), col("c_emb"), (x, c) => x - c)
           .as("embedding"))
 
-  /** IVFADC probe over a prebuilt residual index: the IVF route of
+  /** IVFADC probe over a prebuilt residual index (`index.pq` quantizes
+    * the residuals x − centroid(cell(x)); cells and centroids are the IVF
+    * route's): the IVF route of
     * ivfPqTopKFrom with the scoring decomposed around x̂ = c + r̂ —
     *   dot(q, x̂)  = dot(q, c) + Σₘ LUT[m, codeₘ]        (query-side LUT
     *                 of exact q-sub × residual-codeword products, same
@@ -827,13 +847,11 @@ object Similarity {
     * 2·subspaces array lookups over the same 8-byte codes — the residual
     * refinement costs nothing at scan time. Same rz(…, 6) + vec_id
     * tie-break determinism as every ranking in this file. */
-  def ivfPqResTopKFrom(rescb: DataFrame, rescodes: DataFrame,
-                       cells: DataFrame, centTable: DataFrame,
-                       queries: DataFrame, k: Int, nprobe: Int = 2,
-                       subspaces: Int = 8): DataFrame = {
-    val meta = codebookMeta(rescb)
-    val index = cells.join(rescodes, Seq("vec_id"))
-    val cent = broadcast(centTable)
+  def ivfPqResTopKFrom(index: PqIvf, queries: DataFrame, k: Int,
+                       nprobe: Int = 2): DataFrame = {
+    val meta = codebookMeta(index.codebook)
+    val cellCodes = index.cells.join(index.codes, Seq("vec_id"))
+    val cent = broadcast(index.cent)
     val wp = Window.partitionBy(col("q_id"))
       .orderBy(col("c_sim").desc, col("c_id"))
     val queryProbes = scoredAgainst(cent)(
@@ -852,14 +870,14 @@ object Similarity {
         dotf(col("q_emb"), col("c_emb")).as("qc")))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("sim").desc, col("vec_id"))
-    queryProbes.join(index, Seq("c_id"))
+    queryProbes.join(cellCodes, Seq("c_id"))
       .filter(col("vec_id") =!= col("q_id"))
       .join(qcTable, Seq("q_id", "c_id"))
-      .join(cxlTable(centTable, meta), Seq("c_id"))
+      .join(cxlTable(index.cent, meta), Seq("c_id"))
       .join(pqLut(queries, meta), Seq("q_id"))
       .select(col("q_id"), col("vec_id"),
-        rz((col("qc") + pqFold(col("lut"), meta.s, subspaces)) / col("q_nrm")
-          / sqrt(col("cn2c") + pqFold(col("cxl"), meta.s, subspaces)), 6)
+        rz((col("qc") + pqFold(col("lut"), meta)) / col("q_nrm")
+          / sqrt(col("cn2c") + pqFold(col("cxl"), meta)), 6)
           .as("sim"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
@@ -911,12 +929,10 @@ object Similarity {
     *
     * Returns (q_id, shortlist: array<struct<sim, vec_id>>) — a streaming
     * frame; drain complete-mode, then explode + rerankExact. */
-  def ivfPqStreamShortlist(stream: DataFrame, codebook: DataFrame,
-                           codes: DataFrame, cells: DataFrame,
-                           centTable: DataFrame, shortlistK: Int = 50,
-                           nprobe: Int = 2, subspaces: Int = 8): DataFrame = {
-    val scored = ivfPqStreamScored(stream, codebook, codes, cells, centTable,
-      nprobe, subspaces, carry = Nil)
+  def ivfPqStreamShortlist(stream: DataFrame, index: PqIvf,
+                           shortlistK: Int = 50,
+                           nprobe: Int = 2): DataFrame = {
+    val scored = ivfPqStreamScored(stream, index, nprobe, carry = Nil)
     scored.groupBy(col("q_id"))
       .agg(collect_list(struct(col("sim"), col("vec_id"))).as("cl"))
       .select(col("q_id"),
@@ -941,13 +957,11 @@ object Similarity {
     * drops the flush sentinel, so the sentinel still advances event time
     * (the StreamStage.Timed flush convention). Returns
     * (win_start, q_id, shortlist); drain append-mode. */
-  def ivfPqStreamShortlistEpoch(stream: DataFrame, codebook: DataFrame,
-                                codes: DataFrame, cells: DataFrame,
-                                centTable: DataFrame, shortlistK: Int = 50,
-                                nprobe: Int = 2, subspaces: Int = 8,
+  def ivfPqStreamShortlistEpoch(stream: DataFrame, index: PqIvf,
+                                shortlistK: Int = 50, nprobe: Int = 2,
                                 epoch: String = "60 minutes"): DataFrame = {
-    val scored = ivfPqStreamScored(stream, codebook, codes, cells, centTable,
-      nprobe, subspaces, carry = Seq("ingest_ts"))
+    val scored = ivfPqStreamScored(stream, index, nprobe,
+      carry = Seq("ingest_ts"))
     scored
       .groupBy(window(col("ingest_ts"), epoch), col("q_id"))
       .agg(collect_list(struct(col("sim"), col("vec_id"))).as("cl"))
@@ -977,20 +991,17 @@ object Similarity {
     * current without nightly rebuilds: frozen quantizers (retrained
     * offline, versioned), arriving shards encoded map-side at 8 bytes of
     * code + 8 of cell id per vector, appended partition-aligned by c_id. */
-  def ivfPqStreamEncode(stream: DataFrame, codebook: DataFrame,
-                        centTable: DataFrame, subspaces: Int = 8): DataFrame = {
-    val meta = codebookMeta(codebook)
-    // Staged-index validation BEFORE the stream starts (the codebook
-    // collect plus one bounded count over ≈√n rows): a codebook trained
-    // with a different subspace count would make pqPackCp mis-slice every
-    // arriving vector, and an empty centroid table would route everything
-    // to a bogus cell — both row-level folds also hard-require this, but
-    // failing at query construction beats failing mid-micro-batch.
-    require(meta.subspaces == subspaces,
-      s"ivfPqStreamEncode: codebook is not $subspaces subspaces x ${meta.s} codes")
-    require(centTable.limit(1).count() == 1,
+  def ivfPqStreamEncode(stream: DataFrame, index: PqIvf): DataFrame = {
+    val meta = codebookMeta(index.codebook)
+    // Staged-index validation BEFORE the stream starts (one bounded count
+    // over ≈√n rows): an empty centroid table would route everything to a
+    // bogus cell — the row-level fold also hard-requires this, but
+    // failing at query construction beats failing mid-micro-batch. The
+    // subspace count is the codebook's own (codebookMeta checks its
+    // subspaces × S shape), so the encode cannot mis-slice.
+    require(index.cent.limit(1).count() == 1,
       "ivfPqStreamEncode: empty centroid table")
-    val centArr = broadcast(centTable
+    val centArr = broadcast(index.cent
       .select(struct(col("c_id"), col("c_emb"), col("c_nrm")).as("c"))
       .agg(array_sort(collect_list(col("c"))).as("cents")))
     // Route + encode are NATIVE codegen'd expressions (one compiled loop
@@ -1016,7 +1027,7 @@ object Similarity {
       .crossJoin(centArr)
       .select(col("vec_id"),
         ivfRouteId(col("embedding"), col("cents")).as("c_id"),
-        pqPackedCp(col("embedding"), meta.cbl, subspaces).as("cp"))
+        pqPackedCp(col("embedding"), meta.cbl, meta.subspaces).as("cp"))
   }
 
   /** Candidate-shortlist sort order shared by the two streaming rollups:
@@ -1045,16 +1056,14 @@ object Similarity {
     * stream-static equi-join, one rz-rounded sim per candidate. `carry`
     * lists stream columns (e.g. the event-time ingest_ts) to propagate
     * through to the output. */
-  private def ivfPqStreamScored(stream: DataFrame, codebook: DataFrame,
-                                codes: DataFrame, cells: DataFrame,
-                                centTable: DataFrame, nprobe: Int,
-                                subspaces: Int,
+  private def ivfPqStreamScored(stream: DataFrame, index: PqIvf,
+                                nprobe: Int,
                                 carry: Seq[String]): DataFrame = {
     val carryCols = carry.map(col)
-    val meta = codebookMeta(codebook)
+    val meta = codebookMeta(index.codebook)
     // one-row broadcast metadata: the centroid array (c_id-sorted); the
     // LUT is built in-row from the codebook literal (subDots)
-    val centArr = broadcast(centTable
+    val centArr = broadcast(index.cent
       .select(struct(col("c_id"), col("c_emb"), col("c_nrm")).as("c"))
       .agg(array_sort(collect_list(col("c"))).as("cents")))
     val probes = stream
@@ -1072,12 +1081,11 @@ object Similarity {
           byCsimDesc), 1, nprobe)).as("p") +: carryCols: _*)
       .select(col("q_id") +: col("q_nrm") +: col("lut") +:
         col("p.c_id").as("c_id") +: carryCols: _*)
-    val index = cells.join(codes, Seq("vec_id"))
-    probes.join(index, Seq("c_id"))
+    probes.join(index.cells.join(index.codes, Seq("vec_id")), Seq("c_id"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id") +: col("vec_id") +:
-        rz(pqFold(col("lut"), meta.s, subspaces) / col("q_nrm")
-          / sqrt(pqFold(meta.rn2, meta.s, subspaces)), 6).as("sim") +:
+        rz(pqFold(col("lut"), meta) / col("q_nrm")
+          / sqrt(pqFold(meta.rn2, meta)), 6).as("sim") +:
         carryCols: _*)
   }
 
@@ -1099,13 +1107,12 @@ object Similarity {
     * corpus×(subspaces·S) argmin pass per round — the exact shape of the
     * encode pass, map-side partial-aggregated. */
   def pqIndexFramesRefined(corpus: DataFrame, subspaces: Int = 8,
-                           codebookK: Int = 16, iters: Int = 2)
-      : (DataFrame, DataFrame) = {
+                           codebookK: Int = 16, iters: Int = 2): Pq = {
     val ix = pqIvfIndex(corpus, subspaces, codebookK)
     val meta = codebookMeta(ix.codebook)
     val cb = pqRefineCodebook(corpus, ix.codebook, meta.s, subspaces,
       meta.subDim, iters)
-    (cb, pqEncodeFrom(corpus, cb))
+    Pq(cb, pqEncodeFrom(corpus, cb))
   }
 
   /** The Lloyd rounds behind pqIndexFramesRefined. The codebook is
@@ -1163,7 +1170,7 @@ object Similarity {
     * apply-half of the train-once contract, public so audits can
     * re-encode a SHIFTED corpus under the deployed quantizers (the drift
     * audit) without re-deriving anything: per (vector, subspace) argmin
-    * over the codebook, packed min (see pqTopK's determinism contract),
+    * over the codebook, packed min (see pqTopKFrom's determinism contract),
     * codes packed 8 bits per subspace into ONE long per vector.
     *
     * The argmin is the NATIVE packed fold (VectorExpressions.pqPackCp)
@@ -1254,13 +1261,11 @@ object Similarity {
     * aggregate/transform chain, FunctionsSpec pins it on the real index).
     * The HOF form ran its per-subspace element_at through an interpreted
     * boxed lambda once per (candidate × query) row on EVERY ADC scan —
-    * the hottest per-row expression in the vector family. The `subspaces`
-    * param stays for call-site clarity; the fold derives it from the
-    * array itself (every LUT/rn2/cxl table is exactly subspaces·S wide). */
-  private def pqFold(arr: Column, s: Long, subspaces: Int) = {
-    require(subspaces > 0, "pqFold: non-positive subspace count")
-    graft.functions.VectorExpressions.pqFoldSum(arr, col("cp"), s.toInt)
-  }
+    * the hottest per-row expression in the vector family. The fold reads
+    * the subspace count off the array itself: every LUT/rn2/cxl table is
+    * exactly subspaces·S wide for the codebook `meta` describes. */
+  private def pqFold(arr: Column, meta: CodebookMeta) =
+    graft.functions.VectorExpressions.pqFoldSum(arr, col("cp"), meta.s.toInt)
 
   /** Per-dimension-pair covariance of the embedding corpus — the XᵀX
     * pass every PCA / whitening / decorrelation step starts from, shaped

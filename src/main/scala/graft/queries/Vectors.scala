@@ -67,11 +67,7 @@ object Vectors extends QueryPack {
     // query many — the shape a real vector store has anyway).
     "sim_pq_topk" -> ((s, dir) => {
       val (_, q) = corpusAndQueries(s, dir)
-      val st = stagedPq(s, dir)
-      Similarity.pqTopKFrom(
-        readParquet(s, s"$st/codebook.parquet"),
-        readParquet(s, s"$st/codes.parquet"),
-        q, k = 5)
+      Similarity.pqTopKFrom(stagedPq(s, dir).pq, q, k = 5)
     }),
 
     // IVF-PQ: nprobe cells per query, candidates scored from 8-byte
@@ -79,13 +75,7 @@ object Vectors extends QueryPack {
     // the embedding (the 100 TB memory-bound answer).
     "sim_ivfpq_topk" -> ((s, dir) => {
       val (_, q) = corpusAndQueries(s, dir)
-      val st = stagedPq(s, dir)
-      Similarity.ivfPqTopKFrom(
-        readParquet(s, s"$st/codebook.parquet"),
-        readParquet(s, s"$st/codes.parquet"),
-        readParquet(s, s"$st/cells.parquet"),
-        readParquet(s, s"$st/cent.parquet"),
-        q, k = 5, nprobe = 2)
+      Similarity.ivfPqTopKFrom(stagedPq(s, dir), q, k = 5, nprobe = 2)
     }),
 
     // The same two-stage serving over the SUBLINEAR stage 1: IVF-PQ
@@ -95,13 +85,8 @@ object Vectors extends QueryPack {
     // nprobe·cell + 50 exact fetches.
     "sim_ivfpq_rerank" -> ((s, dir) => {
       val (e, q) = corpusAndQueries(s, dir)
-      val st = stagedPq(s, dir)
-      val shortlist = Similarity.ivfPqTopKFrom(
-          readParquet(s, s"$st/codebook.parquet"),
-          readParquet(s, s"$st/codes.parquet"),
-          readParquet(s, s"$st/cells.parquet"),
-          readParquet(s, s"$st/cent.parquet"),
-          q, k = 50, nprobe = 2)
+      val shortlist = Similarity.ivfPqTopKFrom(stagedPq(s, dir), q,
+          k = 50, nprobe = 2)
         .select(col("q_id"), col("vec_id"))
       Similarity.rerankExact(shortlist, e, q, k = 5)
     }),
@@ -113,10 +98,7 @@ object Vectors extends QueryPack {
     // never shuffles); the re-rank window runs over <= 64·50 rows.
     "sim_pq_rerank" -> ((s, dir) => {
       val (e, q) = corpusAndQueries(s, dir)
-      val st = stagedPq(s, dir)
-      val shortlist = Similarity.pqTopKFrom(
-          readParquet(s, s"$st/codebook.parquet"),
-          readParquet(s, s"$st/codes.parquet"), q, k = 50)
+      val shortlist = Similarity.pqTopKFrom(stagedPq(s, dir).pq, q, k = 50)
         .select(col("q_id"), col("vec_id"))
       Similarity.rerankExact(shortlist, e, q, k = 5)
     }),
@@ -126,21 +108,8 @@ object Vectors extends QueryPack {
     // same staged index as sim_pq_topk instead of re-training it.
     "sim_pq_recall" -> ((s, dir) => {
       val (e, q) = corpusAndQueries(s, dir)
-      val st = stagedPq(s, dir)
-      val brute = Similarity.bruteForceTopK(e, q, k = 5)
-        .select(col("q_id"), col("vec_id"))
-      val approx = Similarity.pqTopKFrom(
-          readParquet(s, s"$st/codebook.parquet"),
-          readParquet(s, s"$st/codes.parquet"), q, k = 5)
-        .select(col("q_id"), col("vec_id"))
-      val hits = brute.join(approx, Seq("q_id", "vec_id"))
-        .groupBy(col("q_id")).agg(count(lit(1)).as("n_hits"))
-      brute.groupBy(col("q_id")).agg(count(lit(1)).as("k"))
-        .join(hits, Seq("q_id"), "left")
-        .select(col("q_id"),
-          coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-          round(coalesce(col("n_hits"), lit(0L)).cast("double") / col("k"), 6)
-            .as("recall"))
+      Similarity.recall(Similarity.bruteForceTopK(e, q, k = 5),
+          Similarity.pqTopKFrom(stagedPq(s, dir).pq, q, k = 5), "")
         .orderBy(col("q_id"))
     }),
 
@@ -151,24 +120,10 @@ object Vectors extends QueryPack {
     // rotation's effect on the SAME index budget is a number, not a hope.
     "sim_opq_recall" -> ((s, dir) => {
       val (e, q) = corpusAndQueries(s, dir)
-      val st = stagedOpq(s, dir)
-      val perm = readParquet(s, s"$st/perm.parquet").orderBy(col("pos"))
-        .select(col("dim")).collect().map(_.getLong(0).toInt).toSeq
-      val brute = Similarity.bruteForceTopK(e, q, k = 5)
-        .select(col("q_id"), col("vec_id"))
-      val approx = Similarity.pqTopKFrom(
-          readParquet(s, s"$st/codebook.parquet"),
-          readParquet(s, s"$st/codes.parquet"),
-          Similarity.permuteVectors(q, perm), k = 5)
-        .select(col("q_id"), col("vec_id"))
-      val hits = brute.join(approx, Seq("q_id", "vec_id"))
-        .groupBy(col("q_id")).agg(count(lit(1)).as("n_hits"))
-      brute.groupBy(col("q_id")).agg(count(lit(1)).as("k"))
-        .join(hits, Seq("q_id"), "left")
-        .select(col("q_id"),
-          coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-          round(coalesce(col("n_hits"), lit(0L)).cast("double") / col("k"), 6)
-            .as("recall"))
+      val opq = stagedOpq(s, dir)
+      Similarity.recall(Similarity.bruteForceTopK(e, q, k = 5),
+          Similarity.pqTopKFrom(opq.pq,
+            Similarity.permuteVectors(q, opq.perm), k = 5), "")
         .orderBy(col("q_id"))
     }),
 
@@ -197,18 +152,8 @@ object Vectors extends QueryPack {
     // (q_id, vec_id) sets and the recall is one bounded join + rollup.
     "sim_lsh_recall" -> ((s, dir) => {
       val (e, q) = corpusAndQueries(s, dir)
-      val brute = Similarity.bruteForceTopK(e, q, k = 5)
-        .select(col("q_id"), col("vec_id"))
-      val approx = Similarity.signLshTopK(e, q, k = 5, signBits = 8)
-        .select(col("q_id"), col("vec_id"))
-      val hits = brute.join(approx, Seq("q_id", "vec_id"))
-        .groupBy(col("q_id")).agg(count(lit(1)).as("n_hits"))
-      brute.groupBy(col("q_id")).agg(count(lit(1)).as("k"))
-        .join(hits, Seq("q_id"), "left")
-        .select(col("q_id"),
-          coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-          round(coalesce(col("n_hits"), lit(0L)).cast("double") / col("k"), 6)
-            .as("recall"))
+      Similarity.recall(Similarity.bruteForceTopK(e, q, k = 5),
+          Similarity.signLshTopK(e, q, k = 5, signBits = 8), "")
         .orderBy(col("q_id"))
     }),
 
@@ -218,18 +163,8 @@ object Vectors extends QueryPack {
     // is the measured side of that trade, same harness as sim_lsh_recall.
     "sim_ivf_recall" -> ((s, dir) => {
       val (e, q) = corpusAndQueries(s, dir)
-      val brute = Similarity.bruteForceTopK(e, q, k = 5)
-        .select(col("q_id"), col("vec_id"))
-      val approx = Similarity.ivfTopKAuto(e, q, k = 5, nprobe = 2)
-        .select(col("q_id"), col("vec_id"))
-      val hits = brute.join(approx, Seq("q_id", "vec_id"))
-        .groupBy(col("q_id")).agg(count(lit(1)).as("n_hits"))
-      brute.groupBy(col("q_id")).agg(count(lit(1)).as("k"))
-        .join(hits, Seq("q_id"), "left")
-        .select(col("q_id"),
-          coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-          round(coalesce(col("n_hits"), lit(0L)).cast("double") / col("k"), 6)
-            .as("recall"))
+      Similarity.recall(Similarity.bruteForceTopK(e, q, k = 5),
+          Similarity.ivfTopKAuto(e, q, k = 5, nprobe = 2), "")
         .orderBy(col("q_id"))
     }),
 
@@ -260,7 +195,6 @@ object Vectors extends QueryPack {
       val pred = col("label") % 5 === 2
       val labels = e.select(col("vec_id"), col("label"))
       val brute = Similarity.bruteForceTopK(e.filter(pred), q, k = 5)
-        .select(col("q_id"), col("vec_id"))
       val cand = Similarity.ivfCandidates(e, q,
         Similarity.autoCentroidEvery(tableRows(s, dir, "embeddings")),
         nprobe = 2)
@@ -268,26 +202,14 @@ object Vectors extends QueryPack {
         .orderBy(col("sim").desc, col("vec_id"))
       val inProbe = cand.join(labels, "vec_id").filter(pred)
         .withColumn("rank", row_number().over(wq)).filter(col("rank") <= 5)
-        .select(col("q_id"), col("vec_id"))
       val postFilter = cand
         .withColumn("rank", row_number().over(wq)).filter(col("rank") <= 20)
         .drop("rank")
         .join(labels, "vec_id").filter(pred)
         .withColumn("rank", row_number().over(wq)).filter(col("rank") <= 5)
-        .select(col("q_id"), col("vec_id"))
-      def hitsOf(apx: org.apache.spark.sql.DataFrame, tag: String) =
-        brute.join(apx, Seq("q_id", "vec_id"))
-          .groupBy(col("q_id")).agg(count(lit(1)).as(s"n_hits_$tag"))
       brute.groupBy(col("q_id")).agg(count(lit(1)).as("k"))
-        .join(hitsOf(inProbe, "probe"), Seq("q_id"), "left")
-        .join(hitsOf(postFilter, "shortlist"), Seq("q_id"), "left")
-        .select(col("q_id"), col("k"),
-          coalesce(col("n_hits_probe"), lit(0L)).as("n_hits_probe"),
-          round(coalesce(col("n_hits_probe"), lit(0L)).cast("double")
-            / col("k"), 6).as("recall_probe"),
-          coalesce(col("n_hits_shortlist"), lit(0L)).as("n_hits_shortlist"),
-          round(coalesce(col("n_hits_shortlist"), lit(0L)).cast("double")
-            / col("k"), 6).as("recall_shortlist"))
+        .join(Similarity.recall(brute, inProbe, "probe"), "q_id")
+        .join(Similarity.recall(brute, postFilter, "shortlist"), "q_id")
         .orderBy(col("q_id"))
     }),
 
@@ -299,25 +221,9 @@ object Vectors extends QueryPack {
     // baseline (sim_ivfpq_topk via sim_pq_recall's harness).
     "sim_ivfpq_res_recall" -> ((s, dir) => {
       val (e, q) = corpusAndQueries(s, dir)
-      val pq = stagedPq(s, dir)
-      val st = stagedResPq(s, dir)
-      val brute = Similarity.bruteForceTopK(e, q, k = 5)
-        .select(col("q_id"), col("vec_id"))
-      val approx = Similarity.ivfPqResTopKFrom(
-          readParquet(s, s"$st/rescodebook.parquet"),
-          readParquet(s, s"$st/rescodes.parquet"),
-          readParquet(s, s"$pq/cells.parquet"),
-          readParquet(s, s"$pq/cent.parquet"),
-          q, k = 5, nprobe = 2)
-        .select(col("q_id"), col("vec_id"))
-      val hits = brute.join(approx, Seq("q_id", "vec_id"))
-        .groupBy(col("q_id")).agg(count(lit(1)).as("n_hits"))
-      brute.groupBy(col("q_id")).agg(count(lit(1)).as("k"))
-        .join(hits, Seq("q_id"), "left")
-        .select(col("q_id"),
-          coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-          round(coalesce(col("n_hits"), lit(0L)).cast("double") / col("k"), 6)
-            .as("recall"))
+      Similarity.recall(Similarity.bruteForceTopK(e, q, k = 5),
+          Similarity.ivfPqResTopKFrom(stagedResPq(s, dir), q, k = 5,
+            nprobe = 2), "")
         .orderBy(col("q_id"))
     }),
 
@@ -329,21 +235,8 @@ object Vectors extends QueryPack {
     // corpus does NOT get from IVFADC residuals.
     "sim_pq_ref_recall" -> ((s, dir) => {
       val (e, q) = corpusAndQueries(s, dir)
-      val st = stagedRefPq(s, dir)
-      val brute = Similarity.bruteForceTopK(e, q, k = 5)
-        .select(col("q_id"), col("vec_id"))
-      val approx = Similarity.pqTopKFrom(
-          readParquet(s, s"$st/refcodebook.parquet"),
-          readParquet(s, s"$st/refcodes.parquet"), q, k = 5)
-        .select(col("q_id"), col("vec_id"))
-      val hits = brute.join(approx, Seq("q_id", "vec_id"))
-        .groupBy(col("q_id")).agg(count(lit(1)).as("n_hits"))
-      brute.groupBy(col("q_id")).agg(count(lit(1)).as("k"))
-        .join(hits, Seq("q_id"), "left")
-        .select(col("q_id"),
-          coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-          round(coalesce(col("n_hits"), lit(0L)).cast("double") / col("k"), 6)
-            .as("recall"))
+      Similarity.recall(Similarity.bruteForceTopK(e, q, k = 5),
+          Similarity.pqTopKFrom(stagedRefPq(s, dir).pq, q, k = 5), "")
         .orderBy(col("q_id"))
     }),
 
@@ -362,27 +255,11 @@ object Vectors extends QueryPack {
     // Cells/centroids are shared with stage:pq — only codebook/codes swap.
     "sim_ivfpq_ref_recall" -> ((s, dir) => {
       val (e, q) = corpusAndQueries(s, dir)
-      val pq = stagedPq(s, dir)
-      val ref = stagedRefPq(s, dir)
-      val brute = Similarity.bruteForceTopK(e, q, k = 5)
+      val shortlist = Similarity.ivfPqTopKFrom(stagedRefPq(s, dir), q,
+          k = 50, nprobe = 2)
         .select(col("q_id"), col("vec_id"))
-      val shortlist = Similarity.ivfPqTopKFrom(
-          readParquet(s, s"$ref/refcodebook.parquet"),
-          readParquet(s, s"$ref/refcodes.parquet"),
-          readParquet(s, s"$pq/cells.parquet"),
-          readParquet(s, s"$pq/cent.parquet"),
-          q, k = 50, nprobe = 2)
-        .select(col("q_id"), col("vec_id"))
-      val approx = Similarity.rerankExact(shortlist, e, q, k = 5)
-        .select(col("q_id"), col("vec_id"))
-      val hits = brute.join(approx, Seq("q_id", "vec_id"))
-        .groupBy(col("q_id")).agg(count(lit(1)).as("n_hits"))
-      brute.groupBy(col("q_id")).agg(count(lit(1)).as("k"))
-        .join(hits, Seq("q_id"), "left")
-        .select(col("q_id"),
-          coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-          round(coalesce(col("n_hits"), lit(0L)).cast("double") / col("k"), 6)
-            .as("recall"))
+      Similarity.recall(Similarity.bruteForceTopK(e, q, k = 5),
+          Similarity.rerankExact(shortlist, e, q, k = 5), "")
         .orderBy(col("q_id"))
     }),
 
@@ -397,12 +274,10 @@ object Vectors extends QueryPack {
     "sim_ivf_nprobe_audit" -> ((s, dir) => {
       val (e, q) = corpusAndQueries(s, dir)
       val pq = stagedPq(s, dir)
-      val cells = readParquet(s, s"$pq/cells.parquet")
-      val cent = readParquet(s, s"$pq/cent.parquet")
       val brute = Similarity.bruteForceTopK(e, q, k = 5)
         .select(col("q_id"), col("vec_id"))
-      val probes = Similarity.queryCellRanks(cent, q, maxProbe = 8)
-      val hitRank = brute.join(cells, Seq("vec_id"))
+      val probes = Similarity.queryCellRanks(pq.cent, q, maxProbe = 8)
+      val hitRank = brute.join(pq.cells, Seq("vec_id"))
         .join(probes, Seq("q_id", "c_id"), "left")
         .select(col("q_id"), col("vec_id"),
           coalesce(col("c_rank"), lit(999L)).as("cr"))
@@ -436,11 +311,7 @@ object Vectors extends QueryPack {
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
       val stream = StreamOps.readEventStream(s, StreamStage.embStream(s, dir))
         .filter(col("vec_id") % stride === 0)
-      val sl = Similarity.ivfPqStreamShortlist(stream,
-        readParquet(s, s"$pq/codebook.parquet"),
-        readParquet(s, s"$pq/codes.parquet"),
-        readParquet(s, s"$pq/cells.parquet"),
-        readParquet(s, s"$pq/cent.parquet"),
+      val sl = Similarity.ivfPqStreamShortlist(stream, pq,
         shortlistK = 50, nprobe = 2)
       val drained = StreamOps.drain(Seq((sl,
         s"sim_stream_ann$sf".replace(".", "_"), StreamOps.Memory("complete"))),
@@ -475,11 +346,7 @@ object Vectors extends QueryPack {
       val stream = StreamOps.readEventStream(s, StreamStage.embBatches(s, dir))
         .withWatermark("ingest_ts", "45 minutes")
         .filter(col("vec_id") % stride === 0)
-      val sl = Similarity.ivfPqStreamShortlistEpoch(stream,
-        readParquet(s, s"$pq/codebook.parquet"),
-        readParquet(s, s"$pq/codes.parquet"),
-        readParquet(s, s"$pq/cells.parquet"),
-        readParquet(s, s"$pq/cent.parquet"),
+      val sl = Similarity.ivfPqStreamShortlistEpoch(stream, pq,
         shortlistK = 50, nprobe = 2)
       val drained = StreamOps.drain(Seq((sl,
         s"sim_stream_ann_evict$sf".replace(".", "_"),
@@ -511,9 +378,7 @@ object Vectors extends QueryPack {
       val pq = stagedPq(s, dir)
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
       val stream = StreamOps.readEventStream(s, StreamStage.embStream(s, dir))
-      val enc = Similarity.ivfPqStreamEncode(stream,
-        readParquet(s, s"$pq/codebook.parquet"),
-        readParquet(s, s"$pq/cent.parquet"))
+      val enc = Similarity.ivfPqStreamEncode(stream, pq)
       StreamOps.drain(Seq((enc,
         s"sim_stream_index_ingest$sf".replace(".", "_"),
         StreamOps.Memory("append")))).head
@@ -594,11 +459,10 @@ object Vectors extends QueryPack {
     "sim_index_drift" -> ((s, dir) => {
       import graft.functions.VectorExpressions.vecDrift
       val e = table(s, dir, "embeddings")
-      val ref = stagedRefPq(s, dir)
-      val cb = readParquet(s, s"$ref/refcodebook.parquet")
+      val ref = stagedRefPq(s, dir).pq
       val stride = Similarity.queryStride(tableRows(s, dir, "embeddings"))
       def recallOf(corpus: org.apache.spark.sql.DataFrame,
-                   codes: org.apache.spark.sql.DataFrame,
+                   index: Similarity.Pq,
                    tag: String): org.apache.spark.sql.DataFrame = {
         val q = corpus.filter(col("vec_id") % stride === 0)
         // NOT materialized (r16 measured both ways): the baseline feeds
@@ -607,25 +471,14 @@ object Vectors extends QueryPack {
         // expensive sub-window corpus scan once; a localCheckpoint here
         // only added an eager barrier + unknown-stats join planning
         // (4.81 s → 6.05 s at sf0.1)
-        val brute = Similarity.bruteForceTopK(corpus, q, k = 5)
-          .select(col("q_id"), col("vec_id"))
-        val approx = Similarity.pqTopKFrom(cb, codes, q, k = 5)
-          .select(col("q_id"), col("vec_id"))
-        val hits = brute.join(approx, Seq("q_id", "vec_id"))
-          .groupBy(col("q_id")).agg(count(lit(1)).as("n_hits"))
-        brute.groupBy(col("q_id")).agg(count(lit(1)).as("k"))
-          .join(hits, Seq("q_id"), "left")
-          .select(col("q_id"),
-            coalesce(col("n_hits"), lit(0L)).as(s"n_hits_$tag"),
-            round(coalesce(col("n_hits"), lit(0L)).cast("double") / col("k"), 6)
-              .as(s"recall_$tag"))
+        Similarity.recall(Similarity.bruteForceTopK(corpus, q, k = 5),
+          Similarity.pqTopKFrom(index, q, k = 5), tag)
       }
-      val native = recallOf(e,
-        readParquet(s, s"$ref/refcodes.parquet"), "native")
+      val native = recallOf(e, ref, "native")
       val drifted = e.select(col("vec_id"),
         vecDrift(col("embedding"), bias = 0.1).as("embedding"))
-      val drift = recallOf(drifted,
-        Similarity.pqEncodeFrom(drifted, cb), "drift")
+      val drift = recallOf(drifted, Similarity.Pq(ref.codebook,
+        Similarity.pqEncodeFrom(drifted, ref.codebook)), "drift")
       native.join(drift, "q_id").orderBy(col("q_id"))
     }),
 
@@ -655,8 +508,7 @@ object Vectors extends QueryPack {
     "sim_index_retrain" -> ((s, dir) => {
       import graft.functions.VectorExpressions.vecDrift
       val e = table(s, dir, "embeddings")
-      val ref = stagedRefPq(s, dir)
-      val cb = readParquet(s, s"$ref/refcodebook.parquet")
+      val ref = stagedRefPq(s, dir).pq
       val stride = Similarity.queryStride(tableRows(s, dir, "embeddings"))
       // brute baselines deliberately NOT materialized (r16 measured both
       // ways): the frozen and retrained legs contain IDENTICAL drifted-
@@ -667,22 +519,11 @@ object Vectors extends QueryPack {
       // (eager barriers + unknown-stats join planning), so the original
       // single-plan shape is kept.
       def recallOf(corpus: org.apache.spark.sql.DataFrame,
-                   codebook: org.apache.spark.sql.DataFrame,
-                   codes: org.apache.spark.sql.DataFrame,
+                   index: Similarity.Pq,
                    tag: String): org.apache.spark.sql.DataFrame = {
         val q = corpus.filter(col("vec_id") % stride === 0)
-        val brute = Similarity.bruteForceTopK(corpus, q, k = 5)
-          .select(col("q_id"), col("vec_id"))
-        val approx = Similarity.pqTopKFrom(codebook, codes, q, k = 5)
-          .select(col("q_id"), col("vec_id"))
-        val hits = brute.join(approx, Seq("q_id", "vec_id"))
-          .groupBy(col("q_id")).agg(count(lit(1)).as("n_hits"))
-        brute.groupBy(col("q_id")).agg(count(lit(1)).as("k"))
-          .join(hits, Seq("q_id"), "left")
-          .select(col("q_id"),
-            coalesce(col("n_hits"), lit(0L)).as(s"n_hits_$tag"),
-            round(coalesce(col("n_hits"), lit(0L)).cast("double") / col("k"), 6)
-              .as(s"recall_$tag"))
+        Similarity.recall(Similarity.bruteForceTopK(corpus, q, k = 5),
+          Similarity.pqTopKFrom(index, q, k = 5), tag)
       }
       // r17 (guide §2.6 overlap independent jobs): the NATIVE leg shares
       // nothing with the drifted chain, yet it used to sit unevaluated in
@@ -692,20 +533,20 @@ object Vectors extends QueryPack {
       // materializes on its own thread, back-filling the executors the
       // training chain's small jobs leave idle; rows are untouched (same
       // leg, same checkpoint semantics as every materialize).
-      val nativeGet = graft.ops.Dedup.materializeAsync(recallOf(e, cb,
-        readParquet(s, s"$ref/refcodes.parquet"), "native"))
+      val nativeGet = graft.ops.Dedup.materializeAsync(
+        recallOf(e, ref, "native"))
       // materialized: the drifted corpus feeds its brute baseline, the
       // frozen re-encode, THREE retrain passes (seed + 2 Lloyd rounds),
       // the retrain encode, and both legs' query sides
       val drifted = graft.ops.Dedup.materialize(e.select(col("vec_id"),
         vecDrift(col("embedding"), bias = 0.1).as("embedding")))
-      val frozen = recallOf(drifted, cb,
-        Similarity.pqEncodeFrom(drifted, cb), "drift")
-      val (rcb, rcodes) = Similarity.pqIndexFramesRefined(drifted)
+      val frozen = recallOf(drifted, Similarity.Pq(ref.codebook,
+        Similarity.pqEncodeFrom(drifted, ref.codebook)), "drift")
       // frozen and retrained stay in ONE plan: their identical drifted-
       // brute subtrees are deduplicated at the Exchange (the r16 measured
       // lesson — materializing the baselines lost 9.2 → 14.1 s)
-      val retrained = recallOf(drifted, rcb, rcodes, "retrained")
+      val retrained = recallOf(drifted,
+        Similarity.pqIndexFramesRefined(drifted), "retrained")
       nativeGet().join(frozen, "q_id").join(retrained, "q_id")
         .orderBy(col("q_id"))
     }),
@@ -735,12 +576,7 @@ object Vectors extends QueryPack {
     // must raise shortlistK alongside nprobe, not nprobe alone.
     "sim_ivfpq_frontier" -> ((s, dir) => {
       val (e, q) = corpusAndQueries(s, dir)
-      val pq = stagedPq(s, dir)
       val ref = stagedRefPq(s, dir)
-      val cb = readParquet(s, s"$ref/refcodebook.parquet")
-      val codes = readParquet(s, s"$ref/refcodes.parquet")
-      val cells = readParquet(s, s"$pq/cells.parquet")
-      val cent = readParquet(s, s"$pq/cent.parquet")
       // materialized: the brute baseline is consumed by all four hit
       // counts (and is the expensive corpus-scan half of the audit).
       // r17 §2.6: it shares nothing with the ADC candidate scan, so it
@@ -751,8 +587,9 @@ object Vectors extends QueryPack {
           .select(col("q_id"), col("vec_id")))
       val nQ = q.agg(count(lit(1)).as("n_q"))
       val nC = e.agg(count(lit(1)).as("n_corpus"))
-      val cellSizes = cells.groupBy(col("c_id")).agg(count(lit(1)).as("csz"))
-      val probed = Similarity.queryCellRanks(cent, q, maxProbe = 8)
+      val cellSizes = ref.cells.groupBy(col("c_id"))
+        .agg(count(lit(1)).as("csz"))
+      val probed = Similarity.queryCellRanks(ref.cent, q, maxProbe = 8)
         .join(cellSizes, Seq("c_id"))
         .select(col("c_rank"), col("csz"),
           explode(lit(Array(1L, 2L, 4L, 8L))).as("nprobe"))
@@ -770,8 +607,7 @@ object Vectors extends QueryPack {
       // union is taken, not the np=8 set) and each leg's top-5 is a window
       // over the scored rows.
       val cand = graft.ops.Dedup.materialize(
-        Similarity.ivfPqAdcCandidates(cb, codes, cells, cent, q,
-          maxProbe = 8))
+        Similarity.ivfPqAdcCandidates(ref, q, maxProbe = 8))
       val wAdc = Window.partitionBy(col("q_id"))
         .orderBy(col("sim").desc, col("vec_id"))
       def shortlistAt(np: Int) = cand.filter(col("c_rank") <= np)
@@ -824,12 +660,6 @@ object Vectors extends QueryPack {
     // nprobe=8/K=200 to serve the full routing ceiling.
     "sim_ivfpq_k_frontier" -> ((s, dir) => {
       val (e, q) = corpusAndQueries(s, dir)
-      val pq = stagedPq(s, dir)
-      val ref = stagedRefPq(s, dir)
-      val cb = readParquet(s, s"$ref/refcodebook.parquet")
-      val codes = readParquet(s, s"$ref/refcodes.parquet")
-      val cells = readParquet(s, s"$pq/cells.parquet")
-      val cent = readParquet(s, s"$pq/cent.parquet")
       // r17 §2.6: the brute baseline shares nothing with the ADC ranking,
       // so it materializes on its own thread while the ranked/scored200
       // checkpoints run.
@@ -843,8 +673,7 @@ object Vectors extends QueryPack {
       // and each width's top-5 is a window over the scored rows restricted
       // to its ADC-rank prefix. n_fetch stays the shortlist row count.
       val ranked = graft.ops.Dedup.materialize(
-        Similarity.ivfPqTopKFrom(cb, codes, cells, cent,
-            q, k = 200, nprobe = 8)
+        Similarity.ivfPqTopKFrom(stagedRefPq(s, dir), q, k = 200, nprobe = 8)
           .select(col("q_id"), col("vec_id"), col("rank")))
       val scored200 = graft.ops.Dedup.materialize(
         Similarity.exactSims(ranked, e, q)
@@ -1037,10 +866,8 @@ object Vectors extends QueryPack {
     "mm_stream_phash" -> ((s, dir) => {
       import graft.streaming.StreamOps
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val staged = stagedPhashIndex(s, dir)
-      val reps = readParquet(s, s"$staged/reps.parquet")
-      val uw = readParquet(s, s"$staged/uwords.parquet")
-        .select(col("uid"), col("j"), col("band").as("key"))
+      val (reps, uwords) = stagedPhashIndex(s, dir)
+      val uw = uwords.select(col("uid"), col("j"), col("band").as("key"))
       val stream = StreamOps.readEventStream(s, StreamStage.docStream(s, dir))
         .filter(col("doc_id") % 5 === 0 && length(col("text")) > 0)
         .select(col("doc_id").as("new_doc"),
@@ -1081,9 +908,10 @@ object Vectors extends QueryPack {
     * count through cnt, and a group's min member IS its uid) plus the
     * rep-level 16-bit subindex words the MIH probe join keys on. The
     * index carries 4 longs + 2 longs per DISTINCT hash — never the text,
-    * never per-member rows. */
+    * never per-member rows. Returns (reps, uwords). */
   private[queries] def stagedPhashIndex(s: org.apache.spark.sql.SparkSession,
-                                        dir: String): String = {
+                                        dir: String)
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     val staged = tmpStage(dir, "phash_v1")
     ensureStaged(staged, "uwords.parquet/_SUCCESS") {
       val bcols = (0 until 4).map(j => col(s"b$j"))
@@ -1097,7 +925,8 @@ object Vectors extends QueryPack {
         .select(col("uid"), posexplode(array(bcols: _*)).as(Seq("j", "band")))
         .write.mode("overwrite").parquet(s"$staged/uwords.parquet")
     }
-    staged
+    (readParquet(s, s"$staged/reps.parquet"),
+      readParquet(s, s"$staged/uwords.parquet"))
   }
 
   /** Streamed-index append log + its compaction, staged once per SF: the
@@ -1113,11 +942,8 @@ object Vectors extends QueryPack {
     val staged = tmpStage(dir, "ivfappend_v1")
     ensureStaged(staged, "compacted/_SUCCESS") {
       import graft.streaming.StreamOps
-      val pq = stagedPq(s, dir)
       val stream = StreamOps.readEventStream(s, StreamStage.embStream(s, dir))
-      val enc = Similarity.ivfPqStreamEncode(stream,
-        readParquet(s, s"$pq/codebook.parquet"),
-        readParquet(s, s"$pq/cent.parquet"))
+      val enc = Similarity.ivfPqStreamEncode(stream, stagedPq(s, dir))
       // the drain rebuilds the append log: a partially-built one (a
       // failed prior build) is never appended onto by a fresh checkpoint
       val appended = StreamOps.drain(Seq((enc, "sim_ivf_append",
@@ -1145,31 +971,40 @@ object Vectors extends QueryPack {
   /** PQ/IVF index stage — the train-once/apply-many contract applied to
     * the vector index (the stagedBpe convention): the quantizer training
     * and the full-corpus route + encode run ONCE per SF; sim_pq_topk,
-    * sim_pq_recall, sim_ivfpq_topk and every other PQ-family row read the
-    * staged artifacts. The standing index is exactly what ships at
-    * 100 TB: codebook (≤ 8·16 rows), 8-byte codes + 8-byte cell id per
-    * vector — no embeddings. Cost (Similarity.pqIvfIndex): one corpus
-    * read and rebalance (its schema from the footer, no job), two bounded
-    * collect jobs over it (n and d; the seed and centroid rows), one
-    * route + encode pass whose blocks both halves are written from, and
-    * one single-file write per bounded artifact — 7 Spark jobs at any SF
-    * (PlanSpec pins the count). */
+    * sim_pq_recall, sim_ivfpq_topk and every other PQ-family row query the
+    * staged index. The standing index is exactly what ships at 100 TB:
+    * codebook (≤ 8·16 rows), 8-byte codes + 8-byte cell id per vector — no
+    * embeddings. Cost (Similarity.pqIvfIndex): one corpus read and
+    * rebalance (its schema from the footer, no job), two bounded collect
+    * jobs over it (n and d; the seed and centroid rows), one route +
+    * encode pass whose blocks both halves are written from, and one
+    * single-file write per bounded artifact — 7 Spark jobs at any SF
+    * (PlanSpec pins the count).
+    *
+    * The PQ stages' file layout is known here and nowhere else: each
+    * builder returns its index opened through readParquet, one lazy frame
+    * per file, so a row pays the footer read only for the files it uses. */
   private[queries] def stagedPq(s: org.apache.spark.sql.SparkSession,
-                                dir: String): String = {
+                                dir: String): Similarity.PqIvf = {
     val staged = tmpStage(dir, Similarity.PqStageTag)
     ensureStaged(staged, "cent.parquet/_SUCCESS") {
-      val ix = Similarity.pqIvfIndex(table(s, dir, "embeddings"))
-      writeOneFile(ix.codebook, s"$staged/codebook.parquet")
+      val (codebook, cent, encoded) = Similarity.pqIvfEncoded(
+        table(s, dir, "embeddings"), subspaces = 8, codebookK = 16)
+      writeOneFile(codebook, s"$staged/codebook.parquet")
       // the route + encode pass runs once; both halves read its blocks
-      val enc = ix.encoded.localCheckpoint(eager = false)
+      val enc = encoded.localCheckpoint(eager = false)
       enc.select(col("vec_id"), col("cp"))
         .write.mode("overwrite").parquet(s"$staged/codes.parquet")
       enc.select(col("vec_id"), col("c_id"))
         .write.mode("overwrite").parquet(s"$staged/cells.parquet")
       // cent last: its _SUCCESS is the stage's completion marker
-      writeOneFile(ix.cent, s"$staged/cent.parquet")
+      writeOneFile(cent, s"$staged/cent.parquet")
     }
-    staged
+    Similarity.PqIvf(
+      Similarity.Pq(readParquet(s, s"$staged/codebook.parquet"),
+        readParquet(s, s"$staged/codes.parquet")),
+      readParquet(s, s"$staged/cells.parquet"),
+      readParquet(s, s"$staged/cent.parquet"))
   }
 
   /** A bounded, locally built frame as ONE parquet file (a local frame
@@ -1178,39 +1013,59 @@ object Vectors extends QueryPack {
                            path: String): Unit =
     df.coalesce(1).write.mode("overwrite").parquet(path)
 
+  /** stage:pq's cells and centroids under another codebook and codes
+    * (the residual and refined stages share the IVF route and swap only
+    * the PQ half). stage:pq is opened, or built, on first use. */
+  private def onPqCells(s: org.apache.spark.sql.SparkSession, dir: String,
+                        pq: Similarity.Pq): Similarity.PqIvf = {
+    lazy val route = stagedPq(s, dir)
+    Similarity.PqIvf(pq, route.cells, route.cent)
+  }
+
   /** IVFADC residual index stage (Jégou et al. 2011 §IV): residuals
     * x − centroid(cell(x)) over the STAGED IVF assignment (no second
     * coarse pass), then the standard PQ train/encode over the residual
     * corpus. Same 16-byte/vector standing index as stage:pq — cells and
     * centroids are SHARED with it, only the codebook/codes differ. */
   private[queries] def stagedResPq(s: org.apache.spark.sql.SparkSession,
-                                   dir: String): String = {
+                                   dir: String): Similarity.PqIvf = {
     val staged = tmpStage(dir, Similarity.ResPqStageTag)
     ensureStaged(staged, "rescodes.parquet/_SUCCESS") {
       val pq = stagedPq(s, dir)
       val res = Similarity.ivfResiduals(table(s, dir, "embeddings"),
-        readParquet(s, s"$pq/cells.parquet"),
-        readParquet(s, s"$pq/cent.parquet"))
+        pq.cells, pq.cent)
       val ix = Similarity.pqIvfIndex(res)
       writeOneFile(ix.codebook, s"$staged/rescodebook.parquet")
       ix.codes.write.mode("overwrite").parquet(s"$staged/rescodes.parquet")
     }
-    staged
+    onPqCells(s, dir, Similarity.Pq(
+      readParquet(s, s"$staged/rescodebook.parquet"),
+      readParquet(s, s"$staged/rescodes.parquet")))
   }
 
   /** Lloyd-refined PQ index stage: the strided seed codebook plus two
     * deterministic refinement rounds (Similarity.pqIndexFramesRefined) —
-    * the trained-sub-quantizer index at the same 8-byte budget. */
+    * the trained-sub-quantizer index at the same 8-byte budget, served
+    * over stage:pq's cells and centroids. */
   private[queries] def stagedRefPq(s: org.apache.spark.sql.SparkSession,
-                                   dir: String): String = {
+                                   dir: String): Similarity.PqIvf = {
     val staged = tmpStage(dir, Similarity.RefPqStageTag)
     ensureStaged(staged, "refcodes.parquet/_SUCCESS") {
-      val (cb, codes) = Similarity.pqIndexFramesRefined(
-        table(s, dir, "embeddings"))
-      writeOneFile(cb, s"$staged/refcodebook.parquet")
-      codes.write.mode("overwrite").parquet(s"$staged/refcodes.parquet")
+      val ix = Similarity.pqIndexFramesRefined(table(s, dir, "embeddings"))
+      writeOneFile(ix.codebook, s"$staged/refcodebook.parquet")
+      ix.codes.write.mode("overwrite").parquet(s"$staged/refcodes.parquet")
     }
-    staged
+    onPqCells(s, dir, Similarity.Pq(
+      readParquet(s, s"$staged/refcodebook.parquet"),
+      readParquet(s, s"$staged/refcodes.parquet")))
+  }
+
+  /** A staged OPQ index: the PQ index over permuted vectors, and the
+    * permutation the query side applies first (perm(newPos) =
+    * originalDim), collected on first use. */
+  private[queries] final class Opq(val pq: Similarity.Pq,
+                                   permOf: => Seq[Int]) {
+    lazy val perm: Seq[Int] = permOf
   }
 
   /** OPQ-lite index stage: the variance-balanced dimension permutation is
@@ -1219,7 +1074,7 @@ object Vectors extends QueryPack {
     * corpus — codebook + codes land beside a (pos, dim) permutation table
     * so the query side permutes its vectors identically. */
   private[queries] def stagedOpq(s: org.apache.spark.sql.SparkSession,
-                                 dir: String): String = {
+                                 dir: String): Opq = {
     val staged = tmpStage(dir, Similarity.OpqStageTag)
     ensureStaged(staged, "codes.parquet/_SUCCESS") {
       val perm = Similarity.opqPermutation(stagedCov(s, dir))
@@ -1233,7 +1088,11 @@ object Vectors extends QueryPack {
       writeOneFile(ix.codebook, s"$staged/codebook.parquet")
       ix.codes.write.mode("overwrite").parquet(s"$staged/codes.parquet")
     }
-    staged
+    new Opq(
+      Similarity.Pq(readParquet(s, s"$staged/codebook.parquet"),
+        readParquet(s, s"$staged/codes.parquet")),
+      readParquet(s, s"$staged/perm.parquet").orderBy(col("pos"))
+        .select(col("dim")).collect().map(_.getLong(0).toInt).toSeq)
   }
 
   /** kNN edge stage — the cell-bounded graph build (IVF assignment +
@@ -1350,31 +1209,57 @@ object Vectors extends QueryPack {
       |  FROM ca2 a JOIN ca2 b ON a.c_id = b.c_id AND a.sub = b.sub
       |    AND a.vec_id != b.vec_id)""".stripMargin
 
-  /** DuckDB twin of ops.Similarity.pqTopK — the full PQ chain (derived
-    * codebook, packed-min encoding with the 10^12 bias, per-query LUT,
-    * ascending-m ADC folds) as a reusable CTE block ending in `pq`
+  /** DuckDB twin of Similarity.pqIvfIndex's PQ half scored by
+    * Similarity.pqTopKFrom — the full PQ chain (derived codebook,
+    * packed-min encoding with the 10^12 bias, per-query LUT, ascending-m
+    * ADC folds) as a reusable CTE block ending in `pq`
     * (q_id, vec_id, sim, rank <= 5). Parameterized over the source
     * relation so the OPQ oracle can run the identical chain over the
     * permuted view. */
   private lazy val pqCtes: String = pqCtesOn("embeddings")
 
-  /** DuckDB twin of Similarity.pqIndexFramesRefined + the flat-ADC recall
-    * audit: strided seed codebook, `iters` Lloyd rounds (packed-min
-    * reassignment — the encode argmin — then decimal-exact 6-dp means cast
-    * to REAL, empty codewords keeping their previous position), encode,
-    * per-query LUT, flat scoring, recall@5 vs brute. */
-  /** Brute-force top-5 CTEs (qe/bq/bscored/b) — the recall-audit baseline
-    * shared by the refined-codebook oracles. */
-  private lazy val bruteCtes: String =
-    s"""qe AS (SELECT greatest(1, CAST(ceil(count(*) / 64.0) AS BIGINT)) AS qevery FROM embeddings),
-      |bq AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id % (SELECT qevery FROM qe) = 0),
+  /** The judged query workload (Similarity.queryStride): every
+    * ⌈n/64⌉-th vector is a query. */
+  private lazy val qeCte: String =
+    "qe AS (SELECT greatest(1, CAST(ceil(count(*) / 64.0) AS BIGINT)) AS qevery FROM embeddings)"
+
+  /** Brute-force top-5 CTEs (bq/bscored/b) — the exact baseline every
+    * recall oracle scores against. `where` filters the scored (e, bq)
+    * pairs. Assumes `qe` is in the WITH list. */
+  private def bruteCtesWhere(where: String): String =
+    s"""bq AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id % (SELECT qevery FROM qe) = 0),
       |bscored AS (
       |  SELECT bq.q_id, e.vec_id, ${cos("bq.q_emb", "e.embedding")} AS sim
-      |  FROM embeddings e CROSS JOIN bq WHERE e.vec_id != bq.q_id),
+      |  FROM embeddings e CROSS JOIN bq$where),
       |b AS (
       |  SELECT q_id, vec_id FROM (
       |    SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS rank
       |    FROM bscored) t WHERE rank <= 5)""".stripMargin
+
+  private lazy val bruteBase: String =
+    bruteCtesWhere(" WHERE e.vec_id != bq.q_id")
+  private lazy val bruteCtes: String = s"$qeCte,\n$bruteBase"
+
+  /** Per-query hits (⟨p⟩h) of the `approx` (q_id, vec_id) list against
+    * the `brute` baseline, and the baseline's list sizes (⟨p⟩kq) — the
+    * SQL twin of Similarity.recall, with recallCols/recallSelect. */
+  private def recallCtes(approx: String, brute: String, p: String): String =
+    s"""${p}h AS (SELECT $brute.q_id, count(*) AS n_hits FROM $brute JOIN $approx USING (q_id, vec_id) GROUP BY 1),
+      |${p}kq AS (SELECT q_id, count(*) AS k FROM $brute GROUP BY 1)""".stripMargin
+
+  /** One leg's n_hits⟨sfx⟩ and recall⟨sfx⟩ columns over ⟨p⟩h/⟨p⟩kq. */
+  private def recallCols(p: String, sfx: String): String =
+    s"""CAST(coalesce(${p}h.n_hits, 0) AS BIGINT) AS n_hits$sfx,
+      |  round(CAST(coalesce(${p}h.n_hits, 0) AS DOUBLE) / ${p}kq.k, 6) AS recall$sfx""".stripMargin
+
+  /** The single-leg recall table over ⟨p⟩h/⟨p⟩kq, ordered by query. */
+  private def recallSelect(p: String): String =
+    s"""SELECT ${p}kq.q_id, ${recallCols(p, "")}
+      |FROM ${p}kq LEFT JOIN ${p}h USING (q_id) ORDER BY q_id""".stripMargin
+
+  /** The recall oracle's tail: `approx` scored against the baseline `b`. */
+  private def recallOracleTail(approx: String): String =
+    s"${recallCtes(approx, "b", "")}\n${recallSelect("")}"
 
   /** Lloyd-refined PQ index CTEs — seed codebook (⟨p⟩cb0), two refinement
     * rounds (⟨p⟩cb1/⟨p⟩cb2), encode (⟨p⟩packed), query LUTs
@@ -1460,8 +1345,7 @@ object Vectors extends QueryPack {
       |  SELECT q_id, vec_id FROM (
       |    SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS rank
       |    FROM ${p}scored) t WHERE rank <= 5),
-      |${p}h AS (SELECT $brute.q_id, count(*) AS n_hits FROM $brute JOIN ${p}5 USING (q_id, vec_id) GROUP BY 1),
-      |${p}kq AS (SELECT q_id, count(*) AS k FROM $brute GROUP BY 1)""".stripMargin
+      |${recallCtes(s"${p}5", brute, p)}""".stripMargin
 
   /** The batch (cells ⨝ codes) index as SQL — what every streamed form of
     * the standing index (per-row ingest, compacted append log) must equal
@@ -1565,10 +1449,8 @@ object Vectors extends QueryPack {
       |${adcRecallLeg("fpacked", "flut", "frn", "fs", "b", "f")},
       |$driftCtes
       |SELECT fkq.q_id,
-      |  CAST(coalesce(fh.n_hits, 0) AS BIGINT) AS n_hits_native,
-      |  round(CAST(coalesce(fh.n_hits, 0) AS DOUBLE) / fkq.k, 6) AS recall_native,
-      |  CAST(coalesce(dh.n_hits, 0) AS BIGINT) AS n_hits_drift,
-      |  round(CAST(coalesce(dh.n_hits, 0) AS DOUBLE) / dkq.k, 6) AS recall_drift
+      |  ${recallCols("f", "_native")},
+      |  ${recallCols("d", "_drift")}
       |FROM fkq JOIN dkq USING (q_id)
       |LEFT JOIN fh USING (q_id) LEFT JOIN dh USING (q_id)
       |ORDER BY q_id""".stripMargin
@@ -1585,29 +1467,25 @@ object Vectors extends QueryPack {
       |${refPqCtesOn("demb", "g")},
       |${adcRecallLeg("gpacked", "glut", "grn", "gs", "db", "g")}
       |SELECT fkq.q_id,
-      |  CAST(coalesce(fh.n_hits, 0) AS BIGINT) AS n_hits_native,
-      |  round(CAST(coalesce(fh.n_hits, 0) AS DOUBLE) / fkq.k, 6) AS recall_native,
-      |  CAST(coalesce(dh.n_hits, 0) AS BIGINT) AS n_hits_drift,
-      |  round(CAST(coalesce(dh.n_hits, 0) AS DOUBLE) / dkq.k, 6) AS recall_drift,
-      |  CAST(coalesce(gh.n_hits, 0) AS BIGINT) AS n_hits_retrained,
-      |  round(CAST(coalesce(gh.n_hits, 0) AS DOUBLE) / gkq.k, 6) AS recall_retrained
+      |  ${recallCols("f", "_native")},
+      |  ${recallCols("d", "_drift")},
+      |  ${recallCols("g", "_retrained")}
       |FROM fkq JOIN dkq USING (q_id) JOIN gkq USING (q_id)
       |LEFT JOIN fh USING (q_id) LEFT JOIN dh USING (q_id)
       |LEFT JOIN gh USING (q_id)
       |ORDER BY q_id""".stripMargin
 
+  /** DuckDB twin of Similarity.pqIndexFramesRefined + the flat-ADC recall
+    * audit: strided seed codebook, `iters` Lloyd rounds (packed-min
+    * reassignment — the encode argmin — then decimal-exact 6-dp means cast
+    * to REAL, empty codewords keeping their previous position), encode,
+    * per-query LUT, flat scoring, recall@5 vs brute. */
   private lazy val refPqRecallOracle: String =
     s"""WITH $bruteCtes,
       |$refPqCtes,
       |${adcRecallLeg("fpacked", "flut", "frn", "fs", "b", "f")}
-      |SELECT fkq.q_id, CAST(coalesce(fh.n_hits, 0) AS BIGINT) AS n_hits,
-      |  round(CAST(coalesce(fh.n_hits, 0) AS DOUBLE) / fkq.k, 6) AS recall
-      |FROM fkq LEFT JOIN fh USING (q_id) ORDER BY q_id""".stripMargin
+      |${recallSelect("f")}""".stripMargin
 
-  /** The IVF-PQ scoring CTEs (centroids, corpus/probe assignment, ADC
-    * scoring over probed cells) shared by sim_ivfpq_topk and
-    * sim_ivfpq_rerank — one text so the two oracles cannot drift. Assumes
-    * $pqCtes is already in the WITH list (uses qe/pqpacked/pqlut/pqrn/pqs). */
   /** The IVF route CTEs alone (centroids, corpus/probe assignment) —
     * index-payload-agnostic, so the raw-code and refined-code oracles
     * share one routing text. Assumes `qe` is in the WITH list. */
@@ -1651,6 +1529,10 @@ object Vectors extends QueryPack {
       |    CROSS JOIN $rn r CROSS JOIN $sTab sc
       |  WHERE p.vec_id <> l.q_id$extraWhere)""".stripMargin
 
+  /** The IVF-PQ scoring CTEs (centroids, corpus/probe assignment, ADC
+    * scoring over probed cells) shared by sim_ivfpq_topk and
+    * sim_ivfpq_rerank — one text so the two oracles cannot drift. Assumes
+    * $pqCtes is already in the WITH list (uses qe/pqpacked/pqlut/pqrn/pqs). */
   private lazy val ivfPqCtes: String =
     s"""$ivfRouteCtes,
       |${ivfAdcScored("iscored", "pqpacked", "pqlut", "pqrn", "pqs")}""".stripMargin
@@ -1808,11 +1690,7 @@ object Vectors extends QueryPack {
       |  SELECT q_id, vec_id FROM (
       |    SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS rank
       |    FROM rirx) t WHERE rank <= 5),
-      |h AS (SELECT b.q_id, count(*) AS n_hits FROM b JOIN rf5 USING (q_id, vec_id) GROUP BY 1),
-      |kq AS (SELECT q_id, count(*) AS k FROM b GROUP BY 1)
-      |SELECT kq.q_id, CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-      |  round(CAST(coalesce(h.n_hits, 0) AS DOUBLE) / kq.k, 6) AS recall
-      |FROM kq LEFT JOIN h USING (q_id) ORDER BY q_id""".stripMargin
+      |${recallOracleTail("rf5")}""".stripMargin
   /** The MIH perceptual-hash oracle, width-parameterized exactly like
     * Multimodal.phashDedup: `bits` block-mean bits in bits/16 subindex
     * words, radius-1 probe enumeration per word, bit_count(xor) verify.
@@ -1924,7 +1802,7 @@ object Vectors extends QueryPack {
   private def pqCtesOn(tbl: String): String = {
     def sl(v: String, m: String) =
       s"list_slice($v, CAST($m*8+1 AS INT), CAST($m*8+8 AS INT))"
-    s"""qe AS (SELECT greatest(1, CAST(ceil(count(*) / 64.0) AS BIGINT)) AS qevery FROM embeddings),
+    s"""$qeCte,
       |pqce AS (SELECT greatest(1, CAST(ceil(count(*) / 16.0) AS BIGINT)) AS every FROM $tbl),
       |pqsd AS (SELECT embedding AS c_emb,
       |    CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS code
@@ -2031,7 +1909,7 @@ object Vectors extends QueryPack {
     "emb_pca_power" -> pcaPowerOracle,
 
     "sim_brute_topk" ->
-      s"""WITH qe AS (SELECT greatest(1, CAST(ceil(count(*) / 64.0) AS BIGINT)) AS qevery FROM embeddings),
+      s"""WITH $qeCte,
         |q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id % (SELECT qevery FROM qe) = 0),
         |scored AS (
         |  SELECT q.q_id, e.vec_id, ${cos("q.q_emb", "e.embedding")} AS sim
@@ -2042,7 +1920,7 @@ object Vectors extends QueryPack {
         |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin,
 
     "sim_lsh_topk" ->
-      s"""WITH qe AS (SELECT greatest(1, CAST(ceil(count(*) / 64.0) AS BIGINT)) AS qevery FROM embeddings),
+      s"""WITH $qeCte,
         |b AS (SELECT vec_id, embedding, $bucket8 AS bucket FROM embeddings),
         |q AS (SELECT vec_id AS q_id, embedding AS q_emb, bucket FROM b WHERE vec_id % (SELECT qevery FROM qe) = 0),
         |scored AS (
@@ -2055,7 +1933,7 @@ object Vectors extends QueryPack {
 
     // Same sign buckets, raw dot-product ranking (the MIPS order).
     "sim_mips_topk" ->
-      s"""WITH qe AS (SELECT greatest(1, CAST(ceil(count(*) / 64.0) AS BIGINT)) AS qevery FROM embeddings),
+      s"""WITH $qeCte,
         |b AS (SELECT vec_id, embedding, $bucket8 AS bucket FROM embeddings),
         |q AS (SELECT vec_id AS q_id, embedding AS q_emb, bucket FROM b WHERE vec_id % (SELECT qevery FROM qe) = 0),
         |scored AS (
@@ -2067,7 +1945,7 @@ object Vectors extends QueryPack {
         |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin,
 
     "sim_ivf_topk" ->
-      s"""WITH qe AS (SELECT greatest(1, CAST(ceil(count(*) / 64.0) AS BIGINT)) AS qevery FROM embeddings),
+      s"""WITH $qeCte,
         |ce AS (
         |  SELECT CAST(ceil(sqrt(count(*))) AS BIGINT) AS every FROM embeddings),
         |cent AS (
@@ -2159,19 +2037,8 @@ object Vectors extends QueryPack {
 
     "sim_pq_recall" ->
       s"""WITH $pqCtes,
-        |bq AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id % (SELECT qevery FROM qe) = 0),
-        |bscored AS (
-        |  SELECT bq.q_id, e.vec_id, ${cos("bq.q_emb", "e.embedding")} AS sim
-        |  FROM embeddings e CROSS JOIN bq WHERE e.vec_id != bq.q_id),
-        |b AS (
-        |  SELECT q_id, vec_id FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS rank
-        |    FROM bscored) t WHERE rank <= 5),
-        |h AS (SELECT b.q_id, count(*) AS n_hits FROM b JOIN pq USING (q_id, vec_id) GROUP BY 1),
-        |kq AS (SELECT q_id, count(*) AS k FROM b GROUP BY 1)
-        |SELECT kq.q_id, CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-        |  round(CAST(coalesce(h.n_hits, 0) AS DOUBLE) / kq.k, 6) AS recall
-        |FROM kq LEFT JOIN h USING (q_id) ORDER BY q_id""".stripMargin,
+        |$bruteBase,
+        |${recallOracleTail("pq")}""".stripMargin,
 
     // Same recall harness over the OPQ-permuted PQ chain: the variance
     // ranking reuses the emb_covariance diagonal discipline (decimal
@@ -2199,30 +2066,11 @@ object Vectors extends QueryPack {
         |  SELECT vec_id, list_select(embedding, (SELECT pl FROM operm)) AS embedding
         |  FROM embeddings),
         |${pqCtesOn("pembeddings")},
-        |bq AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id % (SELECT qevery FROM qe) = 0),
-        |bscored AS (
-        |  SELECT bq.q_id, e.vec_id, ${cos("bq.q_emb", "e.embedding")} AS sim
-        |  FROM embeddings e CROSS JOIN bq WHERE e.vec_id != bq.q_id),
-        |b AS (
-        |  SELECT q_id, vec_id FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS rank
-        |    FROM bscored) t WHERE rank <= 5),
-        |h AS (SELECT b.q_id, count(*) AS n_hits FROM b JOIN pq USING (q_id, vec_id) GROUP BY 1),
-        |kq AS (SELECT q_id, count(*) AS k FROM b GROUP BY 1)
-        |SELECT kq.q_id, CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-        |  round(CAST(coalesce(h.n_hits, 0) AS DOUBLE) / kq.k, 6) AS recall
-        |FROM kq LEFT JOIN h USING (q_id) ORDER BY q_id""".stripMargin,
+        |$bruteBase,
+        |${recallOracleTail("pq")}""".stripMargin,
 
     "sim_lsh_recall" ->
-      s"""WITH qe AS (SELECT greatest(1, CAST(ceil(count(*) / 64.0) AS BIGINT)) AS qevery FROM embeddings),
-        |bq AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id % (SELECT qevery FROM qe) = 0),
-        |bscored AS (
-        |  SELECT bq.q_id, e.vec_id, ${cos("bq.q_emb", "e.embedding")} AS sim
-        |  FROM embeddings e CROSS JOIN bq WHERE e.vec_id != bq.q_id),
-        |b AS (
-        |  SELECT q_id, vec_id FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS rank
-        |    FROM bscored) t WHERE rank <= 5),
+      s"""WITH $bruteCtes,
         |lb AS (SELECT vec_id, embedding, $bucket8 AS bucket FROM embeddings),
         |lq AS (SELECT vec_id AS q_id, embedding AS q_emb, bucket FROM lb WHERE vec_id % (SELECT qevery FROM qe) = 0),
         |lscored AS (
@@ -2232,24 +2080,12 @@ object Vectors extends QueryPack {
         |  SELECT q_id, vec_id FROM (
         |    SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS rank
         |    FROM lscored) t WHERE rank <= 5),
-        |h AS (SELECT b.q_id, count(*) AS n_hits FROM b JOIN l USING (q_id, vec_id) GROUP BY 1),
-        |kq AS (SELECT q_id, count(*) AS k FROM b GROUP BY 1)
-        |SELECT kq.q_id, CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-        |  round(CAST(coalesce(h.n_hits, 0) AS DOUBLE) / kq.k, 6) AS recall
-        |FROM kq LEFT JOIN h USING (q_id) ORDER BY q_id""".stripMargin,
+        |${recallOracleTail("l")}""".stripMargin,
 
     // Brute-force CTEs from sim_lsh_recall + the IVF assignment/probe
     // CTEs from sim_ivf_topk, joined by the same hits/k rollup.
     "sim_ivf_recall" ->
-      s"""WITH qe AS (SELECT greatest(1, CAST(ceil(count(*) / 64.0) AS BIGINT)) AS qevery FROM embeddings),
-        |bq AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id % (SELECT qevery FROM qe) = 0),
-        |bscored AS (
-        |  SELECT bq.q_id, e.vec_id, ${cos("bq.q_emb", "e.embedding")} AS sim
-        |  FROM embeddings e CROSS JOIN bq WHERE e.vec_id != bq.q_id),
-        |b AS (
-        |  SELECT q_id, vec_id FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS rank
-        |    FROM bscored) t WHERE rank <= 5),
+      s"""WITH $bruteCtes,
         |ce AS (
         |  SELECT CAST(ceil(sqrt(count(*))) AS BIGINT) AS every FROM embeddings),
         |cent AS (
@@ -2274,26 +2110,14 @@ object Vectors extends QueryPack {
         |  SELECT q_id, vec_id FROM (
         |    SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS rank
         |    FROM iscored) t WHERE rank <= 5),
-        |h AS (SELECT b.q_id, count(*) AS n_hits FROM b JOIN l USING (q_id, vec_id) GROUP BY 1),
-        |kq AS (SELECT q_id, count(*) AS k FROM b GROUP BY 1)
-        |SELECT kq.q_id, CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-        |  round(CAST(coalesce(h.n_hits, 0) AS DOUBLE) / kq.k, 6) AS recall
-        |FROM kq LEFT JOIN h USING (q_id) ORDER BY q_id""".stripMargin,
+        |${recallOracleTail("l")}""".stripMargin,
 
     // sim_ivf_recall's brute + assignment/probe CTEs with (a) the label
     // predicate pushed into the exact side, (b) the candidate set carrying
     // label so both filtered postures restate over ONE iscored text.
     "sim_filtered_topk" ->
-      s"""WITH qe AS (SELECT greatest(1, CAST(ceil(count(*) / 64.0) AS BIGINT)) AS qevery FROM embeddings),
-        |bq AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id % (SELECT qevery FROM qe) = 0),
-        |bscored AS (
-        |  SELECT bq.q_id, e.vec_id, ${cos("bq.q_emb", "e.embedding")} AS sim
-        |  FROM embeddings e CROSS JOIN bq
-        |  WHERE e.vec_id != bq.q_id AND e.label % 5 = 2),
-        |b AS (
-        |  SELECT q_id, vec_id FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS rank
-        |    FROM bscored) t WHERE rank <= 5),
+      s"""WITH $qeCte,
+        |${bruteCtesWhere("\n  WHERE e.vec_id != bq.q_id AND e.label % 5 = 2")},
         |ce AS (
         |  SELECT CAST(ceil(sqrt(count(*))) AS BIGINT) AS every FROM embeddings),
         |cent AS (
@@ -2381,15 +2205,7 @@ object Vectors extends QueryPack {
     // (q·c + Σ LUT) / ‖q‖ / sqrt(‖c‖² + Σ (2⟨c,r̂⟩+‖r̂‖²)) — every fold
     // ascending-m, every rounded value through `+ 0`.
     "sim_ivfpq_res_recall" ->
-      s"""WITH qe AS (SELECT greatest(1, CAST(ceil(count(*) / 64.0) AS BIGINT)) AS qevery FROM embeddings),
-        |bq AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id % (SELECT qevery FROM qe) = 0),
-        |bscored AS (
-        |  SELECT bq.q_id, e.vec_id, ${cos("bq.q_emb", "e.embedding")} AS sim
-        |  FROM embeddings e CROSS JOIN bq WHERE e.vec_id != bq.q_id),
-        |b AS (
-        |  SELECT q_id, vec_id FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS rank
-        |    FROM bscored) t WHERE rank <= 5),
+      s"""WITH $bruteCtes,
         |ice AS (SELECT CAST(ceil(sqrt(count(*))) AS BIGINT) AS every FROM embeddings),
         |icent AS (
         |  SELECT vec_id AS c_id, embedding AS c_emb FROM embeddings
@@ -2465,11 +2281,7 @@ object Vectors extends QueryPack {
         |  SELECT q_id, vec_id FROM (
         |    SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS rank
         |    FROM rscored) t WHERE rank <= 5),
-        |h AS (SELECT b.q_id, count(*) AS n_hits FROM b JOIN l2 USING (q_id, vec_id) GROUP BY 1),
-        |kq AS (SELECT q_id, count(*) AS k FROM b GROUP BY 1)
-        |SELECT kq.q_id, CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-        |  round(CAST(coalesce(h.n_hits, 0) AS DOUBLE) / kq.k, 6) AS recall
-        |FROM kq LEFT JOIN h USING (q_id) ORDER BY q_id""".stripMargin,
+        |${recallOracleTail("l2")}""".stripMargin,
 
     "sim_cosine_dedup" ->
       s"""SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,

@@ -62,17 +62,6 @@ object StreamOps {
       .select(col("window.start").as("win_start"), col("event_type"),
               col("n"), col("total"))
 
-  /** Sliding-window twin of EventWindows.sliding. */
-  def sliding(events: DataFrame, sizeMin: Int, slideMin: Int,
-              watermark: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), s"$sizeMin minutes", s"$slideMin minutes"),
-               col("event_type"))
-      .agg(count(lit(1)).as("n"), graft.queries.dsum(col("value")).as("total"))
-      .select(col("window.start").as("win_start"), col("event_type"),
-              col("n"), col("total"))
-
   case class Event(event_id: Long, ts: Timestamp, user_id: Long,
                    event_type: String, value: Double)
   case class SessionState(sessionId: Long, startUs: Long, lastUs: Long,

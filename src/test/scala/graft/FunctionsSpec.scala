@@ -213,7 +213,7 @@ class FunctionsSpec extends SparkSpec {
         s"$sf: pqIvfIndex codebook (m, code, c_sub, cn2) diverged")
       assert(sorted(ix.cent, "c_id") == sorted(cent, "c_id"),
         s"$sf: pqIvfIndex centroids (c_id, c_emb, c_nrm) diverged")
-      assert(sorted(ix.encoded, "vec_id") == want,
+      assert(sorted(ix.cells.join(ix.codes, "vec_id"), "vec_id") == want,
         s"$sf: pqIvfIndex codes + cells diverged from the reference")
     }
   }
@@ -228,7 +228,7 @@ class FunctionsSpec extends SparkSpec {
       // residual codebook in ivfPqResTopKFrom
       val ix = Similarity.pqIvfIndex(e)
       val res = Similarity.pqIvfIndex(Similarity.ivfResiduals(e,
-        ix.encoded.select($"vec_id", $"c_id"), ix.cent))
+        ix.cells, ix.cent))
       for (cb <- Seq(ix.codebook, res.codebook)) {
         val meta = Similarity.codebookMeta(cb)
         val lut = sorted(Similarity.pqLut(q, meta), "q_id")

@@ -1960,21 +1960,87 @@ class OpsSpec extends SparkSpec {
     // 12 vectors -> every = ceil(12/16) = 1, so the codebook contains every
     // sub-vector and PQ reconstruction is lossless: the ADC ranking must
     // equal brute force (sims agree to fold-order ulps, well under 6 dp).
+    // The 4-subspace index pins that the scan takes its subspace count
+    // from the codebook, not from a default.
     val e = (0L until 12L).map(i =>
         (i, Array.tabulate(64)(j => math.sin(i * 64.0 + j).toFloat)))
       .toDF("vec_id", "embedding")
     val q = e.filter(col("vec_id") % 4 === 0)
-    val pq = rows(Similarity.pqTopK(e, q, k = 3))
-      .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("rank")) ->
-        (r.getAs[Long]("vec_id"), r.getAs[Double]("sim"))).toMap
     val brute = rows(Similarity.bruteForceTopK(e, q, k = 3))
       .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("rank")) ->
         (r.getAs[Long]("vec_id"), r.getAs[Double]("sim"))).toMap
-    assert(pq.keySet == brute.keySet && pq.keySet.size == 9)
-    for ((k0, (v, s)) <- pq) {
-      assert(brute(k0)._1 == v, s"rank mismatch at $k0")
-      assert(math.abs(brute(k0)._2 - s) <= 1e-6, s"sim drift at $k0")
+    for (subspaces <- Seq(8, 4)) {
+      val ix = Similarity.pqIvfIndex(e, subspaces)
+      val pq = rows(Similarity.pqTopKFrom(ix.pq, q, k = 3))
+        .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("rank")) ->
+          (r.getAs[Long]("vec_id"), r.getAs[Double]("sim"))).toMap
+      assert(pq.keySet == brute.keySet && pq.keySet.size == 9)
+      for ((k0, (v, s)) <- pq) {
+        assert(brute(k0)._1 == v, s"$subspaces subspaces: rank mismatch at $k0")
+        assert(math.abs(brute(k0)._2 - s) <= 1e-6,
+          s"$subspaces subspaces: sim drift at $k0")
+      }
     }
+  }
+
+  test("recall: per-query hits and recall of an approximate ranking, " +
+    "tagged legs side by side") {
+    // q 1: 3 exact neighbors; q 2: an exact list shorter than k; q 3: no
+    // hit in either leg (and no row at all in leg b); q 4 exists only on
+    // the approximate side and has no exact list to score against.
+    val exact = Seq((1L, 10L), (1L, 11L), (1L, 12L), (2L, 20L),
+      (3L, 30L), (3L, 31L)).toDF("q_id", "vec_id")
+    val a = Seq((1L, 10L, 0.9), (1L, 13L, 0.8), (2L, 20L, 0.7),
+      (3L, 32L, 0.6), (4L, 40L, 0.5)).toDF("q_id", "vec_id", "sim")
+    val b = Seq((1L, 10L), (1L, 11L), (1L, 12L), (2L, 21L))
+      .toDF("q_id", "vec_id")
+    val plain = Similarity.recall(exact, a, "")
+    assert(plain.columns.toSeq == Seq("q_id", "n_hits", "recall"))
+    assert(rows(plain.orderBy("q_id")).map(_.toSeq) == Seq(
+      Seq(1L, 1L, 0.333333), Seq(2L, 1L, 1.0), Seq(3L, 0L, 0.0)))
+    val both = Similarity.recall(exact, a, "a")
+      .join(Similarity.recall(exact, b, "b"), "q_id").orderBy("q_id")
+    assert(both.columns.toSeq ==
+      Seq("q_id", "n_hits_a", "recall_a", "n_hits_b", "recall_b"))
+    assert(rows(both).map(_.toSeq) == Seq(
+      Seq(1L, 1L, 0.333333, 3L, 1.0),
+      Seq(2L, 1L, 1.0, 0L, 0.0),
+      Seq(3L, 0L, 0.0, 0L, 0.0)))
+  }
+
+  test("the PQ stages' file names appear in src/main only inside the " +
+    "stage builders") {
+    import java.nio.file.Files
+    val names = Seq("codebook.parquet", "codes.parquet", "cells.parquet",
+      "cent.parquet", "perm.parquet")
+    val builders = Seq("stagedPq", "stagedResPq", "stagedRefPq", "stagedOpq")
+    val files = scala.util.Using.resource(
+        Files.walk(java.nio.file.Paths.get("src/main/scala"))) { w =>
+      import scala.jdk.CollectionConverters._
+      w.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    }
+    def at(src: String, word: String): Seq[Int] =
+      Iterator.iterate(src.indexOf(word))(i => src.indexOf(word, i + 1))
+        .takeWhile(_ >= 0).toSeq
+    val found = for {
+      f <- files
+      src = Files.readString(f)
+      // a builder's body: its `def` up to the closing brace at member
+      // indentation
+      bodies = if (f.getFileName.toString != "Vectors.scala") Nil
+        else builders.map { b =>
+          val from = src.indexOf(s"def $b(")
+          assert(from >= 0, s"stage builder $b not found")
+          (from, src.indexOf("\n  }\n", from))
+        }
+      name <- names
+      i <- at(src, name)
+    } yield (f.getFileName.toString, name,
+      bodies.exists { case (a, z) => i > a && i < z })
+    assert(names.forall(n => found.exists(x => x._2 == n && x._3)),
+      s"a PQ stage file name is missing from the builders: $found")
+    val stray = found.filterNot(_._3)
+    assert(stray.isEmpty, s"PQ stage file names outside the builders: $stray")
   }
 
   test("rerankExact: full shortlist reproduces brute force; a pruned " +
@@ -2087,7 +2153,8 @@ class OpsSpec extends SparkSpec {
     val e = graft.queries.table(spark, "/root/testdata/sf0.001", "embeddings")
     val seed = graft.ops.Similarity.pqIvfIndex(e)
     val (cb0, codes0) = (seed.codebook, seed.codes)
-    val (cb2, codes2) = graft.ops.Similarity.pqIndexFramesRefined(e, iters = 2)
+    val refined = graft.ops.Similarity.pqIndexFramesRefined(e, iters = 2)
+    val (cb2, codes2) = (refined.codebook, refined.codes)
     // the ADC LUT is positional: refinement must preserve the (m, code)
     // key set exactly (empty codewords keep their previous position)
     val k0 = rows(cb0.select($"m", $"code")).map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -2147,15 +2214,20 @@ class OpsSpec extends SparkSpec {
     val ivf = rows(Similarity.ivfTopK(e, q, k = 3, every, nprobe = 2))
       .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("rank")) ->
         (r.getAs[Long]("vec_id"), r.getAs[Double]("sim"))).toMap
-    val ivfpq = rows(Similarity.ivfPqTopK(e, q, k = 3, nprobe = 2))
-      .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("rank")) ->
-        (r.getAs[Long]("vec_id"), r.getAs[Double]("sim"))).toMap
     // every vector seeds the codebook -> ADC reconstruction is lossless,
-    // so the probed candidates AND their ranking match plain IVF
-    assert(ivfpq.keySet == ivf.keySet)
-    for ((k0, (v, s)) <- ivfpq) {
-      assert(ivf(k0)._1 == v, s"rank mismatch at $k0")
-      assert(math.abs(ivf(k0)._2 - s) <= 1e-6, s"sim drift at $k0")
+    // so the probed candidates AND their ranking match plain IVF, at the
+    // default 8 subspaces and at 4
+    for (subspaces <- Seq(8, 4)) {
+      val ivfpq = rows(Similarity.ivfPqTopKFrom(
+          Similarity.pqIvfIndex(e, subspaces), q, k = 3, nprobe = 2))
+        .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("rank")) ->
+          (r.getAs[Long]("vec_id"), r.getAs[Double]("sim"))).toMap
+      assert(ivfpq.keySet == ivf.keySet)
+      for ((k0, (v, s)) <- ivfpq) {
+        assert(ivf(k0)._1 == v, s"$subspaces subspaces: rank mismatch at $k0")
+        assert(math.abs(ivf(k0)._2 - s) <= 1e-6,
+          s"$subspaces subspaces: sim drift at $k0")
+      }
     }
   }
 

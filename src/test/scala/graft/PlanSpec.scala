@@ -128,7 +128,9 @@ class PlanSpec extends SparkSpec {
     // checkpointed projection, so even `table`'s rebalance shuffle is
     // behind it: the plan has no Exchange at all.
     val e = graft.queries.table(spark, dir, "embeddings")
-    val p = graft.ops.Similarity.pqIvfIndex(e).encoded.queryExecution
+    val (_, _, encoded) = graft.ops.Similarity.pqIvfEncoded(e,
+      subspaces = 8, codebookK = 16)
+    val p = encoded.queryExecution
       .explainString(ExplainMode.fromString("formatted"))
     assert(p.contains("pq_packed_cp"),
       "PQ encode lost the native packed-argmin fold")

@@ -383,8 +383,7 @@ class StreamingSpec extends SparkSpec {
     val stream = StreamOps.readEventStream(spark, staged)
       .filter($"vec_id" % stride === 0)
     val ix = Similarity.pqIvfIndex(e)
-    val sl = Similarity.ivfPqStreamShortlist(stream, ix.codebook, ix.codes,
-      ix.cells, ix.cent)
+    val sl = Similarity.ivfPqStreamShortlist(stream, ix)
     val (drained, state) = drainTracked(sl,
       "ann_state_pin", "complete", shufflePartitions = 2)
     assert(state.nonEmpty, "no progress captured")
@@ -419,8 +418,7 @@ class StreamingSpec extends SparkSpec {
       .withWatermark("ingest_ts", "45 minutes")
       .filter($"vec_id" % stride === 0)
     val ix = Similarity.pqIvfIndex(e)
-    val sl = Similarity.ivfPqStreamShortlistEpoch(stream, ix.codebook,
-      ix.codes, ix.cells, ix.cent)
+    val sl = Similarity.ivfPqStreamShortlistEpoch(stream, ix)
     val (_, state) = drainTracked(sl,
       "ann_evict_state_pin", "append", shufflePartitions = 2)
     assert(state.nonEmpty, "no progress captured")
@@ -444,7 +442,8 @@ class StreamingSpec extends SparkSpec {
     import graft.ops.Similarity
     val e = graft.queries.table(spark, dir, "embeddings")
     val ix = Similarity.pqIvfIndex(e)
-    val batch = ix.encoded.orderBy($"vec_id").collect().map(_.toSeq).toSeq
+    val batch = ix.cells.join(ix.codes, "vec_id").orderBy($"vec_id")
+      .collect().map(_.toSeq).toSeq
     assert(streamed.nonEmpty, "index ingest drained nothing at sf0.001")
     assert(streamed == batch,
       s"stream/batch index divergence:\n stream=${streamed.take(5)}…" +
@@ -456,7 +455,7 @@ class StreamingSpec extends SparkSpec {
     val staged = java.nio.file.Files.createTempDirectory("graft_ing").toString
     e.coalesce(4).write.mode("overwrite").parquet(staged)
     val stream = StreamOps.readEventStream(spark, staged)
-    val enc = Similarity.ivfPqStreamEncode(stream, ix.codebook, ix.cent)
+    val enc = Similarity.ivfPqStreamEncode(stream, ix)
     val (drained, state) = drainTracked(enc,
       "index_ingest_state_pin", "append", shufflePartitions = 2)
     assert(state.nonEmpty, "no progress captured")
@@ -542,7 +541,8 @@ class StreamingSpec extends SparkSpec {
       spark, dir).collect().map(_.toSeq).toSeq
     import graft.ops.Similarity
     val e = graft.queries.table(spark, dir, "embeddings")
-    val batch = Similarity.pqIvfIndex(e).encoded
+    val ix = Similarity.pqIvfIndex(e)
+    val batch = ix.cells.join(ix.codes, "vec_id")
       .orderBy($"vec_id").collect().map(_.toSeq).toSeq
     assert(compacted.nonEmpty, "compacted index empty at sf0.001")
     assert(compacted == batch, "compaction changed index CONTENT")

@@ -6,7 +6,7 @@ parquet testdata and compares with the parquet Verify dumped.
 Usage: python3 tools/check.py <sfDir> <verifyOutDir> [query ...]
 (Run `sbt "runMain graft.Verify <sfDir> <outDir>"` first.)
 """
-import sys, os, json, glob
+import sys, os, json, glob, time
 import duckdb
 import pandas as pd
 import numpy as np
@@ -95,15 +95,18 @@ def main():
         if name not in oracle:
             rows_only.append(f"{name} ({len(got)} rows)")
             continue
+        t0 = time.monotonic()
         try:
             want = con.execute(oracle[name]).df()
         except Exception as e:
             print(f"FAIL {name}: oracle SQL error: {e}")
             fails += 1
             continue
+        oracle_s = round(time.monotonic() - t0, 3)
         problems = compare(name, got, want)
         report[name] = {"ok": not problems, "spark_rows": len(got),
-                        "oracle_rows": len(want), "problems": problems[:6]}
+                        "oracle_rows": len(want), "problems": problems[:6],
+                        "oracle_s": oracle_s}
         if problems:
             fails += 1
             print(f"FAIL {name}:")
