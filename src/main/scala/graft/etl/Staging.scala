@@ -66,8 +66,9 @@ object Staging {
     val fs = p.getFileSystem(hconf)
     if (!fs.exists(p)) { overwrite(updates, path); return }
     val existing = readParquet(spark, path)
-    val updKeys = updates
-      .select(key.map(org.apache.spark.sql.functions.col): _*).distinct()
+    // no distinct(): a left_anti join's output does not depend on
+    // duplicate keys on its right side
+    val updKeys = updates.select(key.map(org.apache.spark.sql.functions.col): _*)
     val merged = updates.unionByName(existing.join(updKeys, key, "left_anti"))
     // Unique temp dir so two concurrent runs can't clobber each other's
     // staging; Hadoop delete/rename report failure via FALSE, not an

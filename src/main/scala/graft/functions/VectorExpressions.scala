@@ -185,15 +185,66 @@ object VectorExpressions {
     new GenericArrayData(out)
   }
 
-  /** Spark `round(x, scale)` for doubles, replicated for the loop helpers
-    * below (BigDecimal HALF_UP over the canonical double rendering, NaN/Inf
-    * passed through) — the packed route/encode keys fold a round() per
-    * element, and the fold must be bit-identical to the column form it
-    * replaces (FunctionsSpec pins it on real vectors). */
-  private def sparkRound(x: Double, scale: Int): Double =
+  /** Spark's `round(x, scale)` on a double (HALF_UP on the decimal
+    * `Double.toString(x)` renders, NaN/±Inf passed through, +0.0 for a
+    * zero result), bit for bit, without building a BigDecimal per value.
+    *
+    * Fast path: y = |x|·10^s, t = floor(y), f = y − t; the result is
+    * ±(t + (f > 0.5 ? 1 : 0)) / 10^s, and +0.0 when that is zero. It falls
+    * back to the BigDecimal round when |f − 0.5| ≤ 1e-9·max(1, y) (a tie
+    * or near-tie), when y ≥ 4e15 (so t + 1 < 2^52), for NaN and ±Inf, and
+    * for a scale outside [0, 22] (10^s not an exact double).
+    *
+    * Why it is exact. `Double.toString(x)` lies within about an ulp of x
+    * (it round-trips), so with the product's own rounding y is within
+    * ~4.4e-16·y of the decimal BigDecimal rounds: far inside the 1e-9·y
+    * tie margin, so both sit on the same side of t + 0.5, and a
+    * difference that crosses an integer does not change a half-up
+    * result. For |r| < 2^52, `BigDecimal.doubleValue()` of r·10^-s is
+    * `(double) r / 10^s`, the same single correctly-rounded division as
+    * the fast path (FunctionsSpec compares raw bits against Spark's
+    * `round` on 10^6 doubles at scales 0 and 6). */
+  def halfUpRound(x: Double, scale: Int): Double =
+    if (scale < 0 || scale >= Pow10.length) bigDecimalRound(x, scale)
+    else {
+      val p = Pow10(scale)
+      val y = math.abs(x) * p
+      val t = math.floor(y)
+      val f = y - t
+      // !(y < 4e15) is also true for NaN and ±Inf
+      if (!(y < 4e15) || math.abs(f - 0.5) <= 1e-9 * math.max(1.0, y))
+        bigDecimalRound(x, scale)
+      else {
+        val r = (if (f > 0.5) t + 1.0 else t) / p
+        if (r == 0.0) 0.0 else if (x < 0) -r else r
+      }
+    }
+
+  /** 10^0 … 10^22, every one an exact double. */
+  private val Pow10 = Array.iterate(1.0, 23)(_ * 10.0)
+
+  /** The fallback: Spark's own `round` codegen for a double. */
+  private def bigDecimalRound(x: Double, scale: Int): Double =
     if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) x
     else java.math.BigDecimal.valueOf(x)
       .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** `round(child, scale)` on a DOUBLE child through [[halfUpRound]]: the
+    * same value and bits as Spark's `round`, codegen'd as one static call.
+    * Any other input type fails at analysis. */
+  case class HalfUpRound(child: Expression, scale: Int) extends UnaryExpression
+      with ExpectsInputTypes {
+    override def inputTypes = Seq(DoubleType)
+    override def dataType: DataType = DoubleType
+    override def prettyName: String = "half_up_round"
+    override protected def nullSafeEval(input: Any): Any =
+      halfUpRound(input.asInstanceOf[Double], scale)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev,
+        c => s"graft.functions.VectorExpressions.halfUpRound($c, $scale)")
+    override protected def withNewChildInternal(
+        newChild: Expression): HalfUpRound = copy(child = newChild)
+  }
 
   /** Batch ivfAssign's packed argmax (c_sim desc, c_id asc via the
     * complemented-id packing) folded over a collected centroid-struct array
@@ -227,8 +278,8 @@ object VectorExpressions {
       while (k < n) {
         dot += emb.getFloat(k).toDouble * cEmb.getFloat(k).toDouble; k += 1
       }
-      val cSim = sparkRound(dot / nrm / c.getDouble(2), 6)
-      val pk = (sparkRound(cSim * 1000000L, 0).toLong + 1000000L) *
+      val cSim = halfUpRound(dot / nrm / c.getDouble(2), 6)
+      val pk = (halfUpRound(cSim * 1000000L, 0).toLong + 1000000L) *
         (idMask + 1L) + (idMask - c.getLong(0))
       if (pk > best) best = pk
       j += 1
@@ -270,7 +321,7 @@ object VectorExpressions {
             cSub.getFloat(k).toDouble
           k += 1
         }
-        val pk = (sparkRound((e.getDouble(3) - 2.0 * dot) * 1000000.0, 0)
+        val pk = (halfUpRound((e.getDouble(3) - 2.0 * dot) * 1000000.0, 0)
           .toLong + bias) * 256L + (e.getLong(0) - m.toLong * s)
         if (pk < best) best = pk
         c += 1
@@ -526,6 +577,9 @@ object VectorExpressions {
 
   def vecDrift(a: Column, bias: Double): Column =
     bridge.column(FloatVecDrift(bridge.expression(a), bias))
+
+  def halfUpRound(c: Column, scale: Int): Column =
+    bridge.column(HalfUpRound(bridge.expression(c), scale))
 
   def md5Hash60(s: Column): Column =
     bridge.column(Md5Hash60(bridge.expression(s)))

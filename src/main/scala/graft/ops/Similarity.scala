@@ -241,7 +241,7 @@ object Similarity {
                                              nrmCol: String): DataFrame =
     df.crossJoin(cent)
       .withColumn("c_sim",
-        round(dotf(col(embCol), col("c_emb")) / col(nrmCol) / col("c_nrm"), 6))
+        rz(dotf(col(embCol), col("c_emb")) / col(nrmCol) / col("c_nrm"), 6))
 
   /** Corpus→cell assignment, exposed so graph construction (knnGraph)
     * shares the exact same cell structure: returns
@@ -514,7 +514,7 @@ object Similarity {
     // correctly-rounded IEEE division — the same double round() returns).
     def assign(cent: DataFrame): DataFrame = {
       val packed =
-        (round(col("c_sim") * 1000000L, 0).cast("long") + 1000000L) *
+        (rz(col("c_sim") * 1000000L, 0).cast("long") + 1000000L) *
           (idMask + 1) + (lit(idMask) - col("c_id"))
       scoredAgainst(cent)(base, "embedding", "nrm")
         .groupBy(col("vec_id"), col("embedding"))
@@ -1075,8 +1075,8 @@ object Similarity {
         subDots(col("q_emb"), meta)((d, _) => d).as("lut") +:
         explode(slice(array_sort(
           transform(col("cents"), c => struct(
-            (round(dotf(col("q_emb"), c.getField("c_emb")) / col("q_nrm")
-              / c.getField("c_nrm"), 6) + lit(0.0)).as("c_sim"),
+            rz(dotf(col("q_emb"), c.getField("c_emb")) / col("q_nrm")
+              / c.getField("c_nrm"), 6).as("c_sim"),
             c.getField("c_id").as("c_id"))),
           byCsimDesc), 1, nprobe)).as("p") +: carryCols: _*)
       .select(col("q_id") +: col("q_nrm") +: col("lut") +:
@@ -1156,12 +1156,12 @@ object Similarity {
         .agg(array_sort(collect_list(struct(col("dim"), col("mv")))).as("p"))
         .select(col("m"), col("code"),
           transform(col("p"), x => x.getField("mv").cast("float")).as("c_sub2"))
-      cur = broadcast(Dedup.materialize(
+      cur = Dedup.materialize(
         cur.select(col("m"), col("code"), col("c_sub"))
           .join(means, Seq("m", "code"), "left")
           .select(col("m"), col("code"),
             coalesce(col("c_sub2"), col("c_sub")).as("c_sub"))
-          .withColumn("cn2", dotf(col("c_sub"), col("c_sub")))))
+          .withColumn("cn2", dotf(col("c_sub"), col("c_sub"))))
     }
     cur
   }

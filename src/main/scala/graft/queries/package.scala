@@ -236,15 +236,25 @@ package object queries {
   def davg(c: Column, scale: Int = 6): Column =
     round(sum(c.cast(DecimalType(30, 10))).cast(DoubleType) / count(lit(1)), scale)
 
-  /** Signed-double round with the sign of zero normalized: IEEE
-    * `-0.0 + 0.0 == +0.0`, a no-op on every other value. Spark's `Round`
-    * goes through BigDecimal and emits +0.0 on a negative epsilon where
-    * DuckDB's `round` preserves -0.0 — equal by value, different bytes, so
-    * the driver's hash compare diverges (the round-8 `emb_covariance` red
-    * row). Every rounded double that CAN be a negative epsilon and reaches
-    * a hashed artifact must pass through this on BOTH engines.
-    * DuckDB twin: `round(x, s) + 0`. */
-  def rz(c: Column, scale: Int): Column = round(c, scale) + lit(0.0)
+  /** Signed-double round with the sign of zero normalized: Spark's
+    * `round` emits +0.0 on a negative epsilon where DuckDB's `round`
+    * preserves -0.0 — equal by value, different bytes, so the driver's
+    * hash compare diverges (the round-8 `emb_covariance` red row). Every
+    * rounded double that CAN be a negative epsilon and reaches a hashed
+    * artifact must pass through this on BOTH engines.
+    * DuckDB twin: `round(x, s) + 0`.
+    *
+    * The round is `VectorExpressions.HalfUpRound`: Spark's `round` value
+    * and bits (never -0.0) from y = |x|·10^s, t = floor(y), f = y − t and
+    * ±(t + (f > 0.5 ? 1 : 0)) / 10^s, with Spark's BigDecimal round kept
+    * only for near-ties (|f − 0.5| ≤ 1e-9·max(1, y)), y ≥ 4e15, NaN and
+    * ±Inf. It is exact because `Double.toString(x)`, the decimal Spark
+    * rounds, is within ~4.4e-16·y of y after scaling, far inside the tie
+    * margin, and for |r| < 2^52 BigDecimal's `doubleValue` is the same
+    * `r / 10^s` division (the proof is on `VectorExpressions.halfUpRound`).
+    * `c` must be DOUBLE: any other type fails at analysis. */
+  def rz(c: Column, scale: Int): Column =
+    graft.functions.VectorExpressions.halfUpRound(c, scale)
 
   /** Decimal-space round of a DOUBLE expression: cast to DECIMAL(30,10)
     * (identical in both engines — the dsum tie-free note), round half-up

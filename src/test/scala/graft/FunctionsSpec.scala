@@ -326,4 +326,107 @@ class FunctionsSpec extends SparkSpec {
     assert(got.exists(_.drop(1).exists(_.asInstanceOf[Long] != 0L)),
       "corpus produced only all-zero hashes — the pin is vacuous")
   }
+
+  /** Doubles for the half-up round pins: Gaussian and uniform values over
+    * many magnitudes, exact ties k + 0.5 and (k + 0.5)/10⁶ with their
+    * neighbours just past the tie margin, tiny negatives and ±0.0,
+    * subnormals, NaN and ±Inf, and values either side of the fast path's
+    * 4e15/10^s bound at scales 0 and 6. */
+  private def roundInputs(): Array[Double] = {
+    val r = new scala.util.Random(20261019L)
+    val b = Array.newBuilder[Double]
+    for (_ <- 0 until 300000)
+      b += r.nextGaussian() * math.pow(10, r.nextInt(13) - 6)
+    for (_ <- 0 until 300000)
+      b += (r.nextDouble() * 2 - 1) * math.pow(10, r.nextInt(25) - 8)
+    for (_ <- 0 until 50000) {
+      val k = r.nextInt(2000001) - 1000000L
+      b += k + 0.5
+      b += (k + 0.5) / 1e6
+      b += math.nextUp((k + 0.5) / 1e6)
+      b += math.nextDown((k + 0.5) / 1e6)
+      for (d <- Seq(1e-8, 1e-6, 1e-4)) { b += (k + 0.5 + d) / 1e6; b += (k + 0.5 - d) / 1e6 }
+    }
+    for (_ <- 0 until 50000) {
+      b += -r.nextDouble() * 4e-7
+      b += -r.nextDouble() * 0.4
+      b += java.lang.Double.MIN_VALUE * r.nextInt(1 << 20) * (if (r.nextBoolean()) 1 else -1)
+      b += java.lang.Double.MIN_NORMAL * r.nextDouble() * (if (r.nextBoolean()) 1 else -1)
+    }
+    for (s <- Seq(0, 6); k <- -20000 to 20000) {
+      val c = 4e15 / math.pow(10, s)
+      b += c + k * 37 * math.ulp(c)
+      b += -(c + k * 37 * math.ulp(c))
+    }
+    b ++= Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
+      0.0, -0.0, Double.MaxValue, Double.MinValue, -1e-300,
+      java.lang.Double.MIN_VALUE, -java.lang.Double.MIN_VALUE)
+    b.result()
+  }
+
+  test("HalfUpRound: the raw bits of Spark's round on 10^6 doubles at " +
+    "scales 0 and 6, codegen and interpreted") {
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference,
+      Expression, GenericInternalRow, InterpretedMutableProjection, Literal,
+      Round}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateMutableProjection
+    import org.apache.spark.sql.types.DoubleType
+    import graft.functions.VectorExpressions.{HalfUpRound, halfUpRound}
+    import java.lang.Double.doubleToRawLongBits
+    val xs = roundInputs()
+    assert(xs.length >= 1000000, s"only ${xs.length} inputs")
+    val x = BoundReference(0, DoubleType, nullable = false)
+    // (ours, Spark's) per scale: columns 0/1 at scale 0, 2/3 at scale 6
+    val exprs: Seq[Expression] =
+      Seq(0, 6).flatMap(s => Seq(HalfUpRound(x, s), Round(x, Literal(s))))
+    val projections = Seq(
+      "codegen" -> GenerateMutableProjection.generate(exprs),
+      "interpreted" -> new InterpretedMutableProjection(exprs))
+    val row = new GenericInternalRow(1)
+    for ((mode, p) <- projections) {
+      val bad = Seq.newBuilder[String]
+      var nBad = 0
+      for (v <- xs) {
+        row.update(0, v)
+        val out = p(row)
+        for (i <- Seq(0, 2)) {
+          val (got, want) = (out.getDouble(i), out.getDouble(i + 1))
+          if (doubleToRawLongBits(got) != doubleToRawLongBits(want)) {
+            if (nBad < 5) bad += s"round($v, ${if (i == 0) 0 else 6}) = $got, Spark $want"
+            nBad += 1
+          }
+        }
+      }
+      assert(nBad == 0, s"$mode: $nBad rounds differ from Spark's: ${bad.result()}")
+    }
+    // a negative that rounds to zero, and -0.0, give +0.0
+    for ((v, s) <- Seq((-0.0, 0), (-0.0, 6), (-0.4, 0), (-4e-7, 6),
+        (-1e-300, 6), (-java.lang.Double.MIN_VALUE, 6)))
+      assert(doubleToRawLongBits(halfUpRound(v, s)) == 0L,
+        s"round($v, $s) is not +0.0")
+  }
+
+  test("rz on a DECIMAL column fails at analysis with HalfUpRound's " +
+    "input-type error") {
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      Seq(BigDecimal("1.25")).toDF("x")
+        .select(graft.queries.rz($"x", 1)).collect()
+    }
+    assert(e.getCondition == "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE",
+      e.getMessage)
+    assert(e.getMessage.contains("half_up_round"), e.getMessage)
+  }
+
+  test("java.math.BigDecimal appears in VectorExpressions only in the " +
+    "round's fallback") {
+    val src = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths
+      .get("src/main/scala/graft/functions/VectorExpressions.scala")), "UTF-8")
+    val start = src.indexOf("private def bigDecimalRound(")
+    val end = src.indexOf("\n\n", start)
+    assert(start >= 0 && end > start, "the BigDecimal fallback is gone")
+    val uses = "java\\.math\\.BigDecimal".r.findAllMatchIn(src).map(_.start).toSeq
+    assert(uses.nonEmpty && uses.forall(i => i > start && i < end),
+      "java.math.BigDecimal is used outside bigDecimalRound: a per-value " +
+        "BigDecimal on a kernel path is the cost HalfUpRound removes")
+  }
 }

@@ -2147,13 +2147,56 @@ class OpsSpec extends SparkSpec {
       s"short-doc exact dup dropped (NULL band words?): $got")
   }
 
+  /** `body`'s result and the hint warnings Spark's HintErrorLogger logged
+    * on this thread while it ran. A broadcast hint on a non-join plan first
+    * checks that the capture sees them. */
+  private def hintWarnings[T](body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val thread = Thread.currentThread().getName
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("hint-warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(ev: LogEvent): Unit =
+        if (ev.getThreadName == thread)
+          seen.add(ev.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.catalyst.analysis.HintErrorLogger")
+      .asInstanceOf[Logger]
+    val level = logger.getLevel
+    logger.setLevel(Level.WARN)
+    logger.addAppender(appender)
+    try {
+      broadcast(spark.range(3).toDF("x")).agg(max($"x")).collect()
+      assert(!seen.isEmpty, "the HintErrorLogger capture saw no warning")
+      seen.clear()
+      val out = body
+      (out, seen.toArray(Array.empty[String]).toSeq)
+    } finally {
+      logger.removeAppender(appender)
+      logger.setLevel(level)
+      appender.stop()
+    }
+  }
+
   test("pqIndexFramesRefined: Lloyd rounds keep codes dense and do not " +
     "raise quantization distortion vs the strided seed codebook") {
     import org.apache.spark.sql.DataFrame
     val e = graft.queries.table(spark, "/root/testdata/sf0.001", "embeddings")
     val seed = graft.ops.Similarity.pqIvfIndex(e)
     val (cb0, codes0) = (seed.codebook, seed.codes)
-    val refined = graft.ops.Similarity.pqIndexFramesRefined(e, iters = 2)
+    // the Lloyd rounds carry no hint Spark drops: HintErrorLogger warns on
+    // this thread for none of them (nor for the encode over the result)
+    val (refined, dropped) = hintWarnings {
+      val ix = graft.ops.Similarity.pqIndexFramesRefined(e, iters = 2)
+      ix.codes.collect()
+      ix
+    }
+    assert(dropped.isEmpty, s"Spark dropped hints: $dropped")
     val (cb2, codes2) = (refined.codebook, refined.codes)
     // the ADC LUT is positional: refinement must preserve the (m, code)
     // key set exactly (empty codewords keep their previous position)

@@ -155,7 +155,7 @@ class PlanSpec extends SparkSpec {
       sparkJobs(graft.queries.Stages.all.toMap.apply("stage:pq")(spark, d))
     }
     val (small, large) = (buildJobs("sf0.001"), buildJobs("sf0.01"))
-    assert(small == large && small <= 7,
+    assert(small == large && small == 7,
       s"stage:pq ran $small jobs at sf0.001 and $large at sf0.01")
   }
 
@@ -176,7 +176,7 @@ class PlanSpec extends SparkSpec {
           .forEach(f => java.nio.file.Files.delete(f)))
     }
     val (small, large) = (rowJobs("sf0.001"), rowJobs("sf0.01"))
-    assert(small == large && small <= 7,
+    assert(small == large && small == 7,
       s"sim_pq_topk ran $small jobs at sf0.001 and $large at sf0.01")
   }
 
