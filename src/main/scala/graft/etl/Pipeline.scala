@@ -23,17 +23,16 @@ import graft.queries.{parquetRows, readParquet}
   */
 object Pipeline {
 
-  /** Timestamped audit log ("ts - LEVEL - name - message", the
+  /** Timestamped audit log ("ts - LEVEL - etl - message", the
     * core/logger.py format). Lines are retained in memory for assertions
     * and mirrored to `sink` (stderr by default). */
-  final class Audit(name: String = "etl",
-                    sink: String => Unit = Console.err.println(_)) {
+  final class Audit(sink: String => Unit = Console.err.println(_)) {
     private val buf = mutable.ListBuffer.empty[(String, String)]
     private val fmt =
       java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss,SSS")
     private def emit(level: String, msg: String): Unit = synchronized {
       buf += ((level, msg))
-      sink(s"${java.time.LocalDateTime.now().format(fmt)} - $level - $name - $msg")
+      sink(s"${java.time.LocalDateTime.now().format(fmt)} - $level - etl - $msg")
     }
     def info(msg: String): Unit = emit("INFO", msg)
     def warn(msg: String): Unit = emit("WARNING", msg)

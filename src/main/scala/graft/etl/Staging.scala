@@ -136,13 +136,9 @@ object Staging {
   }
 
   /** K4 — index DDL analogue (load_to_staging.py:7-16): no index concept in
-    * Spark; the physical equivalent is a sorted, optionally partitioned
-    * layout so downstream scans prune + skip via parquet min/max stats. */
-  def overwriteSorted(df: DataFrame, path: String, sortCols: Seq[String],
-                      partitionCols: Seq[String] = Nil): Unit = {
-    val w = df.sortWithinPartitions(sortCols.map(df(_)): _*)
-      .write.mode("overwrite")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(path)
-  }
+    * Spark; the physical equivalent is a sorted layout so downstream
+    * scans skip via parquet min/max stats. */
+  def overwriteSorted(df: DataFrame, path: String, sortCols: Seq[String]): Unit =
+    df.sortWithinPartitions(sortCols.map(df(_)): _*)
+      .write.mode("overwrite").parquet(path)
 }

@@ -85,10 +85,10 @@ object functions {
   /** F12 (extension, no reference analogue) — date arithmetic family:
     * month truncation, end-of-month, clamped month addition, day-of-week
     * normalized to 0=Sunday (Spark's dayofweek is 1=Sunday). */
-  def dateArith(ts: Column, addMonths: Int = 3): Seq[(String, Column)] = Seq(
+  def dateArith(ts: Column): Seq[(String, Column)] = Seq(
     "mth"   -> date_trunc("month", ts).cast(DateType),
     "eom"   -> last_day(ts),
-    "plus3" -> add_months(ts, addMonths),
+    "plus3" -> add_months(ts, 3),
     "dow"   -> (dayofweek(ts) - 1).cast(IntegerType)
   )
 

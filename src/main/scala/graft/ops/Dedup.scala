@@ -22,8 +22,9 @@ object Dedup {
     * results (graft.queries.TextOps). Kept HERE, next to the code they
     * fingerprint, so a change to the clustering / signature logic and the
     * tag bump land in the same file review. BUMP the matching tag with ANY
-    * behavioral change to: ngramJaccard/duplicateClusters (cluster tag);
-    * minHashSignatures/seededHash (minhash tag). Cross-process staleness is
+    * behavioral change to: ngramJaccardCanonical /
+    * duplicateClustersFromCanonical (cluster tag); minHashSignatures /
+    * seededHash (minhash tag). Cross-process staleness is
     * additionally impossible: Verify/Bench wipe all stage dirs at startup
     * (queries.wipeStages), so a judged run always recomputes at least once. */
   val ClusterStageTag = "ddclusters_v2"
@@ -31,8 +32,8 @@ object Dedup {
   /** Fingerprints the ngramJaccardCanonical(threshold=0.5) factorization
     * (canonical pairs + membership) the cluster/graph family shares
     * (dd_ngram_jaccard, stagedClusters' builder, gr1/gr2/gr3) — bump with
-    * any change to ngramJaccard, the canonicalization key, or the token
-    * normalization. */
+    * any change to its candidate generation, the canonicalization key, or
+    * the token normalization. */
   val PairStageTag = "ddpairs05_v3" // v3: group fingerprint md5 -> sha2-256
   /** Fingerprints gramHashes (seed, normalization, explode shape) at the
     * n=4 the decontamination queries use. */
@@ -122,10 +123,9 @@ object Dedup {
     * output); it is chunked so a single mega-class's pair grid spreads
     * over chunks² tasks instead of pinning one. Unordered — callers sort. */
   private[graft] def expandMemberPairs(canon: DataFrame, members: DataFrame,
-                                       extras: Seq[(String, Column)],
-                                       chunks: Int): DataFrame = {
+                                       extras: Seq[(String, Column)]): DataFrame = {
     val multi = members.filter(col("r") >= 2).select(col("doc_id"), col("rep"))
-    val (a, b, chunkCond) = Skew.chunkedSelfJoin(multi, "doc_id", chunks)
+    val (a, b, chunkCond) = Skew.chunkedSelfJoin(multi, "doc_id", Chunks)
     val intra = a.join(b, col("a.rep") === col("b.rep") && chunkCond &&
         col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a") +: col("b.doc_id").as("doc_b") +:
@@ -172,31 +172,29 @@ object Dedup {
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
       .orderBy(col("keep_id"))
 
-  /** Shared blocking key for the near-dup variants: token-count bucket
+  /** Shared blocking key for the near-dup variants: raw token count / 10
     * (floor-division — DuckDB CAST would round-to-nearest, SURVEY §8).
     *
     * RECALL CONTRACT (pinned by PropertySpec): blocking is exact-match on
     * the bucket, so a near-dup pair whose token counts straddle a bucket
-    * edge (e.g. 9 vs 10 tokens with bucketTokens=10) is NOT emitted by the
-    * blocked variants (ngramJaccard, editDistance), no matter how similar
-    * the texts. This is the deliberate recall/cost trade of
-    * sum(block²)-style pair generation; pairs lost at the boundary are the
-    * ones whose lengths differ by ≥1 raw token across a multiple of
-    * bucketTokens. The UNBLOCKED detectors (minHashLsh/minHashVerified,
-    * simHash) do not share this blind spot and recover such pairs — run
-    * them alongside the blocked variants when boundary recall matters. */
-  private def tokenBucket(bucketTokens: Int): Column =
-    floor(size(split(col("text"), "\\s+")).cast("double") / lit(bucketTokens))
-      .cast("long")
-
-  /** The exact-dup canonical group key's three columns — (lang,
-    * canonBucket, canonFpOf(canonToks)) is the group identity
+    * edge (e.g. 9 vs 10 tokens) is NOT emitted by the blocked variants
+    * (ngramJaccardCanonical, editDistance), no matter how similar the
+    * texts. This is the deliberate recall/cost trade of sum(block²)-style
+    * pair generation; pairs lost at the boundary are the ones whose
+    * lengths differ by ≥1 raw token across a multiple of 10. The
+    * UNBLOCKED detectors (minHashVerifiedFromSignatures, simHash) do not
+    * share this blind spot and recover such pairs — run them alongside the
+    * blocked variants when boundary recall matters.
+    *
+    * It is also one of the exact-dup canonical group key's three columns
+    * — (lang, canonBucket, canonFpOf(canonToks)) is the group identity
     * [[ngramJaccardCanonical]] factorizes on (and dd_canon_groups judges).
     * Public so the STREAMING curation-ingest gate keys arriving documents
     * on the IDENTICAL arithmetic: membership in the standing corpus's key
     * set IS membership in its canonical exact-dup groups. Requires the
     * frame to carry `text`, `lang`, `doc_id`. */
-  def canonBucket: Column = tokenBucket(10)
+  def canonBucket: Column =
+    floor(size(split(col("text"), "\\s+")).cast("double") / lit(10)).cast("long")
 
   /** Sorted distinct token set of the normalized text — the canonical
     * group's set representation (see [[ngramJaccardCanonical]]). */
@@ -213,8 +211,10 @@ object Dedup {
         sha2(concat_ws(" ", toks), 256))
       .otherwise(concat(lit("solo:"), col("doc_id").cast("string")))
 
-  /** Word n-gram shingles of the normalized text, distinct. */
-  def shingles(c: Column, n: Int = 3): Column = {
+  /** Word 3-shingles of the normalized text, distinct (the MinHash
+    * shingle length). */
+  def shingles(c: Column): Column = {
+    val n = ShingleLen
     val toks = split(F.normalizeText(lower(c)), " ")
     array_distinct(
       when(size(toks) >= n,
@@ -223,14 +223,6 @@ object Dedup {
       .otherwise(array(concat_ws(" ", toks))))
   }
 
-  /** MinHash signature + banded LSH candidate pairs.
-    *
-    * numHashes independent min-hashes via seeded xxhash64 over the shingle
-    * set; signatures split into `bands` bands hashed to buckets; documents
-    * sharing any band bucket become a candidate pair. One explode + one
-    * group-by (signature build), one explode + self-join on (band, hash)
-    * (bucketing). Returns (doc_a, doc_b) with doc_a < doc_b, distinct.
-    */
   /** MinHash permutation family: ONE 60-bit md5 base hash per shingle plus
     * an affine family over its 30-bit halves,
     *   hᵢ = (aᵢ·hi + bᵢ·lo + cᵢ) mod p,   p = 2⁶¹−1,
@@ -245,13 +237,27 @@ object Dedup {
   def minHashB(i: Int): Long = ((0xC2B2AE3D27D4EB4FL * (i + 1)) >>> 33) | 1L
   def minHashC(i: Int): Long = (0x165667B19E3779F9L * (i + 1)) >>> 33
 
-  /** MinHash signature table: doc_id plus numHashes min-hash columns
-    * h0..h{n-1}, all computed in one pass (map-side partial aggregation).
+  /** The MinHash layout: 16 hashes over word 3-shingles, banded for LSH
+    * into 4 bands of 4 rows. Operators that read a signature table take
+    * the hash count from its h* columns ([[sigWidth]]). */
+  private val NumHashes = 16
+  private val ShingleLen = 3
+  private val Bands = 4
+  /** Chunks per side of every skew-chunked self-join in this file
+    * (Skew.chunkedSelfJoin spreads a hot key's pair grid over chunks²
+    * tasks). */
+  private val Chunks = 4
+
+  private def sigWidth(sig: DataFrame): Int =
+    sig.columns.count(_.matches("h\\d+"))
+
+  /** MinHash signature table: doc_id plus 16 min-hash columns
+    * h0..h15, all computed in one pass (map-side partial aggregation).
     * Shingles via index-explode (codegen'd slice/concat) rather than the
     * interpreted transform(sequence(...)) lambda of `shingles`; duplicate
     * shingles are harmless under the min aggregate, so no distinct pass. */
-  def minHashSignatures(docs: DataFrame, numHashes: Int = 16,
-                        shingleLen: Int = 3): DataFrame = {
+  def minHashSignatures(docs: DataFrame): DataFrame = {
+    val shingleLen = ShingleLen
     val toks = split(F.normalizeText(lower(col("text"))), " ")
     val base = docs.select(col("doc_id"), toks.as("toks"))
     val long = base.filter(size(col("toks")) >= shingleLen)
@@ -268,7 +274,7 @@ object Dedup {
       .select(col("doc_id"),
         shiftrightunsigned(col("h"), 30).as("hhi"),
         col("h").bitwiseAND(lit((1L << 30) - 1)).as("hlo"))
-    val hashAggs = (0 until numHashes).map { i =>
+    val hashAggs = (0 until NumHashes).map { i =>
       min((col("hhi") * minHashA(i) + col("hlo") * minHashB(i) + minHashC(i))
         % MinHashP).as(s"h$i")
     }
@@ -285,11 +291,11 @@ object Dedup {
     * signature table is being staged anyway) would force a stateful
     * streaming aggregation before the corpus join, capping the query at
     * one stateful operator total. Bit-identical to minHashSignatures:
-    * same normalize/shingle rules (windows of `shingleLen`, whole text
+    * same normalize/shingle rules (3-token windows, whole text
     * when shorter), same seededHash split, same (A·hhi + B·hlo + C) mod P
     * lattice — PropertySpec pins the equality on random corpora. */
-  def minHashSignaturesMapOnly(docs: DataFrame, numHashes: Int = 16,
-                               shingleLen: Int = 3): DataFrame = {
+  def minHashSignaturesMapOnly(docs: DataFrame): DataFrame = {
+    val shingleLen = ShingleLen
     val toks = split(F.normalizeText(lower(col("text"))), " ")
     val shingles = when(size(col("toks")) >= shingleLen,
       transform(sequence(lit(1), size(col("toks")) - (shingleLen - 1)),
@@ -306,7 +312,7 @@ object Dedup {
         transform(col("hraw"), h => struct(
           shiftrightunsigned(h, 30).as("hhi"),
           h.bitwiseAND(lit((1L << 30) - 1)).as("hlo"))).as("hs"))
-    val sigCols = (0 until numHashes).map { i =>
+    val sigCols = (0 until NumHashes).map { i =>
       aggregate(col("hs"), lit(Long.MaxValue),
         (acc, e) => least(acc,
           (e.getField("hhi") * minHashA(i) + e.getField("hlo") * minHashB(i)
@@ -332,12 +338,12 @@ object Dedup {
     * explode, md5, 16-min aggregation) would execute once per side. */
   /** (doc_id, band, bh) bucket rows for a signature table — the LSH
     * blocking key shared by the self-join (lshCandidates) and the
-    * batch-vs-corpus join (incrementalLsh). */
-  def bandBuckets(sig: DataFrame, numHashes: Int = 16,
-                  bands: Int = 4): DataFrame = {
-    require(numHashes % bands == 0)
-    val rowsPerBand = numHashes / bands
-    val bandCols = (0 until bands).map { b =>
+    * batch-vs-corpus join (incrementalLshFromBuckets). */
+  def bandBuckets(sig: DataFrame): DataFrame = {
+    val numHashes = sigWidth(sig)
+    require(numHashes % Bands == 0)
+    val rowsPerBand = numHashes / Bands
+    val bandCols = (0 until Bands).map { b =>
       val cols = (0 until rowsPerBand).map(r => col(s"h${b * rowsPerBand + r}"))
       struct(lit(b).as("band"), concat_ws(",", cols: _*).as("bh")).as(s"b$b")
     }
@@ -345,10 +351,8 @@ object Dedup {
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.bh").as("bh"))
   }
 
-  private def lshCandidates(sig: DataFrame, numHashes: Int,
-                            bands: Int, chunks: Int): DataFrame = {
-    val buckets = bandBuckets(sig, numHashes, bands)
-    val (a, b, chunkCond) = Skew.chunkedSelfJoin(buckets, "doc_id", chunks)
+  private def lshCandidates(sig: DataFrame): DataFrame = {
+    val (a, b, chunkCond) = Skew.chunkedSelfJoin(bandBuckets(sig), "doc_id", Chunks)
     a.join(b, col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
               chunkCond && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
@@ -368,24 +372,15 @@ object Dedup {
     * the canonical corpus contributes ONE row per class per band, and the
     * member-level pair table (inherently r²-sized) is reconstructed
     * output-bounded by [[expandMemberPairs]]. */
-  private def canonicalLshCandidates(sig: DataFrame, numHashes: Int,
-      bands: Int, chunks: Int): (DataFrame, DataFrame, DataFrame) = {
-    val keyCols = (0 until numHashes).map(i => s"h$i")
+  private def canonicalLshCandidates(
+      sig: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val keyCols = (0 until sigWidth(sig)).map(i => s"h$i")
     val members = materialize(signatureMembers(sig, keyCols))
     val repSigs = materialize(sig.join(
       members.filter(col("doc_id") === col("rep")).select(col("doc_id")),
       "doc_id"))
-    (lshCandidates(repSigs, numHashes, bands, chunks), members, repSigs)
+    (lshCandidates(repSigs), members, repSigs)
   }
-
-  def minHashLsh(docs: DataFrame, numHashes: Int = 16, bands: Int = 4,
-                 shingleLen: Int = 3, chunks: Int = 4): DataFrame =
-    // localCheckpoint: the signature build (the expensive md5 + 16-min
-    // aggregation) runs once, not once per join side; swap for reliable
-    // checkpoint on a real cluster (see duplicateClusters).
-    minHashPairsFromSignatures(
-      materialize(minHashSignatures(docs, numHashes, shingleLen)),
-      numHashes, bands, chunks)
 
   /** Banded-LSH pairs over an ALREADY-MATERIALIZED signature table (staged
     * parquet, checkpoint, cached) — the entry point for pipelines that
@@ -398,31 +393,11 @@ object Dedup {
     * to the direct self-join (every same-class pair collides in all bands;
     * a cross pair collides iff its reps do), work r²-smaller per
     * duplicate class. */
-  def minHashPairsFromSignatures(sig: DataFrame, numHashes: Int = 16,
-                                 bands: Int = 4, chunks: Int = 4): DataFrame = {
-    val (canon, members, _) = canonicalLshCandidates(sig, numHashes, bands, chunks)
-    expandMemberPairs(canon, members, Nil, chunks)
+  def minHashPairsFromSignatures(sig: DataFrame): DataFrame = {
+    val (canon, members, _) = canonicalLshCandidates(sig)
+    expandMemberPairs(canon, members, Nil)
       .orderBy(col("doc_a"), col("doc_b"))
   }
-
-  /** MinHash candidates WITH the verification stage a production dedup
-    * needs: raw banded-LSH output contains false positives (one colliding
-    * band is enough to pair two documents). Each candidate is re-scored by
-    * full-signature agreement — est_jaccard = |{i : hᵢ(a)=hᵢ(b)}| / n, the
-    * unbiased MinHash estimate of the true shingle-set Jaccard — and only
-    * pairs at or above `minEst` survive (simHash's hamming filter, in
-    * Jaccard space). Two extra equi-joins against the (doc_id, 16-column)
-    * signature table; the signatures are computed once and reused for
-    * bucketing and verification. */
-  def minHashVerified(docs: DataFrame, numHashes: Int = 16, bands: Int = 4,
-                      shingleLen: Int = 3, minEst: Double = 0.5,
-                      chunks: Int = 4): DataFrame =
-    // Materialized once, consumed three times (bucketing + both sides of
-    // the verification join) — unmaterialized, the signature build would
-    // execute three times.
-    minHashVerifiedFromSignatures(
-      materialize(minHashSignatures(docs, numHashes, shingleLen)),
-      numHashes, bands, minEst, chunks)
 
   /** Incremental (batch-vs-corpus) LSH dedup — the ingestion-time shape:
     * a NEW batch of documents is checked against the already-indexed
@@ -439,14 +414,10 @@ object Dedup {
     * disk; a daily batch's buckets broadcast (MBs), and the scan prunes to
     * colliding buckets — the pattern this operator pins. Compose
     * `Dedup.exact` over the batch first when batches carry exact-dup
-    * floods (same caveat as lshCandidates). */
-  def incrementalLsh(batchSig: DataFrame, corpusSig: DataFrame,
-                     numHashes: Int = 16, bands: Int = 4): DataFrame =
-    incrementalLshFromBuckets(batchSig, bandBuckets(corpusSig, numHashes, bands),
-      numHashes, bands)
-
-  /** incrementalLsh against an ALREADY-BANDED corpus — the form the 100 TB
-    * layout actually runs: the corpus band table lives on disk bucketed by
+    * floods (same caveat as lshCandidates).
+    *
+    * The corpus side arrives ALREADY BANDED — the form the 100 TB layout
+    * actually runs: the corpus band table lives on disk bucketed by
     * its join key (graft.queries.TextOps stages it via bucketBy), so the
     * corpus side arrives pre-partitioned and never shuffles — not for the
     * broadcast join the judged query plans (batch buckets are MBs), and not
@@ -459,9 +430,8 @@ object Dedup {
     *        a daily batch's buckets are MBs against a corpus of TBs); pass
     *        false to let the planner choose (the SMJ fallback path). */
   def incrementalLshFromBuckets(batchSig: DataFrame, corpusBuckets: DataFrame,
-                                numHashes: Int = 16, bands: Int = 4,
                                 broadcastBatch: Boolean = true): DataFrame = {
-    val nb0 = bandBuckets(batchSig, numHashes, bands)
+    val nb0 = bandBuckets(batchSig)
       .select(col("doc_id").as("new_doc"), col("band"), col("bh"))
     val nb = if (broadcastBatch) broadcast(nb0) else nb0
     nb.join(corpusBuckets, Seq("band", "bh"))
@@ -477,12 +447,13 @@ object Dedup {
     * training side of the boundary (train/test contamination that exact
     * decontamination misses, because nothing was copied verbatim). Banded
     * LSH pairs eval against train, then full-signature agreement
-    * (est_jaccard, the minHashVerified rule) confirms; returns one row per
+    * (est_jaccard ≥ 0.5, the minHashVerifiedFromSignatures rule) confirms;
+    * returns one row per
     * leaking eval doc: n_leaks (confirmed distinct train near-dups),
     * max_est, first_leak (smallest such train doc_id).
     *
     * Shape at scale: the eval side of a 98/1/1 split is ~2% of the corpus
-    * — its band buckets broadcast (the incrementalLsh posture with eval as
+    * — its band buckets broadcast (the incrementalLshFromBuckets posture with eval as
     * the batch), so the train signature table streams through one map-side
     * join and is never shuffled or self-joined. The verification joins are
     * candidate-bounded. Callers pass MATERIALIZED signature slices (both
@@ -494,12 +465,11 @@ object Dedup {
     * fit the driver/executor broadcast budget — fine for the designed
     * ~1–2% eval slice at any corpus size, since the table is rows × bands
     * of (long, int, long)). */
-  def splitLeakage(evalSig: DataFrame, trainSig: DataFrame,
-                   numHashes: Int = 16, bands: Int = 4,
-                   minEst: Double = 0.5): DataFrame = {
-    val eb = broadcast(bandBuckets(evalSig, numHashes, bands)
+  def splitLeakage(evalSig: DataFrame, trainSig: DataFrame): DataFrame = {
+    val numHashes = sigWidth(evalSig)
+    val eb = broadcast(bandBuckets(evalSig)
       .select(col("doc_id").as("eval_doc"), col("band"), col("bh")))
-    val cand = eb.join(bandBuckets(trainSig, numHashes, bands), Seq("band", "bh"))
+    val cand = eb.join(bandBuckets(trainSig), Seq("band", "bh"))
       .select(col("eval_doc"), col("doc_id").as("train_doc"))
       .distinct()
     val agree = (0 until numHashes).map { i =>
@@ -509,7 +479,7 @@ object Dedup {
     cand.join(evalSig.as("a"), cand("eval_doc") === col("a.doc_id"))
       .join(trainSig.as("b"), cand("train_doc") === col("b.doc_id"))
       .select(col("eval_doc"), col("train_doc"), est.as("est_jaccard"))
-      .filter(col("est_jaccard") >= minEst)
+      .filter(col("est_jaccard") >= 0.5)
       .groupBy(col("eval_doc"))
       .agg(count(lit(1)).as("n_leaks"),
         max(col("est_jaccard")).as("max_est"),
@@ -517,8 +487,14 @@ object Dedup {
       .orderBy(col("eval_doc"))
   }
 
-  /** Verified-pair twin of minHashPairsFromSignatures over a materialized
-    * signature table (see minHashVerified for semantics). Canonical form:
+  /** MinHash candidates WITH the verification stage a production dedup
+    * needs: raw banded-LSH output contains false positives (one colliding
+    * band is enough to pair two documents). Each candidate is re-scored by
+    * full-signature agreement — est_jaccard = |{i : hᵢ(a)=hᵢ(b)}| / n, the
+    * unbiased MinHash estimate of the true shingle-set Jaccard — and only
+    * pairs at or above `minEst` survive (simHash's hamming filter, in
+    * Jaccard space). Two extra equi-joins against the (doc_id, 16-column)
+    * MATERIALIZED signature table, which the bucketing reuses. Canonical form:
     * candidates AND the full-signature verification run on one
     * representative per distinct signature (est is a pure function of the
     * two signatures, so twins provably inherit their rep pair's estimate,
@@ -526,11 +502,10 @@ object Dedup {
     * same double the direct join's round(16/16, 6) produces). The
     * post-expansion filter re-checks cross pairs harmlessly (their rep
     * est already passed) and correctly drops intra pairs iff minEst > 1. */
-  def minHashVerifiedFromSignatures(sig: DataFrame, numHashes: Int = 16,
-                                    bands: Int = 4, minEst: Double = 0.5,
-                                    chunks: Int = 4): DataFrame = {
-    val (cand, members, repSigs) =
-      canonicalLshCandidates(sig, numHashes, bands, chunks)
+  def minHashVerifiedFromSignatures(sig: DataFrame,
+                                    minEst: Double = 0.5): DataFrame = {
+    val numHashes = sigWidth(sig)
+    val (cand, members, repSigs) = canonicalLshCandidates(sig)
     val agree = (0 until numHashes).map { i =>
       when(col(s"a.h$i") === col(s"b.h$i"), 1).otherwise(0)
     }.reduce(_ + _)
@@ -542,8 +517,7 @@ object Dedup {
       .join(repSigs.as("b"), cand("doc_b") === col("b.doc_id"))
       .select(col("doc_a"), col("doc_b"), est.as("est_jaccard"))
       .filter(col("est_jaccard") >= minEst)
-    expandMemberPairs(canonEst, members,
-        Seq("est_jaccard" -> lit(1.0)), chunks)
+    expandMemberPairs(canonEst, members, Seq("est_jaccard" -> lit(1.0)))
       .filter(col("est_jaccard") >= minEst)
       .orderBy(col("doc_a"), col("doc_b"))
   }
@@ -552,21 +526,19 @@ object Dedup {
     * signature-agreement estimate NEXT TO the exact shingle-set Jaccard
     * it approximates, plus the absolute error — the "measure the
     * approximation, don't guess" harness (sim_lsh_recall's dedup
-    * sibling) to run before trusting a (numHashes, bands) configuration
+    * sibling) to run before trusting the (hashes, bands) configuration
     * on a new corpus. Cost is candidate-bounded: the exact intersection
     * is computed only for LSH candidates (two equi-joins keyed on the
     * candidate's doc ids through the shingle stream — never an all-pairs
     * comparison), and the distinct-shingle table is one corpus pass, the
     * same cost class as the signature build it audits. */
-  def minHashEstQuality(docs: DataFrame, sig: DataFrame,
-                        numHashes: Int = 16, bands: Int = 4,
-                        shingleLen: Int = 3, chunks: Int = 4): DataFrame = {
+  def minHashEstQuality(docs: DataFrame, sig: DataFrame): DataFrame = {
+    val shingleLen = ShingleLen
     // Materialized: `est` feeds both the shared-shingle join chain and the
     // final assembly — unmaterialized, the whole LSH candidate generation
     // (banded self-join + distinct + two signature joins) executed once per
     // consumer, measured as ~2× the audit's wall clock at sf1.
-    val est = materialize(minHashVerifiedFromSignatures(sig, numHashes, bands,
-      minEst = 0.0, chunks = chunks))
+    val est = materialize(minHashVerifiedFromSignatures(sig, minEst = 0.0))
     val toks = split(F.normalizeText(lower(col("text"))), " ")
     val base = docs.select(col("doc_id"), toks.as("toks"))
     val long = base.filter(size(col("toks")) >= shingleLen)
@@ -634,8 +606,7 @@ object Dedup {
     votes.select(col("doc_id"), fp.as("simhash"))
   }
 
-  def simHash(docs: DataFrame, maxHamming: Int = 3,
-              chunks: Int = 4): DataFrame =
+  def simHash(docs: DataFrame, maxHamming: Int = 3): DataFrame =
     // localCheckpoint: the twin-class window, the rep filter, and (through
     // the reps) both sides of the banded join all re-read the signature
     // table; unmaterialized, the whole lineage (text scan, tokenize
@@ -644,8 +615,7 @@ object Dedup {
     // materialized table is (doc_id, one BIGINT) — bytes per document —
     // so the barrier is all win; swap for reliable checkpoint on a real
     // cluster (see duplicateClusters).
-    simHashPairsFromSignatures(materialize(simHashSignatures(docs)),
-      maxHamming, chunks)
+    simHashPairsFromSignatures(materialize(simHashSignatures(docs)), maxHamming)
 
   /** Banded near-dup pairs over a MATERIALIZED fingerprint table, in
     * canonicalize-then-expand form: fingerprint-equal docs are true twins
@@ -657,12 +627,12 @@ object Dedup {
     * computed for them); cross pairs inherit their reps' hamming through
     * two membership equi-joins. Output identical to the direct banded
     * self-join; candidate work r²-smaller per duplicate class. */
-  def simHashPairsFromSignatures(sigs: DataFrame, maxHamming: Int = 3,
-                                 chunks: Int = 4): DataFrame = {
+  def simHashPairsFromSignatures(sigs: DataFrame,
+                                 maxHamming: Int): DataFrame = {
     // Intra twin pairs are added unconditionally at hamming 0; a negative
     // maxHamming would silently diverge from the direct banded self-join
     // (which would emit nothing), so the degenerate config fails loudly
-    // (the ngramJaccard threshold-guard convention).
+    // (the ngramJaccardCanonical threshold-guard convention).
     require(maxHamming >= 0, s"maxHamming must be >= 0, got $maxHamming")
     val members = materialize(signatureMembers(sigs, Seq("simhash")))
     val repSigs = materialize(sigs.join(
@@ -678,7 +648,7 @@ object Dedup {
     // Still chunked: distinct-but-near fingerprints can co-bucket in one
     // band, and one (band, bh) bucket must not pin its pair grid on a
     // single task.
-    val (a, b, chunkCond) = Skew.chunkedSelfJoin(banded, "doc_id", chunks)
+    val (a, b, chunkCond) = Skew.chunkedSelfJoin(banded, "doc_id", Chunks)
     val canon = a.join(b,
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
           chunkCond && col("a.doc_id") < col("b.doc_id"))
@@ -686,18 +656,18 @@ object Dedup {
         bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
-    expandMemberPairs(canon, members, Seq("hamming" -> lit(0)), chunks)
+    expandMemberPairs(canon, members, Seq("hamming" -> lit(0)))
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
   /** Edit-distance near-dup pairs over a normalized prefix, within the same
-    * (lang, token-bucket) blocks as ngramJaccard. Levenshtein is the
+    * (lang, token-bucket) blocks as ngramJaccardCanonical. Levenshtein is the
     * classic integer DP — exact in any engine — and the prefix cap bounds
     * the O(len²) per-pair cost; a real pipeline runs this as the precise
     * re-rank AFTER a cheap candidate filter (LSH/jaccard), never globally.
     *
     * Candidate generation is SIZE-ADAPTIVE per block (the same migration
-    * rule as ngramJaccard): a block of ≤ `gridMax` docs pairs through the
+    * rule as ngramJaccardCanonical): a block of ≤ `gridMax` docs pairs through the
     * direct grid — bounded at gridMax·n/2 pairs total, linear in corpus
     * size — while a larger block is filtered with the PassJoin partition
     * scheme (Li, Deng, Feng, "Pass-Join: A Partition-based Method for
@@ -708,7 +678,7 @@ object Dedup {
     * s of the alignment prefix, which obeys |s| + |Δ − s| ≤ maxDist for
     * partner length difference Δ. The probe side therefore emits, per doc
     * and per admissible indexed length (from a bounded per-block length
-    * census — ≤ blocks × prefixLen rows, always broadcast), the substrings
+    * census — ≤ blocks × 40 rows, always broadcast), the substrings
     * at each segment position inside that shift window; the equi-join on
     * (block, indexed length, segment index, segment text) yields a provable
     * superset of the true pairs bounded by inverted-list products on short
@@ -717,8 +687,9 @@ object Dedup {
     * chars carry no surviving-segment guarantee (every 1-char segment can
     * be destroyed) and pair through a tiny both-short grid instead.
     */
-  def editDistance(docs: DataFrame, maxDist: Int = 10, prefixLen: Int = 40,
-                   bucketTokens: Int = 10, gridMax: Int = 256): DataFrame = {
+  def editDistance(docs: DataFrame, maxDist: Int = 10,
+                   gridMax: Int = 256): DataFrame = {
+    val prefixLen = 40
     require(maxDist >= 1, s"editDistance maxDist must be >= 1, got $maxDist")
     val nseg = maxDist + 1
     // ASCII projection before the prefix: Spark's levenshtein counts
@@ -733,7 +704,7 @@ object Dedup {
     // candidate join runs, and the verify join-back — one normalize+scan.
     val prep = materialize(docs.select(
       col("doc_id"), col("lang"), prefix.as("pfx"),
-      tokenBucket(bucketTokens).as("bucket"),
+      canonBucket.as("bucket"),
       length(prefix).as("len")))
     // Grid over a doc subset: the bounded 3-arg levenshtein runs inline in
     // the join projection (no candidate/verify round-trip); the length-
@@ -749,11 +720,11 @@ object Dedup {
           levenshtein(col("a.pfx"), col("b.pfx"), maxDist).as("dist"))
         .filter(col("dist") >= 0 && col("dist") <= maxDist)
     def finish(pairs: DataFrame): DataFrame = pairs
-      // recompute barrier before the range sort — see ngramJaccard
+      // recompute barrier before the range sort — see verifyJaccardPairs
       .repartition(col("doc_a"), col("doc_b"))
       .orderBy(col("doc_a"), col("doc_b"))
     // Block census: bounded by languages × length buckets; the one-row max
-    // probe is the same class as ngramJaccard's (skip the PassJoin stages
+    // probe is the same class as jaccardPairsOnPrep's (skip the PassJoin stages
     // outright when every block fits the grid budget).
     val sizes = prep.groupBy(col("lang"), col("bucket"))
       .agg(count(lit(1)).as("bsz"))
@@ -863,9 +834,9 @@ object Dedup {
     * exponentially (localCheckpoint here; reliable checkpoint when the
     * session has a checkpoint dir — see materialize).
     */
-  def duplicateClusters(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
+  def duplicateClusters(pairs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val labels = ccLabels(pairs, maxIter)
+    val labels = ccLabels(pairs)
     val w = Window.partitionBy(col("cluster_id"))
     labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
       .withColumn("n_members", count(lit(1)).over(w))
@@ -882,10 +853,10 @@ object Dedup {
     * every rep IS its group's minimum. n_members is recounted over member
     * docs. The CC fixpoint — the O(E log n) part — runs on the quotient,
     * whose edge count shrinks r̄²-fold on duplicate-dense corpora. */
-  def duplicateClustersFromCanonical(canon: DataFrame, members: DataFrame,
-                                     maxIter: Int = 25): DataFrame = {
+  def duplicateClustersFromCanonical(canon: DataFrame,
+                                     members: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val labels = ccLabels(canon, maxIter)
+    val labels = ccLabels(canon)
     val att = members
       .join(labels.select(col("id").as("rep"), col("label")), Seq("rep"), "left")
       // participating docs = members of groups in ≥1 canonical pair, plus
@@ -902,7 +873,9 @@ object Dedup {
   /** The large-star/small-star contraction behind [[duplicateClusters]]
     * (see its scaladoc): labels every node of the `(doc_a, doc_b)` pair
     * graph with its component's minimum id. Returns (id, label). */
-  private[graft] def ccLabels(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
+  private[graft] def ccLabels(pairs: DataFrame): DataFrame = {
+    // 25 rounds label components of up to ~2^25 nodes (O(log n) rounds)
+    val maxIter = 25
     val e0 = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .filter(col("src") =!= col("dst"))
     // min over the full neighborhood ∪ self, per node
@@ -1024,17 +997,13 @@ object Dedup {
     * bytes per gram — then ONE equi-join on the hash and a partial-agg
     * count per doc. The benchmark side is typically small enough to
     * broadcast; AQE decides. No quadratic anything: cost is linear in
-    * total grams + join output (true contamination volume). */
-  def decontaminate(docs: DataFrame, benchmark: DataFrame,
-                    n: Int = 5): DataFrame =
-    decontaminateFromGrams(gramHashes(docs, n).distinct(),
-      gramHashes(benchmark, n).distinct())
-
-  /** decontaminate over ALREADY-DISTINCT (doc_id, gh) gram tables — the
-    * entry point for pipelines that hash grams once and reuse them across
-    * the exact and Bloom paths (graft.queries.TextOps stages one gram table
-    * per SF and both judged decontamination queries read it, so neither
-    * pays the explode+md5 twice). */
+    * total grams + join output (true contamination volume).
+    *
+    * Both inputs are ALREADY-DISTINCT (doc_id, gh) gram tables
+    * ([[gramHashes]]): pipelines hash grams once and reuse them across
+    * the exact and Bloom paths (graft.queries.TextOps stages one gram
+    * table per SF and every judged decontamination query reads it, so
+    * none pays the explode+md5 twice). */
   def decontaminateFromGrams(corpusGrams: DataFrame,
                              benchGrams: DataFrame): DataFrame =
     corpusGrams.join(benchGrams.select(col("gh")).distinct(), "gh")
@@ -1043,7 +1012,7 @@ object Dedup {
       .orderBy(col("doc_id"))
 
   /** (doc_id, gh) of every n-token gram, seed-23 hashed — shared by the
-    * exact (decontaminate) and bloom (bloomDecontaminate) paths. NOT
+    * exact ([[decontaminateFromGrams]]) and Bloom ([[bloomProbe]]) paths. NOT
     * distinct: callers dedup per their need (per-doc distinct for the
     * joins; the staged table is written distinct once). */
   def gramHashes(df: DataFrame, n: Int): DataFrame = {
@@ -1057,7 +1026,7 @@ object Dedup {
   }
 
   /** Bloom-filter decontamination — the shape the exact hash-join variant
-    * (decontaminate) takes when the benchmark side must not be shuffled at
+    * ([[decontaminateFromGrams]]) takes when the benchmark side must not be shuffled at
     * all: the benchmark's grams compress into an `mBits`-bit Bloom bitmap
     * (k = 3 positions per gram, carved from disjoint 16-bit slices of the
     * one seeded 60-bit hash — the Kirsch-Mitzenmacher construction with
@@ -1075,23 +1044,9 @@ object Dedup {
     * The bitmap build collects ≤ mBits/64 rows (the bitmap itself) — a
     * constant bounded by the filter size, not the data.
     *
-    * Returns one row per corpus doc with ≥ 1 gram: (doc_id, n_grams,
-    * n_hits, contaminated), ordered by doc_id. */
-  def bloomDecontaminate(docs: DataFrame, benchmark: DataFrame,
-                         n: Int = 5, mBits: Int = 1 << 16): DataFrame =
-    bloomDecontaminateFromGrams(gramHashes(docs, n).distinct(),
-      gramHashes(benchmark, n).distinct(), mBits)
-
-  /** bloomDecontaminate over ALREADY-DISTINCT (doc_id, gh) gram tables —
-    * see decontaminateFromGrams for the shared-staging rationale. The
-    * marginal cost over the staged grams is exactly what the operator
-    * promises: one bounded bitmap build plus a map-side probe. */
-  def bloomDecontaminateFromGrams(corpusGrams: DataFrame,
-                                  benchGrams: DataFrame,
-                                  mBits: Int = 1 << 16): DataFrame =
-    bloomProbe(corpusGrams,
-      bitmapFromWords(bloomBitmapWords(benchGrams, mBits), mBits), mBits)
-
+    * The pieces: [[bloomBitmapWords]] builds the filter from the
+    * benchmark grams, [[bitmapFromWords]] collects it, [[bloomProbe]]
+    * screens distinct corpus grams against it. */
   private def requireM(mBits: Int): Unit =
     require(mBits >= 64 && (mBits & (mBits - 1)) == 0,
       s"mBits must be a power of two >= 64, got $mBits")
@@ -1134,12 +1089,11 @@ object Dedup {
     * column — true iff ALL THREE positions are set in the bitmap, which
     * rides the closure as a literal long array (8 KB at 2¹⁶ bits). Public
     * so STREAMING ingest can screen grams with the identical expression
-    * (a stateless filter — the decontamination-at-ingest shape). */
-  def bloomHit(gh: Column, bitmap: Array[Long],
-               mBits: Int = 1 << 16): Column = {
+    * (a stateless filter — the decontamination-at-ingest shape). The
+    * filter size is the bitmap's: 64 bits per word. */
+  def bloomHit(gh: Column, bitmap: Array[Long]): Column = {
+    val mBits = bitmap.length * 64
     requireM(mBits)
-    require(bitmap.length == mBits / 64,
-      s"bitmap has ${bitmap.length} words, expected ${mBits / 64}")
     val bm = typedlit(bitmap.toSeq)
     def hit(pos: Column): Column =
       element_at(bm, shiftrightunsigned(pos, 6).cast("int") + 1)
@@ -1150,10 +1104,11 @@ object Dedup {
 
   /** Map-side membership probe of distinct (doc_id, gh) corpus grams
     * against a prebuilt bitmap: each gram tests three bits map-side, and
-    * only the per-doc count aggregation moves data. */
-  def bloomProbe(corpusGrams: DataFrame, bitmap: Array[Long],
-                 mBits: Int = 1 << 16): DataFrame = {
-    val probe = bloomHit(col("gh"), bitmap, mBits)
+    * only the per-doc count aggregation moves data. Returns one row per
+    * corpus doc with ≥ 1 gram: (doc_id, n_grams, n_hits, contaminated),
+    * ordered by doc_id. */
+  def bloomProbe(corpusGrams: DataFrame, bitmap: Array[Long]): DataFrame = {
+    val probe = bloomHit(col("gh"), bitmap)
     corpusGrams
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_grams"),
@@ -1175,11 +1130,10 @@ object Dedup {
     * stateless map-side projection — no shuffle, no state store, no
     * per-micro-batch commit beyond the sink append — which is exactly what
     * a 100 TB ingest wants in front of the store. */
-  def bloomProbeInRow(docs: DataFrame, bitmap: Array[Long], n: Int = 4,
-                      mBits: Int = 1 << 16): DataFrame = {
+  def bloomProbeInRow(docs: DataFrame, bitmap: Array[Long],
+                      n: Int): DataFrame = {
+    val mBits = bitmap.length * 64
     requireM(mBits)
-    require(bitmap.length == mBits / 64,
-      s"bitmap has ${bitmap.length} words, expected ${mBits / 64}")
     val toksC = split(F.normalizeText(lower(col("text"))), " ")
     // The gram slide + seeded hash + distinct + three-bit probe fold in
     // ONE compiled loop per document (StringExpressions.bloomGramProbe) —
@@ -1233,8 +1187,7 @@ object Dedup {
     * then the membership expansion. Every shuffle is hash-keyed; nothing
     * is quadratic in documents. */
   def gramContainment(grams: DataFrame, members: DataFrame,
-                      maxDf: Long = 64, threshold: Double = 0.6,
-                      chunks: Int = 4): DataFrame = {
+                      maxDf: Long = 64, threshold: Double = 0.6): DataFrame = {
     // df ALWAYS counts documents over the full gram table — the
     // boilerplate cut is a corpus property, independent of the collapse
     val dfTab = grams.groupBy(col("gh")).agg(count(lit(1)).as("df"))
@@ -1272,7 +1225,7 @@ object Dedup {
     val multi = mem.filter(col("r") >= 2)
       .join(repSizes.select(col("doc_id").as("rep"), col("ng")), "rep")
       .select(col("doc_id"), col("rep"), col("ng"))
-    val (a, b, chunkCond) = Skew.chunkedSelfJoin(multi, "doc_id", chunks)
+    val (a, b, chunkCond) = Skew.chunkedSelfJoin(multi, "doc_id", Chunks)
     val intra = a.join(b, col("a.rep") === col("b.rep") && chunkCond &&
         col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
@@ -1329,13 +1282,13 @@ object Dedup {
 
   /** Content-defined chunk table (Muthitacharoen et al., LBFS SOSP'01;
     * the FastCDC family): a boundary falls AFTER token i when the 60-bit
-    * seeded hash of the `window`-token context ending at i is ≡ 0
-    * (mod `modulus`) — chunk edges are decided by LOCAL content, so an
+    * seeded hash of the 4-token context ending at i is ≡ 0
+    * (mod 16) — chunk edges are decided by LOCAL content, so an
     * edit early in a document re-frames nothing past the next boundary.
     * That shift-invariance is exactly what fixed-stride chunking
     * ([[chunkDedup]]) lacks: there one inserted token re-frames every
     * following chunk and the dedup signal evaporates. Average chunk ≈
-    * `modulus` tokens; the document end is always a boundary. Returns one
+    * 16 tokens; the document end is always a boundary. Returns one
     * row per chunk: (doc_id, start_tok, n_chunk_toks, ch).
     *
     * Shape at scale: chunking is IN-ROW — one pass over the token array
@@ -1343,8 +1296,8 @@ object Dedup {
     * hash is the library's SQL-reproducible md5 family, evaluated in the
     * HOF interpreter (per-row CPU, linear, embarrassingly parallel — the
     * cost a cluster absorbs by width). */
-  def cdcChunks(docs: DataFrame, window: Int = 4,
-                modulus: Int = 16): DataFrame = {
+  def cdcChunks(docs: DataFrame): DataFrame = {
+    val (window, modulus) = (4, 16)
     val base = docs
       .select(col("doc_id"),
         split(F.normalizeText(lower(col("text"))), " ").as("toks"))
@@ -1379,9 +1332,8 @@ object Dedup {
     * contract (global first occurrence by packed (doc_id, start) key) on
     * content-defined edges. Same exchange posture as chunkDedup: one
     * chunk-hash groupBy, one equi-join back, one doc rollup. */
-  def cdcChunkDedup(docs: DataFrame, window: Int = 4,
-                    modulus: Int = 16): DataFrame = {
-    val chunks = cdcChunks(docs, window, modulus)
+  def cdcChunkDedup(docs: DataFrame): DataFrame = {
+    val chunks = cdcChunks(docs)
     val packed = col("doc_id") * lit(1L << 20) + col("start_tok")
     val firsts = chunks.groupBy(col("ch")).agg(min(packed).as("first_pk"))
     chunks.join(firsts, "ch")
@@ -1395,7 +1347,8 @@ object Dedup {
   }
 
   /** Per-doc maximal duplicated-span arrays — the shared kernel of the
-    * ExactSubstr audit (duplicatedSpans) and transform (redactSpans).
+    * ExactSubstr audit (duplicatedSpansFrom) and transform
+    * (redactFromSpans).
     *
     * Shape at scale: the gram stream (one row per character position,
     * hash + doc_id + offset only — the substring itself never leaves the
@@ -1569,13 +1522,11 @@ object Dedup {
     * a suffix array would see them); runs of duplicated positions merge
     * into maximal spans [span_start, span_end). Every duplicated
     * substring of length ≥ minLen is covered by some reported span —
-    * the same guarantee the suffix-array pass gives at threshold minLen. */
-  def duplicatedSpans(docs: DataFrame, minLen: Int = 25): DataFrame =
-    duplicatedSpansFrom(spanArrays(docs, minLen))
-
-  /** Audit over an ALREADY-MATERIALIZED span-array table (the staged-
-    * parquet form both ExactSubstr queries share — the gram sweep is the
-    * dominant cost and identical between them). */
+    * the same guarantee the suffix-array pass gives at threshold minLen.
+    *
+    * The audit runs over an ALREADY-MATERIALIZED [[spanArrays]] table
+    * (the staged-parquet form both ExactSubstr queries share — the gram
+    * sweep is the dominant cost and identical between them). */
   def duplicatedSpansFrom(spans: DataFrame): DataFrame =
     spans
       .select(col("doc_id"), explode(col("spans")).as("sp"))
@@ -1591,12 +1542,9 @@ object Dedup {
     * on top, exactly as dd_exact does for whole docs). Documents without
     * spans pass through verbatim via the left join. The stitch is one
     * in-row fold over the doc's own span array (state is doc-bounded):
-    * emit the gap before each span, skip the span, emit the tail. */
-  def redactSpans(docs: DataFrame, minLen: Int = 25): DataFrame =
-    redactFromSpans(docs, spanArrays(docs, minLen))
-
-  /** Transform over an already-materialized span-array table (see
-    * duplicatedSpansFrom). */
+    * emit the gap before each span, skip the span, emit the tail. Spans
+    * come from an already-materialized [[spanArrays]] table (see
+    * [[duplicatedSpansFrom]]). */
   def redactFromSpans(docs: DataFrame, spans: DataFrame): DataFrame = {
     docs.join(spans, Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -1621,11 +1569,34 @@ object Dedup {
     * Result contract (matches the DuckDB oracle): all pairs in the same
     * (lang, token-count bucket) block with set-Jaccard ≥ threshold.
     *
-    * Since round 12 this is a thin composition: CANONICALIZE exact-dup
-    * token-set groups ([[ngramJaccardCanonical]]), run candidate
-    * generation on one representative per group, EXPAND back to member
-    * pairs ([[expandCanonicalPairs]]) — bit-identical output, with the
-    * quadratic-in-co-membership stages fed only distinct token sets.
+    * Computed in CANONICALIZE-THEN-EXPAND form — the factored
+    * representation a crawl-scale corpus needs. Exact-duplicate documents
+    * (same lang, same token-count bucket, same normalized distinct-token
+    * SET) are TWINS under the Jaccard contract: J is a set function, so
+    * within a group every pair has J = 1 and every member has the same J
+    * to any third document. The pair table over such a corpus is therefore
+    * fully determined by (a) the pair table over one representative per
+    * group and (b) the group membership — and the expensive candidate
+    * generation (grid/prefix self-joins whose work grows with the SQUARE
+    * of block co-membership) only ever needs to see the representatives.
+    * The factor-100 audit measured the member-level pair build at decade
+    * exponent 2.48 exactly because replica-identical docs flood every
+    * block; on the canonical corpus each flood collapses to one row.
+    *
+    * Returns (canonical pairs, membership):
+    *  - canonical pairs: the pair table restricted to group
+    *    representatives (doc_a < doc_b, jaccard ≥ threshold);
+    *  - membership: (doc_id, rep, r) for EVERY input document, where rep
+    *    is the smallest doc_id sharing its (lang, bucket, token-set) group
+    *    and r the group size. Docs with a null lang or an empty token set
+    *    get singleton groups (they can never pair — a null lang never
+    *    equi-joins, an empty set has J = 0/0 → null — so grouping them
+    *    would fabricate intra-group J=1 pairs the contract doesn't emit).
+    *
+    * [[expandCanonicalPairs]] reconstructs the member-level table
+    * bit-identically (pinned in OpsSpec); consumers that are themselves
+    * twin-aware (clustering, graph censuses) should consume THIS form and
+    * never materialize the expansion.
     *
     * Candidate generation is SIZE-ADAPTIVE per block:
     *
@@ -1667,47 +1638,7 @@ object Dedup {
     * in front of the codegen'd linear merge intersect (no per-pair hash
     * set; |union| = |a|+|b|−|∩|).
     */
-  def ngramJaccard(docs: DataFrame, threshold: Double = 0.5,
-                   bucketTokens: Int = 10, chunks: Int = 4,
-                   gridMax: Int = 256): DataFrame = {
-    val (canon, members) =
-      ngramJaccardCanonical(docs, threshold, bucketTokens, chunks, gridMax)
-    expandCanonicalPairs(canon, members)
-      // recompute barrier before the range sort — see verifyJaccardPairs
-      .repartition(col("doc_a"), col("doc_b"))
-      .orderBy(col("doc_a"), col("doc_b"))
-  }
-
-  /** [[ngramJaccard]] in CANONICALIZE-THEN-EXPAND form — the factored
-    * representation a crawl-scale corpus needs. Exact-duplicate documents
-    * (same lang, same token-count bucket, same normalized distinct-token
-    * SET) are TWINS under the Jaccard contract: J is a set function, so
-    * within a group every pair has J = 1 and every member has the same J
-    * to any third document. The pair table over such a corpus is therefore
-    * fully determined by (a) the pair table over one representative per
-    * group and (b) the group membership — and the expensive candidate
-    * generation (grid/prefix self-joins whose work grows with the SQUARE
-    * of block co-membership) only ever needs to see the representatives.
-    * The factor-100 audit measured the member-level pair build at decade
-    * exponent 2.48 exactly because replica-identical docs flood every
-    * block; on the canonical corpus each flood collapses to one row.
-    *
-    * Returns (canonical pairs, membership):
-    *  - canonical pairs: ngramJaccard output restricted to group
-    *    representatives (doc_a < doc_b, jaccard ≥ threshold);
-    *  - membership: (doc_id, rep, r) for EVERY input document, where rep
-    *    is the smallest doc_id sharing its (lang, bucket, token-set) group
-    *    and r the group size. Docs with a null lang or an empty token set
-    *    get singleton groups (they can never pair — a null lang never
-    *    equi-joins, an empty set has J = 0/0 → null — so grouping them
-    *    would fabricate intra-group J=1 pairs the contract doesn't emit).
-    *
-    * [[expandCanonicalPairs]] reconstructs the member-level table
-    * bit-identically (pinned in OpsSpec); consumers that are themselves
-    * twin-aware (clustering, graph censuses) should consume THIS form and
-    * never materialize the expansion. */
-  def ngramJaccardCanonical(docs: DataFrame, threshold: Double = 0.5,
-                            bucketTokens: Int = 10, chunks: Int = 4,
+  def ngramJaccardCanonical(docs: DataFrame, threshold: Double,
                             gridMax: Int = 256): (DataFrame, DataFrame) = {
     import graft.functions.VectorExpressions.sortedDistinctStrings
     import org.apache.spark.sql.expressions.Window
@@ -1715,7 +1646,7 @@ object Dedup {
     // t = 0 disjoint same-block pairs qualify but share no prefix token,
     // so the filter would silently drop them — fail loudly instead.
     require(threshold > 0 && threshold <= 1,
-      s"ngramJaccard threshold must be in (0, 1], got $threshold")
+      s"ngramJaccardCanonical threshold must be in (0, 1], got $threshold")
     val toksC = canonToks
     // Group fingerprint: sha2-256 of the space-joined sorted token set —
     // the concat is injective because tokens are split on spaces and so
@@ -1733,7 +1664,7 @@ object Dedup {
     // re-read this table.
     val keyed = materialize(docs
       .select(col("doc_id"), col("lang"), toksC.as("toks"),
-        tokenBucket(bucketTokens).as("bucket"))
+        canonBucket.as("bucket"))
       .withColumn("fp", fpC)
       .select(col("doc_id"), col("lang"), col("toks"), col("bucket"),
         min(col("doc_id")).over(w).as("rep"),
@@ -1741,10 +1672,10 @@ object Dedup {
     val members = keyed.select(col("doc_id"), col("rep"), col("r"))
     val canonPrep = keyed.filter(col("doc_id") === col("rep"))
       .select(col("doc_id"), col("lang"), col("toks"), col("bucket"))
-    (jaccardPairsOnPrep(canonPrep, threshold, chunks, gridMax), members)
+    (jaccardPairsOnPrep(canonPrep, threshold, gridMax), members)
   }
 
-  /** Reconstructs the member-level [[ngramJaccard]] pair table from the
+  /** Reconstructs the member-level pair table from the
     * [[ngramJaccardCanonical]] factorization — OUTPUT-BOUNDED work only
     * (two membership equi-joins plus the intra-group grid), no candidate
     * generation. Intra-group pairs carry jaccard = 1.0 exactly (identical
@@ -1754,17 +1685,16 @@ object Dedup {
     * CONTRACT and chunked ([[expandMemberPairs]]), so a single
     * crawl-scale boilerplate group (r ~ 10⁵) spreads its pair grid over
     * chunks² tasks instead of pinning one. Unordered — callers sort. */
-  def expandCanonicalPairs(canon: DataFrame, members: DataFrame,
-                           chunks: Int = 4): DataFrame =
-    expandMemberPairs(canon, members, Seq("jaccard" -> lit(1.0)), chunks)
+  def expandCanonicalPairs(canon: DataFrame, members: DataFrame): DataFrame =
+    expandMemberPairs(canon, members, Seq("jaccard" -> lit(1.0)))
 
   /** Candidate generation + exact verify over an already-prepared
-    * (doc_id, lang, toks, bucket) table (see [[ngramJaccard]]'s scaladoc
+    * (doc_id, lang, toks, bucket) table (see [[ngramJaccardCanonical]]'s scaladoc
     * for the grid/prefix split). `prep` must be materialization-backed:
     * the census, both grid aliases, the prefix build, and both verify
     * sides re-read it. */
   private def jaccardPairsOnPrep(prep: DataFrame, threshold: Double,
-                                 chunks: Int, gridMax: Int): DataFrame = {
+                                 gridMax: Int): DataFrame = {
     val tSlack = threshold - 1e-6
     // Block census: one row per (lang, bucket) — bounded by languages ×
     // length buckets, broadcastable at any corpus size. The broadcast tag
@@ -1804,10 +1734,10 @@ object Dedup {
     // cut at p = n − ⌈tSlack·n⌉ + 1
     val pfxLen = (col("n") - ceil(lit(tSlack) * col("n")) + lit(1)).cast("int")
     // Materialized: the chunked self-join below references this frame on
-    // BOTH sides (× chunks), and the two sides' plans differ above the
+    // BOTH sides (× Chunks), and the two sides' plans differ above the
     // aggregation (different explode aliases), so exchange reuse is not
     // guaranteed — without the barrier the df-join + per-doc rank pipeline
-    // can recompute up to 2·chunks times.
+    // can recompute up to 2·Chunks times.
     val prefixes = materialize(tokStream.join(dfTab, "tok")
       .groupBy(col("doc_id"), col("lang"), col("bucket"), col("n"))
       .agg(sort_array(collect_list(struct(col("tdf"), col("tok"))))
@@ -1816,7 +1746,7 @@ object Dedup {
         posexplode(slice(col("ranked"), lit(1), pfxLen)))
       .select(col("doc_id"), col("lang"), col("bucket"), col("n"),
         col("pos"), col("col.tok").as("tok")))
-    val (a, b, chunkCond) = Skew.chunkedSelfJoin(prefixes, "doc_id", chunks)
+    val (a, b, chunkCond) = Skew.chunkedSelfJoin(prefixes, "doc_id", Chunks)
     // PPJoin positional filter (Xiao et al.): both ranked token lists are
     // sorted by the SAME total order (tdf asc, tok asc — tdf is a global
     // per-token property, so a shared token has one sort key in both
@@ -1850,7 +1780,7 @@ object Dedup {
     verifyJaccardPairs(candGrid.unionByName(candPfx), prep, threshold, tSlack)
   }
 
-  /** Exact-verify tail shared by ngramJaccard's grid and prefix branches:
+  /** Exact-verify tail shared by the grid and prefix branches:
     * join the candidate pairs back to the tokenized table and keep those
     * with set-Jaccard ≥ threshold. */
   private def verifyJaccardPairs(cand: DataFrame, prep: DataFrame,

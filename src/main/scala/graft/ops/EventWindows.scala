@@ -75,8 +75,8 @@ object EventWindows {
     * weeks; cohort assignment is a partial-agg min per user; the join back
     * is user-keyed; the final rollup has |weeks|² cells at most. A hot user
     * with millions of events costs the same as one with two. */
-  def retention(events: DataFrame, weekDays: Int = 7): DataFrame = {
-    val weekUs = weekDays.toLong * 24L * 3600L * 1000000L
+  def retention(events: DataFrame): DataFrame = {
+    val weekUs = 7L * 24L * 3600L * 1000000L
     val tsUs = unix_micros(col("ts").cast("timestamp"))
     // tsUs - pmod is exactly divisible, so the double division is exact
     val wk = ((tsUs - pmod(tsUs, lit(weekUs))) / lit(weekUs)).cast("long")

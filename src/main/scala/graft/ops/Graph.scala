@@ -114,9 +114,8 @@ object Graph {
     * with c = m DIV outdeg — every operation still integer, so no new
     * rounding surface. Fixed iterations keep the result
     * oracle-expressible (unrolled CTEs). */
-  def pageRankFromQuotient(qfwd: DataFrame, members: DataFrame,
-                           iters: Int = 3,
-                           dampingPct: Int = 85): DataFrame = {
+  def pageRankFromQuotient(qfwd: DataFrame, members: DataFrame): DataFrame = {
+    val (iters, dampingPct) = (3, 85)
     val groups = members.select(col("uid"), col("r")).distinct()
     val qedges = qfwd.union(qfwd.select(col("dst").as("src"), col("src").as("dst")))
     val degs = classDegrees(qedges, groups)

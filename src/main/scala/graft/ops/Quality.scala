@@ -56,13 +56,14 @@ object Quality {
     * and per-day/per-shard profiles merge by max(max_rho)/sum(n_items)
     * without rescanning. n_items counts non-null values (nulls carry no
     * identity, so they are excluded from the sketch — pair with
-    * `profile`'s n_null for the null census). Point estimates come from
-    * Sketch.estimate per column, driver-side.
+    * `profile`'s n_null for the null census). Point estimates read each
+    * column's slice as an hllSketch (see [[Sketch.hllErrorAudit]]).
     *
     * Columns must render identically as strings in every engine that
     * checks the sketch (integers / strings / dates — not raw doubles,
     * whose formatting is engine-specific). */
-  def profileApprox(df: DataFrame, cols: Seq[String], m: Int = 64): DataFrame = {
+  def profileApprox(df: DataFrame, cols: Seq[String]): DataFrame = {
+    val m = 64
     // Hash ONCE per (row, column), fan out as a PRIMITIVE long array via
     // posexplode (the position doubles as the column index), and group on
     // (int, int) — no per-row structs, no string group key in the 36M-row

@@ -18,7 +18,7 @@ object Sampling {
 
   /** Per-row sampling bucket in [0, 10000): md5-derived so the DuckDB
     * oracle reproduces it exactly (same family as Dedup.seededHash). */
-  def bucket(idCol: Column, seed: Int = 13): Column =
+  def bucket(idCol: Column, seed: Int): Column =
     pmod(Dedup.seededHash(seed, idCol), lit(Buckets))
 
   /** Stratified deterministic sample: keep `rates(stratum)` (a fraction in
@@ -26,8 +26,8 @@ object Sampling {
     * are exact at 1/10000 granularity. One map-side filter — no shuffle,
     * no state; rebalancing a 100 TB corpus by language costs one scan. */
   def stratifiedByHash(df: DataFrame, strataCol: String, idCol: String,
-                       rates: Map[String, Double], defaultRate: Double,
-                       seed: Int = 13): DataFrame = {
+                       rates: Map[String, Double],
+                       defaultRate: Double): DataFrame = {
     // math.round, not .toLong: 0.0057 * 10000 is 56.999… in IEEE double and
     // truncation would shave a bucket off the promised 1/10000 granularity
     def cutoffOf(rate: Double): Long = math.round(rate * Buckets)
@@ -35,7 +35,7 @@ object Sampling {
       case (acc, (stratum, rate)) =>
         when(col(strataCol) === stratum, lit(cutoffOf(rate))).otherwise(acc)
     }
-    df.filter(bucket(col(idCol), seed) < cutoff)
+    df.filter(bucket(col(idCol), 13) < cutoff)
   }
 
   /** Fixed-SIZE deterministic sample: the k rows with the smallest
@@ -49,11 +49,11 @@ object Sampling {
     * ~4k/|stratum|) shrinks each stratum to O(k) candidates before the
     * exact rank, so the window never sorts the raw corpus. Kept separate
     * so this operator's contract stays exact. */
-  def topKByHash(df: DataFrame, strataCol: String, idCol: String, k: Int,
-                 seed: Int = 31): DataFrame = {
+  def topKByHash(df: DataFrame, strataCol: String, idCol: String,
+                 k: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(strataCol))
-      .orderBy(Dedup.seededHash(seed, col(idCol)), col(idCol))
+      .orderBy(Dedup.seededHash(31, col(idCol)), col(idCol))
     df.withColumn("rk", row_number().over(w).cast("long"))
       .filter(col("rk") <= k)
   }
@@ -169,7 +169,7 @@ object Sampling {
     * the sort); the two-phase prefilter cut applies on top when even the
     * budget-sized heap per stratum is too much. */
   def temperatureSample(df: DataFrame, strataCol: String, idCol: String,
-                        budget: Long = 10000L, seed: Int = 31): DataFrame = {
+                        budget: Long = 10000L): DataFrame = {
     val quotas = temperatureWeights(df, strataCol, budget)
       .select(col(strataCol), col("quota"))
     // Every quota is floor(weight·budget) ≤ budget, so ranking past the
@@ -179,7 +179,7 @@ object Sampling {
     // budget+heap candidates map-side before the exact rank), instead of
     // the full-stratum rank Int.MaxValue forced.
     topKByHash(df, strataCol, idCol,
-        k = math.min(budget, Int.MaxValue.toLong).toInt, seed = seed)
+        k = math.min(budget, Int.MaxValue.toLong).toInt)
       .join(broadcast(quotas), strataCol)
       .filter(col("rk") <= col("quota"))
   }
@@ -196,14 +196,14 @@ object Sampling {
     * boundary row. Cost: one count aggregate per stratum (bounded rows,
     * broadcast back) + a map-side filter over the corpus; the corpus
     * itself never shuffles. */
-  def proportionalMix(df: DataFrame, strataCol: String, idCol: String,
-                      seed: Int = 17): DataFrame = {
+  def proportionalMix(df: DataFrame, strataCol: String,
+                      idCol: String): DataFrame = {
     val counts = df.groupBy(col(strataCol)).agg(count(lit(1)).as("__actual"))
     val totals = counts.agg(sum(col("__actual")).as("__total"),
       count(lit(1)).as("__k"))
     df.join(broadcast(counts), strataCol)
       .crossJoin(broadcast(totals))
-      .filter(bucket(col(idCol), seed) * col("__k") * col("__actual") <
+      .filter(bucket(col(idCol), 17) * col("__k") * col("__actual") <
         col("__total") * lit(Buckets))
       .drop("__actual", "__total", "__k")
   }
@@ -222,9 +222,9 @@ object Sampling {
     * rank numbers only k rows. Ordering ties break on doc_id after 6-dp
     * rounding. Expects the dsirWeights output schema
     * (doc_id, n_feats, dsir_weight). */
-  def dsirGumbelTopK(weights: DataFrame, k: Int, seed: Int = 47): DataFrame = {
+  def dsirGumbelTopK(weights: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val u = (bucket(col("doc_id"), seed).cast("double") + 0.5) / Buckets
+    val u = (bucket(col("doc_id"), 47).cast("double") + 0.5) / Buckets
     val keyed = weights
       .withColumn("key", round(col("dsir_weight") - log(-log(u)), 6))
       .orderBy(col("key").desc, col("doc_id"))
@@ -235,8 +235,8 @@ object Sampling {
       .orderBy(col("rank"))
   }
 
-  /** K-fold cross-validation assignment + balance audit: deterministic
-    * hash-bucketed folds (the sp4_split family — reproducible across runs
+  /** 5-fold cross-validation assignment over doc_id + balance audit:
+    * deterministic hash-bucketed folds (the sp4_split family — reproducible across runs
     * and engines, any row's fold computable in isolation) and the per-
     * (fold × stratum) composition a modeler checks before trusting CV
     * variance. Shares are integer parts-per-million — fold sizes are
@@ -245,10 +245,9 @@ object Sampling {
     * Shape at scale: fold assignment is a pure map; the audit is one
     * partial-aggregated groupBy over |folds|·|strata| keys plus a
     * broadcast of the |folds|-row totals. */
-  def kfold(df: DataFrame, strataCol: String, idCol: String = "doc_id",
-            k: Int = 5, seed: Int = 53): DataFrame = {
+  def kfold(df: DataFrame, strataCol: String): DataFrame = {
     val folded = df.select(
-      (bucket(col(idCol), seed) % k).cast("long").as("fold"),
+      (bucket(col("doc_id"), 53) % 5).cast("long").as("fold"),
       col(strataCol).as("stratum"))
     val cells = folded.groupBy(col("fold"), col("stratum"))
       .agg(count(lit(1)).as("n"))

@@ -481,7 +481,7 @@ object Similarity {
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
         sim.as("sim"))
       // recompute barrier before the range sort — orderBy's sampling pass
-      // would otherwise re-execute the whole self-join (see Dedup.ngramJaccard)
+      // would otherwise re-execute the whole self-join (see Dedup.verifyJaccardPairs)
       .repartition(col("vec_a"), col("vec_b"))
       .orderBy(col("vec_a"), col("vec_b"))
   }
@@ -958,12 +958,12 @@ object Similarity {
     * (the StreamStage.Timed flush convention). Returns
     * (win_start, q_id, shortlist); drain append-mode. */
   def ivfPqStreamShortlistEpoch(stream: DataFrame, index: PqIvf,
-                                shortlistK: Int = 50, nprobe: Int = 2,
-                                epoch: String = "60 minutes"): DataFrame = {
+                                shortlistK: Int = 50,
+                                nprobe: Int = 2): DataFrame = {
     val scored = ivfPqStreamScored(stream, index, nprobe,
       carry = Seq("ingest_ts"))
     scored
-      .groupBy(window(col("ingest_ts"), epoch), col("q_id"))
+      .groupBy(window(col("ingest_ts"), "60 minutes"), col("q_id"))
       .agg(collect_list(struct(col("sim"), col("vec_id"))).as("cl"))
       .select(col("window.start").as("win_start"), col("q_id"),
         slice(array_sort(col("cl"), bySimDesc), 1, shortlistK).as("shortlist"))
@@ -1106,8 +1106,8 @@ object Similarity {
     * (codes must stay dense: the ADC LUT is positional). Cost: one
     * corpus×(subspaces·S) argmin pass per round — the exact shape of the
     * encode pass, map-side partial-aggregated. */
-  def pqIndexFramesRefined(corpus: DataFrame, subspaces: Int = 8,
-                           codebookK: Int = 16, iters: Int = 2): Pq = {
+  def pqIndexFramesRefined(corpus: DataFrame, iters: Int = 2): Pq = {
+    val (subspaces, codebookK) = (8, 16)
     val ix = pqIvfIndex(corpus, subspaces, codebookK)
     val meta = codebookMeta(ix.codebook)
     val cb = pqRefineCodebook(corpus, ix.codebook, meta.s, subspaces,
@@ -1186,7 +1186,7 @@ object Similarity {
       pqPackedCp(col("embedding"), meta.cbl, meta.subspaces).as("cp"))
   }
 
-  /** Compact a streamed index append-log into `partitions` c_id-aligned,
+  /** Compact a streamed index append-log into 4 c_id-aligned,
     * internally sorted files — the maintenance pass that keeps the
     * append-forever ingest ([[ivfPqStreamEncode]]) operable: each
     * micro-batch appends up to |shuffle partitions| small files, and an
@@ -1196,8 +1196,8 @@ object Similarity {
     * the layout scan-friendly, and row CONTENT is untouched — the
     * compacted index must equal the append log equal the batch build
     * (shared oracle; StreamingSpec pins file counts and row equality). */
-  def compactIndex(appended: DataFrame, partitions: Int = 4): DataFrame =
-    appended.repartitionByRange(partitions, col("c_id"), col("vec_id"))
+  def compactIndex(appended: DataFrame): DataFrame =
+    appended.repartitionByRange(4, col("c_id"), col("vec_id"))
       .sortWithinPartitions(col("c_id"), col("vec_id"))
 
   /** OPQ-lite dimension permutation (the parametric rotation of Ge et
@@ -1227,9 +1227,9 @@ object Similarity {
     * constructor over literal indices (map-only, no shuffle). Cosine is
     * permutation-invariant, so exact rankings are unchanged; only the
     * subspace SPLIT the PQ encoder sees moves. */
-  def permuteVectors(df: DataFrame, perm: Seq[Int],
-                     vecCol: String = "embedding"): DataFrame =
-    df.withColumn(vecCol, array(perm.map(i => col(vecCol).getItem(i)): _*))
+  def permuteVectors(df: DataFrame, perm: Seq[Int]): DataFrame =
+    df.withColumn("embedding",
+      array(perm.map(i => col("embedding").getItem(i)): _*))
 
   /** Per-query LUT of exact sub-dot-products, index m·S + code, as
     * (q_id, q_nrm, lut), broadcast: built in-row from the codebook
@@ -1282,13 +1282,14 @@ object Similarity {
     * partitions, tie-free per the dsum note in queries/package.scala), and
     * the covariance assembles from the three exact sums in one fixed
     * expression tree — bit-equal to the DuckDB twin. */
-  def covarianceMatrix(corpus: DataFrame, vecCol: String = "embedding"): DataFrame = {
+  def covarianceMatrix(corpus: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val dec = DecimalType(30, 10)
     // Second generator explodes the i-suffix slice, not the whole vector:
     // j = i + pos, so only the upper triangle is ever materialized.
     val pairs = corpus
-      .select(col(vecCol).as("__v"), posexplode(col(vecCol)).as(Seq("i", "x")))
+      .select(col("embedding").as("__v"),
+        posexplode(col("embedding")).as(Seq("i", "x")))
       .select(col("i"), col("x"),
         posexplode(expr("slice(__v, i + 1, size(__v) - i)")).as(Seq("p", "y")))
       .select(col("i").cast("long").as("dim_i"),
@@ -1320,16 +1321,15 @@ object Similarity {
     * map-side Gram partials; everything after operates on the d(d+1)/2
     * cell table and a d-row vector — 8 joins over ≤64-row frames,
     * re-materialized per round so the plan stays flat. 100 TB costs the
-    * covariance scan; the eigen-solve is free. */
-  def pcaPower(emb: DataFrame, iters: Int = 8): DataFrame =
-    pcaPowerFromCov(covarianceMatrix(emb), iters)
-
-  /** pcaPower over an already-computed (dim_i, dim_j, cov) upper-triangle
-    * table — the staged-covariance path, so the Gram pass is shared with
-    * the covariance query instead of recomputed. */
-  def pcaPowerFromCov(covTable: DataFrame, iters: Int = 8): DataFrame = {
+    * covariance scan; the eigen-solve is free.
+    *
+    * The input is an already-computed (dim_i, dim_j, cov) upper-triangle
+    * table from [[covarianceMatrix]] — the staged-covariance path, so the
+    * Gram pass is shared with the covariance query instead of
+    * recomputed. */
+  def pcaPowerFromCov(covTable: DataFrame, iters: Int): DataFrame = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    require(iters >= 1, "pcaPower needs at least one iteration")
+    require(iters >= 1, "pcaPowerFromCov needs at least one iteration")
     val dec = DecimalType(30, 10)
     val cov = Dedup.materialize(covTable
       .select(col("dim_i").as("i"), col("dim_j").as("j"), col("cov")))
@@ -1366,7 +1366,7 @@ object Similarity {
     if ((Dedup.seededHashJvm(seed, s"$i:$j") & 1L) == 0L) 1.0 else -1.0
 
   /** Johnson–Lindenstrauss random projection (Achlioptas 2003 ±1 variant):
-    * embed d-dim vectors into `outDims` dims via a seeded sign matrix,
+    * embed the 64-dim embeddings into 16 dims via a seed-41 sign matrix,
     * scaled 1/√outDims so expected norms are preserved. The workhorse
     * cheap-dimensionality-reduction step in front of clustering / LSH at
     * scale — and the right shape for it: the matrix is DATA-INDEPENDENT
@@ -1376,17 +1376,16 @@ object Similarity {
     *
     * Determinism: signs are exact ±1 (multiplication exact), the 64-term
     * accumulation is one left-associated double chain (same IEEE order as
-    * the SQL twin), and √outDims is IEEE-exact for the power-of-two
-    * default. */
-  def randomProject(corpus: DataFrame, inDims: Int = 64, outDims: Int = 16,
-                    seed: Int = 41, vecCol: String = "embedding"): DataFrame = {
+    * the SQL twin), and √16 is IEEE-exact. */
+  def randomProject(corpus: DataFrame): DataFrame = {
+    val (inDims, outDims, seed) = (64, 16, 41)
     // The outDims·inDims-term tree lives in its own Project (not inside
     // the Generate): a Project splits oversized expressions into Janino
     // methods, a generator input cannot — inlined, the 1024-node array
     // kills whole-stage codegen for the stage.
     val outs = (0 until outDims).map { j =>
       (0 until inDims).map { i =>
-        element_at(col(vecCol), i + 1).cast("double") * lit(projSign(seed, i, j))
+        element_at(col("embedding"), i + 1).cast("double") * lit(projSign(seed, i, j))
       }.reduce(_ + _)
     }
     corpus
@@ -1417,11 +1416,11 @@ object Similarity {
     * join condition (the cosineDedup discipline). At 100 TB, k grows with
     * the corpus (√n seeding) so per-cluster populations stay bounded. */
   /** semDedup with k DERIVED from the corpus so per-cluster populations
-    * stay bounded (~targetCluster vectors) — the contract the scaladoc
+    * stay bounded (~2000 vectors) — the contract the scaladoc
     * above states and the factor-100 audit enforced: at fixed k = 16 the
     * within-cluster sweep is Σ(n/16)² = O(n²), measured superlinear
-    * (exp 1.6) between f30 and f100; with k = max(16, ⌈n/target⌉) total
-    * pair work is n·target — linear. The 16 floor keeps every judged SF
+    * (exp 1.6) between f30 and f100; with k = max(16, ⌈n/2000⌉) total
+    * pair work is n·2000 — linear. The 16 floor keeps every judged SF
     * (n ≤ 20 000) bit-identical to the fixed-k contract; only scale
     * probes see a larger k.
     *
@@ -1431,10 +1430,9 @@ object Similarity {
     * frame. Callers holding a transformed corpus should count (or
     * estimate) once themselves and call [[semDedup]] with an explicit k. */
   def semDedupAuto(corpus: DataFrame, iters: Int = 2,
-                   threshold: Double = 0.3,
-                   targetCluster: Int = 2000): DataFrame =
+                   threshold: Double = 0.3): DataFrame =
     semDedup(corpus,
-      math.max(16, math.ceil(corpus.count().toDouble / targetCluster).toInt),
+      math.max(16, math.ceil(corpus.count().toDouble / 2000).toInt),
       iters, threshold)
 
   def semDedup(corpus: DataFrame, k: Int = 16, iters: Int = 2,
@@ -1496,7 +1494,8 @@ object Similarity {
     * map-side-combined rollup, materialized once (localCheckpoint /
     * checkpoint) so the threshold scan and the flag scan share it; the
     * per-label threshold is a |labels|-row broadcast. */
-  def labelOutliers(emb: DataFrame, sigmas: Double = 2.0): DataFrame = {
+  def labelOutliers(emb: DataFrame): DataFrame = {
+    val sigmas = 2.0
     import org.apache.spark.sql.types.DecimalType
     val x = emb
       .select(col("vec_id"), col("label"),

@@ -88,14 +88,15 @@ object Sketch {
     * < 2^62), so the only float ops are one constant product, one
     * division, and the small-range ln branch — identical single IEEE
     * operations on identical inputs in both engines. Same α and
-    * linear-counting rule as [[estimate]].
+    * linear-counting rule as the driver-side reader OpsSpec compares it
+    * with.
     *
     * Shape at scale: cells partial-aggregate to |groups|·m rows; the
     * exact side is one countDistinct (the expensive half — that is WHY
     * the sketch exists; the audit runs on samples/small keys, the sketch
     * runs everywhere). */
-  def hllErrorAudit(df: DataFrame, groupCol: String, c: Column,
-                    m: Int = 64): DataFrame = {
+  def hllErrorAudit(df: DataFrame, groupCol: String, c: Column): DataFrame = {
+    val m = 64
     val bucketBits = java.lang.Integer.numberOfTrailingZeros(m)
     val maxRho = 60 - bucketBits + 1
     val cells = hllSketchBy(df, Seq(col(groupCol)), c, m)
@@ -148,11 +149,13 @@ object Sketch {
     * hllSketch. One pass (the depth cells explode from each input row, then
     * one partial-aggregated groupBy); the judged artifact is the exact
     * integer (row, bucket, cnt) table. Merging sketches = summing cells;
-    * a point estimate is min over rows of the key's cell counts (see
-    * cmsEstimate) with the classic eps = e/width overcount bound. */
-  /** Seed base shared by cmsSketch and cmsEstimate — one definition, so the
-    * probe side can never drift from the sketch cells. */
-  private val CmsSeedBase = 100
+    * a point estimate is min over rows of the key's cell counts (as
+    * [[cmsErrorAudit]] takes it) with the classic eps = e/width overcount
+    * bound. */
+  /** Seed base of the cmsSketch cells, shared with every probe of them —
+    * one definition, so a probe side can never drift from the sketch
+    * cells. */
+  private[graft] val CmsSeedBase = 100
 
   /** The per-item cell array underlying cmsSketch, exposed for the
     * STREAMING twin (counts are order-insensitive, so the online sketch
@@ -184,8 +187,8 @@ object Sketch {
     * probes are |keys|·depth rows joined against it map-side. The exact
     * side is the expensive half — the audit runs on a bounded key set,
     * the sketch runs everywhere. */
-  def cmsErrorAudit(df: DataFrame, c: Column, depth: Int = 4,
-                    width: Int = 64): DataFrame = {
+  def cmsErrorAudit(df: DataFrame, c: Column): DataFrame = {
+    val (depth, width) = (4, 64)
     val cells = cmsSketch(df, c, depth, width)
     val exact = df.select(c.as("key")).groupBy(col("key"))
       .agg(count(lit(1)).as("exact_cnt"))
@@ -203,19 +206,11 @@ object Sketch {
       .orderBy(col("key"))
   }
 
-  /** Merge CMS sketches (same depth/width): cells add. */
-  def cmsMerge(sketches: Seq[DataFrame]): DataFrame =
-    sketches.reduce(_.unionByName(_))
-      .groupBy(col("row"), col("bucket"))
-      .agg(sum(col("cnt")).as("cnt"))
-      .orderBy(col("row"), col("bucket"))
-
   /** Fixed-bin histogram sketch over a numeric column: bin = floor(v /
     * width), count per bin — the mergeable quantile/distribution sketch
-    * (merge = summing bin counts, like cmsMerge). The judged artifact is
-    * the exact integer (bin, cnt) table; quantile estimates interpolate
-    * driver-side off the bounded bin list (histogramQuantile) and stay off
-    * the judged surface, like the HLL/CMS estimates.
+    * (merge = summing bin counts, like the CMS cells). The judged artifact
+    * is the exact integer (bin, cnt) table; quantile estimates interpolate
+    * off the bounded bin list ([[histogramQuantiles]]).
     *
     * Shape at scale: one partial-aggregated groupBy on a bounded key —
     * the same single-exchange plan as hllSketch. A production pipeline
@@ -231,16 +226,9 @@ object Sketch {
       .orderBy(col("bin"))
   }
 
-  /** Merge histograms of the same width: bin counts add. */
-  def histogramMerge(sketches: Seq[DataFrame]): DataFrame =
-    sketches.reduce(_.unionByName(_))
-      .groupBy(col("bin"))
-      .agg(sum(col("cnt")).as("cnt"))
-      .orderBy(col("bin"))
-
-  /** DISTRIBUTED quantile estimates from a (bin, cnt) histogram — the
-    * judged twin of the driver-side helper below: one cumulative window
-    * over the |bins| rows (bounded by the bin count, never the data),
+  /** DISTRIBUTED quantile estimates from a (bin, cnt) histogram: one
+    * cumulative window over the |bins| rows (bounded by the bin count,
+    * never the data),
     * then for each q the single containing bin (cum ≥ target > prev,
     * unique because empty bins don't exist in the table) interpolates
     * linearly. Error bounded by the bin width; arithmetic is plain IEEE
@@ -267,57 +255,5 @@ object Sketch {
           round((col("bin") + (target - col("prev")) / col("cnt")) * width, 6)
             .as("est"))
     }.reduce(_.unionByName(_)).orderBy(col("q"))
-  }
-
-  /** Driver-side quantile estimate from a (bin, cnt) histogram: find the
-    * bin containing the q-th value and interpolate linearly inside it.
-    * Error is bounded by the bin width — the classic histogram trade. */
-  def histogramQuantile(sketch: DataFrame, width: Double, q: Double): Double = {
-    require(q >= 0 && q <= 1, s"q must be in [0,1], got $q")
-    val bins = sketch.select(col("bin"), col("cnt")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val total = bins.map(_._2).sum
-    if (total == 0) return Double.NaN
-    val target = q * total
-    var acc = 0L
-    for ((bin, cnt) <- bins) {
-      if (acc + cnt >= target) {
-        val frac = if (cnt == 0) 0.0 else (target - acc) / cnt
-        return (bin + frac) * width
-      }
-      acc += cnt
-    }
-    (bins.last._1 + 1) * width
-  }
-
-  /** Driver-side CMS point estimate for one key (min over depth rows).
-    * Probe cells come from Dedup.seededHashJvm with the shared seed base —
-    * the single definition the sketch itself uses. */
-  def cmsEstimate(sketch: DataFrame, key: String, depth: Int = 4,
-                  width: Int = 64): Long = {
-    val cellOf = (0 until depth).map { i =>
-      i -> (Dedup.seededHashJvm(CmsSeedBase + i, key) % width).toInt
-    }.toMap
-    val cells = sketch.collect()
-      .map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
-    (0 until depth).map(i => cells.getOrElse((i, cellOf(i)), 0L)).min
-  }
-
-  /** Driver-side HLL estimate from a (bucket, max_rho) sketch — the float
-    * part stays out of the judged surface; accuracy is tolerance-tested. */
-  def estimate(sketch: DataFrame, m: Int = 64): Double = {
-    val rhos = sketch.select(col("bucket"), col("max_rho")).collect()
-      .map(r => r.getInt(0) -> r.getInt(1)).toMap
-    val alpha = m match {
-      case 16 => 0.673
-      case 32 => 0.697
-      case 64 => 0.709
-      case _  => 0.7213 / (1 + 1.079 / m)
-    }
-    val zeros = (0 until m).count(b => !rhos.contains(b))
-    val z = (0 until m).map(b => math.pow(2.0, -rhos.getOrElse(b, 0))).sum
-    val raw = alpha * m * m / z
-    if (raw <= 2.5 * m && zeros > 0) m * math.log(m.toDouble / zeros) // small-range
-    else raw
   }
 }

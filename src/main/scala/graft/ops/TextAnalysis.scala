@@ -99,7 +99,6 @@ object TextAnalysis {
     * free here, a second corpus pass anywhere else). Unordered — callers
     * sort. */
   def curationSignals(docs: DataFrame, carry: Seq[String] = Nil,
-                      minTokens: Int = 50, maxTokens: Int = 100000,
                       carryTokens: Boolean = false): DataFrame = {
     val toks = tokens(col("text"))
     val nTok = size(toks).cast("long")
@@ -112,7 +111,7 @@ object TextAnalysis {
     val nSym = size(regexp_extract_all(col("text"),
       lit("[^A-Za-z0-9\\s]"), lit(0))).cast("long")
     val nStop = size(array_intersect(toks, typedlit(stopwords))).cast("long")
-    val keep = (nTok >= minTokens && nTok <= maxTokens) &&
+    val keep = (nTok >= GopherMinTokens && nTok <= GopherMaxTokens) &&
       (sumTokLen >= nTok * 3 && sumTokLen <= nTok * 10) &&
       (nAlphaTok * 5 >= nTok * 4) &&
       (nSym * 10 <= length(col("text")).cast("long")) &&
@@ -134,7 +133,8 @@ object TextAnalysis {
     * in corpus tokens, shuffles bounded by per-doc distinct-gram counts.
     * Ratios divide two exact integers and round once, so the values are
     * engine-exact. */
-  def repetitionStats(docs: DataFrame, n: Int = 2): DataFrame = {
+  def repetitionStats(docs: DataFrame): DataFrame = {
+    val n = 2
     // A document's n-grams all derive from its one `text` cell, so the
     // per-doc rollup never needs to cross rows: sort the gram array and
     // count distinct values / the longest equal run WITHIN the row. Zero
@@ -291,8 +291,8 @@ object TextAnalysis {
     * everything needed to verify the scrub without materializing scrubbed
     * text in the result. Map-only (regex per row, no shuffle): linear scan
     * at any corpus size, stays inside whole-stage codegen. */
-  def piiScrub(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val raw = col(textCol)
+  def piiScrub(docs: DataFrame): DataFrame = {
+    val raw = col("text")
     val scrubbed =
       regexp_replace(
         regexp_replace(
@@ -312,11 +312,16 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
   }
 
+  /** The Gopher r_tokens bounds, shared by [[gopherRules]] and
+    * [[curationSignals]]. */
+  private val GopherMinTokens = 50
+  private val GopherMaxTokens = 100000
+
   /** Gopher-style rule gate — the multi-rule document filter (Rae et al.,
     * "Scaling Language Models: Methods, Analysis & Insights from Training
     * Gopher", appendix A1.1) re-expressed with INTEGER-exact thresholds so
     * no engine can disagree on a boundary document:
-    *   r_tokens   — token count within [minTokens, maxTokens]
+    *   r_tokens   — token count within [50, 100000]
     *   r_word_len — mean token length in [3, 10] chars,
     *                tested as 3·n ≤ Σlen(tok) ≤ 10·n (no division)
     *   r_alpha    — ≥ 80% of tokens contain a letter: 5·n_alpha ≥ 4·n
@@ -325,8 +330,7 @@ object TextAnalysis {
     * `keep` is the conjunction; the per-rule booleans are emitted so
     * curation can see WHY a document was cut, not just that it was.
     * Map-only (pure column expressions): linear scan, zero shuffle. */
-  def gopherRules(docs: DataFrame, minTokens: Int = 50,
-                  maxTokens: Int = 100000): DataFrame = {
+  def gopherRules(docs: DataFrame): DataFrame = {
     val toks = tokens(col("text"))
     val nTok = size(toks).cast("long")
     val sumTokLen = aggregate(toks, lit(0L), (acc, t) => acc + length(t))
@@ -336,7 +340,7 @@ object TextAnalysis {
     val nStop = size(array_intersect(toks, typedlit(stopwords))).cast("long")
     docs.select(
         col("doc_id"), nTok.as("n_tokens"),
-        (nTok >= minTokens && nTok <= maxTokens).as("r_tokens"),
+        (nTok >= GopherMinTokens && nTok <= GopherMaxTokens).as("r_tokens"),
         (sumTokLen >= nTok * 3 && sumTokLen <= nTok * 10).as("r_word_len"),
         (nAlphaTok * 5 >= nTok * 4).as("r_alpha"),
         (nSym * 10 <= length(col("text")).cast("long")).as("r_symbol"),
@@ -435,7 +439,7 @@ object TextAnalysis {
       .select(col("w1"), col("w2"),
         (-log(col("cb").cast("double") / col("cp"))).as("nll"))
     // Size-adaptive score join (same class of bounded driver probe as the
-    // ngramJaccard block census): a natural-language bigram vocabulary is
+    // ngramJaccardCanonical block census): a natural-language bigram vocabulary is
     // sublinear in the corpus (Heaps' law) and broadcastable far beyond
     // this library's test scales — then the corpus stream never shuffles
     // at all, and the per-doc rollup collapses map-side because the
@@ -500,7 +504,8 @@ object TextAnalysis {
     * vocabulary, measured 8× on 10× data at sf1 as the vocabulary grew
     * linearly. Tie-break on the bigram string (binary UTF-8 order in both
     * engines) keeps both phases total-order deterministic. */
-  def ngramFreq(docs: DataFrame, topN: Int = 10, slices: Int = 64): DataFrame = {
+  def ngramFreq(docs: DataFrame, topN: Int = 10): DataFrame = {
+    val slices = 64
     import org.apache.spark.sql.expressions.Window
     // per-doc collapsed gram counts (docGramCounts): the explode emits one
     // row per distinct gram per doc, and the vocab rollup sums the in-doc
@@ -638,12 +643,10 @@ object TextAnalysis {
     * symbols joined by SEP, separators doubled, the pattern
     * `SEP l SEP SEP r SEP` replaced (plain left-to-right non-overlapping
     * replace — exactly BPE's merge order), doubles collapsed, ends
-    * trimmed. "aaa" under merge (a,a) → "aa·a", not "a·aa". */
-  def bpeMergeRounds(docs: DataFrame, rounds: Int = 5): DataFrame =
-    bpeTrainFrames(docs, rounds)._1.orderBy("round")
-
-  /** The train loop's two tables as DataFrames — (merges, final vocab) —
-    * so callers can stage them once per SF and fan both the merge-table
+    * trimmed. "aaa" under merge (a,a) → "aa·a", not "a·aa".
+    *
+    * Returns the loop's two tables — (merges, final vocab (w, wc, rep))
+    * — so callers can stage them once per SF and fan both the merge-table
     * query and the encode query off the staged result. */
   def bpeTrainFrames(docs: DataFrame, rounds: Int): (DataFrame, DataFrame) = {
     val spark = docs.sparkSession
@@ -652,8 +655,14 @@ object TextAnalysis {
     (merges.toDF("round", "sym_l", "sym_r", "merged", "n"), vocab)
   }
 
-  /** bpeEncode against an already-trained vocabulary (w, wc, rep) — the
-    * staged-apply path: train once, encode any table. */
+  /** Apply the trained merges back to the corpus: every qualifying word
+    * carries the segmentation its vocabulary row ended the merge loop
+    * with, so encoding is one join of the (Heaps-sublinear) vocabulary
+    * (w, wc, rep) from [[bpeTrainFrames]] against the exploded word stream
+    * plus a per-doc rollup — the tokenizer-APPLY side of the train loop,
+    * reporting per-document BPE token counts and the chars-per-token
+    * compression the tokenizer actually achieves on its own training
+    * corpus. Train once, encode any table. */
   def bpeEncodeWith(docs: DataFrame, vocabRep: DataFrame): DataFrame = {
     val vocab = vocabRep
       .select(col("w"),
@@ -673,16 +682,6 @@ object TextAnalysis {
         expr("n_bpe_tokens * 1000000 DIV n_words").as("tokens_per_word_ppm"))
       .orderBy(col("doc_id"))
   }
-
-  /** Apply the trained merges back to the corpus: every qualifying word
-    * carries the segmentation its vocabulary row ended the merge loop
-    * with, so encoding is one join of the (Heaps-sublinear) vocabulary
-    * against the exploded word stream plus a per-doc rollup — the
-    * tokenizer-APPLY side of bpeMergeRounds, reporting per-document BPE
-    * token counts and the chars-per-token compression the tokenizer
-    * actually achieves on its own training corpus. */
-  def bpeEncode(docs: DataFrame, rounds: Int = 5): DataFrame =
-    bpeEncodeWith(docs, bpeTrain(docs, rounds)._2)
 
   /** The \u0001 symbol separator of the BPE loop — guaranteed collision-
     * free because the vocabulary is pre-tokenized to [a-z0-9]+ words. */
@@ -754,10 +753,10 @@ object TextAnalysis {
     * aggregate would barely shrink the stream) — followed by one doc-keyed
     * rollup. Shingles are distinct within a doc (Dedup.shingles), so the
     * window count IS the document frequency. */
-  def ngramNovelty(docs: DataFrame, n: Int = 3): DataFrame = {
+  def ngramNovelty(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val g = docs.select(col("doc_id"),
-      explode(Dedup.shingles(col("text"), n)).as("g"))
+      explode(Dedup.shingles(col("text"))).as("g"))
     g.withColumn("df", count(lit(1)).over(Window.partitionBy(col("g"))))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_shingles"),
@@ -780,7 +779,7 @@ object TextAnalysis {
     * in practice a handful — carries all pairwise intersection counts
     * through a tiny in-row bit expansion. Nothing pairwise ever touches
     * corpus-sized data; adding a source adds a bit, not a pass. */
-  def sourcePairJaccard(docs: DataFrame, n: Int = 3): DataFrame = {
+  def sourcePairJaccard(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // Dense source index: a bounded dim table; the 1-partition window
     // ranks |sources| rows, never data.
@@ -788,7 +787,7 @@ object TextAnalysis {
       .select(col("source"),
         (row_number().over(Window.orderBy(col("source"))) - 1).as("sidx"))
     val masks = docs
-      .select(col("source"), explode(Dedup.shingles(col("text"), n)).as("g"))
+      .select(col("source"), explode(Dedup.shingles(col("text"))).as("g"))
       .distinct()
       .join(broadcast(srcIdx), Seq("source"))
       .groupBy(col("g"))
@@ -843,11 +842,11 @@ object TextAnalysis {
     * double — and the gate compares integers, so there is no float
     * rounding boundary anywhere (round(wsum/(1000n), 6) with these small
     * round denominators DOES land on .5 ties at corpus scale). */
-  def classifierScore(docs: DataFrame, seed: Int = 31): DataFrame = {
+  def classifierScore(docs: DataFrame): DataFrame = {
     val toks = docs.select(col("doc_id"),
       explode(split(F.normalizeText(lower(col("text"))), " ")).as("term"))
     toks
-      .select(col("doc_id"), (Dedup.seededHash(seed, col("term")) % 2001).as("w"))
+      .select(col("doc_id"), (Dedup.seededHash(31, col("term")) % 2001).as("w"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tokens"), sum(col("w")).as("wsum"))
       .select(col("doc_id"), col("n_tokens"),
@@ -930,7 +929,8 @@ object TextAnalysis {
     * nothing aggregates: output rows = total occurrences of the query
     * terms, the quantity the caller asked to see. Pagination is the
     * caller's cut (ORDER BY term, doc, pos is the stable page key). */
-  def kwic(docs: DataFrame, terms: Seq[String], window: Int = 2): DataFrame = {
+  def kwic(docs: DataFrame, terms: Seq[String]): DataFrame = {
+    val window = 2
     val start = greatest(col("pos0") + 1 - window, lit(1))
     val stop = least(col("pos0") + 1 + window, size(col("toks")))
     docs
@@ -995,7 +995,8 @@ object TextAnalysis {
     * (the tx_langid lam discipline); the top-k leaves via TakeOrdered.
     * Every arithmetic step keeps ONE operand order — the DuckDB twin is
     * written with the identical shape. */
-  def bm25(docs: DataFrame, terms: Seq[String], topK: Int = 100): DataFrame = {
+  def bm25(docs: DataFrame, terms: Seq[String]): DataFrame = {
+    val topK = 100
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
     // Terms pass through the SAME normalization as the document stream
     // (lower + whitespace-collapse) — an uppercase or padded term could

@@ -51,12 +51,11 @@ object Url {
     * variant count shows how much the canonicalization actually folded.
     * Same partial-aggregated hash-agg shape as exact dedup — one shuffle
     * keyed on the canonical string. */
-  def canonicalDedup(df: DataFrame, idCol: String = "doc_id",
-                     urlCol: String = "url"): DataFrame =
-    df.select(col(idCol), col(urlCol),
-        canonicalize(col(urlCol)).as("canon_url"))
+  def canonicalDedup(df: DataFrame): DataFrame =
+    df.select(col("doc_id"), col("url"),
+        canonicalize(col("url")).as("canon_url"))
       .groupBy(col("canon_url"))
-      .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"),
-        countDistinct(col(urlCol)).as("n_variants"))
+      .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"),
+        countDistinct(col("url")).as("n_variants"))
       .orderBy(col("keep_id"))
 }

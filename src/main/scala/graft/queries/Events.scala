@@ -20,7 +20,7 @@ object Events extends QueryPack {
 
     // Distinct-user sketch: the judged artifact is the exact integer
     // (bucket, max_rho) table — the mergeable HLL form; the float estimate
-    // stays driver-side (Sketch.estimate, tolerance-tested in OpsSpec).
+    // is judged only in ev_hll_error (Sketch.hllErrorAudit).
     "ev_hll_sketch" -> ((s, dir) =>
       graft.ops.Sketch.hllSketch(table(s, dir, "events"),
         org.apache.spark.sql.functions.col("user_id"), m = 64)),
@@ -225,7 +225,7 @@ object Events extends QueryPack {
 
     // Fixed-bin histogram over event values: the mergeable quantile/
     // distribution sketch; judged artifact is the exact (bin, cnt) table,
-    // quantile estimates stay driver-side (Sketch.histogramQuantile).
+    // quantile estimates are st3_hist_quantile (Sketch.histogramQuantiles).
     "ev_histogram" -> ((s, dir) =>
       graft.ops.Sketch.histogram(table(s, dir, "events"),
         org.apache.spark.sql.functions.col("value"), width = 0.5)),
@@ -876,7 +876,7 @@ object Events extends QueryPack {
 
     // ev_hll_by_type's cells + the estimator: integer harmonic denominator
     // (exact, order-independent), one constant product, one IEEE division,
-    // the linear-counting branch — same alpha/rules as Sketch.estimate.
+    // the linear-counting branch — same alpha/rules as Sketch.hllErrorAudit.
     "ev_hll_error" ->
       """WITH h AS (
         |  SELECT event_type,

@@ -452,7 +452,7 @@ object TextOps extends QueryPack {
 
   /** Bloom twin: a probe hits iff ALL THREE positions (disjoint 16-bit
     * slices of the 60-bit gram hash, mod 2¹⁶ — identical arithmetic to
-    * Dedup.bloomDecontaminateFromGrams) are set in the bitmap, and a bit is
+    * Dedup.bloomHit) are set in the bitmap, and a bit is
     * set iff SOME benchmark gram produced that position — so bit membership
     * IS membership in the distinct benchmark position set, and the oracle
     * needs no word packing (DuckDB BIGINT `1 << 63` overflows; set
@@ -1547,7 +1547,7 @@ object TextOps extends QueryPack {
       |  GROUP BY doc_id)""".stripMargin
 
 
-  /** Unrolled-CTE DuckDB twin of TextAnalysis.bpeMergeRounds: one
+  /** Unrolled-CTE DuckDB twin of TextAnalysis.bpeTrainFrames: one
     * (pairs -> best -> merged-vocab) CTE triple per round, with the SAME
     * double-separator merge rewrite (chr(1) separator, plain left-to-right
     * replace), so both engines run the identical algorithm. */

@@ -1847,7 +1847,7 @@ object Vectors extends QueryPack {
   }
 
 
-  /** Unrolled-CTE twin of Similarity.pcaPower: the emb_covariance chain,
+  /** Unrolled-CTE twin of Similarity.pcaPowerFromCov: the emb_covariance chain,
     * symmetrized, then 8 (multiply, norm, normalize) CTE triples — every
     * intermediate 6-dp rounded with the -0.0 normalization. */
   private lazy val pcaPowerOracle: String = {

@@ -227,8 +227,8 @@ package object queries {
     * landing on an exact .5 at the target scale flips a cent between the
     * engines (the round-9 sf1 q5/q7/pt1 failures). Decimal half-up is
     * identical in both. */
-  def dsum(c: Column, scale: Int = 2): Column =
-    round(sum(c.cast(DecimalType(30, 10))), scale).cast(DoubleType)
+  def dsum(c: Column): Column =
+    round(sum(c.cast(DecimalType(30, 10))), 2).cast(DoubleType)
 
   /** Oracle-deterministic AVG: exact decimal sum, double divide, round.
     * DuckDB twin: `round(CAST(sum(CAST(x AS DECIMAL(30,10))) AS DOUBLE)

@@ -148,12 +148,11 @@ object StreamOps {
     * which is exactly what bounded state must NOT hold; the caller ranks
     * the drained (batch) result by first_ts (disjoint sessions make that
     * ordinal equal the batch twin's). */
-  def sessionizeEvict(events: DataFrame, gapMin: Int,
-                      watermark: String = "10 minutes"): DataFrame = {
+  def sessionizeEvict(events: DataFrame, gapMin: Int): DataFrame = {
     val gapUs = gapMin.toLong * 60L * 1000000L
     val tsUs = unix_micros(col("ts").cast("timestamp"))
     events
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", "10 minutes")
       .groupBy(session_window(col("ts"), s"${gapUs + 1} microseconds"),
                col("user_id"))
       .agg(count(lit(1)).as("n_events"),

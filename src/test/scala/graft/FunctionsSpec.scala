@@ -271,7 +271,6 @@ class FunctionsSpec extends SparkSpec {
     val bitmap = Dedup.bitmapFromWords(Dedup.bloomBitmapWords(
       Dedup.gramHashes(docs.filter($"doc_id" % 11 === 0), n = 4)))
     val n = 4
-    val mBits = 1 << 16
     val got = Dedup.bloomProbeInRow(docs, bitmap, n)
       .orderBy($"doc_id").collect().map(_.toSeq).toSeq
     // the pre-r15 higher-order form, rebuilt verbatim as the reference
@@ -287,7 +286,7 @@ class FunctionsSpec extends SparkSpec {
       .select($"doc_id",
         size($"__ghs").cast("long").as("n_grams"),
         size(org.apache.spark.sql.functions.filter($"__ghs",
-          g => Dedup.bloomHit(g, bitmap, mBits))).cast("long").as("n_hits"))
+          g => Dedup.bloomHit(g, bitmap))).cast("long").as("n_hits"))
       .orderBy($"doc_id").collect().map(_.toSeq).toSeq
     assert(got.nonEmpty && got == want,
       s"native bloom fold diverged: ${got.take(3)} vs ${want.take(3)}")

@@ -91,14 +91,15 @@ class PropertySpec extends SparkSpec {
       (3L, (1 to 8).map(i => s"beta$i").mkString(" ") + " gammaX", "en"),
       (4L, (1 to 8).map(i => s"beta$i").mkString(" ") + " gammaY", "en"))
       .toDF("doc_id", "text", "lang")
-    val blocked = rows(Dedup.ngramJaccard(straddle, threshold = 0.5))
+    val blocked = rows(OpsSpec.jaccardPairs(straddle, threshold = 0.5))
       .map(r => (r.getLong(0), r.getLong(1)))
     // boundary pair (1,2) lost, same-bucket pair (3,4) found
     assert(!blocked.contains((1L, 2L)), "contract changed: boundary pair now emitted")
     assert(blocked.contains((3L, 4L)))
     // the unblocked MinHash path recovers the boundary pair (deterministic
     // seeded hashes — not a flaky probabilistic assertion)
-    val mh = rows(Dedup.minHashVerified(straddle, minEst = 0.3))
+    val mh = rows(Dedup.minHashVerifiedFromSignatures(
+        Dedup.minHashSignatures(straddle).localCheckpoint(), minEst = 0.3))
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(mh.contains((1L, 2L)), "MinHash no longer recovers the boundary pair")
   }
@@ -121,7 +122,7 @@ class PropertySpec extends SparkSpec {
     val corpus = samples(docG, 60).zipWithIndex
       .map { case ((t, l), i) => (i.toLong, t, l) }
       .toDF("doc_id", "text", "lang")
-    val got = rows(Dedup.ngramJaccard(corpus, threshold = 0.5))
+    val got = rows(OpsSpec.jaccardPairs(corpus, threshold = 0.5))
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val prep = corpus.select($"doc_id", $"lang",
       array_sort(array_distinct(split(F.normalizeText(lower($"text")), " ")))
@@ -152,7 +153,8 @@ class PropertySpec extends SparkSpec {
       (2L, "one two three four five six seven eight", "en"),   // exact dup
       (3L, "totally different words in every position here", "en"))
       .toDF("doc_id", "text", "lang")
-    val got = rows(Dedup.minHashVerified(docs, minEst = 0.5))
+    val got = rows(Dedup.minHashVerifiedFromSignatures(
+        Dedup.minHashSignatures(docs).localCheckpoint(), minEst = 0.5))
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(got == Seq((1L, 2L, 1.0)))
   }
@@ -167,13 +169,17 @@ class PropertySpec extends SparkSpec {
     val bench = mk("b", 200).toDF("doc_id", "text")   // 200·11 distinct grams
     val corpus = mk("c", 1000).toDF("doc_id", "text") // 1000·11 probe grams
     val mBits = 1 << 12 // small filter so the FP rate is macroscopic
-    val res = Dedup.bloomDecontaminate(corpus, bench, n = 4, mBits = mBits)
+    val benchGrams = Dedup.gramHashes(bench, 4).distinct()
+    val bitmap = Dedup.bitmapFromWords(
+      Dedup.bloomBitmapWords(benchGrams, mBits), mBits)
+    val res = Dedup.bloomProbe(Dedup.gramHashes(corpus, 4).distinct(), bitmap)
       .agg(sum($"n_grams"), sum($"n_hits")).first()
     val (grams, hits) = (res.getLong(0), res.getLong(1))
     assert(grams == 11000L)
     // exact join on the same inputs: zero contamination, confirming every
     // bloom hit above is a false positive (the documented superset contract)
-    assert(Dedup.decontaminate(corpus, bench, n = 4).count() == 0L)
+    assert(Dedup.decontaminateFromGrams(
+      Dedup.gramHashes(corpus, 4).distinct(), benchGrams).count() == 0L)
     val nBench = Dedup.gramHashes(bench, 4).select($"gh").distinct().count()
     val fill = 1.0 - math.exp(-3.0 * nBench / mBits)
     val theo = math.pow(fill, 3)
@@ -185,7 +191,7 @@ class PropertySpec extends SparkSpec {
     // Zero false negatives: re-feed the benchmark texts as the corpus —
     // every gram is genuinely shared, so every probe must hit.
     val echo = bench.select(($"doc_id" + 10000L).as("doc_id"), $"text")
-    rows(Dedup.bloomDecontaminate(echo, bench, n = 4, mBits = mBits))
+    rows(Dedup.bloomProbe(Dedup.gramHashes(echo, 4).distinct(), bitmap))
       .foreach { r =>
         assert(r.getAs[Long]("n_hits") == r.getAs[Long]("n_grams") &&
           r.getAs[Boolean]("contaminated"), s"false negative on $r")
@@ -244,8 +250,8 @@ class PropertySpec extends SparkSpec {
             case (acc, p) => (p, p + L) :: acc
           }.reverse
         }.toMap
-      val got = rows(Dedup.duplicatedSpans(
-          docs.toDF("doc_id", "text"), minLen = L))
+      val got = rows(Dedup.duplicatedSpansFrom(Dedup.spanArrays(
+          docs.toDF("doc_id", "text"), minLen = L)))
         .groupBy(_.getAs[Long]("doc_id")).view.mapValues(_.map(r =>
           (r.getAs[Long]("span_start"), r.getAs[Long]("span_end"))).toList)
         .toMap
@@ -261,7 +267,8 @@ class PropertySpec extends SparkSpec {
         kept ++= t.substring(cur.toInt - 1)
         id -> kept.toString
       }.toMap
-      val cleanGot = rows(Dedup.redactSpans(docs.toDF("doc_id", "text"), L))
+      val cleanGot = rows(Dedup.redactFromSpans(docs.toDF("doc_id", "text"),
+          Dedup.spanArrays(docs.toDF("doc_id", "text"), L)))
         .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("clean_text"))
         .toMap
       assert(cleanGot == cleanWant, s"trial $trial: redact mismatch")
@@ -355,7 +362,8 @@ class PropertySpec extends SparkSpec {
       .toDF("doc_id", "text", "lang")
     val expected = n.toLong * (n - 1) / 2
     import graft.ops.Dedup
-    val lsh = Dedup.minHashLsh(flood)
+    val lsh = Dedup.minHashPairsFromSignatures(
+      Dedup.minHashSignatures(flood).localCheckpoint())
     assert(lsh.count() == expected)
     val sh = Dedup.simHash(flood).filter(col("hamming") === 0)
     assert(sh.count() == expected)
@@ -661,7 +669,7 @@ class PropertySpec extends SparkSpec {
     val members = (0 until m).map(i => (i.toLong, 0L, m.toLong))
       .toDF("doc_id", "rep", "r")
     val canon = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
-    val expanded = Dedup.expandMemberPairs(canon, members, Nil, chunks = 4)
+    val expanded = Dedup.expandMemberPairs(canon, members, Nil)
     val perPart = expanded.rdd
       .mapPartitions(it => Iterator.single(it.size.toLong), true).collect()
     val total = perPart.sum
