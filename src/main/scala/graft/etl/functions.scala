@@ -38,8 +38,9 @@ object functions {
   def toDoubleOr(c: Column, default: Double): Column =
     coalesce(c.cast(StringType).try_cast(DoubleType), lit(default))
 
-  def toLongOr(c: Column, default: Long): Column =
-    coalesce(c.cast(StringType).try_cast(DoubleType).try_cast(LongType), lit(default))
+  /** The integer twin of toDoubleOr, with the reference's -1 default. */
+  def toLongOr(c: Column): Column =
+    coalesce(c.cast(StringType).try_cast(DoubleType).try_cast(LongType), lit(-1L))
 
   /** F4 — surrogate business key (main.py:103-105): 1 -> "C001". printf-style
     * pad (zfill semantics: pads but never truncates, unlike lpad). */
@@ -75,9 +76,10 @@ object functions {
 
   /** F9 — cast-to-string with null sentinel (main.py:258-260). The reference's
     * pandas code actually produced the string "nan" for NaN (astype-then-fillna
-    * bug, SURVEY §7.3.5); we implement the documented *intent*: sentinel. */
-  def stringOr(c: Column, sentinel: String = "-1"): Column =
-    coalesce(c.cast(StringType), lit(sentinel))
+    * bug, SURVEY §7.3.5); we implement the documented *intent*: the "-1"
+    * sentinel. */
+  def stringOr(c: Column): Column =
+    coalesce(c.cast(StringType), lit("-1"))
 
   /** F11 — date-only cast (sync_dimensions_dw.py:127). */
   def toDateOnly(c: Column): Column = to_date(c)

@@ -70,7 +70,7 @@ object AsOf {
   /** Backward as-of join with a STALENESS BOUND — the feature-store read
     * rule ("use the latest feature value, but never one older than N"):
     * a carried match only counts when the right row lies within
-    * `toleranceSec` of the left row's time; staler matches are nulled
+    * one hour (`toleranceSec`) of the left row's time; staler matches are nulled
     * exactly like merge_asof's `tolerance`. Same single-shuffle
     * union-and-carry as `backward` — the bound is a map-side null-out
     * AFTER the carry (zero extra shuffle), plus a surfaced
@@ -79,8 +79,9 @@ object AsOf {
     * tests); callers get it as `<prefix><rightTime>`. */
   def backwardWithin(left: DataFrame, right: DataFrame, by: Seq[String],
                      leftTime: String, rightTime: String, rightSeq: String,
-                     rightCols: Seq[String], toleranceSec: Long,
+                     rightCols: Seq[String],
                      prefix: String = "asof_"): DataFrame = {
+    val toleranceSec = 3600L
     val lcols = left.columns.toSeq
     val carried = backward(left, right, by, leftTime, rightTime, rightSeq,
       (rightCols :+ rightTime).distinct, prefix)

@@ -238,8 +238,8 @@ object Dedup {
   def minHashC(i: Int): Long = (0x165667B19E3779F9L * (i + 1)) >>> 33
 
   /** The MinHash layout: 16 hashes over word 3-shingles, banded for LSH
-    * into 4 bands of 4 rows. Operators that read a signature table take
-    * the hash count from its h* columns ([[sigWidth]]). */
+    * into 4 bands of 4 rows. Every reader of a signature table checks
+    * that it has exactly NumHashes h* columns ([[requireSignature]]). */
   private val NumHashes = 16
   private val ShingleLen = 3
   private val Bands = 4
@@ -248,8 +248,11 @@ object Dedup {
     * tasks). */
   private val Chunks = 4
 
-  private def sigWidth(sig: DataFrame): Int =
-    sig.columns.count(_.matches("h\\d+"))
+  private def requireSignature(sig: DataFrame): Unit = {
+    val n = sig.columns.count(_.matches("h\\d+"))
+    require(n == NumHashes,
+      s"a MinHash signature table has $NumHashes h* columns, got $n")
+  }
 
   /** MinHash signature table: doc_id plus 16 min-hash columns
     * h0..h15, all computed in one pass (map-side partial aggregation).
@@ -340,9 +343,8 @@ object Dedup {
     * blocking key shared by the self-join (lshCandidates) and the
     * batch-vs-corpus join (incrementalLshFromBuckets). */
   def bandBuckets(sig: DataFrame): DataFrame = {
-    val numHashes = sigWidth(sig)
-    require(numHashes % Bands == 0)
-    val rowsPerBand = numHashes / Bands
+    requireSignature(sig)
+    val rowsPerBand = NumHashes / Bands
     val bandCols = (0 until Bands).map { b =>
       val cols = (0 until rowsPerBand).map(r => col(s"h${b * rowsPerBand + r}"))
       struct(lit(b).as("band"), concat_ws(",", cols: _*).as("bh")).as(s"b$b")
@@ -374,7 +376,8 @@ object Dedup {
     * output-bounded by [[expandMemberPairs]]. */
   private def canonicalLshCandidates(
       sig: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val keyCols = (0 until sigWidth(sig)).map(i => s"h$i")
+    requireSignature(sig)
+    val keyCols = (0 until NumHashes).map(i => s"h$i")
     val members = materialize(signatureMembers(sig, keyCols))
     val repSigs = materialize(sig.join(
       members.filter(col("doc_id") === col("rep")).select(col("doc_id")),
@@ -466,16 +469,15 @@ object Dedup {
     * ~1–2% eval slice at any corpus size, since the table is rows × bands
     * of (long, int, long)). */
   def splitLeakage(evalSig: DataFrame, trainSig: DataFrame): DataFrame = {
-    val numHashes = sigWidth(evalSig)
     val eb = broadcast(bandBuckets(evalSig)
       .select(col("doc_id").as("eval_doc"), col("band"), col("bh")))
     val cand = eb.join(bandBuckets(trainSig), Seq("band", "bh"))
       .select(col("eval_doc"), col("doc_id").as("train_doc"))
       .distinct()
-    val agree = (0 until numHashes).map { i =>
+    val agree = (0 until NumHashes).map { i =>
       when(col(s"a.h$i") === col(s"b.h$i"), 1).otherwise(0)
     }.reduce(_ + _)
-    val est = round(agree.cast("double") / numHashes, 6)
+    val est = round(agree.cast("double") / NumHashes, 6)
     cand.join(evalSig.as("a"), cand("eval_doc") === col("a.doc_id"))
       .join(trainSig.as("b"), cand("train_doc") === col("b.doc_id"))
       .select(col("eval_doc"), col("train_doc"), est.as("est_jaccard"))
@@ -504,15 +506,14 @@ object Dedup {
     * est already passed) and correctly drops intra pairs iff minEst > 1. */
   def minHashVerifiedFromSignatures(sig: DataFrame,
                                     minEst: Double = 0.5): DataFrame = {
-    val numHashes = sigWidth(sig)
     val (cand, members, repSigs) = canonicalLshCandidates(sig)
-    val agree = (0 until numHashes).map { i =>
+    val agree = (0 until NumHashes).map { i =>
       when(col(s"a.h$i") === col(s"b.h$i"), 1).otherwise(0)
     }.reduce(_ + _)
     // n is 16 (2^4): k/16 is exact in both binary and 4-decimal form, so
     // round(...,6) is the identity and cannot tie-break differently across
     // engines.
-    val est = round(agree.cast("double") / numHashes, 6)
+    val est = round(agree.cast("double") / NumHashes, 6)
     val canonEst = cand.join(repSigs.as("a"), cand("doc_a") === col("a.doc_id"))
       .join(repSigs.as("b"), cand("doc_b") === col("b.doc_id"))
       .select(col("doc_a"), col("doc_b"), est.as("est_jaccard"))
@@ -1011,6 +1012,11 @@ object Dedup {
       .agg(count(lit(1)).as("n_shared"))
       .orderBy(col("doc_id"))
 
+  /** Gram length of the decontamination gram tables and the in-row
+    * Bloom probe, which must agree for the probe to equal the batch
+    * screen. */
+  private[graft] val BloomGramLen = 4
+
   /** (doc_id, gh) of every n-token gram, seed-23 hashed — shared by the
     * exact ([[decontaminateFromGrams]]) and Bloom ([[bloomProbe]]) paths. NOT
     * distinct: callers dedup per their need (per-doc distinct for the
@@ -1123,15 +1129,15 @@ object Dedup {
     * cross rows: build the distinct gram-hash array with higher-order
     * functions, count it, and count the members whose three bitmap bits
     * are set. Emits the same (doc_id, n_grams, n_hits) rows as
-    * gramHashes → bloomProbe (docs shorter than n tokens excluded, same
-    * as gramHashes).
+    * gramHashes(_, BloomGramLen) → bloomProbe (docs shorter than
+    * BloomGramLen tokens excluded, same as gramHashes).
     *
     * This is the screen-AT-INGEST shape: in a streaming pipeline it is a
     * stateless map-side projection — no shuffle, no state store, no
     * per-micro-batch commit beyond the sink append — which is exactly what
     * a 100 TB ingest wants in front of the store. */
-  def bloomProbeInRow(docs: DataFrame, bitmap: Array[Long],
-                      n: Int): DataFrame = {
+  def bloomProbeInRow(docs: DataFrame, bitmap: Array[Long]): DataFrame = {
+    val n = BloomGramLen
     val mBits = bitmap.length * 64
     requireM(mBits)
     val toksC = split(F.normalizeText(lower(col("text"))), " ")
@@ -1261,7 +1267,8 @@ object Dedup {
     * the hash, one partial-agg rollup per doc. Linear in corpus tokens; no
     * windows, no quadratic stage. Precondition: < 2²⁰ tokens per document
     * (the packed position field); doc_id < 2⁴³. */
-  def chunkDedup(docs: DataFrame, chunkTokens: Int = 8): DataFrame = {
+  def chunkDedup(docs: DataFrame): DataFrame = {
+    val chunkTokens = 8
     val toks = split(F.normalizeText(lower(col("text"))), " ")
     val packed = col("doc_id") * lit(1L << 20) + col("i")
     val chunks = docs.select(col("doc_id"), toks.as("toks"))

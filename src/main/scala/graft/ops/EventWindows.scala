@@ -27,9 +27,10 @@ object EventWindows {
               col("n"), col("total"))
       .orderBy(col("win_start"), col("event_type"))
 
-  /** Sliding window (size/slide), same aggregate. Each event lands in
-    * size/slide windows. */
-  def sliding(events: DataFrame, sizeMin: Int, slideMin: Int): DataFrame =
+  /** Sliding window (30-minute size, 15-minute slide), same aggregate.
+    * Each event lands in size/slide windows. */
+  def sliding(events: DataFrame): DataFrame = {
+    val (sizeMin, slideMin) = (30, 15)
     events
       .groupBy(window(col("ts"), s"$sizeMin minutes", s"$slideMin minutes"),
                col("event_type"))
@@ -37,14 +38,21 @@ object EventWindows {
       .select(col("window.start").as("win_start"), col("event_type"),
               col("n"), col("total"))
       .orderBy(col("win_start"), col("event_type"))
+  }
 
-  /** Batch sessionization: per-user sessions split on inactivity > gapMin.
+  /** The inactivity gap that ends a session, shared by this batch
+    * sessionize and its streaming twins (StreamOps.sessionize,
+    * sessionizeEvict), which must split sessions identically. */
+  private[graft] val SessionGapMin = 30
+
+  /** Batch sessionization: per-user sessions split on inactivity >
+    * SessionGapMin.
     * Deterministic tie-break on event_id. The streaming twin keeps the same
     * (user, session) grouping via flatMapGroupsWithState. */
-  def sessionize(events: DataFrame, gapMin: Int): DataFrame = {
+  def sessionize(events: DataFrame): DataFrame = {
     val byUser = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
-    val gapUs = gapMin.toLong * 60L * 1000000L
+    val gapUs = SessionGapMin.toLong * 60L * 1000000L
     // ts is TIMESTAMP_NTZ (ns-parquet ingest); unix_micros needs TIMESTAMP —
     // the cast is an identity under the pinned UTC session TZ.
     val tsUs = unix_micros(col("ts").cast("timestamp"))
@@ -111,7 +119,8 @@ object EventWindows {
     * rows, and the per-type window sorts those tiny series, never raw
     * events. A hot type with millions of events per bucket costs the same
     * as a cold one. */
-  def spikes(events: DataFrame, bucketMin: Int = 60, trailing: Int = 4): DataFrame = {
+  def spikes(events: DataFrame): DataFrame = {
+    val (bucketMin, trailing) = (60, 4)
     val bucketUs = bucketMin.toLong * 60L * 1000000L
     val tsUs = unix_micros(col("ts").cast("timestamp"))
     // tsUs - pmod is exactly divisible, so the double division is exact
@@ -129,12 +138,13 @@ object EventWindows {
       .orderBy(col("event_type"), col("bk"))
   }
 
-  /** Top-k event types per tumbling window — the "what's trending right
+  /** Top-3 event types per hourly tumbling window — the "what's trending right
     * now" rollup. The rank runs over the (window, type) COUNTS, never raw
     * events: the only event-level shuffle is the partial-agg count, and
     * each window's ranking sorts at most |types| rows. Ties break on
     * event_type so the cut is deterministic in any engine. */
-  def windowedTopK(events: DataFrame, sizeMin: Int, k: Int): DataFrame = {
+  def windowedTopK(events: DataFrame): DataFrame = {
+    val (sizeMin, k) = (60, 3)
     val counts = events
       .groupBy(window(col("ts"), s"$sizeMin minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"))
@@ -223,8 +233,8 @@ object EventWindows {
     * Shape at scale: one partial aggregation to (type, day) — the only
     * corpus-sized shuffle — then a |types|-row moment rollup broadcast
     * back over the |types·days| daily table. No windows, no self-join. */
-  def dailyAnomaly(events: DataFrame, zCut: Double = 2.0): DataFrame =
-    anomalyFromDaily(dailyCounts(events), zCut)
+  def dailyAnomaly(events: DataFrame): DataFrame =
+    anomalyFromDaily(dailyCounts(events))
 
   /** The (event_type, day, n) daily count table — integer µs-epoch day
     * key (the retention() idiom), one partial-aggregated pass. Exposed so
@@ -242,7 +252,8 @@ object EventWindows {
 
   /** z-score flags over an already-aggregated (event_type, day, n)
     * table. */
-  def anomalyFromDaily(daily: DataFrame, zCut: Double = 2.0): DataFrame = {
+  def anomalyFromDaily(daily: DataFrame): DataFrame = {
+    val zCut = 2.0
     // sample std-dev from exact integer moments; a single-day type has no
     // spread to measure and drops out (days >= 2), as does sd = 0
     val stats = daily.groupBy(col("event_type"))

@@ -200,7 +200,8 @@ object Multimodal {
   /** Resize planning: compute target dimensions preserving aspect ratio with
     * a max-side bound — pure column arithmetic over decoded metadata; the
     * pixel work would live in the partition-wise decoder. */
-  def resizePlan(meta: DataFrame, maxSide: Int = 256): DataFrame = {
+  def resizePlan(meta: DataFrame): DataFrame = {
+    val maxSide = 256
     val scale = least(
       lit(maxSide.toDouble) / col("width"),
       lit(maxSide.toDouble) / col("height"), lit(1.0))

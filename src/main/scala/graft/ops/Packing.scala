@@ -21,18 +21,18 @@ import org.apache.spark.sql.functions._
 object Packing {
 
   /** (doc_id, shard, n_tokens, seq_id, seq_offset) per document. seq_id
-    * counts fixed-`ctxTokens` windows within the shard; seq_offset is the
-    * document's first-token position inside its sequence. Whitespace token
-    * count stands in for the tokenizer (swap the column expression for a
-    * real BPE count; nothing else changes). */
-  def sequencePack(docs: DataFrame, ctxTokens: Int = 2048,
-                   shardCol: String = "lang"): DataFrame = {
+    * counts fixed-`ctxTokens` windows within the shard (the `lang`
+    * column); seq_offset is the document's first-token position inside
+    * its sequence. Whitespace token count stands in for the tokenizer
+    * (swap the column expression for a real BPE count; nothing else
+    * changes). */
+  def sequencePack(docs: DataFrame, ctxTokens: Int = 2048): DataFrame = {
     val nTok = size(split(col("text"), "\\s+")).cast("long")
     val w = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, 0)
     val ctx = lit(ctxTokens.toLong)
     val start = col("end_tok") - col("n_tokens")
-    docs.select(col("doc_id"), col(shardCol).as("shard"), nTok.as("n_tokens"))
+    docs.select(col("doc_id"), col("lang").as("shard"), nTok.as("n_tokens"))
       .withColumn("end_tok", sum(col("n_tokens")).over(w))
       // start - pmod(start, ctx) is exactly divisible -> exact double div
       .select(col("doc_id"), col("shard"), col("n_tokens"),
@@ -43,14 +43,15 @@ object Packing {
 
   /** Byte-budget shard manifest for multimodal exports — the WebDataset /
     * tar-shard writer plan: assets lay out in deterministic (group,
-    * doc_id) order and cut into `shardBytes`-byte shards; each asset gets
+    * doc_id) order and cut into 64 KiB shards; each asset gets
     * the shard containing its first byte plus its offset in the stream.
     * Same per-group prefix-sum shape as sequencePack — no global sort;
     * at 100 TB the group column is the ingest partition, bounding every
     * window to one task's assets. Oversized assets land in the shard of
     * their first byte (real writers split or reject those downstream). */
-  def shardManifest(assets: DataFrame, bytesCol: String, groupCol: String,
-                    shardBytes: Long): DataFrame = {
+  def shardManifest(assets: DataFrame, bytesCol: String,
+                    groupCol: String): DataFrame = {
+    val shardBytes = 65536L
     val w = Window.partitionBy(col("grp")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, 0)
     val sb = lit(shardBytes)

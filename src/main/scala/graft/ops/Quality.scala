@@ -63,7 +63,6 @@ object Quality {
     * checks the sketch (integers / strings / dates — not raw doubles,
     * whose formatting is engine-specific). */
   def profileApprox(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val m = 64
     // Hash ONCE per (row, column), fan out as a PRIMITIVE long array via
     // posexplode (the position doubles as the column index), and group on
     // (int, int) — no per-row structs, no string group key in the 36M-row
@@ -71,7 +70,7 @@ object Quality {
     // aggregated rows.
     val hashes = cols.map(c =>
       when(col(c).isNotNull, Dedup.seededHash(7, col(c))))
-    val (bucket, rho) = Sketch.bucketRhoFromHash(col("h"), m)
+    val (bucket, rho) = Sketch.bucketRhoFromHash(col("h"))
     val name = cols.zipWithIndex.foldLeft(lit(null).cast("string")) {
       case (acc, (c, i)) => when(col("ci") === i, lit(c)).otherwise(acc)
     }

@@ -123,12 +123,12 @@ object Sampling {
     * broadcast one-row normalizer — the corpus is scanned once, never
     * shuffled; output is |sources| rows. */
   def repeatFactors(df: DataFrame, strataCol: String,
-                    tokenBudget: Long, maxEpochs: Int = 4): DataFrame = {
+                    tokenBudget: Long): DataFrame = {
     val nTok = size(split(col("text"), "\\s+")).cast("long")
     repeatFactorsFromCounts(
       df.groupBy(col(strataCol))
         .agg(count(lit(1)).as("n_docs"), sum(nTok).as("n_tokens")),
-      strataCol, tokenBudget, maxEpochs)
+      strataCol, tokenBudget)
   }
 
   /** [[repeatFactors]] over an ALREADY-AGGREGATED (strata, n_docs,
@@ -137,8 +137,8 @@ object Sampling {
     * the docs-frame form there would re-scan the corpus for numbers the
     * manifest already carries). Identical arithmetic row for row. */
   def repeatFactorsFromCounts(counts: DataFrame, strataCol: String,
-                              tokenBudget: Long,
-                              maxEpochs: Int = 4): DataFrame = {
+                              tokenBudget: Long): DataFrame = {
+    val maxEpochs = 4
     import org.apache.spark.sql.types.DecimalType
     val z = counts.agg(
       sum(sqrt(col("n_tokens").cast("double")).cast(DecimalType(30, 10)))

@@ -145,8 +145,8 @@ object Similarity {
     * Shape at scale: queries broadcast; candidates are bucket-equi-join
     * bounded; per-pair work is one dot product. Same posture as
     * [[signLshTopK]]. */
-  def mipsTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-               signBits: Int = 8): DataFrame = {
+  def mipsTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+    val signBits = 8
     val c = corpus.select(col("vec_id"), col("embedding"),
       signBucket(col("embedding"), signBits).as("bucket"))
     val q = broadcast(queries.select(col("vec_id").as("q_id"),
@@ -164,7 +164,7 @@ object Similarity {
   }
 
   /** Axis-sign LSH bucket id: bit i set iff embedding[i] > 0. */
-  def signBucket(emb: Column, signBits: Int = 8): Column =
+  def signBucket(emb: Column, signBits: Int): Column =
     (0 until signBits).map { i =>
       when(element_at(emb, i + 1) > 0f, lit(1L << i)).otherwise(lit(0L))
     }.reduce(_ bitwiseOR _)
@@ -307,11 +307,10 @@ object Similarity {
     * Recall is sub-cell-bounded (cross-sub-cell neighbors are missed on
     * top of the cross-cell misses the cell route already accepts) —
     * evaluate with the sim_lsh_recall harness before trusting the graph;
-    * at the judged SFs cells are smaller than the default cap, so the cap
+    * at the judged SFs cells are smaller than the cap of 64, so the cap
     * only binds where the hub hazard lives. */
-  def knnGraph(corpus: DataFrame, k: Int, centroidEvery: Int,
-               cellCap: Int = 64): DataFrame = {
-    require(cellCap > 1, s"cellCap must exceed 1, got $cellCap")
+  def knnGraph(corpus: DataFrame, k: Int, centroidEvery: Int): DataFrame = {
+    val cellCap = 64
     val assigned = ivfAssign(corpus, centroidEvery)
     val wc = Window.partitionBy(col("c_id")).orderBy(col("vec_id"))
     val sub = assigned.withColumn("sub",
@@ -470,7 +469,8 @@ object Similarity {
     * broadcast size, the build side chunks into an outer loop (block
     * nested-loop); past that scale the approximate variants (signLsh /
     * ivfTopK) are the designed path — exact all-pairs is not a 100 TB op. */
-  def cosineDedup(embeddings: DataFrame, threshold: Double): DataFrame = {
+  def cosineDedup(embeddings: DataFrame): DataFrame = {
+    val threshold = 0.3
     val p = embeddings.select(col("vec_id"), col("embedding"), col("label"),
       sqrt(dotf(col("embedding"), col("embedding"))).as("nrm"))
     val a = p.as("a"); val b = p.as("b")
@@ -608,19 +608,18 @@ object Similarity {
     *     PQ-only consumer never pays the route.
     * A corpus that arrives through `queries.table` pays its rebalance
     * shuffle once, in the checkpoint. */
-  def pqIvfIndex(corpus: DataFrame, subspaces: Int = 8,
-                 codebookK: Int = 16): PqIvf = {
-    val (codebook, cent, encoded) = pqIvfEncoded(corpus, subspaces, codebookK)
+  def pqIvfIndex(corpus: DataFrame, subspaces: Int = 8): PqIvf = {
+    val (codebook, cent, encoded) = pqIvfEncoded(corpus, subspaces)
     PqIvf(Pq(codebook, encoded.select(col("vec_id"), col("cp"))),
       encoded.select(col("vec_id"), col("c_id")), cent)
   }
 
   /** [[pqIvfIndex]] with both halves in one (vec_id, c_id, cp) frame:
     * (codebook, cent, encoded). Checkpoint `encoded` to write codes and
-    * cells from one pass (stagedPq). */
-  private[graft] def pqIvfEncoded(corpus: DataFrame, subspaces: Int,
-                                  codebookK: Int)
+    * cells from one pass (stagedPq). 16 codewords per subspace. */
+  private[graft] def pqIvfEncoded(corpus: DataFrame, subspaces: Int)
       : (DataFrame, DataFrame, DataFrame) = {
+    val codebookK = 16
     import graft.functions.VectorExpressions.{arrayLiteral, ivfRouteId,
       pqPackedCp}
     val spark = corpus.sparkSession
@@ -847,8 +846,8 @@ object Similarity {
     * 2·subspaces array lookups over the same 8-byte codes — the residual
     * refinement costs nothing at scan time. Same rz(…, 6) + vec_id
     * tie-break determinism as every ranking in this file. */
-  def ivfPqResTopKFrom(index: PqIvf, queries: DataFrame, k: Int,
-                       nprobe: Int = 2): DataFrame = {
+  def ivfPqResTopKFrom(index: PqIvf, queries: DataFrame, k: Int): DataFrame = {
+    val nprobe = 2
     val meta = codebookMeta(index.codebook)
     val cellCodes = index.cells.join(index.codes, Seq("vec_id"))
     val cent = broadcast(index.cent)
@@ -901,6 +900,10 @@ object Similarity {
       .select(col("q_id"), col("c_id"), col("c_rank"))
   }
 
+  /** Shortlist length and probed cells of both streaming shortlists. */
+  private val StreamShortlistK = 50
+  private val StreamNprobe = 2
+
   /** STREAMING two-stage ANN ingest, stage 1 — the serving twin of
     * [[ivfPqTopKFrom]] for query vectors arriving as an unbounded stream
     * against a STANDING staged index: each arriving vector is routed and
@@ -924,19 +927,17 @@ object Similarity {
     * stream wants [[ivfPqStreamShortlistEpoch]], whose watermark
     * additionally caps each buffer's LIFETIME at the epoch horizon.
     * Drained output equals the batch shortlist of
-    * ivfPqTopKFrom(k = shortlistK) row for row, so stage 2 (exact re-rank
+    * ivfPqTopKFrom(k = StreamShortlistK) row for row, so stage 2 (exact re-rank
     * over true vectors) and the oracle are shared with sim_ivfpq_rerank.
     *
     * Returns (q_id, shortlist: array<struct<sim, vec_id>>) — a streaming
     * frame; drain complete-mode, then explode + rerankExact. */
-  def ivfPqStreamShortlist(stream: DataFrame, index: PqIvf,
-                           shortlistK: Int = 50,
-                           nprobe: Int = 2): DataFrame = {
-    val scored = ivfPqStreamScored(stream, index, nprobe, carry = Nil)
+  def ivfPqStreamShortlist(stream: DataFrame, index: PqIvf): DataFrame = {
+    val scored = ivfPqStreamScored(stream, index, carry = Nil)
     scored.groupBy(col("q_id"))
       .agg(collect_list(struct(col("sim"), col("vec_id"))).as("cl"))
       .select(col("q_id"),
-        slice(array_sort(col("cl"), bySimDesc), 1, shortlistK).as("shortlist"))
+        slice(array_sort(col("cl"), bySimDesc), 1, StreamShortlistK).as("shortlist"))
   }
 
   /** [[ivfPqStreamShortlist]] in APPEND/WATERMARK (eviction) posture — the
@@ -957,16 +958,13 @@ object Similarity {
     * drops the flush sentinel, so the sentinel still advances event time
     * (the StreamStage.Timed flush convention). Returns
     * (win_start, q_id, shortlist); drain append-mode. */
-  def ivfPqStreamShortlistEpoch(stream: DataFrame, index: PqIvf,
-                                shortlistK: Int = 50,
-                                nprobe: Int = 2): DataFrame = {
-    val scored = ivfPqStreamScored(stream, index, nprobe,
-      carry = Seq("ingest_ts"))
+  def ivfPqStreamShortlistEpoch(stream: DataFrame, index: PqIvf): DataFrame = {
+    val scored = ivfPqStreamScored(stream, index, carry = Seq("ingest_ts"))
     scored
       .groupBy(window(col("ingest_ts"), "60 minutes"), col("q_id"))
       .agg(collect_list(struct(col("sim"), col("vec_id"))).as("cl"))
       .select(col("window.start").as("win_start"), col("q_id"),
-        slice(array_sort(col("cl"), bySimDesc), 1, shortlistK).as("shortlist"))
+        slice(array_sort(col("cl"), bySimDesc), 1, StreamShortlistK).as("shortlist"))
   }
 
   /** STREAMING index-side ingest — the other half of a live ANN service
@@ -1052,12 +1050,11 @@ object Similarity {
 
   /** The map-only routing + ADC scoring shared by both streaming rollups
     * (see [[ivfPqStreamShortlist]] for the shape): per arriving vector,
-    * probe cells ranked in-row, LUT built in-row, candidates from one
+    * StreamNprobe cells ranked in-row, LUT built in-row, candidates from one
     * stream-static equi-join, one rz-rounded sim per candidate. `carry`
     * lists stream columns (e.g. the event-time ingest_ts) to propagate
     * through to the output. */
   private def ivfPqStreamScored(stream: DataFrame, index: PqIvf,
-                                nprobe: Int,
                                 carry: Seq[String]): DataFrame = {
     val carryCols = carry.map(col)
     val meta = codebookMeta(index.codebook)
@@ -1078,7 +1075,7 @@ object Similarity {
             rz(dotf(col("q_emb"), c.getField("c_emb")) / col("q_nrm")
               / c.getField("c_nrm"), 6).as("c_sim"),
             c.getField("c_id").as("c_id"))),
-          byCsimDesc), 1, nprobe)).as("p") +: carryCols: _*)
+          byCsimDesc), 1, StreamNprobe)).as("p") +: carryCols: _*)
       .select(col("q_id") +: col("q_nrm") +: col("lut") +:
         col("p.c_id").as("c_id") +: carryCols: _*)
     probes.join(index.cells.join(index.codes, Seq("vec_id")), Seq("c_id"))
@@ -1106,9 +1103,9 @@ object Similarity {
     * (codes must stay dense: the ADC LUT is positional). Cost: one
     * corpus×(subspaces·S) argmin pass per round — the exact shape of the
     * encode pass, map-side partial-aggregated. */
-  def pqIndexFramesRefined(corpus: DataFrame, iters: Int = 2): Pq = {
-    val (subspaces, codebookK) = (8, 16)
-    val ix = pqIvfIndex(corpus, subspaces, codebookK)
+  def pqIndexFramesRefined(corpus: DataFrame): Pq = {
+    val (subspaces, iters) = (8, 2)
+    val ix = pqIvfIndex(corpus, subspaces)
     val meta = codebookMeta(ix.codebook)
     val cb = pqRefineCodebook(corpus, ix.codebook, meta.s, subspaces,
       meta.subDim, iters)
@@ -1307,10 +1304,12 @@ object Similarity {
       .orderBy(col("dim_i"), col("dim_j"))
   }
 
+  private val PcaIters = 8
+
   /** Top principal component by power iteration over the covariance
     * matrix — the first step of PCA whitening / decorrelation (the
     * spectral view of the corpus the covariance pass exists to feed).
-    * Fixed `iters` rounds of v ← normalize(C·v) from the uniform 1/√d
+    * PcaIters = 8 rounds of v ← normalize(C·v) from the uniform 1/√d
     * start vector, every intermediate 6-dp rounded (through rz) so the
     * iteration is bit-reproducible cross-engine and SQL-expressible as
     * unrolled CTEs. Output per dimension: the loading, the eigenvalue
@@ -1327,9 +1326,8 @@ object Similarity {
     * table from [[covarianceMatrix]] — the staged-covariance path, so the
     * Gram pass is shared with the covariance query instead of
     * recomputed. */
-  def pcaPowerFromCov(covTable: DataFrame, iters: Int): DataFrame = {
+  def pcaPowerFromCov(covTable: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    require(iters >= 1, "pcaPowerFromCov needs at least one iteration")
     val dec = DecimalType(30, 10)
     val cov = Dedup.materialize(covTable
       .select(col("dim_i").as("i"), col("dim_j").as("j"), col("cov")))
@@ -1339,7 +1337,7 @@ object Similarity {
     var v = Dedup.materialize(cov.select(col("i").as("dim")).distinct()
       .select(col("dim"), rd(lit(1.0) / sqrt(lit(d.toDouble)), 6).as("value")))
     var lastNrm: DataFrame = null
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to PcaIters) {
       val w = Dedup.materialize(sym.join(v, col("j") === col("dim"))
         .groupBy(col("i"))
         .agg(round(sum((col("cov") * col("value")).cast(dec)), 6)
@@ -1429,14 +1427,12 @@ object Similarity {
     * footer metadata for a raw scan but a full job for a derived/filtered
     * frame. Callers holding a transformed corpus should count (or
     * estimate) once themselves and call [[semDedup]] with an explicit k. */
-  def semDedupAuto(corpus: DataFrame, iters: Int = 2,
-                   threshold: Double = 0.3): DataFrame =
+  def semDedupAuto(corpus: DataFrame): DataFrame =
     semDedup(corpus,
-      math.max(16, math.ceil(corpus.count().toDouble / 2000).toInt),
-      iters, threshold)
+      math.max(16, math.ceil(corpus.count().toDouble / 2000).toInt))
 
-  def semDedup(corpus: DataFrame, k: Int = 16, iters: Int = 2,
-               threshold: Double = 0.3): DataFrame = {
+  def semDedup(corpus: DataFrame, k: Int): DataFrame = {
+    val (iters, threshold) = (2, 0.3)
     val assigned = Dedup.materialize(
       kmeansAuto(corpus, k, iters)
         .join(corpus.select(col("vec_id"), col("embedding")), Seq("vec_id"))

@@ -19,36 +19,40 @@ import org.apache.spark.sql.functions._
   */
 object Sketch {
 
+  /** HLL buckets m = 64: the low 6 hash bits pick the bucket, the other
+    * 54 give the rank; α = 0.709 is the bias constant for that m. */
+  private[graft] val HllM = 64
+  private val HllBucketBits = 6
+  private val HllAlpha = 0.709
+
   /** The (bucket, rho) projection underlying hllSketch, exposed so the
     * STREAMING twin runs the identical expressions as an unbounded
     * aggregation: bucket = low log2(m) hash bits, rho = leading-zero
     * count + 1 of the remaining 60-log2(m) bits (w = 0 -> full width + 1;
     * computed as (bits of w) - floor(log2(w)) via length(bin(w))). */
-  def hllBucketRho(c: Column, m: Int = 64): (Column, Column) =
-    bucketRhoFromHash(Dedup.seededHash(7, c), m)
+  def hllBucketRho(c: Column): (Column, Column) =
+    bucketRhoFromHash(Dedup.seededHash(7, c))
 
   /** The same (bucket, rho) split over an ALREADY-computed 60-bit hash
     * column — for callers that fan one hash out to several sketch
     * consumers (profileApprox hashes once per (row, column) and derives
     * both fields after the explode, instead of re-hashing per field). */
-  def bucketRhoFromHash(h: Column, m: Int = 64): (Column, Column) = {
-    require(m > 0 && (m & (m - 1)) == 0, s"m must be a power of two, got $m")
-    val bucketBits = java.lang.Integer.numberOfTrailingZeros(m)
-    val wBits = 60 - bucketBits
-    val w = shiftright(h, bucketBits)
+  def bucketRhoFromHash(h: Column): (Column, Column) = {
+    val wBits = 60 - HllBucketBits
+    val w = shiftright(h, HllBucketBits)
     // bitLength64(w) ≡ length(bin(w)) for w > 0 (w = 0 special-cased),
     // minus bin()'s per-row string allocation; the oracle keeps the
     // length(bin(..)) spelling — exact integer equality either way
     val rho = when(w === 0L, lit(wBits + 1))
       .otherwise(lit(wBits) -
         (graft.functions.VectorExpressions.bitLength64(w) - 1)).cast("int")
-    (h.bitwiseAND(lit((m - 1).toLong)).cast("int"), rho)
+    (h.bitwiseAND(lit((HllM - 1).toLong)).cast("int"), rho)
   }
 
   /** Per-bucket max rank table — the mergeable (bucket, max_rho, n_items)
     * sketch over one column (see hllBucketRho for the bit layout). */
-  def hllSketch(df: DataFrame, c: Column, m: Int = 64): DataFrame = {
-    val (bucket, rho) = hllBucketRho(c, m)
+  def hllSketch(df: DataFrame, c: Column): DataFrame = {
+    val (bucket, rho) = hllBucketRho(c)
     df.select(bucket.as("bucket"), rho.as("rho"))
       .groupBy(col("bucket"))
       .agg(max(col("rho")).as("max_rho"), count(lit(1)).as("n_items"))
@@ -59,17 +63,14 @@ object Sketch {
     * shape a 100 TB pipeline actually stores (per-day / per-source / per-
     * type distinct counts, mergeable across groups or time by max). Same
     * single partial-aggregated shuffle, keyed by (group, bucket). */
-  def hllSketchBy(df: DataFrame, groupCols: Seq[Column], c: Column,
-                  m: Int = 64): DataFrame = {
-    require(m > 0 && (m & (m - 1)) == 0, s"m must be a power of two, got $m")
-    val bucketBits = java.lang.Integer.numberOfTrailingZeros(m)
-    val wBits = 60 - bucketBits
+  def hllSketchBy(df: DataFrame, groupCols: Seq[Column], c: Column): DataFrame = {
+    val wBits = 60 - HllBucketBits
     val h = Dedup.seededHash(7, c)
-    val w = shiftright(h, bucketBits)
+    val w = shiftright(h, HllBucketBits)
     val rho = when(w === 0L, lit(wBits + 1))
       .otherwise(lit(wBits) - (length(bin(w)) - 1)).cast("int")
     df.select(groupCols :+
-        h.bitwiseAND(lit((m - 1).toLong)).cast("int").as("bucket") :+
+        h.bitwiseAND(lit((HllM - 1).toLong)).cast("int").as("bucket") :+
         rho.as("rho"): _*)
       .groupBy(groupCols :+ col("bucket"): _*)
       .agg(max(col("rho")).as("max_rho"), count(lit(1)).as("n_items"))
@@ -80,8 +81,8 @@ object Sketch {
     * float estimator itself (everywhere else the library keeps estimates
     * driver-side and judges only integer cell tables): per group, the
     * exact distinct count next to the distributed HLL estimate and its
-    * relative error — run before trusting a (seed, m) config on a new
-    * key distribution.
+    * relative error — run before trusting the sketch on a new key
+    * distribution.
     *
     * Determinism: the harmonic denominator Σ 2^−rho is summed as the
     * INTEGER Σ 2^(maxRho − rho) (exact, order-independent; ≤ m·2^maxRho
@@ -96,16 +97,9 @@ object Sketch {
     * the sketch exists; the audit runs on samples/small keys, the sketch
     * runs everywhere). */
   def hllErrorAudit(df: DataFrame, groupCol: String, c: Column): DataFrame = {
-    val m = 64
-    val bucketBits = java.lang.Integer.numberOfTrailingZeros(m)
-    val maxRho = 60 - bucketBits + 1
-    val cells = hllSketchBy(df, Seq(col(groupCol)), c, m)
-    val alpha = m match {
-      case 16 => 0.673
-      case 32 => 0.697
-      case 64 => 0.709
-      case _  => 0.7213 / (1 + 1.079 / m)
-    }
+    val m = HllM
+    val maxRho = 60 - HllBucketBits + 1
+    val cells = hllSketchBy(df, Seq(col(groupCol)), c)
     val agg = cells.groupBy(col(groupCol))
       .agg(sum(expr(s"shiftleft(CAST(1 AS BIGINT), $maxRho - max_rho)"))
           .as("sp"),
@@ -114,7 +108,7 @@ object Sketch {
         (col("sp") + (lit(m.toLong) - col("n_cells")) * lit(1L << maxRho))
           .as("s_int"),
         (lit(m.toLong) - col("n_cells")).as("zeros"))
-    val raw = lit(alpha) * lit((m.toLong * m).toDouble) *
+    val raw = lit(HllAlpha) * lit((m.toLong * m).toDouble) *
       lit(math.pow(2.0, maxRho)) / col("s_int")
     val est =
       when(raw <= lit(2.5 * m) && col("zeros") > 0,
@@ -137,14 +131,14 @@ object Sketch {
       .orderBy(col(groupCol))
   }
 
-  /** Merge sketches produced by hllSketch (same m): max per bucket. */
+  /** Merge sketches produced by hllSketch: max per bucket. */
   def merge(sketches: Seq[DataFrame]): DataFrame =
     sketches.reduce(_.unionByName(_))
       .groupBy(col("bucket"))
       .agg(max(col("max_rho")).as("max_rho"), sum(col("n_items")).as("n_items"))
       .orderBy(col("bucket"))
 
-  /** Count-Min sketch: `depth` seeded hash rows × `width` buckets of
+  /** Count-Min sketch: CmsDepth = 4 seeded hash rows × CmsWidth = 64 buckets of
     * ADDITIVE counts — the mergeable frequency-estimation twin of
     * hllSketch. One pass (the depth cells explode from each input row, then
     * one partial-aggregated groupBy); the judged artifact is the exact
@@ -152,6 +146,9 @@ object Sketch {
     * a point estimate is min over rows of the key's cell counts (as
     * [[cmsErrorAudit]] takes it) with the classic eps = e/width overcount
     * bound. */
+  private[graft] val CmsDepth = 4
+  private[graft] val CmsWidth = 64
+
   /** Seed base of the cmsSketch cells, shared with every probe of them —
     * one definition, so a probe side can never drift from the sketch
     * cells. */
@@ -160,16 +157,15 @@ object Sketch {
   /** The per-item cell array underlying cmsSketch, exposed for the
     * STREAMING twin (counts are order-insensitive, so the online sketch
     * converges to the batch sketch under any micro-batching). */
-  def cmsCells(c: Column, depth: Int = 4, width: Int = 64): Column =
-    array((0 until depth).map { i =>
+  def cmsCells(c: Column): Column =
+    array((0 until CmsDepth).map { i =>
       struct(lit(i).as("row"),
-        pmod(Dedup.seededHash(CmsSeedBase + i, c), lit(width.toLong)).cast("int")
+        pmod(Dedup.seededHash(CmsSeedBase + i, c), lit(CmsWidth.toLong)).cast("int")
           .as("bucket"))
     }: _*)
 
-  def cmsSketch(df: DataFrame, c: Column, depth: Int = 4,
-                width: Int = 64): DataFrame = {
-    df.select(explode(cmsCells(c, depth, width)).as("cell"))
+  def cmsSketch(df: DataFrame, c: Column): DataFrame = {
+    df.select(explode(cmsCells(c)).as("cell"))
       .select(col("cell.row").as("row"), col("cell.bucket").as("bucket"))
       .groupBy(col("row"), col("bucket"))
       .agg(count(lit(1)).as("cnt"))
@@ -188,13 +184,12 @@ object Sketch {
     * side is the expensive half — the audit runs on a bounded key set,
     * the sketch runs everywhere. */
   def cmsErrorAudit(df: DataFrame, c: Column): DataFrame = {
-    val (depth, width) = (4, 64)
-    val cells = cmsSketch(df, c, depth, width)
+    val cells = cmsSketch(df, c)
     val exact = df.select(c.as("key")).groupBy(col("key"))
       .agg(count(lit(1)).as("exact_cnt"))
     exact
       .select(col("key"), col("exact_cnt"),
-        explode(cmsCells(col("key"), depth, width)).as("cell"))
+        explode(cmsCells(col("key"))).as("cell"))
       .select(col("key"), col("exact_cnt"), col("cell.row").as("row"),
         col("cell.bucket").as("bucket"))
       .join(broadcast(cells), Seq("row", "bucket"))

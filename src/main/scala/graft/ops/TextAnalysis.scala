@@ -260,7 +260,7 @@ object TextAnalysis {
     q.groupBy(col("source")).agg(
         count(lit(1)).as("n_docs"),
         sum(col("n_tokens")).as("total_tokens"),
-        davg(col("quality"), 6).as("avg_quality"),
+        davg(col("quality")).as("avg_quality"),
         min(col("quality")).as("min_quality"),
         max(col("quality")).as("max_quality"))
       .crossJoin(broadcast(tot))
@@ -504,8 +504,8 @@ object TextAnalysis {
     * vocabulary, measured 8× on 10× data at sf1 as the vocabulary grew
     * linearly. Tie-break on the bigram string (binary UTF-8 order in both
     * engines) keeps both phases total-order deterministic. */
-  def ngramFreq(docs: DataFrame, topN: Int = 10): DataFrame = {
-    val slices = 64
+  def ngramFreq(docs: DataFrame): DataFrame = {
+    val (topN, slices) = (10, 64)
     import org.apache.spark.sql.expressions.Window
     // per-doc collapsed gram counts (docGramCounts): the explode emits one
     // row per distinct gram per doc, and the vocab rollup sums the in-doc

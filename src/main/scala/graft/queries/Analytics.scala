@@ -423,7 +423,7 @@ object Analytics extends QueryPack {
       o.join(broadcast(caps), Seq("o_orderstatus"))
         .groupBy($"o_orderstatus", $"lo_cap", $"hi_cap")
         .agg(count(lit(1)).as("n"),
-          davg(greatest(least($"o_totalprice", $"hi_cap"), $"lo_cap"), 6)
+          davg(greatest(least($"o_totalprice", $"hi_cap"), $"lo_cap"))
             .as("win_mean"),
           sum(when(kept, 1L).otherwise(0L)).as("n_kept"),
           round(sum(when(kept, $"o_totalprice")
@@ -616,7 +616,7 @@ object Analytics extends QueryPack {
       import s.implicits._
       val cust = table(s, dir, "customer")
       val cut = cust.filter($"c_acctbal" > 0.0)
-        .agg(davg($"c_acctbal", 6).as("cut"))
+        .agg(davg($"c_acctbal").as("cut"))
       cust
         .join(table(s, dir, "orders")
             .filter($"o_orderdate" >= lit("2000-01-01").cast("timestamp"))
@@ -806,7 +806,7 @@ object Analytics extends QueryPack {
             .filter($"p_brand" === "Brand#12").select($"p_partkey")),
           $"l_partkey" === $"p_partkey")
       val avgQty = brandLines.groupBy($"l_partkey".as("ap_partkey"))
-        .agg(davg($"l_quantity", 6).as("avg_qty"))
+        .agg(davg($"l_quantity").as("avg_qty"))
       brandLines
         .join(broadcast(avgQty), $"l_partkey" === $"ap_partkey")
         .filter($"l_quantity" < lit(0.5) * $"avg_qty")
@@ -1097,7 +1097,7 @@ object Analytics extends QueryPack {
           (weekday($"day") + lit(1)).as("dow"),
           ($"n_events".cast(DoubleType) - $"trend").as("detr")))
       val seas = det.groupBy($"dow")
-        .agg(rz(davg($"detr", 6), 6).as("seasonal"))
+        .agg(rz(davg($"detr"), 6).as("seasonal"))
       det.join(broadcast(seas), "dow")
         .select($"day", $"n_events", $"trend", $"seasonal",
           ($"n_events".cast(DoubleType) - $"trend" - $"seasonal")

@@ -97,7 +97,7 @@ object Scalars extends QueryPack {
       val src = table(s, dir, "orders").select($"o_orderkey",
         when($"o_orderkey" % 13 === 0, lit(null).cast("long"))
           .otherwise($"o_custkey").as("id"))
-      src.select($"o_orderkey", F.stringOr($"id", "-1").as("cliente_id"))
+      src.select($"o_orderkey", F.stringOr($"id").as("cliente_id"))
         .orderBy($"o_orderkey")
     }),
 

@@ -164,7 +164,7 @@ object TextOps extends QueryPack {
                                dir: String): org.apache.spark.sql.DataFrame = {
     val staged = tmpStage(dir, graft.ops.Dedup.GramStageTag)
     ensureStaged(staged, "_SUCCESS") {
-      Dedup.gramHashes(table(s, dir, "documents"), n = 4).distinct()
+      Dedup.gramHashes(table(s, dir, "documents"), Dedup.BloomGramLen).distinct()
         .write.mode("overwrite").parquet(staged)
     }
     readParquet(s, staged)
@@ -839,7 +839,7 @@ object TextOps extends QueryPack {
     // vocabulary audit a tokenizer build starts from. The top-k cut runs
     // over the vocab-sized count table, never corpus rows.
     "tx_ngram_freq" -> ((s, dir) =>
-      TextAnalysis.ngramFreq(table(s, dir, "documents"), topN = 10)),
+      TextAnalysis.ngramFreq(table(s, dir, "documents"))),
     // Per-cluster curation dashboard: size, quality spread, source
     // diversity for every duplicate cluster — the review cut before
     // survivor selection drops data. Shares the staged clustering; the
@@ -855,7 +855,7 @@ object TextOps extends QueryPack {
         .groupBy(col("cluster_id"))
         .agg(count(lit(1)).as("n_docs"),
           min(col("quality")).as("min_q"), max(col("quality")).as("max_q"),
-          davg(col("quality"), 6).as("avg_q"),
+          davg(col("quality")).as("avg_q"),
           countDistinct(col("source")).as("n_sources"))
         .orderBy(col("cluster_id"))
     }),
@@ -938,7 +938,7 @@ object TextOps extends QueryPack {
       val bm = stagedBloomBitmap(s, dir)
       val stream = StreamOps.readEventStream(s, staged)
         .filter(col("doc_id") % 11 =!= 0)
-      StreamOps.drain(Seq((Dedup.bloomProbeInRow(stream, bm, n = 4),
+      StreamOps.drain(Seq((Dedup.bloomProbeInRow(stream, bm),
         s"dd_stream_decon$sf".replace(".", "_"), StreamOps.Memory("append"))))
         .head
         .withColumn("contaminated", col("n_hits") > 0L)
@@ -988,7 +988,7 @@ object TextOps extends QueryPack {
     // C4-style chunk-level exact dedup: per-doc retention stats under
     // global first-occurrence survivorship.
     "dd_chunk_dedup" -> ((s, dir) =>
-      Dedup.chunkDedup(table(s, dir, "documents"), chunkTokens = 8)),
+      Dedup.chunkDedup(table(s, dir, "documents"))),
     // ExactSubstr span dedup (Lee et al. 2022): maximal character spans
     // whose length-25 substrings recur anywhere in the corpus — the
     // cut-the-span (not drop-the-doc) granularity the doc/chunk passes
@@ -1178,8 +1178,8 @@ object TextOps extends QueryPack {
       val toksNorm = split(
         graft.etl.functions.normalizeText(lower(col("text"))), " ")
       val bloomPacked = graft.functions.StringExpressions
-        .bloomGramProbePacked(toksNorm, typedlit(bm.toSeq), 4, 1 << 16,
-          seed = 23)
+        .bloomGramProbePacked(toksNorm, typedlit(bm.toSeq),
+          Dedup.BloomGramLen, 1 << 16, seed = 23)
       // gate leg: stateless map-side signals + broadcast membership join
       val stream = StreamOps.readEventStream(s, staged)
       val gated = graft.ops.Sampling.hashSplit(
@@ -1251,7 +1251,7 @@ object TextOps extends QueryPack {
     // 2048-token training windows (seq_id, seq_offset) with no global sort.
     "tp1_sequence_pack" -> ((s, dir) =>
       graft.ops.Packing.sequencePack(table(s, dir, "documents"),
-        ctxTokens = 2048, shardCol = "lang")),
+        ctxTokens = 2048)),
     // Streaming exact dedup in UPDATE mode with a downstream keyed upsert —
     // the unbounded-ingest shape (complete mode rewrites the whole result
     // every micro-batch; update emits only touched keys and the merge keeps

@@ -46,8 +46,7 @@ object Vectors extends QueryPack {
     // ranking by raw dot product over the sign-bucket candidate walk.
     "sim_mips_topk" -> ((s, dir) => {
       val (e, q) = corpusAndQueries(s, dir)
-      Similarity.mipsTopK(e, q, k = 5,
-        signBits = 8)
+      Similarity.mipsTopK(e, q, k = 5)
     }),
 
     // Approximate top-k via IVF cells (deterministic centroid subset,
@@ -142,8 +141,7 @@ object Vectors extends QueryPack {
     // probes keep cluster size — and so total pair work per row — bounded
     // (the factor-100 audit caught fixed-k going quadratic).
     "dd_semdedup" -> ((s, dir) =>
-      Similarity.semDedupAuto(table(s, dir, "embeddings"), iters = 2,
-        threshold = 0.3)),
+      Similarity.semDedupAuto(table(s, dir, "embeddings"))),
 
     // ANN evaluation: recall@5 of the sign-LSH path against the exact
     // brute-force ranking, per query — the "measure the approximation,
@@ -222,8 +220,7 @@ object Vectors extends QueryPack {
     "sim_ivfpq_res_recall" -> ((s, dir) => {
       val (e, q) = corpusAndQueries(s, dir)
       Similarity.recall(Similarity.bruteForceTopK(e, q, k = 5),
-          Similarity.ivfPqResTopKFrom(stagedResPq(s, dir), q, k = 5,
-            nprobe = 2), "")
+          Similarity.ivfPqResTopKFrom(stagedResPq(s, dir), q, k = 5), "")
         .orderBy(col("q_id"))
     }),
 
@@ -311,8 +308,7 @@ object Vectors extends QueryPack {
       val sf = dir.replaceAll("[^A-Za-z0-9.]", "_")
       val stream = StreamOps.readEventStream(s, StreamStage.embStream(s, dir))
         .filter(col("vec_id") % stride === 0)
-      val sl = Similarity.ivfPqStreamShortlist(stream, pq,
-        shortlistK = 50, nprobe = 2)
+      val sl = Similarity.ivfPqStreamShortlist(stream, pq)
       val drained = StreamOps.drain(Seq((sl,
         s"sim_stream_ann$sf".replace(".", "_"), StreamOps.Memory("complete"))),
         shufflePartitions = Some(8)).head
@@ -346,8 +342,7 @@ object Vectors extends QueryPack {
       val stream = StreamOps.readEventStream(s, StreamStage.embBatches(s, dir))
         .withWatermark("ingest_ts", "45 minutes")
         .filter(col("vec_id") % stride === 0)
-      val sl = Similarity.ivfPqStreamShortlistEpoch(stream, pq,
-        shortlistK = 50, nprobe = 2)
+      val sl = Similarity.ivfPqStreamShortlistEpoch(stream, pq)
       val drained = StreamOps.drain(Seq((sl,
         s"sim_stream_ann_evict$sf".replace(".", "_"),
         StreamOps.Memory("append"))),
@@ -703,7 +698,7 @@ object Vectors extends QueryPack {
 
     // Embedding-cosine near-dup pairs, blocked by label.
     "sim_cosine_dedup" -> ((s, dir) =>
-      Similarity.cosineDedup(table(s, dir, "embeddings"), threshold = 0.3)),
+      Similarity.cosineDedup(table(s, dir, "embeddings"))),
 
     // Symmetric int8 quantization of the embedding column (training-data
     // compression): one codegen'd pass per vector, q = round(x·127/max|x|).
@@ -784,7 +779,7 @@ object Vectors extends QueryPack {
         .groupBy(col("label"))
         .agg(count(lit(1)).as("n"),
           min(col("nrm")).as("min_norm"), max(col("nrm")).as("max_norm"),
-          davg(col("nrm"), 6).as("avg_norm"))
+          davg(col("nrm")).as("avg_norm"))
         .orderBy(col("label"))
     }),
 
@@ -798,7 +793,7 @@ object Vectors extends QueryPack {
     // covariance cells — loading per dim, eigenvalue estimate, explained-
     // variance share; everything after the Gram pass is d-bounded.
     "emb_pca_power" -> ((s, dir) =>
-      Similarity.pcaPowerFromCov(stagedCov(s, dir), iters = 8)),
+      Similarity.pcaPowerFromCov(stagedCov(s, dir))),
 
     // Johnson–Lindenstrauss ±1 random projection to 16 dims (seeded sign
     // matrix, data-independent, map-only — zero shuffles). Judged
@@ -812,7 +807,7 @@ object Vectors extends QueryPack {
     "mm_shard_manifest" -> ((s, dir) =>
       graft.ops.Packing.shardManifest(
         Multimodal.decodeMetaFromDocs(table(s, dir, "documents")),
-        bytesCol = "n_bytes", groupCol = "format", shardBytes = 65536L)),
+        bytesCol = "n_bytes", groupCol = "format")),
 
     // Multimodal metadata decode: text bytes wrapped in VALID PNG/JPEG
     // containers, then genuinely header-parsed back (Multimodal
@@ -828,7 +823,7 @@ object Vectors extends QueryPack {
     // Resize planning over decoded metadata (aspect-preserving bound).
     "mm_resize_plan" -> ((s, dir) =>
       Multimodal.resizePlan(
-        Multimodal.decodeMetaFromDocs(table(s, dir, "documents")), maxSide = 256)),
+        Multimodal.decodeMetaFromDocs(table(s, dir, "documents")))),
 
     // Perceptual-hash near-dup pairs (aHash/PDQ shape): 64 block-mean
     // bits in 4 bands, banded candidate join, bit_count(xor) verify.
@@ -989,7 +984,7 @@ object Vectors extends QueryPack {
     val staged = tmpStage(dir, Similarity.PqStageTag)
     ensureStaged(staged, "cent.parquet/_SUCCESS") {
       val (codebook, cent, encoded) = Similarity.pqIvfEncoded(
-        table(s, dir, "embeddings"), subspaces = 8, codebookK = 16)
+        table(s, dir, "embeddings"), subspaces = 8)
       writeOneFile(codebook, s"$staged/codebook.parquet")
       // the route + encode pass runs once; both halves read its blocks
       val enc = encoded.localCheckpoint(eager = false)

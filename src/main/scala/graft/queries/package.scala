@@ -232,9 +232,9 @@ package object queries {
 
   /** Oracle-deterministic AVG: exact decimal sum, double divide, round.
     * DuckDB twin: `round(CAST(sum(CAST(x AS DECIMAL(30,10))) AS DOUBLE)
-    * / count(*), s)`. */
-  def davg(c: Column, scale: Int = 6): Column =
-    round(sum(c.cast(DecimalType(30, 10))).cast(DoubleType) / count(lit(1)), scale)
+    * / count(*), 6)`. */
+  def davg(c: Column): Column =
+    round(sum(c.cast(DecimalType(30, 10))).cast(DoubleType) / count(lit(1)), 6)
 
   /** Signed-double round with the sign of zero normalized: Spark's
     * `round` emits +0.0 on a negative epsilon where DuckDB's `round`

@@ -12,6 +12,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent,
   QueryStartedEvent, QueryTerminatedEvent}
 
+import graft.ops.EventWindows
+
 /** Structured-Streaming surface (SURVEY.md §2.7). The reference is batch-only
   * (python pipeline.py, README.md:131-144); this lifts the same event-window
   * transformations over unbounded input so one codebase serves both: the
@@ -20,7 +22,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent
   *
   * Scale notes: watermarked window aggregates keep state bounded (old windows
   * evicted once the watermark passes); sessionization state is one small
-  * struct per active (user) key, dropped on timeout. Both shuffle once on
+  * struct per active (user) key. Both shuffle once on
   * their grouping key — same exchange shape as the batch plan.
   */
 object StreamOps {
@@ -70,16 +72,15 @@ object StreamOps {
                         first_ts: Timestamp, last_ts: Timestamp, dur_us: Long)
 
   /** Streaming sessionization via flatMapGroupsWithState: emits a session
-    * when the inactivity gap passes (processing-time timeout closes
-    * stragglers; pass NoTimeout for bounded drains — e.g. AvailableNow —
-    * where waiting wall-clock minutes for stragglers would never let the
-    * query terminate). Batch twin: EventWindows.sessionize. */
-  def sessionize(events: Dataset[Event], gapMin: Int,
-                 timeout: GroupStateTimeout =
-                   GroupStateTimeout.ProcessingTimeTimeout()): Dataset[SessionOut] = {
+    * when a later event of the same user passes the inactivity gap
+    * (EventWindows.SessionGapMin). No state timeout: every caller drains a
+    * bounded input (e.g. AvailableNow), where waiting wall-clock minutes
+    * for stragglers would never let the query terminate, so sessions
+    * still open at the end are not emitted. Batch twin:
+    * EventWindows.sessionize. */
+  def sessionize(events: Dataset[Event]): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
-    val gapUs = gapMin.toLong * 60L * 1000000L
-    val useTimeout = timeout != GroupStateTimeout.NoTimeout()
+    val gapUs = EventWindows.SessionGapMin.toLong * 60L * 1000000L
 
     // Full µs precision: getTime alone truncates to ms and would disagree
     // with the batch twin's unix_micros on sub-millisecond gaps.
@@ -92,37 +93,27 @@ object StreamOps {
     }
 
     events.groupByKey(_.user_id).flatMapGroupsWithState[SessionState, SessionOut](
-      OutputMode.Append(), timeout) {
+      OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
       case (userId, rows, state: GroupState[SessionState]) =>
-        if (state.hasTimedOut) {
-          val s = state.get
-          state.remove()
-          Iterator(SessionOut(userId, s.sessionId, s.n, ts(s.startUs),
-            ts(s.lastUs), s.lastUs - s.startUs))
-        } else {
-          // Order within the micro-batch (arbitrary arrival order).
-          val sorted = rows.toSeq.sortBy(e => (us(e.ts), e.event_id))
-          var cur = state.getOption
-          val closed = Seq.newBuilder[SessionOut]
-          sorted.foreach { e =>
-            val t = us(e.ts)
-            cur match {
-              case Some(s) if t - s.lastUs <= gapUs =>
-                cur = Some(s.copy(lastUs = math.max(s.lastUs, t), n = s.n + 1))
-              case Some(s) =>
-                closed += SessionOut(userId, s.sessionId, s.n, ts(s.startUs),
-                  ts(s.lastUs), s.lastUs - s.startUs)
-                cur = Some(SessionState(s.sessionId + 1, t, t, 1))
-              case None =>
-                cur = Some(SessionState(1, t, t, 1))
-            }
+        // Order within the micro-batch (arbitrary arrival order).
+        val sorted = rows.toSeq.sortBy(e => (us(e.ts), e.event_id))
+        var cur = state.getOption
+        val closed = Seq.newBuilder[SessionOut]
+        sorted.foreach { e =>
+          val t = us(e.ts)
+          cur match {
+            case Some(s) if t - s.lastUs <= gapUs =>
+              cur = Some(s.copy(lastUs = math.max(s.lastUs, t), n = s.n + 1))
+            case Some(s) =>
+              closed += SessionOut(userId, s.sessionId, s.n, ts(s.startUs),
+                ts(s.lastUs), s.lastUs - s.startUs)
+              cur = Some(SessionState(s.sessionId + 1, t, t, 1))
+            case None =>
+              cur = Some(SessionState(1, t, t, 1))
           }
-          cur.foreach { s =>
-            state.update(s)
-            if (useTimeout) state.setTimeoutDuration(s"$gapMin minutes")
-          }
-          closed.result().iterator
         }
+        cur.foreach(state.update)
+        closed.result().iterator
     }
   }
 
@@ -148,8 +139,8 @@ object StreamOps {
     * which is exactly what bounded state must NOT hold; the caller ranks
     * the drained (batch) result by first_ts (disjoint sessions make that
     * ordinal equal the batch twin's). */
-  def sessionizeEvict(events: DataFrame, gapMin: Int): DataFrame = {
-    val gapUs = gapMin.toLong * 60L * 1000000L
+  def sessionizeEvict(events: DataFrame): DataFrame = {
+    val gapUs = EventWindows.SessionGapMin.toLong * 60L * 1000000L
     val tsUs = unix_micros(col("ts").cast("timestamp"))
     events
       .withWatermark("ts", "10 minutes")

@@ -107,7 +107,7 @@ class FunctionsSpec extends SparkSpec {
 
   test("F3 numeric coercion: invalid -> default") {
     val df = Seq("1.5", "abc", null, "2").toDF("s")
-      .select(F.toDoubleOr($"s", 0.0).as("d"), F.toLongOr($"s", -1L).as("l"))
+      .select(F.toDoubleOr($"s", 0.0).as("d"), F.toLongOr($"s").as("l"))
     assert(rows(df).map(r => (r.getDouble(0), r.getLong(1))) ==
       Seq((1.5, 1L), (0.0, -1L), (0.0, -1L), (2.0, 2L)))
   }
@@ -153,7 +153,7 @@ class FunctionsSpec extends SparkSpec {
 
   test("F9 string sentinel: null -> -1, values stringified") {
     val df = Seq(Some(7L), None).toDF("id")
-      .select(F.stringOr($"id", "-1").as("s"))
+      .select(F.stringOr($"id").as("s"))
     assert(rows(df).map(_.getString(0)) == Seq("7", "-1"))
   }
 
@@ -270,8 +270,8 @@ class FunctionsSpec extends SparkSpec {
     val docs = graft.queries.table(spark, "/root/testdata/sf0.001", "documents")
     val bitmap = Dedup.bitmapFromWords(Dedup.bloomBitmapWords(
       Dedup.gramHashes(docs.filter($"doc_id" % 11 === 0), n = 4)))
-    val n = 4
-    val got = Dedup.bloomProbeInRow(docs, bitmap, n)
+    val n = Dedup.BloomGramLen
+    val got = Dedup.bloomProbeInRow(docs, bitmap)
       .orderBy($"doc_id").collect().map(_.toSeq).toSeq
     // the pre-r15 higher-order form, rebuilt verbatim as the reference
     val toksC = split(F.normalizeText(lower($"text")), " ")

@@ -61,7 +61,7 @@ class OpsSpec extends SparkSpec {
     val c = (1 to 8).map(i => s"c$i").mkString(" ")
     val in = Seq((1L, s"$a $b"), (2L, s"$a $c"), (3L, b))
       .toDF("doc_id", "text")
-    val got = rows(Dedup.chunkDedup(in, chunkTokens = 8))
+    val got = rows(Dedup.chunkDedup(in))
       .map(r => r.getAs[Long]("doc_id") ->
         (r.getAs[Long]("n_chunks"), r.getAs[Long]("n_kept"))).toMap
     assert(got(1L) == (2L, 2L)) // first occurrence of both A and B
@@ -447,6 +447,14 @@ class OpsSpec extends SparkSpec {
     assert(got == Seq((0L, 2L, 1L)))
   }
 
+  test("bandBuckets rejects a table without the 16 signature columns") {
+    val sigs = Dedup.minHashSignatures(Seq((0L, "a b c d")).toDF("doc_id", "text"))
+    intercept[IllegalArgumentException] { Dedup.bandBuckets(sigs.select($"doc_id")) }
+    intercept[IllegalArgumentException] {
+      Dedup.bandBuckets(sigs.select($"doc_id" +: (0 until 8).map(i => col(s"h$i")): _*))
+    }
+  }
+
   test("proportionalMix caps every stratum near an equal share, deterministically") {
     val df = ((1 to 900).map(i => (i.toLong, "big")) ++
               (1001 to 1050).map(i => (i.toLong, "small")))
@@ -469,8 +477,8 @@ class OpsSpec extends SparkSpec {
     import graft.ops.Sketch
     val events = graft.queries.table(spark, "/root/testdata/sf0.001", "events")
     val exact = events.select($"user_id").distinct().count().toDouble
-    val sketch = Sketch.hllSketch(events, $"user_id", m = 64)
-    val est = SketchReference.estimate(sketch, m = 64)
+    val sketch = Sketch.hllSketch(events, $"user_id")
+    val est = SketchReference.estimate(sketch)
     assert(math.abs(est - exact) / exact < 0.25,
       s"estimate $est vs exact $exact drifts beyond 25%")
     // mergeability: sketch(A) merge sketch(B) == sketch(A union B)
@@ -491,13 +499,13 @@ class OpsSpec extends SparkSpec {
     for (c <- cols) {
       val exact = li.select(col(c)).na.drop().distinct().count().toDouble
       val est = SketchReference.estimate(
-        prof.filter($"col_name" === c).select($"bucket", $"max_rho"), m = 64)
+        prof.filter($"col_name" === c).select($"bucket", $"max_rho"))
       assert(math.abs(est - exact) / exact < 0.3,
         s"$c: estimate $est vs exact $exact drifts beyond 30%")
       // each column's slice IS that column's hllSketch — same cells
       assert(rows(prof.filter($"col_name" === c)
           .select($"bucket", $"max_rho", $"n_items")) ==
-        rows(Sketch.hllSketch(li.filter(col(c).isNotNull), col(c), m = 64)
+        rows(Sketch.hllSketch(li.filter(col(c).isNotNull), col(c))
           .select($"bucket", $"max_rho", $"n_items")))
     }
     prof.unpersist()
@@ -631,7 +639,7 @@ class OpsSpec extends SparkSpec {
     .withColumn("ts", $"ts_s".cast("timestamp")).drop("ts_s")
 
   test("sessionize splits on gap > threshold, aggregates per session") {
-    val got = rows(EventWindows.sessionize(events, gapMin = 30))
+    val got = rows(EventWindows.sessionize(events))
     assert(got.length == 3)
     val u100 = got.filter(_.getAs[Long]("user_id") == 100L)
     assert(u100.map(_.getAs[Long]("n_events")).toSeq == Seq(2L, 1L))
@@ -647,7 +655,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("sliding windows assign each event to size/slide windows") {
-    val got = rows(EventWindows.sliding(events, sizeMin = 30, slideMin = 15))
+    val got = rows(EventWindows.sliding(events))
     val n = got.map(_.getAs[Long]("n")).sum
     assert(n == events.count() * 2)  // every event in exactly 2 windows
   }
@@ -871,9 +879,9 @@ class OpsSpec extends SparkSpec {
   test("cms sketch: estimate bounds true count above; merge = sketch of union") {
     import graft.ops.Sketch
     val events = graft.queries.table(spark, "/root/testdata/sf0.001", "events")
-    val sketch = Sketch.cmsSketch(events, $"event_type", depth = 4, width = 64)
+    val sketch = Sketch.cmsSketch(events, $"event_type")
     val exact = events.filter($"event_type" === "click").count()
-    val est = SketchReference.cmsEstimate(sketch, "click", depth = 4, width = 64)
+    val est = SketchReference.cmsEstimate(sketch, "click")
     assert(est >= exact, s"CMS under-counted: $est < $exact") // never undercounts
     assert(est <= exact + events.count() / 8, s"overcount beyond eps bound: $est vs $exact")
     val a = events.filter($"event_id" % 2 === 0)
@@ -954,7 +962,7 @@ class OpsSpec extends SparkSpec {
           (20L, "2024-01-01 00:00:00", 2L, "B", 0.0))
     val ev = rows_.toDF("event_id", "ts_s", "user_id", "event_type", "value")
       .withColumn("ts", $"ts_s".cast("timestamp")).drop("ts_s")
-    val got = rows(EventWindows.spikes(ev, bucketMin = 60, trailing = 4))
+    val got = rows(EventWindows.spikes(ev))
     assert(got.length == 1)                       // only A's 5th bucket judged
     val r = got.head
     assert(r.getAs[String]("event_type") == "A" && r.getAs[Long]("n") == 3L &&
@@ -965,7 +973,7 @@ class OpsSpec extends SparkSpec {
       .map { case (id, t) => (id, t, 1L, "A", 0.0) }
       .toDF("event_id", "ts_s", "user_id", "event_type", "value")
       .withColumn("ts", $"ts_s".cast("timestamp")).drop("ts_s")
-    assert(!rows(EventWindows.spikes(flat, 60, 4)).head.getAs[Boolean]("spike"))
+    assert(!rows(EventWindows.spikes(flat)).head.getAs[Boolean]("spike"))
   }
 
   test("typeEntropy: uniform spread maxes, single type zeroes") {
@@ -1007,7 +1015,7 @@ class OpsSpec extends SparkSpec {
       (91 to 100).map(i => (i.toLong, ten, "scarce")))
       .toDF("doc_id", "text", "source")
     val got = rows(graft.ops.Sampling.repeatFactors(d, "source",
-        tokenBudget = 2000L, maxEpochs = 4))
+        tokenBudget = 2000L))
       .map(r => r.getAs[String]("source") ->
         (r.getAs[Long]("n_tokens"), r.getAs[Long]("target_tokens"),
           r.getAs[Double]("repeat_factor"), r.getAs[Long]("effective_tokens")))
@@ -1101,7 +1109,7 @@ class OpsSpec extends SparkSpec {
       .toDF("event_id", "user_id", "ts")
     val got = rows(AsOf.backwardWithin(left, right, by = Seq("user_id"),
       leftTime = "ts", rightTime = "ts", rightSeq = "event_id",
-      rightCols = Seq("event_id"), toleranceSec = 3600L, prefix = "m_")
+      rightCols = Seq("event_id"), prefix = "m_")
       .orderBy("event_id"))
       .map(r => (r.getAs[Long]("event_id"),
         Option(r.getAs[java.lang.Long]("m_event_id")),
@@ -1119,7 +1127,7 @@ class OpsSpec extends SparkSpec {
           (7L, "2024-01-01 10:07:00", 1L, "d", 0.0))
     val df = ev.toDF("event_id", "ts_s", "user_id", "event_type", "value")
       .withColumn("ts", $"ts_s".cast("timestamp")).drop("ts_s")
-    val got = rows(graft.ops.EventWindows.windowedTopK(df, sizeMin = 60, k = 3))
+    val got = rows(graft.ops.EventWindows.windowedTopK(df))
     assert(got.map(r => (r.getAs[String]("event_type"), r.getAs[Long]("rk"))) ==
       Seq(("a", 1L), ("b", 2L), ("c", 3L)))  // c beats d on the name tie
   }
@@ -1243,7 +1251,7 @@ class OpsSpec extends SparkSpec {
       (0 until 11).map(i => (100L + i, new java.sql.Timestamp(9 * dayMs + i), "A")) ++
       Seq((900L, new java.sql.Timestamp(0L), "B")))   // 1 day only: no spread
       .toDF("event_id", "ts", "event_type")
-    val got = rows(EventWindows.dailyAnomaly(ev, zCut = 2.0))
+    val got = rows(EventWindows.dailyAnomaly(ev))
     assert(got.length == 1)
     val r = got.head
     assert(r.getAs[String]("event_type") == "A" && r.getAs[Long]("day") == 9L
@@ -1254,7 +1262,7 @@ class OpsSpec extends SparkSpec {
   test("ngram freq: vocab counts per language, count-desc bigram-asc order") {
     val d = Seq((1L, "a b a b", "en"), (2L, "a b c", "en"), (3L, "solo", "es"))
       .toDF("doc_id", "text", "lang")
-    val got = rows(TextAnalysis.ngramFreq(d, topN = 10))
+    val got = rows(TextAnalysis.ngramFreq(d))
       .map(r => (r.getAs[String]("lang"), r.getAs[String]("bigram"),
         r.getAs[Long]("n"), r.getAs[Long]("rank")))
     // doc 3 has one token -> no bigram; ties (n=1) break on bigram string
@@ -1347,7 +1355,7 @@ class OpsSpec extends SparkSpec {
       (3L, Array(-1f, 0f, 0f), 0))   // anti-parallel -> kept
       .toDF("vec_id", "embedding", "label")
     // k=1 puts everything in one cluster so the pruning sweep sees all pairs
-    val got = rows(Similarity.semDedup(e, k = 1, iters = 2, threshold = 0.3))
+    val got = rows(Similarity.semDedup(e, k = 1))
       .map(r => r.getAs[Long]("vec_id") -> r.getAs[Boolean]("keep")).toMap
     assert(got == Map(0L -> true, 1L -> false, 2L -> true, 3L -> true))
   }
@@ -1384,7 +1392,7 @@ class OpsSpec extends SparkSpec {
     assert(frames.map(_.getAs[Long]("frame_idx")).toSeq == Seq(0L, 2L, 4L, 6L))
     assert(frames.map(_.getAs[Long]("offset_bytes")).toSeq == Seq(0L, 32L, 64L, 96L))
     val meta = Seq((1L, 512L, 128L), (2L, 100L, 50L)).toDF("doc_id", "width", "height")
-    val plan = rows(Multimodal.resizePlan(meta, maxSide = 256))
+    val plan = rows(Multimodal.resizePlan(meta))
       .map(r => r.getAs[Long]("doc_id") -> (r.getAs[Long]("out_w"), r.getAs[Long]("out_h"))).toMap
     assert(plan(1L) == (256L, 64L))   // scaled down by 2, ratio kept
     assert(plan(2L) == (100L, 50L))   // under the bound -> untouched
@@ -2312,7 +2320,7 @@ class OpsSpec extends SparkSpec {
     // the Lloyd rounds carry no hint Spark drops: HintErrorLogger warns on
     // this thread for none of them (nor for the encode over the result)
     val (refined, dropped) = hintWarnings {
-      val ix = graft.ops.Similarity.pqIndexFramesRefined(e, iters = 2)
+      val ix = graft.ops.Similarity.pqIndexFramesRefined(e)
       ix.codes.collect()
       ix
     }
@@ -2356,7 +2364,7 @@ class OpsSpec extends SparkSpec {
         else math.sin(i * 64.0 + j).toFloat * 0.1f
       })
     }.toDF("vec_id", "embedding")
-    val got = rows(Similarity.pcaPowerFromCov(Similarity.covarianceMatrix(e), iters = 8))
+    val got = rows(Similarity.pcaPowerFromCov(Similarity.covarianceMatrix(e)))
       .map(r => r.getAs[Long]("dim") ->
         (r.getAs[Double]("loading"), r.getAs[Double]("lambda"),
           r.getAs[Double]("evr"))).toMap

@@ -128,8 +128,7 @@ class PlanSpec extends SparkSpec {
     // checkpointed projection, so even `table`'s rebalance shuffle is
     // behind it: the plan has no Exchange at all.
     val e = graft.queries.table(spark, dir, "embeddings")
-    val (_, _, encoded) = graft.ops.Similarity.pqIvfEncoded(e,
-      subspaces = 8, codebookK = 16)
+    val (_, _, encoded) = graft.ops.Similarity.pqIvfEncoded(e, subspaces = 8)
     val p = encoded.queryExecution
       .explainString(ExplainMode.fromString("formatted"))
     assert(p.contains("pq_packed_cp"),

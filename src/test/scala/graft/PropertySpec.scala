@@ -697,8 +697,7 @@ class PropertySpec extends SparkSpec {
       (i.toLong, v.toSeq)
     }.toDF("vec_id", "embedding")
     // centroidEvery beyond every id → only vec_id 0 seeds → one hub cell
-    val g = Similarity.knnGraph(corpus, k = 3, centroidEvery = 1000,
-      cellCap = 64)
+    val g = Similarity.knnGraph(corpus, k = 3, centroidEvery = 1000)
     val edges = rows(g).map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(edges.size == 300 * 3, s"expected 900 edges, got ${edges.size}")
     assert(edges.forall { case (v, n, _) => v / 64 == n / 64 },

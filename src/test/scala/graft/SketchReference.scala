@@ -34,7 +34,8 @@ object SketchReference {
 
   /** CMS point estimate for one key (min over depth rows). Probe cells
     * come from Dedup.seededHashJvm with the sketch's own seed base. */
-  def cmsEstimate(sketch: DataFrame, key: String, depth: Int, width: Int): Long = {
+  def cmsEstimate(sketch: DataFrame, key: String): Long = {
+    val (depth, width) = (Sketch.CmsDepth, Sketch.CmsWidth)
     val cellOf = (0 until depth).map { i =>
       i -> (Dedup.seededHashJvm(Sketch.CmsSeedBase + i, key) % width).toInt
     }.toMap
@@ -43,16 +44,13 @@ object SketchReference {
     (0 until depth).map(i => cells.getOrElse((i, cellOf(i)), 0L)).min
   }
 
-  /** HLL estimate from a (bucket, max_rho) sketch over m buckets. */
-  def estimate(sketch: DataFrame, m: Int = 64): Double = {
+  /** HLL estimate from a (bucket, max_rho) sketch over the sketch's
+    * m = 64 buckets (α = 0.709, the published constant for that m). */
+  def estimate(sketch: DataFrame): Double = {
+    val m = Sketch.HllM
     val rhos = sketch.select(col("bucket"), col("max_rho")).collect()
       .map(r => r.getInt(0) -> r.getInt(1)).toMap
-    val alpha = m match {
-      case 16 => 0.673
-      case 32 => 0.697
-      case 64 => 0.709
-      case _  => 0.7213 / (1 + 1.079 / m)
-    }
+    val alpha = 0.709
     val zeros = (0 until m).count(b => !rhos.contains(b))
     val z = (0 until m).map(b => math.pow(2.0, -rhos.getOrElse(b, 0))).sum
     val raw = alpha * m * m / z

@@ -271,8 +271,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[StreamOps.Event]
     mem.addData(eventData: _*)
-    val sess = StreamOps.sessionize(mem.toDS(), gapMin = 30,
-      timeout = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout())
+    val sess = StreamOps.sessionize(mem.toDS())
     val q = sess.toDF().writeStream.format("memory").queryName("sess_out")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
@@ -287,7 +286,7 @@ class StreamingSpec extends SparkSpec {
       s.getAs[Long]("dur_us") == 600L * 1000000L)
     // The batch twin agrees on that closed session.
     val batch = rows(EventWindows.sessionize(
-      eventData.toDF().withColumn("ts", $"ts".cast("timestamp")), gapMin = 30))
+      eventData.toDF().withColumn("ts", $"ts".cast("timestamp"))))
       .filter(r => r.getAs[Long]("user_id") == 100L &&
                    r.getAs[Long]("session_id") == 1L)
     assert(batch.head.getAs[Long]("n_events") == 2L)
