@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.etl.{functions => F}
+import graft.queries.{IdBits, joinPacked}
 
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH,
   * SimHash, and n-gram Jaccard. Everything is DataFrame ops over built-in
@@ -125,9 +126,9 @@ object Dedup {
   private[graft] def expandMemberPairs(canon: DataFrame, members: DataFrame,
                                        extras: Seq[(String, Column)]): DataFrame = {
     val multi = members.filter(col("r") >= 2).select(col("doc_id"), col("rep"))
-    val (a, b, chunkCond) = Skew.chunkedSelfJoin(multi, "doc_id", Chunks)
-    val intra = a.join(b, col("a.rep") === col("b.rep") && chunkCond &&
-        col("a.doc_id") < col("b.doc_id"))
+    val (a, b, sameKey) = Skew.chunkedSelfJoin(multi, "doc_id",
+      Seq("rep" -> IdBits))
+    val intra = a.join(b, sameKey && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a") +: col("b.doc_id").as("doc_b") +:
         extras.map { case (n, v) => v.as(n) }: _*)
     val m = members.select(col("doc_id"), col("rep"))
@@ -243,10 +244,6 @@ object Dedup {
   private val NumHashes = 16
   private val ShingleLen = 3
   private val Bands = 4
-  /** Chunks per side of every skew-chunked self-join in this file
-    * (Skew.chunkedSelfJoin spreads a hot key's pair grid over chunks²
-    * tasks). */
-  private val Chunks = 4
 
   private def requireSignature(sig: DataFrame): Unit = {
     val n = sig.columns.count(_.matches("h\\d+"))
@@ -354,9 +351,12 @@ object Dedup {
   }
 
   private def lshCandidates(sig: DataFrame): DataFrame = {
-    val (a, b, chunkCond) = Skew.chunkedSelfJoin(bandBuckets(sig), "doc_id", Chunks)
-    a.join(b, col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-              chunkCond && col("a.doc_id") < col("b.doc_id"))
+    // band (< Bands = 4) packs with the chunk ids; bh (four 60-bit
+    // hashes) cannot pack and stays a second join key
+    val (a, b, sameKey) = Skew.chunkedSelfJoin(bandBuckets(sig), "doc_id",
+      Seq("band" -> 2))
+    a.join(b, sameKey && col("a.bh") === col("b.bh") &&
+              col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
   }
@@ -557,8 +557,7 @@ object Dedup {
       .join(sh.select(col("doc_id").as("doc_a"), col("s")), "doc_a")
       .join(sh.select(col("doc_id").as("doc_b"), col("s")), Seq("doc_b", "s"))
       .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("n_shared"))
-    val withSets = est
-      .join(shared, Seq("doc_a", "doc_b"), "left")
+    val withSets = joinPacked(est, shared, Seq("doc_a", "doc_b"), "left")
       .join(sizes.select(col("doc_id").as("doc_a"), col("ns").as("na")), "doc_a")
       .join(sizes.select(col("doc_id").as("doc_b"), col("ns").as("nb")), "doc_b")
       .withColumn("nsh", coalesce(col("n_shared"), lit(0L)))
@@ -649,10 +648,9 @@ object Dedup {
     // Still chunked: distinct-but-near fingerprints can co-bucket in one
     // band, and one (band, bh) bucket must not pin its pair grid on a
     // single task.
-    val (a, b, chunkCond) = Skew.chunkedSelfJoin(banded, "doc_id", Chunks)
-    val canon = a.join(b,
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          chunkCond && col("a.doc_id") < col("b.doc_id"))
+    val (a, b, sameKey) = Skew.chunkedSelfJoin(banded, "doc_id",
+      Seq("band" -> 2, "bh" -> 15))
+    val canon = a.join(b, sameKey && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
       .distinct()
@@ -1231,9 +1229,9 @@ object Dedup {
     val multi = mem.filter(col("r") >= 2)
       .join(repSizes.select(col("doc_id").as("rep"), col("ng")), "rep")
       .select(col("doc_id"), col("rep"), col("ng"))
-    val (a, b, chunkCond) = Skew.chunkedSelfJoin(multi, "doc_id", Chunks)
-    val intra = a.join(b, col("a.rep") === col("b.rep") && chunkCond &&
-        col("a.doc_id") < col("b.doc_id"))
+    val (a, b, sameKey) = Skew.chunkedSelfJoin(multi, "doc_id",
+      Seq("rep" -> IdBits))
+    val intra = a.join(b, sameKey && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         col("a.ng").as("n_shared"), lit(1.0).as("containment"))
       .filter(col("containment") >= threshold)
@@ -1741,10 +1739,10 @@ object Dedup {
     // cut at p = n − ⌈tSlack·n⌉ + 1
     val pfxLen = (col("n") - ceil(lit(tSlack) * col("n")) + lit(1)).cast("int")
     // Materialized: the chunked self-join below references this frame on
-    // BOTH sides (× Chunks), and the two sides' plans differ above the
+    // BOTH sides (× chunks), and the two sides' plans differ above the
     // aggregation (different explode aliases), so exchange reuse is not
     // guaranteed — without the barrier the df-join + per-doc rank pipeline
-    // can recompute up to 2·Chunks times.
+    // can recompute up to 2·chunks times.
     val prefixes = materialize(tokStream.join(dfTab, "tok")
       .groupBy(col("doc_id"), col("lang"), col("bucket"), col("n"))
       .agg(sort_array(collect_list(struct(col("tdf"), col("tok"))))
@@ -1753,7 +1751,8 @@ object Dedup {
         posexplode(slice(col("ranked"), lit(1), pfxLen)))
       .select(col("doc_id"), col("lang"), col("bucket"), col("n"),
         col("pos"), col("col.tok").as("tok")))
-    val (a, b, chunkCond) = Skew.chunkedSelfJoin(prefixes, "doc_id", Chunks)
+    // the block (lang, bucket) and tok stay join keys beside the chunks
+    val (a, b, sameChunks) = Skew.chunkedSelfJoin(prefixes, "doc_id", Nil)
     // PPJoin positional filter (Xiao et al.): both ranked token lists are
     // sorted by the SAME total order (tdf asc, tok asc — tdf is a global
     // per-token property, so a shared token has one sort key in both
@@ -1777,7 +1776,7 @@ object Dedup {
       least(na - ia - lit(1), nb - jb - lit(1))
     val candPfx = a.join(b, col("a.lang") === col("b.lang") &&
           col("a.bucket") === col("b.bucket") &&
-          col("a.tok") === col("b.tok") && chunkCond &&
+          col("a.tok") === col("b.tok") && sameChunks &&
           col("a.doc_id") < col("b.doc_id") &&
           lenOk && overlapUb.cast("double") >= overlapNeed)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))

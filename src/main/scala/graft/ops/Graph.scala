@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.queries.joinPacked
+
 /** Graph census over a duplicate-pair graph in its canonical twin-class
   * form — the capability class beyond the connected-components
   * contraction in [[Dedup.duplicateClusters]]: fixed-point PageRank, the
@@ -81,9 +83,8 @@ object Graph {
     val wedge = e1.join(e2, col("a") === col("a2") &&
       (col("db") < col("dc") ||
         (col("db") === col("dc") && col("b") < col("c"))))
-    val closing = oriented.select(col("lo").as("b2"), col("hi").as("c2"))
-    wedge.join(closing,
-        col("b") === col("b2") && col("c") === col("c2"))
+    val closing = oriented.select(col("lo").as("b"), col("hi").as("c"))
+    joinPacked(wedge, closing, Seq("b", "c"), "inner")
       .select(col("a"), col("b"), col("c"))
   }
 

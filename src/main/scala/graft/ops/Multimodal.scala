@@ -5,6 +5,8 @@ import java.nio.ByteBuffer
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.queries.packKey
+
 /** Multimodal column plumbing: image/audio/video payloads travel as opaque
   * `binary` columns with typed metadata extracted by a partition-wise
   * decoder. The decode itself is a REAL pure-JVM container-header parse —
@@ -325,8 +327,10 @@ object Multimodal {
         when(col("f") === 0, col("band"))
           .otherwise(expr("band ^ shiftleft(1L, CAST(f - 1 AS INT))"))
           .as("key"))
+    // (word index, 16-bit word) joins as one packed bigint key
     val cand = probes.as("a").join(uwords.as("b"),
-        col("a.j") === col("b.j") && col("a.key") === col("b.band") &&
+        packKey(col("a.j") -> 16, col("a.key") -> 16) ===
+          packKey(col("b.j") -> 16, col("b.band") -> 16) &&
           col("a.uid") < col("b.uid"))
       .select(col("a.uid").as("ua"), col("b.uid").as("ub"))
       .distinct()

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import graft.queries.{rz, rd}
+import graft.queries.{joinPacked, rz, rd}
 
 /** Approximate-nearest-neighbor / similarity search over an embedding
   * column (`array<float>`). Built-in higher-order functions only
@@ -116,18 +116,31 @@ object Similarity {
     * than assume (Continuously Adaptive Similarity Search, SIGMOD 2020).
     * A non-empty `tag` names the columns n_hits_<tag> and recall_<tag>,
     * so several approximations join side by side on q_id. */
-  def recall(exact: DataFrame, approx: DataFrame, tag: String): DataFrame = {
-    val sfx = if (tag.isEmpty) "" else s"_$tag"
-    val truth = exact.select(col("q_id"), col("vec_id"))
-    val hits = truth.join(approx.select(col("q_id"), col("vec_id")),
-        Seq("q_id", "vec_id"))
-      .groupBy(col("q_id")).agg(count(lit(1)).as("n_hits"))
-    truth.groupBy(col("q_id")).agg(count(lit(1)).as("k"))
-      .join(hits, Seq("q_id"), "left")
-      .select(col("q_id"),
-        coalesce(col("n_hits"), lit(0L)).as(s"n_hits$sfx"),
-        round(coalesce(col("n_hits"), lit(0L)).cast("double") / col("k"), 6)
-          .as(s"recall$sfx"))
+  def recall(exact: DataFrame, approx: DataFrame, tag: String): DataFrame =
+    recallLegs(exact, Seq(tag -> approx)).drop("k")
+
+  /** [[recall]] of several approximate rankings against one exact one:
+    * q_id, `k` (the exact list's length, counted once) and each leg's
+    * n_hits/recall columns named by its tag. Every (q_id, vec_id) row of
+    * a leg is looked up in the exact rows through one left join on the
+    * packed pair (`joinPacked`: ids in [0, 2^31), enforced in the plan), and
+    * one aggregate counts k and every leg's hits. A leg holds each pair at
+    * most once, as a top-k ranking does. */
+  def recallLegs(exact: DataFrame, legs: Seq[(String, DataFrame)]): DataFrame = {
+    val pairs = Seq("q_id", "vec_id")
+    val tagged = legs.zipWithIndex
+    val flagged = tagged.foldLeft(exact.select(pairs.map(col): _*)) {
+      case (acc, ((_, approx), i)) => joinPacked(acc,
+        approx.select(col("q_id"), col("vec_id"), lit(true).as(s"__hit$i")),
+        pairs, "left")
+    }
+    val hits = tagged.map { case (_, i) => count(col(s"__hit$i")).as(s"__n$i") }
+    flagged.groupBy(col("q_id")).agg(count(lit(1)).as("k"), hits: _*)
+      .select(col("q_id") +: col("k") +: tagged.flatMap { case ((tag, _), i) =>
+        val sfx = if (tag.isEmpty) "" else s"_$tag"
+        Seq(col(s"__n$i").as(s"n_hits$sfx"),
+          round(col(s"__n$i").cast("double") / col("k"), 6).as(s"recall$sfx"))
+      }: _*)
   }
 
   /** Maximum-inner-product top-k (MIPS) — retrieval where score = q·x,
@@ -320,7 +333,7 @@ object Similarity {
       col("embedding").as("n_emb"), col("nrm").as("n_nrm"))
     val w = Window.partitionBy(col("vec_id"))
       .orderBy(col("sim").desc, col("n_id"))
-    sub.join(nbrs, Seq("c_id", "sub"))
+    joinPacked(sub, nbrs, Seq("c_id", "sub"), "inner")
       .filter(col("vec_id") =!= col("n_id"))
       .select(col("vec_id"), col("n_id"),
         rz(dotf(col("embedding"), col("n_emb")) / col("nrm") / col("n_nrm"), 6)
@@ -869,9 +882,9 @@ object Similarity {
         dotf(col("q_emb"), col("c_emb")).as("qc")))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("sim").desc, col("vec_id"))
-    queryProbes.join(cellCodes, Seq("c_id"))
+    val probed = queryProbes.join(cellCodes, Seq("c_id"))
       .filter(col("vec_id") =!= col("q_id"))
-      .join(qcTable, Seq("q_id", "c_id"))
+    joinPacked(probed, qcTable, Seq("q_id", "c_id"), "inner")
       .join(cxlTable(index.cent, meta), Seq("c_id"))
       .join(pqLut(queries, meta), Seq("q_id"))
       .select(col("q_id"), col("vec_id"),
@@ -1154,8 +1167,8 @@ object Similarity {
         .select(col("m"), col("code"),
           transform(col("p"), x => x.getField("mv").cast("float")).as("c_sub2"))
       cur = Dedup.materialize(
-        cur.select(col("m"), col("code"), col("c_sub"))
-          .join(means, Seq("m", "code"), "left")
+        joinPacked(cur.select(col("m"), col("code"), col("c_sub")), means,
+            Seq("m", "code"), "left")
           .select(col("m"), col("code"),
             coalesce(col("c_sub2"), col("c_sub")).as("c_sub"))
           .withColumn("cn2", dotf(col("c_sub"), col("c_sub"))))

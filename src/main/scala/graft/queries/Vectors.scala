@@ -205,9 +205,8 @@ object Vectors extends QueryPack {
         .drop("rank")
         .join(labels, "vec_id").filter(pred)
         .withColumn("rank", row_number().over(wq)).filter(col("rank") <= 5)
-      brute.groupBy(col("q_id")).agg(count(lit(1)).as("k"))
-        .join(Similarity.recall(brute, inProbe, "probe"), "q_id")
-        .join(Similarity.recall(brute, postFilter, "shortlist"), "q_id")
+      Similarity.recallLegs(brute,
+          Seq("probe" -> inProbe, "shortlist" -> postFilter))
         .orderBy(col("q_id"))
     }),
 
@@ -274,8 +273,8 @@ object Vectors extends QueryPack {
       val brute = Similarity.bruteForceTopK(e, q, k = 5)
         .select(col("q_id"), col("vec_id"))
       val probes = Similarity.queryCellRanks(pq.cent, q, maxProbe = 8)
-      val hitRank = brute.join(pq.cells, Seq("vec_id"))
-        .join(probes, Seq("q_id", "c_id"), "left")
+      val hitRank = joinPacked(brute.join(pq.cells, Seq("vec_id")), probes,
+          Seq("q_id", "c_id"), "left")
         .select(col("q_id"), col("vec_id"),
           coalesce(col("c_rank"), lit(999L)).as("cr"))
       hitRank
@@ -616,11 +615,12 @@ object Vectors extends QueryPack {
       val brute = bruteGet()
       val nTrue = brute.agg(count(lit(1)).as("n_true"))
       val hitRows = Seq(1, 2, 4, 8).map { np =>
-        val approx = scoredU.join(shortlistAt(np), Seq("q_id", "vec_id"))
+        val approx = joinPacked(scoredU, shortlistAt(np), Seq("q_id", "vec_id"),
+            "inner")
           .withColumn("rank", row_number().over(wAdc))
           .filter(col("rank") <= 5)
           .select(col("q_id"), col("vec_id"))
-        brute.join(approx, Seq("q_id", "vec_id"))
+        joinPacked(brute, approx, Seq("q_id", "vec_id"), "inner")
           .agg(count(lit(1)).as("n_hits"))
           .select(lit(np.toLong).as("nprobe"), col("n_hits"))
       }.reduce(_ unionByName _)
@@ -671,8 +671,8 @@ object Vectors extends QueryPack {
         Similarity.ivfPqTopKFrom(stagedRefPq(s, dir), q, k = 200, nprobe = 8)
           .select(col("q_id"), col("vec_id"), col("rank")))
       val scored200 = graft.ops.Dedup.materialize(
-        Similarity.exactSims(ranked, e, q)
-          .join(ranked, Seq("q_id", "vec_id")))
+        joinPacked(Similarity.exactSims(ranked, e, q), ranked,
+          Seq("q_id", "vec_id"), "inner"))
       val brute = bruteGet()
       val nTrue = brute.agg(count(lit(1)).as("n_true"))
       val wEx = Window.partitionBy(col("q_id"))
@@ -682,7 +682,7 @@ object Vectors extends QueryPack {
           .withColumn("r2", row_number().over(wEx))
           .filter(col("r2") <= 5)
           .select(col("q_id"), col("vec_id"))
-        brute.join(approx, Seq("q_id", "vec_id"))
+        joinPacked(brute, approx, Seq("q_id", "vec_id"), "inner")
           .agg(count(lit(1)).as("n_hits"))
           .crossJoin(broadcast(ranked.filter(col("rank") <= kk)
             .agg(count(lit(1)).as("n_fetch"))))
@@ -877,7 +877,7 @@ object Vectors extends QueryPack {
           when(col("f") === 0, col("band"))
             .otherwise(expr("band ^ shiftleft(1L, CAST(f - 1 AS INT))"))
             .as("key"))
-      val verified = probes.join(uw, Seq("j", "key"))
+      val verified = joinPacked(probes, uw, Seq("j", "key"), "inner")
         .join(reps, Seq("uid"))
         .withColumn("hamming", expr(
           "CAST(bit_count(aw[0] ^ b0) + bit_count(aw[1] ^ b1) + " +

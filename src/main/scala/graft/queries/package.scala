@@ -265,4 +265,48 @@ package object queries {
     * `CAST(round(CAST(x AS DECIMAL(30,10)), s) AS DOUBLE)`. */
   def rd(c: Column, scale: Int): Column =
     round(c.cast(DecimalType(30, 10)), scale).cast(DoubleType)
+
+  /** Bits of a packed `doc_id` or `vec_id`: ids lie in [0, 2^31), so a
+    * pair of them packs into one key ([[joinPacked]]). */
+  val IdBits = 31
+
+  /** Integer columns packed into ONE bigint join key: each part
+    * `(column, bits)` must lie in [0, 2^bits), the first part lands in the
+    * highest bits, and the bits sum to at most 63 — so two keys are equal
+    * exactly when all their parts are. Why: a hash join on one bigint
+    * builds a `LongHashedRelation` sized by its rows, while any wider key
+    * (two bigints, a bigint and two ints) builds an `UnsafeHashedRelation`
+    * that holds a whole `spark.buffer.pageSize` page (64 MB at a 7g heap)
+    * however few rows it has.
+    *
+    * The range is enforced in the plan: a part outside it fails the query
+    * through `raise_error` when the key is evaluated (no extra job), with
+    * the part and its value in the message. A null part gives a null key,
+    * which an equi-join never matches, as it never matches the tuple. */
+  def packKey(parts: (Column, Int)*): Column = {
+    require(parts.nonEmpty && parts.forall(_._2 > 0) && parts.map(_._2).sum <= 63,
+      s"packKey: bits ${parts.map(_._2).mkString(", ")} must be positive and sum to <= 63")
+    val packed = parts.tail.foldLeft(parts.head._1.cast(LongType)) {
+      case (acc, (c, bits)) => shiftleft(acc, bits).bitwiseOR(c.cast(LongType))
+    }
+    parts.foldRight(packed) { case ((c, bits), rest) =>
+      when(c < 0 || c >= (1L << bits), raise_error(concat(
+        lit(s"packKey: $c = "), c.cast(StringType),
+        lit(s" is outside [0, 2^$bits)"))))
+        .otherwise(rest)
+    }
+  }
+
+  /** `left.join(right, cols, how)` for an inner or left join on one or
+    * two integer columns, each in [0, 2^IdBits) (ids, or small indexes such
+    * as a subspace and a code), run on their [[packKey]]: the same rows,
+    * with left's columns first and then right's other ones. */
+  def joinPacked(left: DataFrame, right: DataFrame, cols: Seq[String],
+                 how: String): DataFrame = {
+    require(how == "inner" || how == "left", s"joinPacked: inner or left, got $how")
+    val key = packKey(cols.map(col(_) -> IdBits): _*)
+    left.withColumn("__pk", key)
+      .join(right.withColumn("__pk", key).drop(cols: _*), Seq("__pk"), how)
+      .drop("__pk")
+  }
 }

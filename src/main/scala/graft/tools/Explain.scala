@@ -43,12 +43,21 @@ object Explain {
       val qe = df.queryExecution
       if (exec) qe.executedPlan.execute().foreachPartition(
         (_: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => ())
-      val plan = qe.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      val plan = stripLambdaIds(qe.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(outDir, s"${name.replace(':', '_')}_$suffix.txt"), plan)
       println(s"[explain] wrote $outDir/${name}_$suffix.txt (${plan.length} chars)")
     }
     spark.stop()
   }
+
+  /** A plan's text without JVM lambda identities: a Scala function in a
+    * plan (a UDF, a `mapPartitions` body) prints as
+    * `Owner$$$Lambda$8462/0x0000000801a2b040@208bf5f7`, whose class
+    * number, address and hash change from run to run, so two dumps of the
+    * same plan differ there. Each becomes `Owner$$$Lambda`. */
+  def stripLambdaIds(plan: String): String =
+    plan.replaceAll("""\$\$Lambda(\$\d+)?/0x[0-9a-fA-F]+@[0-9a-fA-F]+""",
+      java.util.regex.Matcher.quoteReplacement("$$Lambda"))
 }

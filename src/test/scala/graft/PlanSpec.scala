@@ -1317,4 +1317,15 @@ class PlanSpec extends SparkSpec {
       l.contains("Location") && l.contains("documents.parquet"))
     assert(scans == 1, s"documents scanned $scans times")
   }
+
+  test("tools.Explain strips JVM lambda identities from a dumped plan") {
+    import graft.tools.Explain.stripLambdaIds
+    assert(stripLambdaIds("MapPartitions graft.ops.Multimodal$$$Lambda$8462/" +
+        "0x0000000801a2b040@208bf5f7, obj#12") ==
+      "MapPartitions graft.ops.Multimodal$$$Lambda, obj#12")
+    val p = plan("mm_decode_meta")
+    assert(p.contains("$$Lambda"), p.take(800))
+    assert(!stripLambdaIds(p).matches("(?s).*Lambda(\\$\\d+)?/0x.*"),
+      stripLambdaIds(p).take(800))
+  }
 }
