@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.queries.dsum
+import graft.queries.{dsum, topK}
 
 /** Event-time window operators over the harness `events` table (SURVEY.md
   * §2.7). The reference is batch-only; these are written batch-first so the
@@ -149,10 +149,7 @@ object EventWindows {
       .groupBy(window(col("ts"), s"$sizeMin minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("win_start"), col("event_type"), col("n"))
-    val w = Window.partitionBy(col("win_start"))
-      .orderBy(col("n").desc, col("event_type"))
-    counts.withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
+    topK(counts, Seq(col("win_start")), Seq(col("n").desc, col("event_type")), k, "rk")
       .orderBy(col("win_start"), col("rk"))
   }
 

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.queries.topK
 
 /** Deterministic sampling for training-data pipelines.
   *
@@ -50,13 +51,9 @@ object Sampling {
     * exact rank, so the window never sorts the raw corpus. Kept separate
     * so this operator's contract stays exact. */
   def topKByHash(df: DataFrame, strataCol: String, idCol: String,
-                 k: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(strataCol))
-      .orderBy(Dedup.seededHash(31, col(idCol)), col(idCol))
-    df.withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-  }
+                 k: Int): DataFrame =
+    topK(df, Seq(col(strataCol)),
+      Seq(Dedup.seededHash(31, col(idCol)), col(idCol)), k, "rk")
 
   /** Deterministic train/val/test assignment — the split a training corpus
     * must make exactly once and never drift on: each row's subset is a pure

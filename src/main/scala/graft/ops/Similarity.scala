@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import graft.queries.{joinPacked, rz, rd}
+import graft.queries.{joinPacked, rz, rd, topK}
 
 /** Approximate-nearest-neighbor / similarity search over an embedding
   * column (`array<float>`). Built-in higher-order functions only
@@ -32,7 +32,7 @@ object Similarity {
     * that keeps every staged row bit-identical keeps its tag; FunctionsSpec
     * pins the pqIvfIndex artifacts against the reference derivation). */
   val PqStageTag = "pqindex8x16_v1"   // pqIvfIndex: codebook, cent, codes, cells
-  val KnnStageTag = "knngraph3_v2"    // knnGraphAuto(k = 3); v2: cellCap 64
+  val KnnStageTag = "knngraph3_v2"    // knnGraph(k = 3); v2: cellCap 64
   val OpqStageTag = "opqindex8x16_v1" // opqPermutation + permuted pqIvfIndex
   val ResPqStageTag = "respqindex8x16_v1" // ivfResiduals + pqIvfIndex
   val RefPqStageTag = "refpqindex8x16_v1" // pqIndexFramesRefined(iters = 2)
@@ -59,10 +59,7 @@ object Similarity {
       .select(col("q_id"), col("vec_id"),
         rz(dotf(col("q_emb"), col("embedding")) / col("q_nrm") / col("nrm"), 6)
           .as("sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    simTopK(scored, k)
       .orderBy(col("q_id"), col("rank"))
   }
 
@@ -78,14 +75,15 @@ object Similarity {
     * runs over ≤ |queries|·shortlist rows, never the corpus. Same
     * rounded-then-ranked determinism as bruteForceTopK. */
   def rerankExact(shortlist: DataFrame, corpus: DataFrame,
-                  queries: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    exactSims(shortlist, corpus, queries)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+                  queries: DataFrame, k: Int): DataFrame =
+    simTopK(exactSims(shortlist, corpus, queries), k)
       .orderBy(col("q_id"), col("rank"))
-  }
+
+  /** The top-k rows of each q_id by (sim desc, vec_id), ranked 1..k in
+    * `rank` ([[graft.queries.topK]]): the cut every cosine ranking of the
+    * similarity rows makes. */
+  def simTopK(scored: DataFrame, k: Int): DataFrame =
+    topK(scored, Seq(col("q_id")), Seq(col("sim").desc, col("vec_id")), k, "rank")
 
   /** The exact-scoring half of [[rerankExact]] without the top-k cut:
     * (q_id, vec_id, sim) with the library's rz(…, 6) cosine for every
@@ -169,10 +167,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
         rz(dotf(col("q_emb"), col("embedding")), 6).as("ip"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("ip").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    topK(scored, Seq(col("q_id")), Seq(col("ip").desc, col("vec_id")), k, "rank")
       .orderBy(col("q_id"), col("rank"))
   }
 
@@ -199,26 +194,17 @@ object Similarity {
       .select(col("q_id"), col("vec_id"),
         rz(dotf(col("q_emb"), col("embedding")) / col("q_nrm") / col("nrm"), 6)
           .as("sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    simTopK(scored, k)
       .orderBy(col("q_id"), col("rank"))
   }
 
-  /** IVF-style approximate top-k: a deterministic centroid subset
-    * partitions the corpus into Voronoi cells (assignment = argmax cosine,
-    * tie on centroid id); each query probes its `nprobe` nearest cells and
-    * ranks only their members. The scale path when both sides are large:
-    * assignment costs |corpus|·m dots against a BROADCAST centroid set, a
-    * probe costs ~nprobe/m of the corpus — with m ≈ √n the classic √n
-    * speedup, all in plain DataFrame ops.
-    */
   /** Scale-honest centroid spacing: m ≈ √n requires centroidEvery ≈ √n —
     * a FIXED spacing makes m grow linearly with the corpus, so the
     * broadcast centroid set and the |corpus|·m assignment cost blow up at
     * 100 TB. Takes the corpus count from the caller: a Spark count is a
-    * job, never free metadata (see ivfTopKAuto). */
+    * job, never free metadata, and the judged rows read it from the file
+    * footers (`queries.tableRows`). Precondition: vec_ids near-dense, so
+    * `vec_id % every = 0` actually selects ≈ n/every centroids. */
   def autoCentroidEvery(n: Long): Int =
     math.max(1L, math.ceil(math.sqrt(n.toDouble)).toLong).toInt
 
@@ -232,18 +218,6 @@ object Similarity {
     * judged rows count n before `table`'s rebalance (tableCounted: one
     * job). */
   def queryStride(n: Long): Long = math.max(1L, math.ceil(n / 64.0).toLong)
-
-  /** ivfTopK with centroidEvery derived from the corpus size so the
-    * centroid count stays ≈ √n at any scale. The count() is an eager
-    * action over the corpus AS GIVEN: on a `queries.table`
-    * frame it pays the rebalance shuffle and a two-phase aggregate (three
-    * jobs under AQE). Pass an explicit centroidEvery to `ivfTopK` when the
-    * cardinality is already known. Precondition (same as ivfTopK): vec_ids
-    * near-dense, so `vec_id % every = 0` actually selects ≈ n/every
-    * centroids. */
-  def ivfTopKAuto(corpus: DataFrame, queries: DataFrame, k: Int,
-                  nprobe: Int = 2): DataFrame =
-    ivfTopK(corpus, queries, k, autoCentroidEvery(corpus.count()), nprobe)
 
   private def centroids(corpus: DataFrame, centroidEvery: Int): DataFrame =
     broadcast(corpus.filter(col("vec_id") % centroidEvery === 0)
@@ -331,22 +305,14 @@ object Similarity {
         .cast("long"))
     val nbrs = sub.select(col("c_id"), col("sub"), col("vec_id").as("n_id"),
       col("embedding").as("n_emb"), col("nrm").as("n_nrm"))
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("sim").desc, col("n_id"))
-    joinPacked(sub, nbrs, Seq("c_id", "sub"), "inner")
+    val scored = joinPacked(sub, nbrs, Seq("c_id", "sub"), "inner")
       .filter(col("vec_id") =!= col("n_id"))
       .select(col("vec_id"), col("n_id"),
         rz(dotf(col("embedding"), col("n_emb")) / col("nrm") / col("n_nrm"), 6)
           .as("sim"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    topK(scored, Seq(col("vec_id")), Seq(col("sim").desc, col("n_id")), k, "rank")
       .orderBy(col("vec_id"), col("rank"))
   }
-
-  /** knnGraph with the √n-derived centroid spacing (one eager corpus
-    * count, same contract as ivfTopKAuto). */
-  def knnGraphAuto(corpus: DataFrame, k: Int): DataFrame =
-    knnGraph(corpus, k, autoCentroidEvery(corpus.count()))
 
   /** Re-split over-populated IVF cells — the cell-population third of
     * live-index maintenance (compaction keeps the FILES scan-friendly,
@@ -418,7 +384,8 @@ object Similarity {
     * top-k cut; the filtered-search postures (predicate before the cut
     * vs over-fetch-then-filter, judged by sim_filtered_topk) fork here. */
   def ivfCandidates(corpus: DataFrame, queries: DataFrame,
-                    centroidEvery: Int = 50, nprobe: Int = 2): DataFrame = {
+                    centroidEvery: Int = 50): DataFrame = {
+    val nprobe = 2
     val cent = centroids(corpus, centroidEvery)
     def scored(df: DataFrame, embCol: String, nrmCol: String): DataFrame =
       scoredAgainst(cent)(df, embCol, nrmCol)
@@ -437,17 +404,13 @@ object Similarity {
     val corpusAssigned = ivfAssign(corpus, centroidEvery)
     // Query probes keep the top-nprobe cells; the query set is bounded, so
     // a per-q_id window over m·|queries| rows is cheap and stays cheap.
-    val queryProbes = {
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("c_sim").desc, col("c_id"))
+    val queryProbes = topK(
       scored(
         queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
           sqrt(dotf(col("embedding"), col("embedding"))).as("q_nrm")),
-        "q_emb", "q_nrm")
-        .withColumn("c_rank", row_number().over(w))
-        .filter(col("c_rank") <= nprobe)
-        .drop("c_emb", "c_nrm", "c_sim", "c_rank")
-    }
+        "q_emb", "q_nrm"),
+      Seq(col("q_id")), Seq(col("c_sim").desc, col("c_id")), nprobe, "c_rank")
+      .drop("c_emb", "c_nrm", "c_sim", "c_rank")
     queryProbes.join(corpusAssigned, Seq("c_id"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
@@ -457,15 +420,18 @@ object Similarity {
       // so a (q_id, vec_id) candidate arises from at most one probe
   }
 
+  /** IVF-style approximate top-k: a deterministic centroid subset
+    * partitions the corpus into Voronoi cells (assignment = argmax cosine,
+    * tie on centroid id); each query probes its `nprobe` nearest cells and
+    * ranks only their members. The scale path when both sides are large:
+    * assignment costs |corpus|·m dots against a BROADCAST centroid set, a
+    * probe costs ~nprobe/m of the corpus — with m ≈ √n the classic √n
+    * speedup, all in plain DataFrame ops.
+    */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              centroidEvery: Int = 50, nprobe: Int = 2): DataFrame = {
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    ivfCandidates(corpus, queries, centroidEvery, nprobe)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+              centroidEvery: Int = 50): DataFrame =
+    simTopK(ivfCandidates(corpus, queries, centroidEvery), k)
       .orderBy(col("q_id"), col("rank"))
-  }
 
   /** Embedding-cosine near-dup pairs, blocked by `label` (bounded blocks ->
     * per-block self-join, cost sum(block²) not n²).
@@ -562,7 +528,7 @@ object Similarity {
   }
 
   /** kmeansAssign with the seed spacing derived from a fixed cluster
-    * count k (one eager corpus count, same contract as ivfTopKAuto). */
+    * count k (one eager corpus count). */
   def kmeansAuto(corpus: DataFrame, k: Int = 16, iters: Int = 2): DataFrame =
     kmeansAssign(corpus,
       math.max(1L, math.ceil(corpus.count().toDouble / k).toLong).toInt, iters)
@@ -716,15 +682,11 @@ object Similarity {
     * bounded collect, never the corpus). */
   def pqTopKFrom(index: Pq, queries: DataFrame, k: Int): DataFrame = {
     val meta = codebookMeta(index.codebook)
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    index.codes.crossJoin(pqLut(queries, meta))
+    simTopK(index.codes.crossJoin(pqLut(queries, meta))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
         rz(pqFold(col("lut"), meta) / col("q_nrm")
-          / sqrt(pqFold(meta.rn2, meta)), 6).as("sim"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+          / sqrt(pqFold(meta.rn2, meta)), 6).as("sim")), k)
       .orderBy(col("q_id"), col("rank"))
   }
 
@@ -791,17 +753,7 @@ object Similarity {
     // never the embedding — only (vec_id, c_id) meets the 2-long codes
     // table.
     val cellCodes = index.cells.join(index.codes, Seq("vec_id"))
-    val cent = broadcast(index.cent)
-    val wp = Window.partitionBy(col("q_id"))
-      .orderBy(col("c_sim").desc, col("c_id"))
-    val queryProbes = scoredAgainst(cent)(
-      queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        sqrt(dotf(col("embedding"), col("embedding"))).as("q_nrm")),
-      "q_emb", "q_nrm")
-      .withColumn("c_rank", row_number().over(wp))
-      .filter(col("c_rank") <= maxProbe)
-      .select(col("q_id"), col("c_id"), col("c_rank"))
-    queryProbes.join(cellCodes, Seq("c_id"))
+    queryCellRanks(index.cent, queries, maxProbe).join(cellCodes, Seq("c_id"))
       .filter(col("vec_id") =!= col("q_id"))
       .join(pqLut(queries, meta), Seq("q_id"))
       .select(col("q_id"), col("vec_id"), col("c_rank"),
@@ -817,15 +769,10 @@ object Similarity {
     * cells and score candidates by the same LUT fold as pqTopKFrom. Probe
     * cost: |cell| × (subspaces lookups), reading codes only. */
   def ivfPqTopKFrom(index: PqIvf, queries: DataFrame, k: Int,
-                    nprobe: Int = 2): DataFrame = {
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    ivfPqAdcCandidates(index, queries, nprobe)
-      .select(col("q_id"), col("vec_id"), col("sim"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+                    nprobe: Int = 2): DataFrame =
+    simTopK(ivfPqAdcCandidates(index, queries, nprobe)
+      .select(col("q_id"), col("vec_id"), col("sim")), k)
       .orderBy(col("q_id"), col("rank"))
-  }
 
   /** The residual corpus for IVFADC (Jégou et al. 2011 §IV): r = x −
     * centroid(cell(x)). Raw-vector PQ codes must cover the whole point
@@ -864,14 +811,7 @@ object Similarity {
     val meta = codebookMeta(index.codebook)
     val cellCodes = index.cells.join(index.codes, Seq("vec_id"))
     val cent = broadcast(index.cent)
-    val wp = Window.partitionBy(col("q_id"))
-      .orderBy(col("c_sim").desc, col("c_id"))
-    val queryProbes = scoredAgainst(cent)(
-      queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        sqrt(dotf(col("embedding"), col("embedding"))).as("q_nrm")),
-      "q_emb", "q_nrm")
-      .withColumn("c_rank", row_number().over(wp))
-      .filter(col("c_rank") <= nprobe)
+    val queryProbes = queryCellRanks(index.cent, queries, nprobe)
       .select(col("q_id"), col("c_id"))
     // exact q·centroid per (query, probed cell) — ≤ |queries|·nprobe rows
     val qcTable = broadcast(queryProbes
@@ -880,38 +820,30 @@ object Similarity {
       .join(cent.select(col("c_id"), col("c_emb")), Seq("c_id"))
       .select(col("q_id"), col("c_id"),
         dotf(col("q_emb"), col("c_emb")).as("qc")))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
     val probed = queryProbes.join(cellCodes, Seq("c_id"))
       .filter(col("vec_id") =!= col("q_id"))
-    joinPacked(probed, qcTable, Seq("q_id", "c_id"), "inner")
+    simTopK(joinPacked(probed, qcTable, Seq("q_id", "c_id"), "inner")
       .join(cxlTable(index.cent, meta), Seq("c_id"))
       .join(pqLut(queries, meta), Seq("q_id"))
       .select(col("q_id"), col("vec_id"),
         rz((col("qc") + pqFold(col("lut"), meta)) / col("q_nrm")
           / sqrt(col("cn2c") + pqFold(col("cxl"), meta)), 6)
-          .as("sim"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+          .as("sim")), k)
       .orderBy(col("q_id"), col("rank"))
   }
 
   /** Per-query centroid ranking (q_id, c_id, c_rank ≤ maxProbe) — the IVF
-    * routing table exposed for coverage audits: which cells WOULD be
-    * probed at each nprobe setting. Same round-6 cosine + c_id tie-break
-    * as every IVF probe in this file. */
+    * routing table: the cells each IVF-PQ probe scans, and for coverage
+    * audits the cells that WOULD be probed at each nprobe setting. Same
+    * round-6 cosine + c_id tie-break as every IVF probe in this file. */
   def queryCellRanks(centTable: DataFrame, queries: DataFrame,
-                     maxProbe: Int): DataFrame = {
-    val wp = Window.partitionBy(col("q_id"))
-      .orderBy(col("c_sim").desc, col("c_id"))
-    scoredAgainst(broadcast(centTable))(
-      queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        sqrt(dotf(col("embedding"), col("embedding"))).as("q_nrm")),
-      "q_emb", "q_nrm")
-      .withColumn("c_rank", row_number().over(wp).cast("long"))
-      .filter(col("c_rank") <= maxProbe)
+                     maxProbe: Int): DataFrame =
+    topK(scoredAgainst(broadcast(centTable))(
+        queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
+          sqrt(dotf(col("embedding"), col("embedding"))).as("q_nrm")),
+        "q_emb", "q_nrm"),
+      Seq(col("q_id")), Seq(col("c_sim").desc, col("c_id")), maxProbe, "c_rank")
       .select(col("q_id"), col("c_id"), col("c_rank"))
-  }
 
   /** Shortlist length and probed cells of both streaming shortlists. */
   private val StreamShortlistK = 50

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.etl.{functions => F}
+import graft.queries.topK
 
 /** Text-analysis operators for large-scale training-data pipelines: token
   * counting, quality scoring, language ID, document fingerprinting. All
@@ -32,15 +33,15 @@ object TextAnalysis {
 
   private val stopwords = Seq("the", "a", "of", "and", "to", "in", "is")
 
-  /** TF-IDF: top-k terms per document by
+  /** TF-IDF: top-3 terms per document by
     * (tc/n_terms) · (ln((N+1)/(df+1)) + 1), rounded to 6 dp BEFORE ranking
     * so the ordering is engine-stable. Two aggregations over the exploded
     * term list (both partial/map-side) + one broadcast of the one-row corpus
     * count; the per-doc ranking window partitions on doc_id with at most
     * |distinct terms per doc| rows — bounded by document length, safe at any
     * corpus size. */
-  def tfIdf(docs: DataFrame, k: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  def tfIdf(docs: DataFrame): DataFrame = {
+    val k = 3
     val terms = docs.select(col("doc_id"),
       explode(split(F.normalizeText(lower(col("text"))), " ")).as("term"))
     val tf = terms.groupBy(col("doc_id"), col("term"))
@@ -54,10 +55,7 @@ object TextAnalysis {
       .withColumn("tfidf", round(
         (col("tc").cast("double") / col("n_terms")) *
           (log((col("n_docs") + 1).cast("double") / (col("df") + 1)) + 1.0), 6))
-    val w = Window.partitionBy(col("doc_id"))
-      .orderBy(col("tfidf").desc, col("term"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    topK(scored, Seq(col("doc_id")), Seq(col("tfidf").desc, col("term")), k, "rank")
       .select(col("doc_id"), col("term"), col("tfidf"), col("rank"))
       .orderBy(col("doc_id"), col("rank"))
   }
@@ -506,7 +504,6 @@ object TextAnalysis {
     * engines) keeps both phases total-order deterministic. */
   def ngramFreq(docs: DataFrame): DataFrame = {
     val (topN, slices) = (10, 64)
-    import org.apache.spark.sql.expressions.Window
     // per-doc collapsed gram counts (docGramCounts): the explode emits one
     // row per distinct gram per doc, and the vocab rollup sums the in-doc
     // counts — same totals, smaller stream, single tokenize pass.
@@ -514,16 +511,9 @@ object TextAnalysis {
       .groupBy(col("lang"), col("g").as("bigram"))
       .agg(sum(col("c")).as("n"))
     val slice = pmod(xxhash64(col("bigram")), lit(slices.toLong))
-    val wLocal = Window.partitionBy(col("lang"), slice)
-      .orderBy(col("n").desc, col("bigram"))
-    val pre = counts
-      .withColumn("lr", row_number().over(wLocal))
-      .filter(col("lr") <= topN)
-    val w = Window.partitionBy(col("lang"))
-      .orderBy(col("n").desc, col("bigram"))
-    pre.select(col("lang"), col("bigram"), col("n"),
-        row_number().over(w).cast("long").as("rank"))
-      .filter(col("rank") <= topN)
+    val byCount = Seq(col("n").desc, col("bigram"))
+    val pre = topK(counts, Seq(col("lang"), slice), byCount, topN, "lr").drop("lr")
+    topK(pre, Seq(col("lang")), byCount, topN, "rank")
       .orderBy(col("lang"), col("rank"))
   }
 
@@ -602,8 +592,8 @@ object TextAnalysis {
     * (Heaps-sublinear), not the corpus stream; the word census collapses
     * map-side; the pair rollup is bounded by |alphabet|² keys. The only
     * full-corpus pass is the census scan. */
-  def bpeMergeCensus(docs: DataFrame, topN: Int = 50): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  def bpeMergeCensus(docs: DataFrame): DataFrame = {
+    val topN = 50
     val census = docs
       .select(explode(split(F.normalizeText(lower(col("text"))), " ")).as("w"))
       .filter(length(col("w")) >= 2)
@@ -614,10 +604,7 @@ object TextAnalysis {
           i => col("w").substr(i, lit(2)))).as("pair"))
       .groupBy(col("pair")).agg(sum(col("wc")).as("n"))
     // |alphabet|² rows at most — one tiny final rank.
-    val w = Window.orderBy(col("n").desc, col("pair"))
-    pairs.select(col("pair"), col("n"),
-        row_number().over(w).cast("long").as("rank"))
-      .filter(col("rank") <= topN)
+    topK(pairs, Nil, Seq(col("n").desc, col("pair")), topN, "rank")
       .orderBy(col("rank"))
   }
 

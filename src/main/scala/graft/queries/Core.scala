@@ -238,10 +238,8 @@ object Core extends QueryPack {
     // explains why insert-order semantics become an explicit window).
     "a2_distinct_by_subset" -> ((s, dir) => {
       import s.implicits._
-      val w = Window.partitionBy($"o_custkey").orderBy($"o_orderdate", $"o_orderkey")
-      table(s, dir, "orders")
-        .withColumn("rn", row_number().over(w))
-        .filter($"rn" === 1)
+      topK(table(s, dir, "orders"), Seq($"o_custkey"),
+          Seq($"o_orderdate", $"o_orderkey"), 1, "rn")
         .select($"o_custkey", $"o_orderkey", $"o_totalprice")
         .orderBy($"o_custkey")
     }),

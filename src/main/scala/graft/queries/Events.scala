@@ -746,16 +746,13 @@ object Events extends QueryPack {
         col("byHour"), explode(sequence(col("mn"), col("mx"))).as("h"))
       .withColumn("cnt", coalesce(element_at(col("byHour"), col("h")), lit(0L)))
     val w = Window.partitionBy(col("event_type")).orderBy(col("h"))
-    grid
+    val scored = grid
       .withColumn("cum", sum(col("cnt")).over(w))
       .select(col("event_type"), col("h"),
         (col("cum") * (col("mx") - col("mn") + 1L) -
           (col("h") - col("mn") + 1L) * col("total")).as("dev"),
         (col("mx") - col("mn") + 1L).as("n_hours"), col("total"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("event_type"))
-          .orderBy(abs(col("dev")).desc, col("h"))))
-      .filter(col("rk") === 1)
+    topK(scored, Seq(col("event_type")), Seq(abs(col("dev")).desc, col("h")), 1, "rk")
       .select(col("event_type"), col("h").as("cp_hour"),
         abs(col("dev")).as("max_abs_dev"), col("n_hours"), col("total"))
       .orderBy(col("event_type"))

@@ -700,7 +700,7 @@ object TextOps extends QueryPack {
     }),
     // TF-IDF: top-3 terms per document, ranked on the 6-dp-rounded score.
     "tx_tfidf" -> ((s, dir) =>
-      TextAnalysis.tfIdf(table(s, dir, "documents"), k = 3)),
+      TextAnalysis.tfIdf(table(s, dir, "documents"))),
     // Quantile-threshold filter: documents STRICTLY above their language's
     // median quality (corpus curation cut). The cut point is the LOWER
     // median — an actual data element (the ⌈n/2⌉-th smallest quality),

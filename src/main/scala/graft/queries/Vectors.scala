@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops.{Multimodal, Similarity}
 
@@ -27,6 +26,11 @@ object Vectors extends QueryPack {
   }
 
 
+  /** The IVF centroid spacing of the embeddings corpus
+    * (Similarity.autoCentroidEvery), from its footer row count: no job. */
+  private def autoEvery(s: org.apache.spark.sql.SparkSession, dir: String): Int =
+    Similarity.autoCentroidEvery(tableRows(s, dir, "embeddings"))
+
   val queries: Map[String, QFn] = Map(
     // Exact brute-force top-k: bounded query set (~64 strided vec_ids)
     // broadcast against the full corpus.
@@ -38,8 +42,7 @@ object Vectors extends QueryPack {
     // Approximate top-k via deterministic axis-sign LSH buckets.
     "sim_lsh_topk" -> ((s, dir) => {
       val (e, q) = corpusAndQueries(s, dir)
-      Similarity.signLshTopK(e, q, k = 5,
-        signBits = 8)
+      Similarity.signLshTopK(e, q, k = 5, signBits = 8)
     }),
 
     // Maximum-inner-product retrieval through the MIPS→NN reduction —
@@ -55,8 +58,7 @@ object Vectors extends QueryPack {
     // the oracle mirrors the derivation with a count subquery.
     "sim_ivf_topk" -> ((s, dir) => {
       val (e, q) = corpusAndQueries(s, dir)
-      Similarity.ivfTopKAuto(e, q, k = 5,
-        nprobe = 2)
+      Similarity.ivfTopK(e, q, k = 5, autoEvery(s, dir))
     }),
 
     // Product-quantization ADC top-k (Jegou et al. 2011): codes are 8
@@ -162,7 +164,7 @@ object Vectors extends QueryPack {
     "sim_ivf_recall" -> ((s, dir) => {
       val (e, q) = corpusAndQueries(s, dir)
       Similarity.recall(Similarity.bruteForceTopK(e, q, k = 5),
-          Similarity.ivfTopKAuto(e, q, k = 5, nprobe = 2), "")
+          Similarity.ivfTopK(e, q, k = 5, autoEvery(s, dir)), "")
         .orderBy(col("q_id"))
     }),
 
@@ -193,18 +195,10 @@ object Vectors extends QueryPack {
       val pred = col("label") % 5 === 2
       val labels = e.select(col("vec_id"), col("label"))
       val brute = Similarity.bruteForceTopK(e.filter(pred), q, k = 5)
-      val cand = Similarity.ivfCandidates(e, q,
-        Similarity.autoCentroidEvery(tableRows(s, dir, "embeddings")),
-        nprobe = 2)
-      val wq = Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("vec_id"))
-      val inProbe = cand.join(labels, "vec_id").filter(pred)
-        .withColumn("rank", row_number().over(wq)).filter(col("rank") <= 5)
-      val postFilter = cand
-        .withColumn("rank", row_number().over(wq)).filter(col("rank") <= 20)
-        .drop("rank")
-        .join(labels, "vec_id").filter(pred)
-        .withColumn("rank", row_number().over(wq)).filter(col("rank") <= 5)
+      val cand = Similarity.ivfCandidates(e, q, autoEvery(s, dir))
+      val inProbe = Similarity.simTopK(cand.join(labels, "vec_id").filter(pred), 5)
+      val postFilter = Similarity.simTopK(Similarity.simTopK(cand, 20).drop("rank")
+        .join(labels, "vec_id").filter(pred), 5)
       Similarity.recallLegs(brute,
           Seq("probe" -> inProbe, "shortlist" -> postFilter))
         .orderBy(col("q_id"))
@@ -422,8 +416,7 @@ object Vectors extends QueryPack {
       val st = stagedIvfAppend(s, dir)
       val idx = readParquet(s, s"$st/compacted")
       val e = table(s, dir, "embeddings")
-      val cap =
-        Similarity.autoCentroidEvery(tableRows(s, dir, "embeddings")).toLong
+      val cap = autoEvery(s, dir).toLong
       Similarity.resplitCells(idx.select(col("vec_id"), col("c_id")), e, cap)
         .join(idx.select(col("vec_id"), col("cp")), "vec_id")
         .select(col("vec_id"), col("c_id"), col("cp"))
@@ -602,11 +595,7 @@ object Vectors extends QueryPack {
       // over the scored rows.
       val cand = graft.ops.Dedup.materialize(
         Similarity.ivfPqAdcCandidates(ref, q, maxProbe = 8))
-      val wAdc = Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("vec_id"))
-      def shortlistAt(np: Int) = cand.filter(col("c_rank") <= np)
-        .withColumn("rank", row_number().over(wAdc))
-        .filter(col("rank") <= 50)
+      def shortlistAt(np: Int) = Similarity.simTopK(cand.filter(col("c_rank") <= np), 50)
         .select(col("q_id"), col("vec_id"))
       val union = Seq(1, 2, 4, 8).map(shortlistAt).reduce(_ unionByName _)
         .distinct()
@@ -615,10 +604,8 @@ object Vectors extends QueryPack {
       val brute = bruteGet()
       val nTrue = brute.agg(count(lit(1)).as("n_true"))
       val hitRows = Seq(1, 2, 4, 8).map { np =>
-        val approx = joinPacked(scoredU, shortlistAt(np), Seq("q_id", "vec_id"),
-            "inner")
-          .withColumn("rank", row_number().over(wAdc))
-          .filter(col("rank") <= 5)
+        val approx = Similarity.simTopK(joinPacked(scoredU, shortlistAt(np),
+            Seq("q_id", "vec_id"), "inner"), 5)
           .select(col("q_id"), col("vec_id"))
         joinPacked(brute, approx, Seq("q_id", "vec_id"), "inner")
           .agg(count(lit(1)).as("n_hits"))
@@ -675,12 +662,8 @@ object Vectors extends QueryPack {
           Seq("q_id", "vec_id"), "inner"))
       val brute = bruteGet()
       val nTrue = brute.agg(count(lit(1)).as("n_true"))
-      val wEx = Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("vec_id"))
       val hitRows = Seq(50, 100, 200).map { kk =>
-        val approx = scored200.filter(col("rank") <= kk)
-          .withColumn("r2", row_number().over(wEx))
-          .filter(col("r2") <= 5)
+        val approx = Similarity.simTopK(scored200.filter(col("rank") <= kk), 5)
           .select(col("q_id"), col("vec_id"))
         joinPacked(brute, approx, Seq("q_id", "vec_id"), "inner")
           .agg(count(lit(1)).as("n_hits"))
@@ -1100,7 +1083,7 @@ object Vectors extends QueryPack {
                                  dir: String): org.apache.spark.sql.DataFrame = {
     val staged = tmpStage(dir, Similarity.KnnStageTag)
     ensureStaged(staged, "_SUCCESS") {
-      Similarity.knnGraphAuto(table(s, dir, "embeddings"), k = 3)
+      Similarity.knnGraph(table(s, dir, "embeddings"), k = 3, autoEvery(s, dir))
         .write.mode("overwrite").parquet(staged)
     }
     readParquet(s, staged)

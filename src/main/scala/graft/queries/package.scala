@@ -8,6 +8,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{
   ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -296,6 +297,20 @@ package object queries {
         .otherwise(rest)
     }
   }
+
+  /** The first `k` rows of each `group` in `order`, numbered 1..k in the
+    * bigint column `rank` (the caller's name for it): every top-k leg of
+    * the library ranks through this one plan, a `row_number` window cut at
+    * `k`, which Spark runs as a per-task `WindowGroupLimit` before the
+    * exchange and the final window. `order` must be total within a group
+    * (end it with a unique id), or the rows kept depend on the input
+    * order; an empty `group` ranks the whole frame. The result is
+    * unordered: callers sort it themselves. */
+  def topK(df: DataFrame, group: Seq[Column], order: Seq[Column], k: Int,
+           rank: String): DataFrame =
+    df.withColumn(rank, row_number()
+        .over(Window.partitionBy(group: _*).orderBy(order: _*)).cast(LongType))
+      .filter(col(rank) <= k)
 
   /** `left.join(right, cols, how)` for an inner or left join on one or
     * two integer columns, each in [0, 2^IdBits) (ids, or small indexes such

@@ -40,17 +40,46 @@ object Explain {
       val df =
         if (ops.contains(name)) ops(name)(spark)
         else graft.SparkEntry.queries(name)(spark, sfDir)
-      val qe = df.queryExecution
-      if (exec) qe.executedPlan.execute().foreachPartition(
+      if (exec) df.queryExecution.executedPlan.execute().foreachPartition(
         (_: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => ())
-      val plan = stripLambdaIds(qe.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+      val plan = dump(df)
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(outDir, s"${name.replace(':', '_')}_$suffix.txt"), plan)
       println(s"[explain] wrote $outDir/${name}_$suffix.txt (${plan.length} chars)")
     }
     spark.stop()
   }
+
+  /** `df`'s formatted physical plan, [[normalize]]d. */
+  def dump(df: org.apache.spark.sql.DataFrame): String =
+    normalize(df.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+
+  /** A dumped plan made reproducible, so two dumps of the same plan are
+    * byte-equal whatever else the session planned first and wherever its
+    * stages live: lambda identities stripped ([[stripLambdaIds]]), session
+    * counters renumbered ([[renumberIds]]) and the stage root
+    * (`java.io.tmpdir`) replaced by `<tmpdir>`. A parent/change plan check
+    * is then a plain `diff -r` of two dump directories. */
+  def normalize(plan: String): String = {
+    val tmp = System.getProperty("java.io.tmpdir").stripSuffix("/")
+    renumberIds(stripLambdaIds(plan)).replace(tmp + "/graft_stage", "<tmpdir>/graft_stage")
+  }
+
+  /** Session counters renumbered in order of first appearance: expression
+    * ids (`vec_id#123L`), `plan_id=` tags, RDD ids (`RDD[42]`) and
+    * higher-order-function variables (`lambda x_17`) count up over the
+    * whole session, so the same plan dumps with other numbers after other
+    * queries were planned. Each family restarts at 0 and keeps equal ids
+    * equal. */
+  def renumberIds(plan: String): String =
+    Seq("""(#)(\d+)""", """(plan_id=)(\d+)""", """(RDD\[)(\d+)""",
+        """(lambda [A-Za-z]+_)(\d+)""")
+      .foldLeft(plan) { (text, re) =>
+        val seen = scala.collection.mutable.HashMap.empty[String, Int]
+        re.r.replaceAllIn(text, m =>
+          m.group(1) + seen.getOrElseUpdate(m.group(2), seen.size))
+      }
 
   /** A plan's text without JVM lambda identities: a Scala function in a
     * plan (a UDF, a `mapPartitions` body) prints as

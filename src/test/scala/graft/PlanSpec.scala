@@ -641,7 +641,9 @@ class PlanSpec extends SparkSpec {
     // the graph build now lives in the STAGE (stagedKnn), so the pin
     // points at the builder's plan — the shape that runs at 100 TB
     val e = graft.queries.table(spark, dir, "embeddings")
-    val p = graft.ops.Similarity.knnGraphAuto(e, k = 3).queryExecution
+    val every = graft.ops.Similarity.autoCentroidEvery(
+      graft.queries.tableRows(spark, dir, "embeddings"))
+    val p = graft.ops.Similarity.knnGraph(e, k = 3, every).queryExecution
       .explainString(org.apache.spark.sql.execution.ExplainMode
         .fromString("formatted"))
     // the centroid product is the intended bounded BNLJ (as in sim_ivf);
@@ -1316,6 +1318,19 @@ class PlanSpec extends SparkSpec {
     val scans = p.linesIterator.count(l =>
       l.contains("Location") && l.contains("documents.parquet"))
     assert(scans == 1, s"documents scanned $scans times")
+  }
+
+  test("tools.Explain dumps a row byte-equal after other queries were " +
+    "planned, with the stage root as <tmpdir>") {
+    def dump() = graft.tools.Explain.dump(SparkEntry.queries("sim_pq_topk")(spark, dir))
+    val first = dump()
+    for (q <- Seq("q1_agg", "sim_brute_topk", "q6_filter_agg")) plan(q)
+    assert(dump() == first)
+    val tmp = System.getProperty("java.io.tmpdir").stripSuffix("/")
+    assert(first.contains("<tmpdir>/graft_stage") && !first.contains(s"$tmp/graft_stage"))
+    assert(graft.tools.Explain.renumberIds(
+        "a#41L b#7 a#41 plan_id=9 RDD[3] plan_id=9 lambda x_8 lambda y_5 lambda x_8") ==
+      "a#0L b#1 a#0 plan_id=0 RDD[0] plan_id=0 lambda x_0 lambda y_1 lambda x_0")
   }
 
   test("tools.Explain strips JVM lambda identities from a dumped plan") {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session — suites may
@@ -15,8 +16,17 @@ object TestSpark {
     .getOrCreate()
 }
 
-abstract class SparkSpec extends AnyFunSuite {
+abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** Unpersists the RDDs a suite leaves persisted (frames that hold a
+    * localCheckpoint, such as a PQ index's projected corpus): the
+    * ContextCleaner drops them only after a driver GC, so without this a
+    * later suite that asserts the session holds no cache entry (EtlSpec's
+    * Sources.csv check) fails or passes on GC timing. */
+  override def afterAll(): Unit =
+    try super.afterAll()
+    finally spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
   def rows(df: DataFrame): Seq[Row] = df.collect().toSeq
   /** A scale factor's testdata directory, e.g. sfDir("sf0.01"). */
   def sfDir(sf: String): String = s"${sys.props("user.home")}/testdata/$sf"
